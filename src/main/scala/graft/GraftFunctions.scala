@@ -169,12 +169,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     * EXECUTE — at analysis time: `spark.sql(...)` on a procedure IS the
     * invocation (the Iceberg `CALL` semantics), so don't EXPLAIN one —
     * plan-only inspection (EXPLAIN, `df.schema`, a notebook's eager
-    * display of an unexecuted query) performs the maintenance. SQL-facing
-    * compaction goes through the claim-fenced
-    * [[graft.operators.Sinks.compactSnapshotCas]] (safe beside concurrent
-    * CAS writers — a SQL user cannot audit what else is committing); the
-    * last-writer-wins [[graft.operators.Sinks.compactSnapshot]] stays a
-    * JVM-only single-writer maintenance API. */
+    * display of an unexecuted query) performs the maintenance. Flat
+    * compaction is the claim-fenced
+    * [[graft.operators.Sinks.compactSnapshot]] (safe beside concurrent
+    * writers — a SQL user cannot audit what else is committing). */
   private def snapshotCompactPlan(es: Seq[Expression]):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     require(es.length == 1 || es.length == 2,
@@ -191,7 +189,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     val v =
       if (graft.sources.PartitionedSnapshot.partSpec(spark, dir).isDefined)
         graft.sources.PartitionedSnapshot.compactTable(spark, dir, targetOpt)
-      else graft.operators.Sinks.compactSnapshotCas(spark, dir,
+      else graft.operators.Sinks.compactSnapshot(spark, dir,
         targetOpt.getOrElse(5000000L))
     import spark.implicits._
     Seq(v).toDF("version").queryExecution.logical

@@ -10,9 +10,11 @@ package graft
   * already parallelize; this is for the work BETWEEN jobs (optimization
   * guide §2.6, applied to the metadata path). */
 object Par {
-  def each[A](items: Seq[A], threads: Int = 16)(f: A => Unit): Unit = {
-    if (items.size <= 1 || threads <= 1) { items.foreach(f); return }
-    val n = math.min(threads, items.size)
+  private val Threads = 16
+
+  def each[A](items: Seq[A])(f: A => Unit): Unit = {
+    if (items.size <= 1) { items.foreach(f); return }
+    val n = math.min(Threads, items.size)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     try {

@@ -88,14 +88,6 @@ object Sinks {
     path
   }
 
-  /** Enforce `String(n)` lengths declared by [[FieldMap]] varchar metadata at
-    * write time — the semantic of `copy_feats`' `fld_lens` resize
-    * (`arc_utils.py:414-415` sets `outputField.length`; arcpy then truncates
-    * longer values on copy). `mode`: "truncate" (arcpy behavior, default),
-    * "error" (reject the write on the first oversize value — `raise_error`
-    * stays codegen'd and distributed), "ignore" (length stays metadata-only).
-    * Columns without the metadata key pass through untouched, so plain
-    * writes never pay for this. */
   /** Compacted parquet write — the small-files defense. A 1000-executor
     * job that writes one file per task leaves thousands of KB-sized files
     * per day; every later scan then pays a footer read and a scheduler
@@ -114,6 +106,14 @@ object Sinks {
     files
   }
 
+  /** Enforce `String(n)` lengths declared by [[FieldMap]] varchar metadata at
+    * write time — the semantic of `copy_feats`' `fld_lens` resize
+    * (`arc_utils.py:414-415` sets `outputField.length`; arcpy then truncates
+    * longer values on copy). `mode`: "truncate" (arcpy behavior, default),
+    * "error" (reject the write on the first oversize value — `raise_error`
+    * stays codegen'd and distributed), "ignore" (length stays metadata-only).
+    * Columns without the metadata key pass through untouched, so plain
+    * writes never pay for this. */
   def enforceVarchar(df: DataFrame, mode: String = "truncate"): DataFrame = {
     val needsWork = df.schema.fields.exists(f =>
       f.dataType == org.apache.spark.sql.types.StringType &&
@@ -181,56 +181,54 @@ object Sinks {
     * full upstream parallelism), then commits by swapping the one-line
     * `_latest` pointer file via write-temp + atomic rename
     * (`FileContext.rename(OVERWRITE)` — atomic on HDFS; on S3-like stores
-    * substitute a conditional PUT). Consequences:
-    *  - a writer crash before the pointer swap leaves `_latest` on the
-    *    previous complete version — readers NEVER see partial data; the
-    *    orphaned folder is skipped (its number is not reused: the next
-    *    write takes max(existing)+1) until a janitor prunes it;
+    * substitute a conditional PUT). Safe for GENUINELY CONCURRENT
+    * independent writers — optimistic concurrency in two moves, the one
+    * protocol every flat publisher shares (claim, then [[commitClaimed]]):
+    *
+    *  1. ALLOCATION is a compare-and-swap loop ([[claimNextVersion]]):
+    *     compute next = max(folders, claims, pointer) + 1 and try to claim
+    *     it via [[claimVersion]]'s atomic exclusive create. A lost race
+    *     means another writer owns that number — its claim file is now
+    *     visible, so the retry allocates past it. Claimed versions are
+    *     exclusively owned: no two writers ever write the same `v=N`
+    *     folder, and the committed sequence stays contiguous. On a table
+    *     nobody else claims, this is max(folders) + 1.
+    *  2. COMMIT is a REPAIR LOOP, not a blind swap ([[commitPointerCas]]):
+    *     record `_commits/v=N` (create-if-absent, after the data lands),
+    *     then loop — read the pointer, target = max(recorded commits), swap
+    *     to the target if the pointer is behind, re-check. The rename is
+    *     last-writer-wins, so a slower writer can transiently demote the
+    *     pointer; the re-check sees the regression (the newer writer's
+    *     record is durable) and repairs it. Every writer exits only when
+    *     pointer ≥ max(recorded), so the pointer CONVERGES to the newest
+    *     recorded commit no matter the interleaving.
+    *
+    * Consequences:
+    *  - a writer crash before the record leaves `_latest` on the previous
+    *    complete version — readers NEVER see partial data; the orphaned
+    *    folder is skipped (its number is not reused) until
+    *    [[vacuumOrphans]] prunes it. A crash between record and swap
+    *    leaves a complete, recorded version that the NEXT successful
+    *    commit promotes;
     *  - published folders are immutable, so concurrent readers of any
     *    versions never conflict and a training run can pin the exact
     *    snapshot it consumed (reproducibility);
     *  - time travel = reading an explicit older version.
-    * Returns the committed version number. */
-  def writeSnapshot(df: DataFrame, tableDir: String): Int =
-    writeSnapshot(df, tableDir, commitTsMicros = None)
-
-  /** [[writeSnapshot]] with an INJECTED commit timestamp (micros since
-    * epoch) — `None` records wall-clock. Injection exists so deterministic
-    * pipelines (and the repo's own oracle faces) can pin `TIMESTAMP AS OF`
-    * resolution without reading the system clock. */
+    *
+    * `commitTsMicros` INJECTS the commit timestamp (micros since epoch) —
+    * `None` records wall-clock. Injection exists so deterministic pipelines
+    * (and the repo's own oracle faces) can pin `TIMESTAMP AS OF`
+    * resolution without reading the system clock.
+    *
+    * Scale note: the claim/commit files are empty markers — per commit this
+    * is O(1) tiny-file round-trips against the store, amortized over a
+    * full-parallelism snapshot write; the loops retry only under actual
+    * contention on the SAME table. Returns the committed version number. */
   def writeSnapshot(df: DataFrame, tableDir: String,
-                    commitTsMicros: Option[Long]): Int = {
-    val next = snapshotVersions(df.sparkSession, tableDir).lastOption.getOrElse(0) + 1
-    microsBound(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$next")
-    carryManifest(df.sparkSession, tableDir, next)
-    commitPointer(df.sparkSession, tableDir, next, commitTsMicros)
-    next
-  }
-
-  /** The atomic commit primitive every snapshot writer shares: record the
-    * commit timestamp (`_commits/v=N`, the `TIMESTAMP AS OF` resolution
-    * metadata), then write the pointer to a temp file and ONE
-    * `FileContext.rename(OVERWRITE)` — atomic on HDFS; substitute a
-    * conditional PUT on object stores. The timestamp record lands BEFORE
-    * the swap so a commit is never visible without its time; the converse
-    * window (crash between record and swap) leaves a timestamped orphan,
-    * which stays invisible because resolution only considers versions at
-    * or below the committed pointer. */
-  private def commitPointer(spark: SparkSession, tableDir: String,
-                            version: Int,
-                            tsMicros: Option[Long] = None): Unit = {
-    writeCommitRecord(spark, tableDir, version, tsMicros)
-    swapPointer(spark, tableDir, version)
-  }
-
-  /** [[commitPointer]] for the partitioned-snapshot module
-    * ([[graft.sources.PartitionedSnapshot]]) — the shared atomic commit
-    * primitive, exposed package-wide rather than duplicated. */
-  private[graft] def commitSnapshotPointer(spark: SparkSession,
-                                           tableDir: String,
-                                           version: Int,
-                                           tsMicros: Option[Long] = None): Unit =
-    commitPointer(spark, tableDir, version, tsMicros)
+                    commitTsMicros: Option[Long] = None): Int =
+    publishClaimed(df.sparkSession, tableDir, commitTsMicros) { v =>
+      microsBound(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$v")
+    }
 
   /** The `_commits/v=N` timestamp record, CREATE-IF-ABSENT: a
     * [[writeSnapshotAs]] REPLAY (crash recovery) re-commits an
@@ -334,67 +332,47 @@ object Sinks {
     * small-files debt of many incremental publishes is paid without a
     * write outage. Returns the committed compacted version.
     *
-    * Single-writer maintenance API: allocation reads claims too (never
-    * lands on a concurrent/crashed writer's claimed number) but the
-    * commit is a plain pointer swap — don't run it concurrently with
-    * live writers on one table; the auto-compaction the thin publishers
-    * trigger goes through the claim-fenced [[autoCompactCas]] instead. */
+    * Safe beside live writers (the SQL `snapshot_compact` face runs it, and
+    * a SQL user cannot audit what else is committing to the table).
+    * Optimistic: bind the committed base, claim the next version, and
+    * require the claim to be the IMMEDIATE successor — an intervening
+    * claim means another writer got between the base read and the claim,
+    * so release and re-bind against the new head (the rows to compact have
+    * changed). Converges in one pass on an idle table; after
+    * [[CompactRetries]] lost races it throws
+    * `ConcurrentModificationException` (compaction is maintenance — a
+    * busy table defers, it never overwrites a concurrent commit). */
   def compactSnapshot(spark: SparkSession, tableDir: String,
                       targetRows: Long): Int = {
     require(graft.sources.PartitionedSnapshot.partSpec(spark, tableDir).isEmpty,
       s"$tableDir is a PARTITIONED snapshot — a flat compaction would " +
         "destroy its layout; use PartitionedSnapshot.compactTable " +
         "(SQL snapshot_compact routes there)")
-    val cur = readSnapshot(spark, tableDir)
-    val base = snapshotCommitted(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val next = (snapshotVersions(spark, tableDir) ++
-      claimedVersions(spark, tableDir)).foldLeft(base)(math.max) + 1
-    stageCompactedVersion(spark, tableDir, cur, next, base, targetRows)
-    carryManifest(spark, tableDir, next)
-    commitPointer(spark, tableDir, next)
-    next
-  }
-
-  /** [[compactSnapshot]] safe BESIDE live CAS writers — the variant the
-    * SQL `snapshot_compact` face uses, since a SQL user cannot audit what
-    * else is committing to the table. Optimistic: bind the committed
-    * base, claim the next version, and require the claim to be the
-    * IMMEDIATE successor — an intervening claim means another writer got
-    * between the base read and the claim, so release and re-bind against
-    * the new head (the rows to compact have changed). Converges in one
-    * pass on an idle table; bounded retries under contention, then
-    * `ConcurrentModificationException` (compaction is maintenance — a
-    * busy table defers, it never overwrites a concurrent commit the way
-    * the last-writer-wins [[compactSnapshot]] swap could). */
-  def compactSnapshotCas(spark: SparkSession, tableDir: String,
-                         targetRows: Long, maxRetries: Int = 5): Int = {
-    require(graft.sources.PartitionedSnapshot.partSpec(spark, tableDir).isEmpty,
-      s"$tableDir is a PARTITIONED snapshot — a flat compaction would " +
-        "destroy its layout; use PartitionedSnapshot.compactTable " +
-        "(SQL snapshot_compact routes there)")
-    var attempt = 0
-    while (attempt < maxRetries) {
+    Iterator.continually {
       val base = snapshotCommitted(spark, tableDir).getOrElse(
         throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-      val v = claimNextVersion(spark, tableDir)
-      if (v == base + 1) {
-        try {
-          stageCompactedVersion(spark, tableDir,
-            compactionRows(spark, tableDir, base), v, base, targetRows)
-          carryManifest(spark, tableDir, v)
-          commitPointerCas(spark, tableDir, v, tsMicros = None)
-        } catch { case scala.util.control.NonFatal(e) =>
-          releaseClaimIfUnpublished(spark, tableDir, v); throw e }
-        return v
-      }
-      releaseClaim(spark, tableDir, v)
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"snapshot_compact at $tableDir: lost the claim race $maxRetries " +
-        "times to concurrent writers; retry when the table quiesces")
+      compactOnto(spark, tableDir, base, targetRows)
+    }.take(CompactRetries).flatten.nextOption().getOrElse(
+      throw new java.util.ConcurrentModificationException(
+        s"snapshot_compact at $tableDir: lost the claim race $CompactRetries " +
+          "times to concurrent writers; retry when the table quiesces"))
   }
+
+  /** Lost claim races [[compactSnapshot]] absorbs before deferring. */
+  private val CompactRetries = 5
+
+  /** The claim-fenced compaction body [[compactSnapshot]] and
+    * [[autoCompactCas]] share: claim the IMMEDIATE successor of `base`
+    * (None — claim released — if another writer claimed in between),
+    * stage the resolved rows OF `base` with their `_compaction` stamp,
+    * commit through the repair loop. */
+  private def compactOnto(spark: SparkSession, tableDir: String, base: Int,
+                          targetRows: Long): Option[Int] =
+    claimSuccessor(spark, tableDir, base).map(
+      commitClaimed(spark, tableDir, _, tsMicros = None) { v =>
+        stageCompactedVersion(spark, tableDir,
+          compactionRows(spark, tableDir, base), v, base, targetRows)
+      })
 
   /** The rows a compaction of committed `base` must materialize: resolved
     * with HEAD rename semantics and conformed to the SERVED schema. A
@@ -463,17 +441,16 @@ object Sinks {
     * micro-batch id and a replayed batch (restart after a crash anywhere
     * between sink write and checkpoint commit) rewrites the SAME immutable
     * folder and re-swaps the pointer to the SAME value — idempotent by
-    * construction, no side ledger. The pointer only ever moves forward
-    * (a replay of an old batch can't demote a newer commit).
+    * construction, no side ledger. The pointer only ever moves forward:
+    * the commit is the shared repair loop ([[commitPointerCas]]), which
+    * leaves a pointer already at or past the newest recorded commit alone,
+    * so a replay of an old batch can't demote a newer commit.
     *
-    * Concurrency contract: the forward-only guarantee is a read-check-rename,
-    * NOT a compare-and-swap (HDFS rename can't express one), so it holds
-    * under SERIALIZED writers — exactly the streaming-sink model this hook
-    * exists for, where a replay is a re-execution of the same (single)
-    * writer, never concurrent with a newer batch. Genuinely concurrent
-    * independent writers need [[writeSnapshotConcurrent]], whose claim
-    * files serialize version allocation and whose repair loop converges
-    * the pointer. */
+    * Concurrency contract: the version is the CALLER's, not claimed, so
+    * folder ownership rests on the caller's deterministic numbering — the
+    * streaming-sink model this hook exists for, where a replay is a
+    * re-execution of the same (single) writer. Independent writers on one
+    * table use [[writeSnapshot]], whose claim files serialize allocation. */
   def writeSnapshotAs(df: DataFrame, tableDir: String, version: Int): Int = {
     microsBound(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$version")
     // a REPLAY rewrote the version's data files under new names, so any
@@ -484,8 +461,7 @@ object Sinks {
     val mfs = mp.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     if (mfs.exists(mp)) mfs.delete(mp, true): Unit
     carryManifest(df.sparkSession, tableDir, version)
-    if (snapshotCommitted(df.sparkSession, tableDir).forall(_ < version))
-      commitPointer(df.sparkSession, tableDir, version)
+    commitPointerCas(df.sparkSession, tableDir, version, tsMicros = None)
     version
   }
 
@@ -539,68 +515,21 @@ object Sinks {
         s.drop(2).nonEmpty && s.drop(2).forall(_.isDigit) => s.drop(2).toInt }
   }
 
-  /** [[writeSnapshot]] for GENUINELY CONCURRENT independent writers —
-    * optimistic concurrency in two moves:
-    *
-    *  1. ALLOCATION is a compare-and-swap loop: compute
-    *     next = max(folders, claims, pointer) + 1 and try to claim it via
-    *     [[claimVersion]]'s atomic exclusive create. A lost race means
-    *     another writer owns that number — its claim file is now visible,
-    *     so the retry allocates past it. Claimed versions are exclusively
-    *     owned: no two writers ever write the same `v=N` folder, and the
-    *     committed sequence stays contiguous.
-    *  2. COMMIT is a REPAIR LOOP, not a blind swap: record `_commits/v=N`
-    *     (create-if-absent, after the data lands), then loop —
-    *     read the pointer, target = max(recorded commits), swap to the
-    *     target if the pointer is behind, re-check. The rename is
-    *     last-writer-wins, so a slower writer can transiently demote the
-    *     pointer; the re-check sees the regression (the newer writer's
-    *     record is durable) and repairs it. Every writer exits only when
-    *     pointer ≥ max(recorded), so the pointer CONVERGES to the newest
-    *     recorded commit no matter the interleaving.
-    *
-    * Consequences: a writer that crashes between record and swap leaves a
-    * complete, recorded version that the NEXT successful commit promotes
-    * (its data landed before its record — readers never see partial data);
-    * a crash before the record leaves an unrecorded orphan folder that
-    * never resolves, exactly like [[writeSnapshot]]. Don't mix this with
-    * single-writer [[writeSnapshot]] on one table: the single-writer path
-    * neither claims nor repairs.
-    *
-    * Scale note: the claim/commit files are empty markers — per commit this
-    * is O(1) tiny-file round-trips against the store, amortized over a
-    * full-parallelism snapshot write; the loop retries only under actual
-    * contention on the SAME table. */
-  def writeSnapshotConcurrent(df: DataFrame, tableDir: String,
-                              commitTsMicros: Option[Long] = None): Int = {
-    val spark = df.sparkSession
-    val v = claimNextVersion(spark, tableDir)
-    try {
-      microsBound(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$v")
-      carryManifest(spark, tableDir, v)
-      commitPointerCas(spark, tableDir, v, commitTsMicros)
-    } catch { case scala.util.control.NonFatal(e) =>
-      releaseClaimIfUnpublished(spark, tableDir, v); throw e }
-    v
-  }
+  /** The publish every unfenced flat writer shares: claim the next version
+    * ([[claimNextVersion]]), `land` its folder, then [[commitClaimed]]. */
+  private[graft] def publishClaimed(spark: SparkSession, tableDir: String,
+                                    tsMicros: Option[Long] = None)
+                                   (land: Int => Unit): Int =
+    commitClaimed(spark, tableDir, claimNextVersion(spark, tableDir),
+      tsMicros)(land)
 
-  /** Publish an ALREADY-STAGED data folder as the next snapshot version —
-    * the commit half of [[writeSnapshotConcurrent]] for callers that stage
-    * rows first (the snapshot catalog's SQL DML lands its copy-on-write
-    * output in a staging dir, then publishes): claim the next version
-    * (same CAS), ONE same-filesystem rename of the staged folder into
-    * `v=N`, then the repair-loop pointer commit. A crash after the rename
-    * but before the record leaves an unrecorded orphan that never
-    * resolves — identical to a [[writeSnapshot]] crash. */
-  def publishStagedSnapshot(spark: SparkSession, tableDir: String,
-                            staged: org.apache.hadoop.fs.Path,
-                            tsMicros: Option[Long] = None): Int = {
-    val v = claimNextVersion(spark, tableDir)
+  /** Commit a version this writer has CLAIMED: `land` its folder, carry
+    * the manifest, then the repair-loop pointer commit. Any failure
+    * releases the claim unless the commit already recorded. */
+  private def commitClaimed(spark: SparkSession, tableDir: String, v: Int,
+                            tsMicros: Option[Long])(land: Int => Unit): Int = {
     try {
-      val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
-      val f = dest.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!f.rename(staged, dest))
-        throw new IllegalStateException(s"publish: rename $staged -> $dest failed")
+      land(v)
       carryManifest(spark, tableDir, v)
       commitPointerCas(spark, tableDir, v, tsMicros)
     } catch { case scala.util.control.NonFatal(e) =>
@@ -608,19 +537,31 @@ object Sinks {
     v
   }
 
-  /** [[publishStagedSnapshot]] with a COMPLETE lost-update fence for
-    * writers whose staged output DERIVES from a specific base version
-    * (thin merge-on-read deltas, copy-on-write DML): claim the next
-    * version, then require the claim to be the IMMEDIATE successor of
-    * `expectedBase`. Claims serialize allocation (atomic exclusive
-    * create), so `v == expectedBase + 1` proves no other writer even
-    * CLAIMED — let alone committed — since the caller bound its base;
-    * any intervening claim forces `v > expectedBase + 1` and the publish
-    * aborts (claim released, staging deleted,
-    * `ConcurrentModificationException`) instead of silently chaining past
-    * the other writer's changes. This closes the window a committed-
-    * pointer re-read leaves open (two writers can both pass a pointer
-    * check before either swaps; they cannot both claim `base + 1`).
+  /** Claim the next version only if it is the IMMEDIATE successor of
+    * `base`: claims serialize allocation (atomic exclusive create), so
+    * `v == base + 1` proves no other writer even CLAIMED since the caller
+    * bound `base`. Otherwise the claim is released and None returned. */
+  private def claimSuccessor(spark: SparkSession, tableDir: String,
+                             base: Int): Option[Int] = {
+    val v = claimNextVersion(spark, tableDir)
+    if (v == base + 1) Some(v)
+    else { releaseClaim(spark, tableDir, v); None }
+  }
+
+  /** Publish an ALREADY-STAGED data folder as the next snapshot version,
+    * with a COMPLETE lost-update fence for writers whose staged output
+    * DERIVES from a specific base version (thin merge-on-read deltas,
+    * copy-on-write DML, partitioned-snapshot publishes): the claim must be
+    * the IMMEDIATE successor of `expectedBase` ([[claimSuccessor]]); any
+    * intervening claim aborts the publish (claim released, staging
+    * deleted, `ConcurrentModificationException`) instead of silently
+    * chaining past the other writer's changes. This closes the window a
+    * committed-pointer re-read leaves open (two writers can both pass a
+    * pointer check before either swaps; they cannot both claim
+    * `base + 1`). On success: ONE same-filesystem rename of the staged
+    * folder into `v=N`, then [[commitClaimed]]. A crash after the rename
+    * but before the record leaves an unrecorded orphan that never
+    * resolves.
     *
     * Liveness trade: a CRASHED claimed writer holds `base + 1` and fails
     * every fenced publish until [[vacuumOrphans]] ages its claim out —
@@ -630,27 +571,19 @@ object Sinks {
                                   staged: org.apache.hadoop.fs.Path,
                                   expectedBase: Int,
                                   tsMicros: Option[Long] = None): Int = {
-    val v = claimNextVersion(spark, tableDir)
     val f = staged.getFileSystem(spark.sessionState.newHadoopConf())
-    if (v != expectedBase + 1) {
-      // release OUR claim (exclusively owned — nobody else can hold it)
-      // so retries after the conflicting writer commits can re-fence
-      f.delete(new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=$v"), false)
+    val v = claimSuccessor(spark, tableDir, expectedBase).getOrElse {
       f.delete(staged, true)
       throw new java.util.ConcurrentModificationException(
         s"fenced publish at $tableDir: staged output derives from " +
-          s"v=$expectedBase but the claim landed at v=$v — another writer " +
-          "claimed in between; re-read and retry")
+          s"v=$expectedBase but another writer claimed in between; " +
+          "re-read and retry")
     }
-    try {
+    commitClaimed(spark, tableDir, v, tsMicros) { v =>
       val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
       if (!f.rename(staged, dest))
         throw new IllegalStateException(s"publish: rename $staged -> $dest failed")
-      carryManifest(spark, tableDir, v)
-      commitPointerCas(spark, tableDir, v, tsMicros)
-    } catch { case scala.util.control.NonFatal(e) =>
-      releaseClaimIfUnpublished(spark, tableDir, v); throw e }
-    v
+    }
   }
 
   /** MANIFEST CONTINUITY: a DML/overwrite/compaction on a manifest-bearing
@@ -748,25 +681,6 @@ object Sinks {
         releaseClaim(spark, tableDir, v)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** The claim-CAS primitives, exposed package-wide for the
-    * partitioned-snapshot module ([[graft.sources.PartitionedSnapshot]]):
-    * the SAME protocol every concurrent flat-store publisher uses —
-    * atomic exclusive claim allocation, repair-loop pointer commit,
-    * failure-path claim release — rather than a duplicate. */
-  private[graft] def claimSnapshotVersion(spark: SparkSession,
-                                          tableDir: String): Int =
-    claimNextVersion(spark, tableDir)
-  private[graft] def releaseSnapshotClaim(spark: SparkSession,
-                                          tableDir: String, v: Int): Unit =
-    releaseClaim(spark, tableDir, v)
-  private[graft] def releaseSnapshotClaimIfUnpublished(
-      spark: SparkSession, tableDir: String, v: Int): Unit =
-    releaseClaimIfUnpublished(spark, tableDir, v)
-  private[graft] def commitSnapshotPointerCas(
-      spark: SparkSession, tableDir: String, version: Int,
-      tsMicros: Option[Long] = None): Unit =
-    commitPointerCas(spark, tableDir, version, tsMicros)
-
   /** [[snapshotCommitted]] hardened for concurrent-writer windows: the
     * LOCAL checksum filesystem renames the pointer and its .crc sidecar as
     * two moves, so a read racing a swap can throw ChecksumException —
@@ -801,9 +715,10 @@ object Sinks {
     None // unreachable
   }
 
-  /** The CAS allocation loop (move 1), shared by both concurrent
-    * publishers: max over folders, claims and the pointer, then try to
-    * claim — a lost race re-reads past the winner's now-visible claim. */
+  /** The CAS allocation loop (move 1 of [[writeSnapshot]]'s protocol),
+    * shared by every claiming publisher: max over folders, claims and the
+    * pointer, then try to claim — a lost race re-reads past the winner's
+    * now-visible claim. */
   private def claimNextVersion(spark: SparkSession, tableDir: String): Int = {
     var v = 0
     while (v == 0) {
@@ -815,12 +730,30 @@ object Sinks {
     v
   }
 
-  /** The repair-loop commit of [[writeSnapshotConcurrent]] (move 2). */
+  /** Repair-loop attempts without pointer progress before the commit gives
+    * up and surfaces the last swap error. */
+  private val CommitStallLimit = 100
+
+  /** The repair-loop commit (move 2 of [[writeSnapshot]]'s protocol), the
+    * ONE pointer commit every snapshot publisher shares. The commit
+    * timestamp record (`_commits/v=N`, the `TIMESTAMP AS OF` resolution
+    * metadata) lands BEFORE any swap, so a commit is never visible without
+    * its time; a crash between record and swap leaves a timestamped orphan
+    * that stays invisible (resolution only considers versions at or below
+    * the pointer) until the next commit promotes it. The loop then swaps
+    * the pointer FORWARD to max(recorded commits) until it is at or past
+    * it — a pointer already there is left alone, so the pointer never
+    * moves back. Bounded: after [[CommitStallLimit]] attempts in a row
+    * without pointer progress (a `_latest` the store refuses to replace,
+    * say) it rethrows the last swap error, backing off between failed
+    * swaps like [[snapshotCommittedStable]]. */
   private def commitPointerCas(spark: SparkSession, tableDir: String,
                                version: Int, tsMicros: Option[Long]): Unit = {
     writeCommitRecord(spark, tableDir, version, tsMicros)
-    var done = false
-    while (!done) {
+    var best = Int.MinValue
+    var stalled = 0
+    var last: Throwable = null
+    while (true) {
       // the pointer READ shares the swap lock: on the local checksum
       // filesystem a concurrent swap renames the data file and its .crc
       // sidecar as TWO moves, and an unserialized read in that window
@@ -832,13 +765,20 @@ object Sinks {
         catch { case scala.util.control.NonFatal(_) => -1 }
       }
       val target = recordedCommits(spark, tableDir).foldLeft(version)(math.max)
-      if (cur >= target) done = true
-      else
-        // a concurrent swap can make this attempt fail (local-FS rename is
-        // not atomic cross-process); the loop's re-check IS the retry —
-        // convergence only needs SOME writer's swap to land
-        try swapPointer(spark, tableDir, target)
-        catch { case scala.util.control.NonFatal(_) => () }
+      if (cur >= target) return
+      if (cur > best) { best = cur; stalled = 0 }
+      else if (stalled >= CommitStallLimit)
+        throw Option(last).getOrElse(new IllegalStateException(
+          s"snapshot commit at $tableDir: the pointer did not reach v=$target"))
+      stalled += 1
+      // a concurrent swap can make this attempt fail (local-FS rename is
+      // not atomic cross-process); the loop's re-check IS the retry —
+      // convergence only needs SOME writer's swap to land
+      try swapPointer(spark, tableDir, target)
+      catch { case scala.util.control.NonFatal(e) =>
+        last = e
+        Thread.sleep(math.min(2L * stalled, 50L))
+      }
     }
   }
 
@@ -1439,43 +1379,23 @@ object Sinks {
             s"64-hop resolver stop", e)
     }
 
-  /** Auto-compaction for the CONCURRENT-publisher call sites. The plain
-    * [[compactSnapshot]] allocates blindly and commits with a last-writer-
-    * wins swap — racing a CAS publisher it could write into a claimed
-    * version number or regress the pointer past a newer committed delta.
-    * This variant plays the same optimistic game as the writers it runs
-    * beside: claim the next version, require it to be the IMMEDIATE
-    * successor of the triggering commit `base` (any intervening claim —
-    * i.e. any concurrent writer since — forfeits: the claim is released
-    * and the depth debt defers to THAT writer's own auto-compaction
-    * check), compact the resolved rows OF `base` specifically, and commit
-    * through the converging repair loop. On a change-feed-enabled table
-    * the compacted version's empty change grain is declared via the
-    * [[markCompaction]] stamp, so `table_changes` ranges keep spanning
-    * the history a plain INSERT transparently triggered compaction on.
+  /** Auto-compaction of the triggering commit `base`: ONE claim-fenced
+    * attempt of [[compactSnapshot]]'s body ([[compactOnto]]). Any
+    * intervening claim — i.e. any concurrent writer since — forfeits: the
+    * claim is released and the depth debt defers to THAT writer's own
+    * auto-compaction check. On a failure the claim is released too (the
+    * caller swallows the error post-commit; a leaked claim would wedge
+    * every later fenced publish). On a change-feed-enabled table the
+    * compacted version's empty change grain is declared via the
+    * `_compaction` stamp, so `table_changes` ranges keep spanning the
+    * history a plain INSERT transparently triggered compaction on.
     * (private[graft] for the fence spec: the forfeit branch needs a
     * foreign claim wedged between the triggering commit and this call —
     * unreachable from the public surface in one thread, because a
     * pre-existing claim fences the triggering statement itself.) */
   private[graft] def autoCompactCas(spark: SparkSession, tableDir: String,
-                                    base: Int): Unit = {
-    val v = claimNextVersion(spark, tableDir)
-    if (v != base + 1) {
-      releaseClaim(spark, tableDir, v)
-      return
-    }
-    try {
-      stageCompactedVersion(spark, tableDir,
-        compactionRows(spark, tableDir, base), v, base,
-        AutoCompactTargetRows)
-      carryManifest(spark, tableDir, v)
-      commitPointerCas(spark, tableDir, v, tsMicros = None)
-    } catch { case scala.util.control.NonFatal(e) =>
-      // the caller swallows this (post-commit, non-fatal) — the claim MUST
-      // be released here or the table wedges: every later fenced publish
-      // would forfeit against a claim nobody is writing
-      releaseClaimIfUnpublished(spark, tableDir, v); throw e }
-  }
+                                    base: Int): Unit =
+    compactOnto(spark, tableDir, base, AutoCompactTargetRows): Unit
 
   /** Re-derive and land any committed THIN version whose feed file is
     * missing (writer crashed between the version commit and the landing).
@@ -1853,24 +1773,23 @@ object Sinks {
         org.apache.spark.sql.types.LongType).contains(kt),
       s"bucketed snapshots need an integral key, got $kt")
     val spark = df.sparkSession
-    val next = snapshotVersions(spark, tableDir).lastOption.getOrElse(0) + 1
-    val vDir = s"$tableDir/v=$next"
-    // NULL keys are rejected IN the write pass (no extra job): pmod(null)
-    // would land rows in __bucket=__HIVE_DEFAULT_PARTITION__ and poison
-    // every subsequent bucketed read
-    df.withColumn("__bucket",
-        when(col(keyCol).isNull, raise_error(lit(
-          s"writeSnapshotBucketed: NULL in bucket key $keyCol — bucketed " +
-            "layouts require non-null keys")).cast("int"))
-          .otherwise(pmod(col(keyCol).cast("long"), lit(buckets.toLong)).cast("int")))
-      .transform(microsBound)
-      .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(vDir)
-    val mp = new org.apache.hadoop.fs.Path(vDir, "_buckets")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(s"$keyCol\n$buckets".getBytes("UTF-8")) finally out.close()
-    commitPointer(spark, tableDir, next)
-    next
+    publishClaimed(spark, tableDir) { v =>
+      val vDir = s"$tableDir/v=$v"
+      // NULL keys are rejected IN the write pass (no extra job): pmod(null)
+      // would land rows in __bucket=__HIVE_DEFAULT_PARTITION__ and poison
+      // every subsequent bucketed read
+      df.withColumn("__bucket",
+          when(col(keyCol).isNull, raise_error(lit(
+            s"writeSnapshotBucketed: NULL in bucket key $keyCol — bucketed " +
+              "layouts require non-null keys")).cast("int"))
+            .otherwise(pmod(col(keyCol).cast("long"), lit(buckets.toLong)).cast("int")))
+        .transform(microsBound)
+        .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(vDir)
+      val mp = new org.apache.hadoop.fs.Path(vDir, "_buckets")
+      val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
+      val out = fs.create(mp, true)
+      try out.write(s"$keyCol\n$buckets".getBytes("UTF-8")) finally out.close()
+    }
   }
 
   /** Restore the ZERO-EXCHANGE layout after merge-on-read DML degraded it:
@@ -1916,19 +1835,18 @@ object Sinks {
                                 statsCols: Seq[String],
                                 maxRecordsPerFile: Long = 0L): Int = {
     val spark = df.sparkSession
-    val next = snapshotVersions(spark, tableDir).lastOption.getOrElse(0) + 1
-    val w = microsBound(df).write.mode(SaveMode.Overwrite)
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w).parquet(s"$tableDir/v=$next")
-    // stats come off the just-written files' FOOTERS (min/max/null-count),
-    // not a second full read of the data — the build is O(#files) metadata
-    graft.sources.FooterStats
-      .manifestFrame(spark, s"$tableDir/v=$next",
-        graft.sources.FooterSchema.require(spark, s"$tableDir/v=$next"), statsCols)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/_manifest/v=$next")
-    commitPointer(spark, tableDir, next)
-    next
+    publishClaimed(spark, tableDir) { v =>
+      val w = microsBound(df).write.mode(SaveMode.Overwrite)
+      (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
+       else w).parquet(s"$tableDir/v=$v")
+      // stats come off the just-written files' FOOTERS (min/max/null-count),
+      // not a second full read of the data — the build is O(#files) metadata
+      graft.sources.FooterStats
+        .manifestFrame(spark, s"$tableDir/v=$v",
+          graft.sources.FooterSchema.require(spark, s"$tableDir/v=$v"), statsCols)
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/_manifest/v=$v")
+    }
   }
 
   /** Manifest-pruned snapshot read: keep only files whose [min,max] range

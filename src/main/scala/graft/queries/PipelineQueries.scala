@@ -3336,7 +3336,7 @@ object PipelineQueries {
     // ---- lakehouse: SQL TIMESTAMP AS OF through the snapshot catalog ------
     // The other half of q187: commit WALL-TIME resolution. Each publish
     // records `_commits/v=N` (micros) just before the atomic pointer swap
-    // (Sinks.commitPointer); `TIMESTAMP AS OF <ts>` maps to DSv2
+    // (Sinks.commitPointerCas); `TIMESTAMP AS OF <ts>` maps to DSv2
     // loadTable(ident, timestampMicros) → the newest version committed
     // ≤ ts (Sinks.snapshotVersionAt) — never an orphan (resolution is
     // bounded by the committed pointer). Deterministic by INJECTION: the
@@ -4764,8 +4764,8 @@ object PipelineQueries {
     // The full compliance composition the r11 verdict asked for: DELETE runs
     // against the SNAPSHOT catalog, where DML never touches the version
     // being read — the COW output publishes as a NEW immutable version
-    // (SnapshotDmlTable → Sinks.publishStagedSnapshot: claim CAS + rename +
-    // repair-loop pointer commit). The audit is then a fact, not a log
+    // (SnapshotDmlTable → Sinks.publishStagedSnapshotFenced: claim CAS +
+    // rename + repair-loop pointer commit). The audit is then a fact, not a log
     // line: snapshotDiff(v1, v2) IS exactly the removal set (over- or
     // under-deletion breaks the hash), and v1 re-read AFTER the delete
     // (`VERSION AS OF 1`, the n_v1 column) proves history stayed pinned —

@@ -55,7 +55,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    through the same pruned scan builder).
   *
   * Concurrency (r18): every publish is CLAIM-FENCED — the flat store's
-  * protocol ([[graft.operators.Sinks.writeSnapshotConcurrent]]) lifted
+  * protocol ([[graft.operators.Sinks.writeSnapshot]]) lifted
   * whole: version allocation maxes over folders, live claims AND the
   * pointer via the atomic exclusive claim create; derived publishes
   * ([[appendRows]]/[[dropPartitions]]/[[deleteRowsWhere]]/[[compactTable]])
@@ -464,37 +464,6 @@ object PartitionedSnapshot {
   private def newStaging(tableDir: String): Path = new Path(tableDir,
     s".psnap_staging_${java.util.UUID.randomUUID().toString.take(8)}")
 
-  /** The fenced commit half: claim the next version, require it to be the
-    * IMMEDIATE successor of the base the staging derived from (claims
-    * serialize allocation, so `v == base + 1` proves no other writer even
-    * claimed since the caller bound its base), ONE rename of the staged
-    * folder into `v=N`, then the shared repair-loop pointer CAS. A lost
-    * fence releases the claim, drops the staging and throws
-    * `ConcurrentModificationException` for [[retryFenced]] to re-stage. */
-  private def publishFenced(spark: SparkSession, tableDir: String,
-                            staging: Path, expectedBase: Int): Int = {
-    val v = graft.operators.Sinks.claimSnapshotVersion(spark, tableDir)
-    val fs = fsOf(spark, staging)
-    if (v != expectedBase + 1) {
-      graft.operators.Sinks.releaseSnapshotClaim(spark, tableDir, v)
-      fs.delete(staging, true): Unit
-      throw new java.util.ConcurrentModificationException(
-        s"fenced partitioned-snapshot publish at $tableDir: staged output " +
-          s"derives from v=$expectedBase but the claim landed at v=$v — " +
-          "another writer claimed in between")
-    }
-    try {
-      val dest = new Path(s"$tableDir/v=$v")
-      if (!fs.rename(staging, dest))
-        throw new IllegalStateException(
-          s"partitioned snapshot publish: rename $staging -> $dest failed")
-      graft.operators.Sinks.commitSnapshotPointerCas(spark, tableDir, v)
-    } catch { case scala.util.control.NonFatal(e) =>
-      graft.operators.Sinks.releaseSnapshotClaimIfUnpublished(
-        spark, tableDir, v); throw e }
-    v
-  }
-
   /** Optimistic retry shell for every base-derived publish: bind the
     * committed base, stage against it into a fresh staging dir this shell
     * OWNS (any failure mid-stage deletes it — no debris), fence-publish;
@@ -526,7 +495,12 @@ object PartitionedSnapshot {
         if (fs.exists(staging)) fs.delete(staging, true): Unit
         return committed
       }
-      try return publishFenced(spark, tableDir, staging, committed)
+      // the flat store's fenced publish, whole: the claim must be the
+      // IMMEDIATE successor of the staged base; its manifest carry is a
+      // no-op here (partitioned tables keep manifests in their leaves, never
+      // under a `_manifest/` root)
+      try return graft.operators.Sinks.publishStagedSnapshotFenced(
+        spark, tableDir, staging, committed)
       catch { case _: java.util.ConcurrentModificationException =>
         attempt += 1 }
     }
@@ -728,8 +702,7 @@ object PartitionedSnapshot {
       stampStagedManifests(spark, tableDir, staging, live)
       stageMeta(spark, staging, if (isRewrite) "overwrite" else "create",
         None, live)
-      val v = graft.operators.Sinks.claimSnapshotVersion(spark, tableDir)
-      try {
+      graft.operators.Sinks.publishClaimed(spark, tableDir) { v =>
         val dest = new Path(s"$tableDir/v=$v")
         if (!fs.rename(staging, dest))
           throw new IllegalStateException(
@@ -741,11 +714,7 @@ object PartitionedSnapshot {
         // routing flip, written only once everything it routes to exists.
         writeSmall(spark, schemaPath(tableDir), declared.json)
         writeSmall(spark, specPath(tableDir), spec)
-        graft.operators.Sinks.commitSnapshotPointerCas(spark, tableDir, v)
-      } catch { case scala.util.control.NonFatal(e) =>
-        graft.operators.Sinks.releaseSnapshotClaimIfUnpublished(
-          spark, tableDir, v); throw e }
-      v
+      }
     } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
   }
 
@@ -996,7 +965,7 @@ object PartitionedSnapshot {
     * and small-files debt without a write outage, and physically sheds
     * dropped-column bytes (the rewrite stages through the LIVE schema).
     * Fenced like every derived publish. The flat store's
-    * `compactSnapshot*` refuses partitioned dirs toward this.
+    * `compactSnapshot` refuses partitioned dirs toward this.
     * `targetRows` overrides the session's rows-per-file sizing when given
     * (the `snapshot_compact('t', targetRows)` SQL argument threads here —
     * ADVICE r18: it was silently ignored for partitioned handles). */

@@ -72,7 +72,7 @@ class SnapshotCatalog extends TableCatalog
 
   // All path probing goes through the Hadoop FileSystem API — the snapshot
   // protocol targets hdfs:// / s3a:// workspaces, which java.io.File can't
-  // see (Sinks.commitPointer's atomicity claim is specifically about HDFS).
+  // see (Sinks.commitPointerCas's atomicity claim is specifically about HDFS).
   private def fs(path: org.apache.hadoop.fs.Path) =
     path.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
 

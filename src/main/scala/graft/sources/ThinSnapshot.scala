@@ -136,7 +136,7 @@ private[graft] class ThinSnapshotTable(
               override def insert(data: org.apache.spark.sql.DataFrame,
                                   overwrite: Boolean): Unit = {
                 if (overwrite || overwriteAll)
-                  graft.operators.Sinks.writeSnapshotConcurrent(data, tableDir): Unit
+                  graft.operators.Sinks.writeSnapshot(data, tableDir): Unit
                 else
                   graft.operators.Sinks.appendSnapshotRows(spark, tableDir, data,
                     expectedBase = Some(pinnedVersion)): Unit

@@ -708,8 +708,8 @@ private[sources] class CowOperation(
   * immutable version instead of touching the one being read —
   * `DELETE FROM snap.t` / `UPDATE snap.t` / `MERGE INTO snap.t` each land
   * their copy-on-write output in a staging folder and commit it through
-  * [[graft.operators.Sinks.publishStagedSnapshot]] (claim CAS + rename +
-  * repair-loop pointer commit). Consequences a takedown pipeline needs:
+  * [[graft.operators.Sinks.publishStagedSnapshotFenced]] (claim CAS fenced
+  * on the bound version + rename + repair-loop pointer commit). Consequences a takedown pipeline needs:
   * the pre-DML version stays pinned-readable (`VERSION AS OF`), the diff
   * between versions IS the audited change set, a crash mid-DML leaves an
   * invisible orphan, and concurrent writers serialize on version claims.
@@ -794,7 +794,7 @@ private[sources] class SnapshotDmlTable(
           new sources.InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
               if (overwrite || overwriteAll)
-                graft.operators.Sinks.writeSnapshotConcurrent(data, tableDir): Unit
+                graft.operators.Sinks.writeSnapshot(data, tableDir): Unit
               else
                 graft.operators.Sinks.appendSnapshotRows(spark, tableDir, data,
                   expectedBase = Some(boundVersion)): Unit

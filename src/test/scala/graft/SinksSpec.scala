@@ -412,7 +412,7 @@ class SinksSpec extends AnyFunSuite {
     s.close()
   }
 
-  test("writeSnapshotConcurrent: racing writers get distinct contiguous versions, pointer converges") {
+  test("writeSnapshot: racing writers get distinct contiguous versions, pointer converges") {
     import spark.implicits._
     val s = new graft.Session.Scratch
     val dir = s"${s.dir}/cas_tbl"
@@ -425,7 +425,7 @@ class SinksSpec extends AnyFunSuite {
         try {
           val df = Seq.tabulate(10)(j => (i.toLong, j.toLong)).toDF("writer", "n")
           barrier.await()
-          results(i) = Sinks.writeSnapshotConcurrent(df, dir, Some(1000L * (i + 1)))
+          results(i) = Sinks.writeSnapshot(df, dir, Some(1000L * (i + 1)))
         } catch { case t: Throwable => errors.add(t): Unit }
       })
     }
@@ -449,7 +449,7 @@ class SinksSpec extends AnyFunSuite {
     // commit records exist for every version (TIMESTAMP AS OF stays whole)
     assert(Sinks.snapshotCommitTimes(spark, dir).keySet == (1 to writers).toSet)
     // a later sequential write continues the contiguous sequence
-    val v5 = Sinks.writeSnapshotConcurrent(
+    val v5 = Sinks.writeSnapshot(
       Seq((9L, 9L)).toDF("writer", "n"), dir, Some(99000L))
     assert(v5 == writers + 1)
     assert(Sinks.snapshotCommitted(spark, dir).contains(writers + 1))
@@ -699,7 +699,7 @@ class SinksSpec extends AnyFunSuite {
           v = Sinks.appendSnapshotRows(spark, dir, df(rows))
           rows.foreach { case (k, value) => model(k) = value }
         case 3 => // re-materialize the full state (writer-side compaction)
-          v = Sinks.writeSnapshotConcurrent(df(model.toSeq), dir)
+          v = Sinks.writeSnapshot(df(model.toSeq), dir)
         case 4 => // operator-side compaction reads through the resolver
           v = Sinks.compactSnapshot(spark, dir, targetRows = 1000000)
       }
@@ -717,7 +717,7 @@ class SinksSpec extends AnyFunSuite {
     s.close()
   }
 
-  test("writeSnapshotConcurrent repair: a stalled older writer cannot demote a newer commit") {
+  test("writeSnapshot repair: a stalled older writer cannot demote a newer commit") {
     import spark.implicits._
     val s = new graft.Session.Scratch
     val dir = s"${s.dir}/cas_repair"
@@ -726,9 +726,9 @@ class SinksSpec extends AnyFunSuite {
     // here simply commit v=1 fully, then hand-demote the pointer to mimic
     // the lost-update interleaving (rename is last-writer-wins), and prove
     // the next concurrent commit repairs past it
-    assert(Sinks.writeSnapshotConcurrent(
+    assert(Sinks.writeSnapshot(
       Seq((1L, 1L)).toDF("writer", "n"), dir, Some(1000L)) == 1)
-    assert(Sinks.writeSnapshotConcurrent(
+    assert(Sinks.writeSnapshot(
       Seq((2L, 2L)).toDF("writer", "n"), dir, Some(2000L)) == 2)
     // demote the pointer by hand (the transient state a slow writer's
     // blind rename would leave) — through the Hadoop FS API so the
@@ -740,7 +740,7 @@ class SinksSpec extends AnyFunSuite {
     assert(Sinks.snapshotCommitted(spark, dir).contains(1))
     // the next commit's repair loop must land the pointer at the MAX
     // recorded commit, not merely its own version
-    assert(Sinks.writeSnapshotConcurrent(
+    assert(Sinks.writeSnapshot(
       Seq((3L, 3L)).toDF("writer", "n"), dir, Some(3000L)) == 3)
     assert(Sinks.snapshotCommitted(spark, dir).contains(3))
     s.close()
@@ -875,7 +875,7 @@ class SinksSpec extends AnyFunSuite {
     val s = new graft.Session.Scratch
     val table = s"${s.dir}/claim_vacuum"
     // v1 through the CAS path: its claim has a commit record → protected
-    assert(Sinks.writeSnapshotConcurrent(
+    assert(Sinks.writeSnapshot(
       Seq((1L, "a")).toDF("id", "v"), table) == 1)
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -892,15 +892,15 @@ class SinksSpec extends AnyFunSuite {
     s.close()
   }
 
-  test("compactSnapshotCas: provenance-stamped commit; a wedged foreign claim defers, never overwrites") {
+  test("compactSnapshot: provenance-stamped commit; a wedged foreign claim defers, never overwrites") {
     import spark.implicits._
     val s = new graft.Session.Scratch
     val table = s"${s.dir}/compact_cas"
-    assert(Sinks.writeSnapshotConcurrent(
+    assert(Sinks.writeSnapshot(
       Seq((1L, "a")).toDF("id", "v"), table) == 1)
     val head = Sinks.appendSnapshotRows(spark, table,
       Seq((2L, "b")).toDF("id", "v"))                                // v2 thin
-    val vc = Sinks.compactSnapshotCas(spark, table, targetRows = 1000L)
+    val vc = Sinks.compactSnapshot(spark, table, targetRows = 1000L)
     assert(vc == head + 1)
     assert(Sinks.snapshotCommitted(spark, table).contains(vc))
     assert(Sinks.compactionBase(spark, table, vc).contains(head),
@@ -919,7 +919,7 @@ class SinksSpec extends AnyFunSuite {
     fs.create(new org.apache.hadoop.fs.Path(
       s"$table/_claims/v=${vc + 1}"), false).close()
     intercept[java.util.ConcurrentModificationException] {
-      Sinks.compactSnapshotCas(spark, table, targetRows = 1000L, maxRetries = 2)
+      Sinks.compactSnapshot(spark, table, targetRows = 1000L)
     }
     assert(Sinks.snapshotCommitted(spark, table).contains(vc))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$table/v=${vc + 1}")),
@@ -927,6 +927,65 @@ class SinksSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$table/_claims/v=${vc + 2}")),
       "the deferring compactor must release its own transient claims")
+    s.close()
+  }
+
+  test("every flat publish claims its version: a foreign claim at head+1 is never written into") {
+    import spark.implicits._
+    val s = new graft.Session.Scratch
+    val table = s"${s.dir}/claimed_head"
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val df = Seq((1L, "a")).toDF("id", "v")
+    assert(Sinks.writeSnapshot(df, table) == 1)
+    val publishers: Seq[(String, () => Int)] = Seq(
+      "writeSnapshot" -> (() => Sinks.writeSnapshot(df, table)),
+      "writeSnapshotBucketed" -> (() => Sinks.writeSnapshotBucketed(df, table, "id", 2)),
+      "writeSnapshotWithManifest" -> (() =>
+        Sinks.writeSnapshotWithManifest(df, table, Seq("id"))))
+    publishers.foreach { case (name, publish) =>
+      val head = Sinks.snapshotCommitted(spark, table).get
+      // another writer holds head+1: claimed, nothing landed yet
+      fs.create(new org.apache.hadoop.fs.Path(
+        s"$table/_claims/v=${head + 1}"), false).close()
+      val v = publish()
+      assert(v >= head + 2, s"$name committed v=$v over the claimed v=${head + 1}")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$table/v=${head + 1}")),
+        s"$name wrote into the claimed v=${head + 1}")
+      assert(Sinks.snapshotCommitted(spark, table).contains(v))
+      assert(Sinks.readSnapshot(spark, table).count() == 1)
+    }
+    s.close()
+  }
+
+  test("a pointer swap that keeps failing surfaces as an error, not a hang") {
+    import spark.implicits._
+    val s = new graft.Session.Scratch
+    val table = s"${s.dir}/stuck_pointer"
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // a non-empty DIRECTORY named _latest: no pointer rename can replace it
+    fs.create(new org.apache.hadoop.fs.Path(s"$table/_latest/blocker"), false)
+      .close()
+    val df = Seq((1L, "a")).toDF("id", "v")
+    // a TimeoutException here (rather than the expected failure) means the
+    // commit's repair loop spun without bound
+    def failsWithin(publish: => Int): Unit = {
+      val done = new java.util.concurrent.CompletableFuture[Int]()
+      val writer = new Thread(() =>
+        try done.complete(publish): Unit
+        catch { case t: Throwable => done.completeExceptionally(t): Unit })
+      writer.setDaemon(true)
+      writer.start()
+      intercept[java.util.concurrent.ExecutionException] {
+        done.get(90, java.util.concurrent.TimeUnit.SECONDS)
+      }: Unit
+    }
+    failsWithin(Sinks.writeSnapshot(df, table))
+    // a caller-chosen version skips allocation: its data lands and its
+    // commit goes straight into the repair loop, which must give up
+    failsWithin(Sinks.writeSnapshotAs(df, table, 1))
+    assert(Sinks.snapshotVersions(spark, table) == Seq(1))
     s.close()
   }
 

@@ -342,7 +342,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT id FROM $cat.mc WHERE id < 20").count() == 20)
     // a schema-changing overwrite that DROPS the stats column commits
     // WITHOUT a manifest (never a broken one) and still serves
-    Sinks.writeSnapshotConcurrent(
+    Sinks.writeSnapshot(
       df.select(col("txt")), s"$ws/mc"): Unit
     val v5 = Sinks.snapshotCommitted(spark, s"$ws/mc").get
     assert(!ManifestPrune.exists(spark, s"$ws/mc", v5))
@@ -1095,7 +1095,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     // pre-r17 this compacted a PINNED read (old physical names): the
     // compacted folder then served with an empty replay window, so the
     // head null-filled 'language' entirely
-    val v1 = Sinks.compactSnapshotCas(spark, dir, targetRows = 1000000L)
+    val v1 = Sinks.compactSnapshot(spark, dir, targetRows = 1000000L)
     assert(spark.read.parquet(s"$dir/v=$v1").columns.contains("language"),
       "CAS compaction kept the pre-rename physical name")
     assert(spark.sql(
@@ -1104,7 +1104,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     // drop + re-ADD + CAS compact: the old bytes must retire, not resurrect
     spark.sql(s"ALTER TABLE $cat.cc DROP COLUMN language")
     spark.sql(s"ALTER TABLE $cat.cc ADD COLUMN language STRING")
-    val v2 = Sinks.compactSnapshotCas(spark, dir, targetRows = 1000000L)
+    val v2 = Sinks.compactSnapshot(spark, dir, targetRows = 1000000L)
     val phys = spark.read.parquet(s"$dir/v=$v2").columns.toSeq
     assert(!phys.exists(_.startsWith("__dropped_")), phys.toString)
     assert(spark.sql(
