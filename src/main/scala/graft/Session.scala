@@ -101,6 +101,19 @@ object Session {
       finally s.close()
     }
 
+  /** Run `body` with the session confs `confs` set, then restore each
+    * key's previous value — or unset it if it had none. Confs bind when a
+    * plan is optimized, so run the action inside `body`. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** C6 uniqueness-checked temp-view resolution (`pro_utils.py:99-103`):
     * 0 matches or >1 case-insensitive matches → error. */
   def resolveView(spark: SparkSession, name: String): DataFrame = {

@@ -317,21 +317,13 @@ object Joins {
     * Spark gates the rule on production-scale thresholds (probe scan ≥ 10 GB
     * by default) that a local fixture never meets, so this helper scopes the
     * thresholds down (and pins a shuffle join — a broadcast join already
-    * prunes at the probe) for the duration of `body`, restoring previous
-    * values in `finally`. Confs bind at OPTIMIZATION time: run the action
-    * (write/collect) INSIDE `body`, not on the returned lazy plan.
-    * PlansSpec asserts the `might_contain` injection actually fires. */
-  def withRuntimeBloom[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val scoped = Seq(
+    * prunes at the probe) for the duration of `body`
+    * ([[graft.Session.withConfs]]). Confs bind at OPTIMIZATION time: run
+    * the action (write/collect) INSIDE `body`, not on the returned lazy
+    * plan. PlansSpec asserts the `might_contain` injection actually fires. */
+  def withRuntimeBloom[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 }

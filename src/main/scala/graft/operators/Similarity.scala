@@ -569,18 +569,11 @@ object Similarity {
     }.flatten.toSet
     val rewrite = (movedCids & newCids).toSeq.sorted
     val retired = (oldCids -- newCids).toSeq.sorted
-    if (rewrite.nonEmpty) {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try newAsg.filter(col("centroid_id").isin(rewrite: _*))
+    if (rewrite.nonEmpty)
+      newAsg.filter(col("centroid_id").isin(rewrite: _*))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("centroid_id").parquet(path)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     retired.foreach { c =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.compat.Compat
+import graft.sources.MetaFs
 
 /** Sink / materialization operators — SURVEY §2.1 S4/S5/S8/S9 + §2.8 C2/C3.
   *
@@ -179,15 +180,15 @@ object Sinks {
     * format (Iceberg/Delta) isn't in play. Every call lands a COMPLETE new
     * version under `<table>/v=N/` (a plain parquet folder, written with
     * full upstream parallelism), then commits by swapping the one-line
-    * `_latest` pointer file via write-temp + atomic rename
-    * (`FileContext.rename(OVERWRITE)` — atomic on HDFS; on S3-like stores
-    * substitute a conditional PUT). Safe for GENUINELY CONCURRENT
+    * `_latest` pointer file atomically ([[MetaFs.replace]]).
+    * Safe for GENUINELY CONCURRENT
     * independent writers — optimistic concurrency in two moves, the one
     * protocol every flat publisher shares (claim, then [[commitClaimed]]):
     *
     *  1. ALLOCATION is a compare-and-swap loop ([[claimNextVersion]]):
     *     compute next = max(folders, claims, pointer) + 1 and try to claim
-    *     it via [[claimVersion]]'s atomic exclusive create. A lost race
+    *     it with an atomic exclusive create of `_claims/v=N`
+    *     ([[MetaFs.createExclusive]]). A lost race
     *     means another writer owns that number — its claim file is now
     *     visible, so the retry allocates past it. Claimed versions are
     *     exclusively owned: no two writers ever write the same `v=N`
@@ -237,22 +238,11 @@ object Sinks {
   private def writeCommitRecord(spark: SparkSession, tableDir: String,
                                 version: Int, tsMicros: Option[Long]): Unit = {
     val ts = tsMicros.getOrElse(System.currentTimeMillis() * 1000L)
-    val cp = new org.apache.hadoop.fs.Path(s"$tableDir/_commits/v=$version")
-    val cfs = cp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!cfs.exists(cp)) {
-      // exists-then-create is not atomic: a replay racing the repair loop
-      // can pass the exists check twice — the loser's "already exists" IS
-      // the success outcome (the record is present), never a throw out of
-      // an idempotent commit
-      try {
-        val out0 = cfs.create(cp, false)
-        try out0.write(ts.toString.getBytes("UTF-8")) finally out0.close()
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-        case _: java.io.IOException if cfs.exists(cp) => ()
-      }
-    }
+    // losing the create race to a replay IS the success outcome: the
+    // record is present
+    MetaFs.createExclusive(spark,
+      new org.apache.hadoop.fs.Path(s"$tableDir/_commits/v=$version"),
+      ts.toString): Unit
   }
 
   /** Same-JVM swap serialization: `FileContext.rename(OVERWRITE)` is
@@ -263,23 +253,11 @@ object Sinks {
     * best-effort, which the repair loop's retry absorbs. */
   private val PointerSwapLock = new Object
 
-  /** Atomic pointer swap: temp write + ONE `FileContext.rename(OVERWRITE)`
-    * (atomic on HDFS; substitute a conditional PUT on object stores). */
+  /** Atomic pointer swap ([[MetaFs.replace]]). */
   private def swapPointer(spark: SparkSession, tableDir: String,
                           version: Int): Unit = PointerSwapLock.synchronized {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val fc = FileContext.getFileContext(new Path(tableDir).toUri,
-      spark.sessionState.newHadoopConf())
-    // tmp name is unique PER ATTEMPT: two repair loops converging on the
-    // same target must not share a tmp file (the loser's rename would find
-    // its source already consumed)
-    val tmp = new Path(tableDir,
-      s"_latest.tmp.$version.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-    out.write(version.toString.getBytes("UTF-8")); out.close()
-    fc.rename(tmp, new Path(tableDir, "_latest"), Options.Rename.OVERWRITE)
+    MetaFs.replace(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_latest"), version.toString)
   }
 
   /** Commit timestamps (micros) per version from the `_commits/` records,
@@ -294,16 +272,10 @@ object Sinks {
     if (!fs.exists(dir)) return Map.empty
     fs.listStatus(dir).toSeq
       .map(_.getPath)
-      .collect { case p if p.getName.startsWith("v=") &&
-          p.getName.drop(2).forall(_.isDigit) && p.getName.drop(2).nonEmpty =>
-        val v = p.getName.drop(2).toInt
-        val in = fs.open(p)
-        val ts = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toLong
-        finally in.close()
-        v -> ts
-      }
-      .filter(_._1 <= committed)
+      .flatMap(p => MetaFs.versionOf(p.getName)
+        .filter(_ <= committed)
+        .flatMap(v => MetaFs.read(spark, p)
+          .map(ts => v -> ts.trim.toLong)))
       .toMap
   }
 
@@ -408,9 +380,8 @@ object Sinks {
       s".compact_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       writeCompacted(rows, staged.toString, targetRows): Unit
-      val mp = new org.apache.hadoop.fs.Path(staged, "_compaction")
-      val out = mp.getFileSystem(spark.sessionState.newHadoopConf()).create(mp, false)
-      try out.write(base.toString.getBytes("UTF-8")) finally out.close()
+      MetaFs.stage(spark,
+        new org.apache.hadoop.fs.Path(staged, "_compaction"), base.toString)
       val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
       if (!fs.rename(staged, dest))
         throw new IllegalStateException(
@@ -424,16 +395,9 @@ object Sinks {
   def compactionBase(spark: SparkSession, tableDir: String,
                      v: Int): Option[Int] =
     cachedMarker[Int](spark, tableDir, v, "compact") {
-      val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/_compaction")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-        finally in.close()
-        txt.toIntOption
-      }
+      MetaFs.read(spark,
+        new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/_compaction"))
+        .flatMap(_.trim.toIntOption)
     }
 
   /** [[writeSnapshot]] at a CALLER-CHOSEN version — the exactly-once hook
@@ -472,36 +436,8 @@ object Sinks {
     val dir = new org.apache.hadoop.fs.Path(s"$tableDir/_claims")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") &&
-        s.drop(2).nonEmpty && s.drop(2).forall(_.isDigit) => s.drop(2).toInt }
-  }
-
-  /** Atomic EXCLUSIVE claim of a version number — the compare-and-swap
-    * that makes concurrent writers safe. The primitive is create-if-absent
-    * where absence is checked by the STORE, not the client: O_CREAT|O_EXCL
-    * via NIO on local filesystems (kernel-atomic; Hadoop's
-    * RawLocalFileSystem create is check-then-create and can race), the
-    * namenode-atomic `create(overwrite=false)` on HDFS, a conditional PUT
-    * on object stores. Returns false — claim lost — when the file already
-    * exists. */
-  private def claimVersion(spark: SparkSession, tableDir: String,
-                           version: Int): Boolean = {
-    val dir = new org.apache.hadoop.fs.Path(s"$tableDir/_claims")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(dir): Unit
-    val p = new org.apache.hadoop.fs.Path(dir, s"v=$version")
-    val scheme = fs.getUri.getScheme
-    if (scheme == null || scheme == "file") {
-      try {
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(p.toUri.getPath)): Unit
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try { fs.create(p, false).close(); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-    }
+    else fs.listStatus(dir).toSeq.flatMap(st =>
+      MetaFs.versionOf(st.getPath.getName))
   }
 
   /** Every version with a commit RECORD, pointer-independent (unlike
@@ -510,9 +446,8 @@ object Sinks {
     val dir = new org.apache.hadoop.fs.Path(s"$tableDir/_commits")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") &&
-        s.drop(2).nonEmpty && s.drop(2).forall(_.isDigit) => s.drop(2).toInt }
+    else fs.listStatus(dir).toSeq.flatMap(st =>
+      MetaFs.versionOf(st.getPath.getName))
   }
 
   /** The publish every unfenced flat writer shares: claim the next version
@@ -725,7 +660,8 @@ object Sinks {
       val next = (snapshotVersions(spark, tableDir) ++
         claimedVersions(spark, tableDir) ++
         snapshotCommitted(spark, tableDir).toSeq).foldLeft(0)(math.max) + 1
-      if (claimVersion(spark, tableDir, next)) v = next
+      if (MetaFs.createExclusive(spark,
+          new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=$next"))) v = next
     }
     v
   }
@@ -791,24 +727,14 @@ object Sinks {
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") &&
-        s.drop(2).nonEmpty && s.drop(2).forall(_.isDigit) => s.drop(2).toInt }
+      .flatMap(st => MetaFs.versionOf(st.getPath.getName))
       .sorted
   }
 
   /** The version `_latest` points at; None before the first commit. */
-  def snapshotCommitted(spark: SparkSession, tableDir: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_latest")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toInt)
-      finally in.close()
-    }
-  }
+  def snapshotCommitted(spark: SparkSession, tableDir: String): Option[Int] =
+    MetaFs.read(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_latest")).map(_.trim.toInt)
 
   /** Read the committed snapshot, or an explicit pinned `version` (time
     * travel). Unpinned reads NEVER trust folder listings — only the
@@ -844,18 +770,11 @@ object Sinks {
     * only ever appends nullable columns. */
   def declareSnapshotSchema(spark: SparkSession, tableDir: String,
                             schema: org.apache.spark.sql.types.StructType): Unit = {
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_schema.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // complete-or-absent (temp + ONE rename): a reader racing the write,
-    // or a crash mid-write, must never observe a truncated JSON — every
-    // unpinned read parses this file
-    val tmp = new org.apache.hadoop.fs.Path(tableDir,
-      s"._schema.json.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false): Unit
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"declareSnapshotSchema: rename to $p failed")
+    // complete-or-absent: a reader racing the write, or a crash
+    // mid-write, must never observe a truncated JSON — every unpinned read
+    // parses this file
+    MetaFs.replace(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_schema.json"), schema.json)
     declaredSchemaCache.remove(tableDir): Unit
   }
 
@@ -875,18 +794,10 @@ object Sinks {
       Option[org.apache.spark.sql.types.StructType] = {
     val hit = declaredSchemaCache.get(tableDir)
     if (hit != null) return hit
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_schema.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val res =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-        Some(org.apache.spark.sql.types.DataType.fromJson(txt)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      }
+    val res = MetaFs.read(spark,
+        new org.apache.hadoop.fs.Path(tableDir, "_schema.json"))
+      .map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
     if (declaredSchemaCache.size >= MarkerCacheMax) declaredSchemaCache.clear()
     declaredSchemaCache.put(tableDir, res): Unit
     res
@@ -1044,32 +955,23 @@ object Sinks {
     * Declaring keys ASSERTS uniqueness: a thin delete removes every row
     * sharing a matched key, which equals predicate-delete exactly when the
     * key identifies one row (the same contract thin upserts already
-    * enforce batch-side). Stored as a one-line `_keycols` file; idempotent
-    * re-declaration overwrites. */
+    * enforce batch-side). Stored as a one-line `_keycols` file, replaced
+    * atomically (every DELETE plan parses it); idempotent re-declaration
+    * overwrites. */
   def declareSnapshotKeys(spark: SparkSession, tableDir: String,
                           keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty && keyCols.forall(!_.contains(",")),
       "key columns must be non-empty and ','-free (marker format)")
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_keycols")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(keyCols.mkString(",").getBytes("UTF-8")) finally out.close()
+    MetaFs.replace(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_keycols"), keyCols.mkString(","))
   }
 
   /** The declared row-identity columns, None if never declared. */
   def snapshotDeclaredKeys(spark: SparkSession,
-                           tableDir: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_keycols")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-      Some(txt.trim.split(',').toSeq)
-    }
-  }
+                           tableDir: String): Option[Seq[String]] =
+    MetaFs.read(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_keycols"))
+      .map(_.trim.split(',').toSeq)
 
   /** Publish a TASK-STAGED thin delta (the `SupportsDelta` SQL DML path:
     * executors already wrote `_deletes`/`_upserts` parquet parts into
@@ -1113,10 +1015,9 @@ object Sinks {
             ") — a MERGE source must be unique per key")
       }
     }
-    val mp = new org.apache.hadoop.fs.Path(staged, "_base.json")
-    val out = fs.create(mp, false)
-    try out.write(s"$expectedBase\n${keyCols.mkString(",")}".getBytes("UTF-8"))
-    finally out.close()
+    MetaFs.stage(spark,
+      new org.apache.hadoop.fs.Path(staged, "_base.json"),
+      s"$expectedBase\n${keyCols.mkString(",")}")
     val v = publishStagedSnapshotFenced(spark, tableDir, staged, expectedBase)
     if (changeFeedEnabled(spark, tableDir))
       landChangeFeedSafe(spark, tableDir, v,
@@ -1149,18 +1050,15 @@ object Sinks {
     * [[repairChangeFeed]] re-derives it from the version's own
     * `_deletes`/`_upserts` (idempotent by file name). */
   def enableChangeFeed(spark: SparkSession, tableDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_cdf_enabled")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(new org.apache.hadoop.fs.Path(tableDir, "cdf")): Unit
-    if (!fs.exists(p)) {
-      // record the ENABLE POINT (the committed version at enable time):
-      // the feed starts here — repair must never fabricate feed files for
-      // older commits, which live consumers would replay OUT OF ORDER
-      val out = fs.create(p, false)
-      try out.write(snapshotCommitted(spark, tableDir).getOrElse(0)
-        .toString.getBytes("UTF-8"))
-      finally out.close()
-    }
+    val cdf = new org.apache.hadoop.fs.Path(tableDir, "cdf")
+    MetaFs.fs(spark, cdf).mkdirs(cdf): Unit
+    // record the ENABLE POINT (the committed version at enable time): the
+    // feed starts here — repair must never fabricate feed files for older
+    // commits, which live consumers would replay OUT OF ORDER. Already
+    // enabled keeps its original point.
+    MetaFs.createExclusive(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_cdf_enabled"),
+      snapshotCommitted(spark, tableDir).getOrElse(0).toString): Unit
   }
 
   def changeFeedEnabled(spark: SparkSession, tableDir: String): Boolean = {
@@ -1170,16 +1068,10 @@ object Sinks {
 
   /** The version the feed was enabled AT — commits at or below it never
     * feed (an empty/legacy marker reads as 0: everything feeds). */
-  private def changeFeedSince(spark: SparkSession, tableDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(tableDir, "_cdf_enabled")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Int.MaxValue
-    val in = fs.open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-    finally in.close()
-    txt.toIntOption.getOrElse(0)
-  }
+  private def changeFeedSince(spark: SparkSession, tableDir: String): Int =
+    MetaFs.read(spark,
+      new org.apache.hadoop.fs.Path(tableDir, "_cdf_enabled"))
+      .map(_.trim.toIntOption.getOrElse(0)).getOrElse(Int.MaxValue)
 
   /** The feed's read schema for a table (base columns + change metadata) —
     * what a `readStream.schema(...)` consumer passes. */
@@ -1488,14 +1380,8 @@ object Sinks {
   def thinBase(spark: SparkSession, tableDir: String,
                version: Int): Option[(Int, Seq[String])] =
     cachedMarker[(Int, Seq[String])](spark, tableDir, version, "thin") {
-      val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$version/_base.json")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
+      MetaFs.read(spark,
+        new org.apache.hadoop.fs.Path(s"$tableDir/v=$version/_base.json")).map { txt =>
         // fixed two-line format: "<base>\n<keyCol,keyCol,...>" — no JSON
         // parser dependency needed for two fields. An EMPTY second line is a
         // keyless APPEND version (base ∪ upserts, no identity semantics).
@@ -1503,7 +1389,7 @@ object Sinks {
         val keys =
           if (lines.length < 2 || lines(1).trim.isEmpty) Seq.empty[String]
           else lines(1).trim.split(',').toSeq
-        Some((lines(0).trim.toInt, keys))
+        (lines(0).trim.toInt, keys)
       }
     }
 
@@ -1716,11 +1602,9 @@ object Sinks {
         .transform(microsBound).write.parquet(new org.apache.hadoop.fs.Path(staged, "_deletes").toString))
     upserts.foreach(
       u => microsBound(u).write.parquet(new org.apache.hadoop.fs.Path(staged, "_upserts").toString))
-    val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
-    val mp = new org.apache.hadoop.fs.Path(staged, "_base.json")
-    val out = fs.create(mp, false)
-    try out.write(s"$base\n${keyCols.mkString(",")}".getBytes("UTF-8"))
-    finally out.close()
+    MetaFs.stage(spark,
+      new org.apache.hadoop.fs.Path(staged, "_base.json"),
+      s"$base\n${keyCols.mkString(",")}")
     val v = publishStagedSnapshotFenced(spark, tableDir, staged, base, commitTsMicros)
     // change data feed (opt-in): land this commit's change rows post-commit
     // — a crash in between is repaired from the version's own delta files
@@ -1785,10 +1669,8 @@ object Sinks {
             .otherwise(pmod(col(keyCol).cast("long"), lit(buckets.toLong)).cast("int")))
         .transform(microsBound)
         .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(vDir)
-      val mp = new org.apache.hadoop.fs.Path(vDir, "_buckets")
-      val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(mp, true)
-      try out.write(s"$keyCol\n$buckets".getBytes("UTF-8")) finally out.close()
+      MetaFs.stage(spark,
+        new org.apache.hadoop.fs.Path(vDir, "_buckets"), s"$keyCol\n$buckets")
     }
   }
 
@@ -1808,16 +1690,10 @@ object Sinks {
   def bucketedLayout(spark: SparkSession, tableDir: String,
                      version: Int): Option[(String, Int)] =
     cachedMarker[(String, Int)](spark, tableDir, version, "buckets") {
-      val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$version/_buckets")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
+      MetaFs.read(spark,
+        new org.apache.hadoop.fs.Path(s"$tableDir/v=$version/_buckets")).map { txt =>
         val lines = txt.trim.split('\n')
-        Some((lines(0).trim, lines(1).trim.toInt))
+        (lines(0).trim, lines(1).trim.toInt)
       }
     }
 
@@ -2073,14 +1949,9 @@ object Sinks {
     if (fs.exists(claimsDir)) {
       val folders = snapshotVersions(spark, tableDir).toSet
       fs.listStatus(claimsDir).toSeq
-        .filter { s =>
-          val n = s.getPath.getName
-          n.startsWith("v=") && n.drop(2).nonEmpty &&
-            n.drop(2).forall(_.isDigit) &&
-            !folders.contains(n.drop(2).toInt) &&
-            !recorded.contains(n.drop(2).toInt) &&
-            now - s.getModificationTime > graceMs
-        }
+        .filter(s => MetaFs.versionOf(s.getPath.getName)
+          .exists(v => !folders.contains(v) && !recorded.contains(v)) &&
+          now - s.getModificationTime > graceMs)
         .foreach(s => fs.delete(s.getPath, false))
     }
     dropped

@@ -3185,11 +3185,8 @@ object PipelineQueries {
       val chk = s"${scratch.dir}/chk186"
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"))
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.Session.withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         var sinkDf: org.apache.spark.sql.DataFrame = null
         Seq(("b1", ev.filter(pmod(col("event_id"), lit(2)) === 0)),
             ("b2", ev.filter(pmod(col("event_id"), lit(2)) === 1))).foreach {
@@ -3208,9 +3205,6 @@ object PipelineQueries {
           .filter(col("__rn") === 1)
           .select("user_id", "n")
           .orderBy("user_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -5450,11 +5444,8 @@ object PipelineQueries {
       val dim = ev.groupBy("user_id").agg(min(col("event_id")).as("first_event"))
       Sinks.writeSnapshotBucketed(ev, s"$ws/spjf_$tag", "user_id", 8): Unit
       Sinks.writeSnapshotBucketed(dim, s"$ws/spjd_$tag", "user_id", 8): Unit
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "-1")
-      try {
+      graft.Session.withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = s.sql(
           s"""SELECT f.user_id, f.event_id, d.first_event
              |FROM $cat.spjf_$tag f JOIN $cat.spjd_$tag d
@@ -5468,9 +5459,6 @@ object PipelineQueries {
           .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
           .withColumn("no_exchange", lit(if (noExchange) 1 else 0))
           .orderBy("user_id")
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
 
@@ -5669,11 +5657,8 @@ object PipelineQueries {
       val fdir = s"$ws/bmf_$tag"
       Sinks.writeSnapshotBucketed(ev, fdir, "user_id", 8): Unit
       Sinks.writeSnapshotBucketed(dim, s"$ws/bmd_$tag", "user_id", 8): Unit
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "-1")
-      try {
+      graft.Session.withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         def joined = s.sql(
           s"""SELECT f.user_id, f.event_id, d.first_event
              |FROM $cat.bmf_$tag f JOIN $cat.bmd_$tag d
@@ -5696,9 +5681,6 @@ object PipelineQueries {
           .withColumn("post_dml_exchange", lit(if (postDmlExchange) 1 else 0))
           .withColumn("rebucket_no_exchange", lit(if (rebucketNoExchange) 1 else 0))
           .orderBy("user_id")
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
 
@@ -6533,9 +6515,7 @@ object PipelineQueries {
       // statement mid-copy as far as the protocol can tell
       val claim = graft.sources.WorkspaceDmlLock.claimPathOf(tdir,
         "ts_day=19725")
-      f.mkdirs(claim.getParent): Unit
-      val o = f.create(claim, false)
-      try o.write("foreign".getBytes("UTF-8")) finally o.close()
+      graft.sources.MetaFs.createExclusive(s, claim, "foreign"): Unit
       def cme(body: => Unit): Boolean =
         try { body; false }
         catch { case t: Throwable =>
@@ -6558,10 +6538,10 @@ object PipelineQueries {
         "ts < TIMESTAMP '2024-01-04 00:00:00'"))
       // whole-table ops WAIT (bounded, r17) for claims to drain before
       // refusing — shrink the budget so the face measures the refusal
-      s.conf.set("graft.workspace.dmlLockWaitMs", "300")
-      val wholeBlocked =
-        try cme(s.sql(s"DELETE FROM $cat.pcl WHERE event_type = 'purchase'"))
-        finally s.conf.unset("graft.workspace.dmlLockWaitMs")
+      val wholeBlocked = graft.Session.withConfs(s,
+          "graft.workspace.dmlLockWaitMs" -> "300") {
+        cme(s.sql(s"DELETE FROM $cat.pcl WHERE event_type = 'purchase'"))
+      }
       f.delete(claim, false): Unit
       s.sql(s"DELETE FROM $cat.pcl WHERE " +
         "ts >= TIMESTAMP '2024-01-03 00:00:00' AND " +
@@ -6900,11 +6880,8 @@ object PipelineQueries {
       s.sql(s"DELETE FROM $cat.wbf WHERE event_id % 97 = 13")
       s.sql(s"CREATE TABLE $cat.wbn AS SELECT user_id, first_event " +
         s"FROM $cat.wbd")
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "-1")
-      try {
+      graft.Session.withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = s.sql(
           s"""SELECT f.user_id, f.event_id, d.first_event
              |FROM $cat.wbf f JOIN $cat.wbd d
@@ -6924,9 +6901,6 @@ object PipelineQueries {
           .withColumn("no_exchange", lit(if (noExchange) 1 else 0))
           .withColumn("flat_shuffles", lit(if (flatShuffles) 1 else 0))
           .orderBy("user_id")
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
 
@@ -7606,11 +7580,8 @@ object PipelineQueries {
       graft.sources.PartitionedSnapshot.appendRows(s, s"$ws/$fact",
         s.sql(s"SELECT $nid AS event_id, $muid AS user_id, " +
           "'late' AS event_type")): Unit                               // v2
-      val prev = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevB = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.Session.withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         // plan-STRING probe (the q252 discipline): an unexecuted AQE plan
         // is an AdaptiveSparkPlanExec wrapper whose children a tree
         // collect cannot see — the string dump shows the initial plan
@@ -7630,15 +7601,6 @@ object PipelineQueries {
           .withColumn("no_exchange", lit(if (noExchange) 1 else 0))
           .withColumn("control_shuffles", lit(if (controlShuffles) 1 else 0))
           .orderBy("event_id")
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-          case None => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-        }
-        prevB match {
-          case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-          case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        }
       }
     },
 
@@ -7912,13 +7874,8 @@ object PipelineQueries {
         val owned = files(root)
         val rows =
           if (owned.isEmpty) 0L else s.read.parquet(owned: _*).count()
-        val cp = new org.apache.hadoop.fs.Path(root, "_carry")
-        val inherit = f.exists(cp) && {
-          val in = f.open(cp)
-          try new String(org.apache.hadoop.io.IOUtils
-            .readFullyToByteArray(in), "UTF-8").startsWith("#base ")
-          finally in.close()
-        }
+        val inherit = graft.sources.MetaFs.read(s,
+          new org.apache.hadoop.fs.Path(root, "_carry")).exists(_.startsWith("#base "))
         (rows, inherit)
       }
       val facts = (2 to 4).map(versionFacts)

@@ -77,21 +77,13 @@ object PartitionChangeFeed {
     new Path(real.getParent, s".${real.getName}.__cdf")
   }
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Opt the table in. Idempotent. */
-  def enable(spark: SparkSession, dir: String): Unit = {
-    val root = feedRoot(dir)
-    val fs = fsOf(spark, root)
-    fs.mkdirs(root): Unit
-    val marker = new Path(root, "_enabled")
-    if (!fs.exists(marker)) fs.create(marker, false).close()
-  }
+  def enable(spark: SparkSession, dir: String): Unit =
+    MetaFs.createExclusive(spark, new Path(feedRoot(dir), "_enabled")): Unit
 
   def enabled(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(feedRoot(dir), "_enabled")
-    fsOf(spark, p).exists(p)
+    MetaFs.fs(spark, p).exists(p)
   }
 
   /** Stage one statement's change rows while its pre-image is still live.
@@ -103,7 +95,7 @@ object PartitionChangeFeed {
     val root = feedRoot(dir)
     val tmp = new Path(root,
       s".staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    val fs = fsOf(spark, tmp)
+    val fs = MetaFs.fs(spark, tmp)
     try graft.operators.Sinks.microsBound(rows).write.parquet(tmp.toString)
     catch { case t: Throwable =>
       if (fs.exists(tmp)) fs.delete(tmp, true): Unit
@@ -134,19 +126,11 @@ object PartitionChangeFeed {
 
   /** "The statement IS published; its feed entry must land": written by
     * the publish strictly after every staged leaf moved in and before the
-    * parked pre-image copies delete. Complete-or-absent (temp+rename). */
+    * parked pre-image copies delete. Complete-or-absent. */
   private[sources] def journalPublished(spark: SparkSession, dir: String,
                                         staged: Option[Path]): Unit =
-    staged.foreach { tmp =>
-      val j = journalPath(dir, tagOf(tmp))
-      val fs = fsOf(spark, j)
-      val t = new Path(j.getParent,
-        s".${j.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(t, true)
-      try out.write(tmp.getName.getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(t, j))
-        throw new IllegalStateException(s"feed journal rename to $j failed")
-    }
+    staged.foreach(tmp =>
+      MetaFs.replace(spark, journalPath(dir, tagOf(tmp)), tmp.getName))
 
   /** Rename the staged entry in and retire its journal — strictly AFTER
     * the data publish. Non-fatal by design: on failure the JOURNAL
@@ -158,9 +142,9 @@ object PartitionChangeFeed {
       try {
         val dest = new Path(feedRoot(dir),
           s"c${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}")
-        if (!fsOf(spark, tmp).rename(tmp, dest))
+        if (!MetaFs.fs(spark, tmp).rename(tmp, dest))
           throw new IllegalStateException(s"feed rename $tmp -> $dest failed")
-        fsOf(spark, tmp).delete(journalPath(dir, tagOf(tmp)), false): Unit
+        MetaFs.fs(spark, tmp).delete(journalPath(dir, tagOf(tmp)), false): Unit
       } catch {
         case scala.util.control.NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -173,7 +157,7 @@ object PartitionChangeFeed {
   private[sources] def abortStaged(spark: SparkSession,
                                    staged: Option[Path]): Unit =
     staged.foreach { tmp =>
-      val fs = fsOf(spark, tmp)
+      val fs = MetaFs.fs(spark, tmp)
       val journal = new Path(tmp.getParent, s".pending_${tagOf(tmp)}")
       // the journal is written strictly PAST the publish's point of no
       // return, so its existence proves the statement's data IS live even
@@ -194,7 +178,7 @@ object PartitionChangeFeed {
     * only on feed-enabled tables (the feed root's existence gates it). */
   private[sources] def hasPending(spark: SparkSession, dir: String): Boolean = {
     val root = feedRoot(dir)
-    val fs = fsOf(spark, root)
+    val fs = MetaFs.fs(spark, root)
     fs.exists(root) && fs.listStatus(root).exists(
       _.getPath.getName.startsWith(".pending_"))
   }
@@ -215,7 +199,7 @@ object PartitionChangeFeed {
   private[sources] def repairPending(spark: SparkSession, dir: String,
                                      graceMs: Long = 24L * 3600 * 1000): Unit = {
     val root = feedRoot(dir)
-    val fs = fsOf(spark, root)
+    val fs = MetaFs.fs(spark, root)
     if (!fs.exists(root)) return
     val entries = fs.listStatus(root).toSeq
     val journaled = scala.collection.mutable.Set.empty[String]
@@ -242,14 +226,14 @@ object PartitionChangeFeed {
   private[sources] def markRewrite(spark: SparkSession, dir: String): Unit = {
     val p = new Path(feedRoot(dir),
       s"_rewrite_${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}")
-    try fsOf(spark, p).create(p, false).close()
+    try MetaFs.createExclusive(spark, p): Unit
     catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** Millisecond timestamps of recorded rewrite discontinuities, sorted. */
   def discontinuities(spark: SparkSession, dir: String): Seq[Long] = {
     val root = feedRoot(dir)
-    val fs = fsOf(spark, root)
+    val fs = MetaFs.fs(spark, root)
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("_rewrite_"))
@@ -268,7 +252,7 @@ object PartitionChangeFeed {
   def read(spark: SparkSession, dir: String,
            declared: org.apache.spark.sql.types.StructType): DataFrame = {
     val root = feedRoot(dir)
-    val fs = fsOf(spark, root)
+    val fs = MetaFs.fs(spark, root)
     val entries =
       if (!fs.exists(root)) Nil
       else fs.listStatus(root).toSeq

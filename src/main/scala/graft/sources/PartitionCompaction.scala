@@ -55,15 +55,13 @@ object PartitionCompaction {
     WorkspaceDmlLock.withLockNoClaims(spark, dir.toString) {
       val f = dir.getFileSystem(spark.sessionState.newHadoopConf())
       require(f.exists(dir), s"no table directory $dir")
-      val marker = PartitionEvolution
-        .readSmall(spark, PartitionEvolution.partMarker(ws, table))
+      val marker = MetaFs.read(spark, PartitionEvolution.partMarker(ws, table))
         .map(_.trim)
         .getOrElse(throw new IllegalArgumentException(
           s"$table is not a partitioned workspace table — compact flat " +
             "tables by rewriting them (Sinks.writeCompacted), or versioned " +
             "tables with snapshot_compact"))
-      val declared = PartitionEvolution
-        .readSmall(spark, PartitionEvolution.sidecar(ws, table))
+      val declared = MetaFs.read(spark, PartitionEvolution.sidecar(ws, table))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
         .getOrElse(spark.read.parquet(dir.toString).schema)
       val levels = PartitionEvolution.levelsOf(marker, declared)

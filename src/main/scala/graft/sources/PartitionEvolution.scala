@@ -38,9 +38,6 @@ import org.apache.spark.sql.types._
   * see an empty directory; writers are fenced by the lock. */
 object PartitionEvolution {
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private[sources] def tableDir(ws: String, name: String) = new Path(s"$ws/$name.parquet")
   private[sources] def sidecar(ws: String, name: String) =
     new Path(s"$ws/_graft_schema/$name.json")
@@ -48,33 +45,6 @@ object PartitionEvolution {
     new Path(s"$ws/_graft_schema/$name.part")
   private def journal(ws: String, name: String) =
     new Path(s"$ws/_graft_schema/$name.repart")
-
-  private[sources] def readSmall(spark: SparkSession, p: Path): Option[String] = {
-    val f = fsOf(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
-  }
-
-  /** Complete-or-absent small-file write: temp + ONE rename. The JOURNAL
-    * rides this — a half-written intent must read as NO intent (recovery
-    * treats a malformed journal as an uncommitted attempt), never as a
-    * parse crash that bricks every loadTable of the table. */
-  private def writeSmall(spark: SparkSession, p: Path, txt: String): Unit = {
-    val f = fsOf(spark, p)
-    f.mkdirs(p.getParent): Unit
-    val tmp = new Path(p.getParent,
-      s".${p.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false): Unit
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"small-file write: rename to $p failed")
-  }
 
   private[sources] def levelsOf(marker: String, declared: StructType): Seq[PartLevel] =
     PartitionedWorkspace.levelsOf(marker, declared)
@@ -95,10 +65,10 @@ object PartitionEvolution {
       // gate, so the wait's transient lock release is safe (r17)
       lock = WorkspaceDmlLock.awaitNoLiveClaims(spark, dir.toString, lock)
       recoverLocked(spark, ws, table)
-      val f = fsOf(spark, dir)
+      val f = MetaFs.fs(spark, dir)
       require(f.exists(dir), s"no table directory $dir")
-      val oldMarker = readSmall(spark, partMarker(ws, table)).map(_.trim)
-      val declared = readSmall(spark, sidecar(ws, table))
+      val oldMarker = MetaFs.read(spark, partMarker(ws, table)).map(_.trim)
+      val declared = MetaFs.read(spark, sidecar(ws, table))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
         .getOrElse(spark.read.parquet(dir.toString).schema)
       val oldLevels = levelsOf(oldMarker.getOrElse(""), declared)
@@ -169,7 +139,7 @@ object PartitionEvolution {
       // finishSwap's single rename, crash-atomic with the data (the
       // journal is written AFTER, so roll-forward recovery publishes them
       // together).
-      PartitionManifest.statsCols(f, dir.toString).foreach { cols =>
+      PartitionManifest.statsCols(spark, dir.toString).foreach { cols =>
         val fileSchema = StructType(canonical.fields.filterNot(fd =>
           idCols.exists(_.equalsIgnoreCase(fd.name))))
         val resolved = FooterStats.resolveCols(fileSchema,
@@ -177,14 +147,14 @@ object PartitionEvolution {
         if (newLevels.nonEmpty)
           PartitionManifest.leafDirsOf(f, staged).foreach(
             PartitionManifest.writeLeafManifest(spark, _, fileSchema, resolved))
-        val mk = PartitionManifest.markerPath(staged.toString)
-        val out = f.create(mk, true)
-        try out.write(resolved.mkString(",").getBytes("UTF-8"))
-        finally out.close()
+        MetaFs.stage(spark, PartitionManifest.markerPath(staged.toString),
+          resolved.mkString(","))
       }
 
-      // 2. journal the commit intent, then the rename dance (3..6)
-      writeSmall(spark, journal(ws, table),
+      // 2. journal the commit intent, then the rename dance (3..6). The
+      // journal is replaced atomically: a half-written intent must read as
+      // NO intent, never as a parse crash that bricks every loadTable
+      MetaFs.replace(spark, journal(ws, table),
         s"$tag\n$newSpec\n${canonical.json}")
       finishSwap(spark, ws, table, tag, newSpec, canonical.json)
     } finally WorkspaceDmlLock.release(spark, lock)
@@ -242,7 +212,7 @@ object PartitionEvolution {
                          tag: String, newSpec: String,
                          sidecarJson: String): Unit = {
     val dir = tableDir(ws, table)
-    val f = fsOf(spark, dir)
+    val f = MetaFs.fs(spark, dir)
     val staged = new Path(ws, s".repart_${table}_$tag")
     val parked = new Path(ws, s".repart_old_${table}_$tag")
     if (f.exists(staged)) {
@@ -251,11 +221,11 @@ object PartitionEvolution {
       if (!f.rename(staged, dir))
         throw new IllegalStateException(s"repartition: could not publish $staged")
     }
-    writeSmall(spark, sidecar(ws, table), sidecarJson)
+    MetaFs.replace(spark, sidecar(ws, table), sidecarJson)
     if (newSpec.isEmpty) {
       val mp = partMarker(ws, table)
       if (f.exists(mp)) f.delete(mp, false): Unit
-    } else writeSmall(spark, partMarker(ws, table), newSpec)
+    } else MetaFs.replace(spark, partMarker(ws, table), newSpec)
     if (f.exists(parked)) f.delete(parked, true): Unit
     f.delete(journal(ws, table), false): Unit
     spark.catalog.refreshByPath(dir.toString)
@@ -264,7 +234,7 @@ object PartitionEvolution {
   /** Recovery under an ALREADY-HELD lock (see [[recoverSafe]]). */
   private def recoverLocked(spark: SparkSession, ws: String,
                             table: String): Unit =
-    readSmall(spark, journal(ws, table)).foreach { txt =>
+    MetaFs.read(spark, journal(ws, table)).foreach { txt =>
       val lines = txt.split('\n')
       if (lines.length < 3) {
         // malformed journal (pre-atomic-write legacy torn file, or hand
@@ -272,12 +242,12 @@ object PartitionEvolution {
         // all-or-nothing — treat as NO intent; markers were never touched
         // before the journal existed, so dropping it restores the old spec
         // and any staged dirs become journal-less debris for the janitor
-        fsOf(spark, journal(ws, table)).delete(journal(ws, table), false): Unit
+        MetaFs.fs(spark, journal(ws, table)).delete(journal(ws, table), false): Unit
       } else {
         val (tag, newSpec, sidecarJson) =
           (lines(0).trim, lines(1).trim, lines.drop(2).mkString("\n"))
         val dir = tableDir(ws, table)
-        val f = fsOf(spark, dir)
+        val f = MetaFs.fs(spark, dir)
         val staged = new Path(ws, s".repart_${table}_$tag")
         val parked = new Path(ws, s".repart_old_${table}_$tag")
         if (f.exists(staged) && f.exists(dir) && !f.exists(parked)) {
@@ -298,7 +268,7 @@ object PartitionEvolution {
     * as the partition-republish repair). */
   def recoverSafe(spark: SparkSession, ws: String, table: String): Unit = {
     val j = journal(ws, table)
-    if (!fsOf(spark, j).exists(j)) return
+    if (!MetaFs.fs(spark, j).exists(j)) return
     val lock =
       try WorkspaceDmlLock.acquire(spark, tableDir(ws, table).toString)
       catch { case _: java.util.ConcurrentModificationException => return }

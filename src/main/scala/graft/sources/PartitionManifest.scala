@@ -49,17 +49,9 @@ object PartitionManifest {
   def markerPath(dir: String): Path = new Path(dir, ".stats_cols")
 
   /** The table's opted-in stats columns, if any. */
-  def statsCols(fs: FileSystem, dir: String): Option[Seq[String]] = {
-    val p = markerPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
-      Some(txt.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-    }
-  }
+  def statsCols(spark: SparkSession, dir: String): Option[Seq[String]] =
+    MetaFs.read(spark, markerPath(dir))
+      .map(_.trim.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
 
   /** One line per (file, column): `S <file> <col> <kind> <min> <max>
     * <nulls>`; one `F <file> <rowcount>` line per file. Values are stored
@@ -126,14 +118,7 @@ object PartitionManifest {
           s"${st.nullCount.map(_.toString).getOrElse("-")}\n")
       }
     }
-    val tmp = new Path(leaf,
-      s"._manifest.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    val dest = new Path(leaf, FileName)
-    if (fs.exists(dest)) fs.delete(dest, false): Unit
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(s"manifest rename failed in $leaf")
+    MetaFs.replace(spark, new Path(leaf, FileName), sb.toString)
   }
 
   /** Opt a partitioned workspace table into per-leaf file manifests and
@@ -170,9 +155,7 @@ object PartitionManifest {
           graft.Par.each(leaves)(writeLeafManifest(spark, _, schema, resolved))
           resolved
         }
-      val mk = markerPath(tableDir)
-      val out = fs.create(mk, true)
-      try out.write(canonical.mkString(",").getBytes("UTF-8")) finally out.close()
+      MetaFs.replace(spark, markerPath(tableDir), canonical.mkString(","))
       leaves.length
     }
 
@@ -202,16 +185,10 @@ object PartitionManifest {
   def prunedFiles(spark: SparkSession, leaf: Path,
                   pushed: Seq[sources.Filter]): Option[Seq[String]] =
     try {
-      val fs = leaf.getFileSystem(spark.sessionState.newHadoopConf())
-      val mp = new Path(leaf, FileName)
-      if (!fs.exists(mp)) return None
-      val listed = fs.listStatus(leaf).toSeq
+      val txt = MetaFs.read(spark, new Path(leaf, FileName)).getOrElse(return None)
+      val listed = MetaFs.fs(spark, leaf).listStatus(leaf).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(_.getPath.getName).toSet
-      val in = fs.open(mp)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
       val rowCounts = scala.collection.mutable.Map[String, Long]()
       val stats = scala.collection.mutable
         .Map[String, scala.collection.mutable.Map[String, ManifestPrune.ColRange]]()

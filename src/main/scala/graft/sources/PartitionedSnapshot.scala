@@ -69,40 +69,23 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * that surviving versions still CARRY FROM — like thin bases. */
 object PartitionedSnapshot {
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def specPath(tableDir: String) = new Path(tableDir, "_partspec")
   private def schemaPath(tableDir: String) = new Path(tableDir, "_partschema.json")
   private def carryPath(tableDir: String, v: Int) =
     new Path(s"$tableDir/v=$v/_carry")
 
   /** The table's partition spec marker, if it is a partitioned snapshot. */
-  def partSpec(spark: SparkSession, tableDir: String): Option[String] = {
-    val p = specPath(tableDir)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-  }
+  def partSpec(spark: SparkSession, tableDir: String): Option[String] =
+    MetaFs.read(spark, specPath(tableDir)).map(_.trim)
 
   /** The FULL declared schema — including `__dropped_<id>` tombstones
     * (metadata-only DROP COLUMN leaves the field in the sidecar so its
     * parquet id can never be reused). Serving filters them
     * ([[liveSchema]]). */
   def declaredSchema(spark: SparkSession, tableDir: String): StructType = {
-    val p = schemaPath(tableDir)
-    val fs = fsOf(spark, p)
-    require(fs.exists(p), s"$tableDir has no _partschema.json")
-    val in = fs.open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    DataType.fromJson(txt).asInstanceOf[StructType]
+    val txt = MetaFs.read(spark, schemaPath(tableDir))
+    require(txt.isDefined, s"$tableDir has no _partschema.json")
+    DataType.fromJson(txt.get).asInstanceOf[StructType]
   }
 
   /** The declared schema minus dropped-column tombstones — what every
@@ -113,27 +96,18 @@ object PartitionedSnapshot {
       _.name.startsWith(WorkspaceCatalog.DroppedPrefix)))
 
   /** Record the evolved declared schema (the SQL catalog's metadata-only
-    * ALTER writes through here; complete-or-absent small-file write). */
+    * ALTER writes through here; complete-or-absent). */
   private[graft] def declareSchema(spark: SparkSession, tableDir: String,
                                    schema: StructType): Unit =
-    writeSmall(spark, schemaPath(tableDir), schema.json)
+    MetaFs.replace(spark, schemaPath(tableDir), schema.json)
 
   /** A version's own pinned serving schema — the live schema at its
     * publish. Absent on pre-r18 folders (falls back to the table's
     * current live schema). */
   private[graft] def pinSchemaOf(spark: SparkSession, tableDir: String,
-                                 v: Int): Option[StructType] = {
-    val p = new Path(s"$tableDir/v=$v/_pinschema.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-      Some(DataType.fromJson(txt).asInstanceOf[StructType])
-    }
-  }
+                                 v: Int): Option[StructType] =
+    MetaFs.read(spark, new Path(s"$tableDir/v=$v/_pinschema.json"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** The schema a read of version `v` serves: the version's own pin when
     * pinned, the table's current live schema otherwise. */
@@ -146,22 +120,13 @@ object PartitionedSnapshot {
     * (`snapshot_history`'s classification metadata, staged with the data
     * so it rides the atomic publish rename). */
   private[graft] def versionMeta(spark: SparkSession, tableDir: String,
-                                 v: Int): Option[(String, Option[Int])] = {
-    val p = new Path(s"$tableDir/v=$v/_op")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
-      txt.split(':') match {
+                                 v: Int): Option[(String, Option[Int])] =
+    MetaFs.read(spark, new Path(s"$tableDir/v=$v/_op")).flatMap(
+      _.trim.split(':') match {
         case Array(op) => Some((op, None))
         case Array(op, b) => Some((op, b.toIntOption))
         case _ => None
-      }
-    }
-  }
+      })
 
   private[graft] def levelsOf(spark: SparkSession,
                               tableDir: String): Seq[PartLevel] = {
@@ -215,18 +180,6 @@ object PartitionedSnapshot {
       .toSet
   }
 
-  private def writeSmall(spark: SparkSession, p: Path, txt: String): Unit = {
-    val fs = fsOf(spark, p)
-    fs.mkdirs(p.getParent): Unit
-    val tmp = new Path(p.getParent,
-      s".${p.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false): Unit
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"small-file write: rename to $p failed")
-  }
-
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
@@ -253,28 +206,20 @@ object PartitionedSnapshot {
     * concurrent expire's protection set); a missing file means "no
     * carries" (v=1, or a full rewrite/compaction). */
   private def readCarryRef(spark: SparkSession, tableDir: String,
-                           v: Int): Option[CarryRef] = {
-    val p = carryPath(tableDir, v)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
+                           v: Int): Option[CarryRef] =
+    MetaFs.read(spark, carryPath(tableDir, v)).map { txt =>
       if (txt.startsWith("#base ")) {
         val b = txt.stripPrefix("#base ").trim.toInt
         require(b > 0 && b < v,
           s"$tableDir v=$v: carry base $b must be an OLDER version — " +
             "the inheritance chain is corrupt")
-        Some(CarryBase(b))
-      } else Some(CarryEntries(
+        CarryBase(b)
+      } else CarryEntries(
         txt.split('\n').toSeq.filter(_.nonEmpty).map { line =>
           val i = line.indexOf('\t')
           (dec(line.take(i)), dec(line.drop(i + 1)))
-        }))
+        })
     }
-  }
 
   /** The versions whose `_carry` FILES a resolution of `v` reads — `v`
     * itself plus every `#base` hop down to and INCLUDING the anchor.
@@ -295,26 +240,15 @@ object PartitionedSnapshot {
   }
 
   private def writeCarry(spark: SparkSession, dest: Path,
-                         entries: Seq[(String, String)]): Unit = {
-    val fs = fsOf(spark, dest)
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(dest, false)
-    try out.write(entries.sortBy(_._1)
-      .map { case (v, r) => s"${enc(v)}\t${enc(r)}" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+                         entries: Seq[(String, String)]): Unit =
+    MetaFs.stage(spark, dest, entries.sortBy(_._1)
+      .map { case (v, r) => s"${enc(v)}\t${enc(r)}" }.mkString("\n"))
 
   /** The O(1) inheritance carry (r19): `#base <v>` — staged like every
     * carry, arrives in the version's atomic rename. */
   private def writeCarryBase(spark: SparkSession, dest: Path,
-                             base: Int): Unit = {
-    val fs = fsOf(spark, dest)
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(dest, false)
-    try out.write(s"#base $base".getBytes("UTF-8"))
-    finally out.close()
-  }
+                             base: Int): Unit =
+    MetaFs.stage(spark, dest, s"#base $base")
 
   /** Hop-chain checkpoint interval (`graft.snapshot.carryCheckpointInterval`,
     * default 32): a pure-delta append whose inheritance chain would reach
@@ -332,7 +266,7 @@ object PartitionedSnapshot {
   private def ownedDirs(spark: SparkSession, tableDir: String, v: Int,
                         levels: Seq[PartLevel]): Seq[(String, String)] = {
     val root = new Path(s"$tableDir/v=$v")
-    val fs = fsOf(spark, root)
+    val fs = MetaFs.fs(spark, root)
     if (!fs.exists(root)) Nil
     else {
       def descend(base: Path, lvl: Int, vals: Seq[String],
@@ -377,7 +311,7 @@ object PartitionedSnapshot {
         // instead of silently serving the partial chain (a missing
         // _carry inside an EXISTING folder is a legitimate anchor)
         val bDir = new Path(s"$tableDir/v=$b")
-        if (!fsOf(spark, bDir).exists(bDir))
+        if (!MetaFs.fs(spark, bDir).exists(bDir))
           throw new IllegalStateException(
             s"$tableDir v=$v resolves through v=$b, which has been " +
               "EXPIRED — this version's history is beyond retention " +
@@ -413,8 +347,7 @@ object PartitionedSnapshot {
     survivors.flatMap { v =>
       chainVersions(spark, tableDir, v) ++
         resolvedPartitions(spark, tableDir, v).flatMap { case (_, rel) =>
-          rel.split('/').headOption.filter(_.startsWith("v="))
-            .flatMap(_.drop(2).toIntOption)
+          rel.split('/').headOption.flatMap(MetaFs.versionOf)
         }
     }.toSet
 
@@ -451,14 +384,9 @@ object PartitionedSnapshot {
     * schema — both arrive with the data in ONE atomic rename. */
   private def stageMeta(spark: SparkSession, staging: Path, op: String,
                         base: Option[Int], pin: StructType): Unit = {
-    val fs = fsOf(spark, staging)
-    fs.mkdirs(staging): Unit
-    val opOut = fs.create(new Path(staging, "_op"), false)
-    try opOut.write(
-      (op + base.map(b => s":$b").getOrElse("")).getBytes("UTF-8"))
-    finally opOut.close()
-    val pinOut = fs.create(new Path(staging, "_pinschema.json"), false)
-    try pinOut.write(pin.json.getBytes("UTF-8")) finally pinOut.close()
+    MetaFs.stage(spark, new Path(staging, "_op"),
+      op + base.map(b => s":$b").getOrElse(""))
+    MetaFs.stage(spark, new Path(staging, "_pinschema.json"), pin.json)
   }
 
   private def newStaging(tableDir: String): Path = new Path(tableDir,
@@ -484,7 +412,7 @@ object PartitionedSnapshot {
         .getOrElse(throw new IllegalStateException(
           s"no committed snapshot at $tableDir"))
       val staging = newStaging(tableDir)
-      val fs = fsOf(spark, staging)
+      val fs = MetaFs.fs(spark, staging)
       val staged =
         try stage(committed, staging)
         catch { case t: Throwable =>
@@ -540,11 +468,8 @@ object PartitionedSnapshot {
       val dirs = resolvedPartitions(spark, tableDir, committed).map(_._2)
       graft.Par.each(dirs)(rel => PartitionManifest.writeLeafManifest(
         spark, new Path(s"$tableDir/$rel"), live, resolved))
-      val mk = PartitionManifest.markerPath(tableDir)
-      val fs = fsOf(spark, mk)
-      val out = fs.create(mk, true)
-      try out.write(resolved.mkString(",").getBytes("UTF-8"))
-      finally out.close()
+      MetaFs.replace(spark, PartitionManifest.markerPath(tableDir),
+        resolved.mkString(","))
       dirs.length
     }
 
@@ -587,8 +512,8 @@ object PartitionedSnapshot {
   private def stampStagedManifests(spark: SparkSession, tableDir: String,
                                    staging: Path,
                                    schema: StructType): Unit = {
-    val fs = fsOf(spark, staging)
-    PartitionManifest.statsCols(fs, tableDir).foreach { cols =>
+    val fs = MetaFs.fs(spark, staging)
+    PartitionManifest.statsCols(spark, tableDir).foreach { cols =>
       val resolved = FooterStats.resolveCols(schema,
         cols.filter(c => schema.fieldNames.exists(_.equalsIgnoreCase(c))))
       graft.Par.each(PartitionManifest.leafDirsOf(fs, staging))(
@@ -655,7 +580,7 @@ object PartitionedSnapshot {
     // at publish form one read-modify-write against concurrent ALTERs
     val existingSidecar: Option[StructType] = {
       val p = schemaPath(tableDir)
-      if (partSpec(spark, tableDir).isDefined && fsOf(spark, p).exists(p))
+      if (partSpec(spark, tableDir).isDefined && MetaFs.fs(spark, p).exists(p))
         Some(declaredSchema(spark, tableDir))
       else None
     }
@@ -695,7 +620,7 @@ object PartitionedSnapshot {
     val live = StructType(declared.fields.filterNot(
       _.name.startsWith(WorkspaceCatalog.DroppedPrefix)))
     val staging = newStaging(tableDir)
-    val fs = fsOf(spark, staging)
+    val fs = MetaFs.fs(spark, staging)
     try {
       PartitionEvolution.stageLayoutWrite(
         spark, df, live, levels, staging, targetRowsPerFile(spark))
@@ -712,8 +637,8 @@ object PartitionedSnapshot {
         // BEFORE the pointer commit (a reader resolving the new version
         // must find them). Schema first, spec last — the spec IS the
         // routing flip, written only once everything it routes to exists.
-        writeSmall(spark, schemaPath(tableDir), declared.json)
-        writeSmall(spark, specPath(tableDir), spec)
+        MetaFs.replace(spark, schemaPath(tableDir), declared.json)
+        MetaFs.replace(spark, specPath(tableDir), spec)
       }
     } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
   }
@@ -1225,7 +1150,7 @@ private[graft] class PartitionedSnapshotTable(
           // spans the version's whole carry graph
           val fs = new Path(tableDir).getFileSystem(
             spark.sessionState.newHadoopConf())
-          if (PartitionManifest.statsCols(fs, tableDir).isEmpty) dirs
+          if (PartitionManifest.statsCols(spark, tableDir).isEmpty) dirs
           else dirs.flatMap { d =>
             PartitionManifest.prunedFiles(spark, new Path(d), filters)
               .getOrElse(Seq(d))

@@ -690,7 +690,6 @@ private[sources] class PartitionedWorkspaceTable(
   PartitionedWorkspace.validateLevels(declaredFull, levels)
 
   private[sources] def tableDir: String = dir
-  private def fsOf(p: Path) = p.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** V1 reads (the DELETE discovery/survivor scans and [[readFull]]) must
     * resolve columns by parquet FIELD ID, like every DSv2 scan of this
@@ -754,7 +753,7 @@ private[sources] class PartitionedWorkspaceTable(
         opts.asCaseSensitiveMap())
       withBase.put("basePath", dir): Unit
       val baseOpts = new CaseInsensitiveStringMap(withBase)
-      val stats = PartitionManifest.statsCols(fsOf(new Path(dir)), dir)
+      val stats = PartitionManifest.statsCols(spark, dir)
       new org.apache.spark.sql.graftbridge.PrunedParquetScanBuilder(
         tableName, spark,
         PartitionedWorkspace.innerReadSchema(declaredFull, levels), baseOpts,
@@ -819,7 +818,7 @@ private[sources] class PartitionedWorkspaceTable(
               case (path, Seq(v)) if filters.forall(hidden.mayMatch(_, v)) =>
                 path
             }
-            if (PartitionManifest.statsCols(fsOf(new Path(dir)), dir).isEmpty)
+            if (PartitionManifest.statsCols(spark, dir).isEmpty)
               dirs
             else dirs.flatMap { p =>
               PartitionManifest.prunedFiles(spark, new Path(p), filters)
@@ -858,7 +857,7 @@ private[sources] class PartitionedWorkspaceTable(
     * the staged directory names) — the post-image of an uncommitted COW
     * statement, for the change feed's pre/post diff. */
   private[sources] def readStagedLeaves(staging: Path): DataFrame = {
-    val f = fsOf(staging)
+    val f = MetaFs.fs(spark, staging)
     val leaves =
       if (!f.exists(staging)) Nil
       else walkLeaves(staging, f).map(_._1)
@@ -867,7 +866,7 @@ private[sources] class PartitionedWorkspaceTable(
   }
 
   private[sources] def stagedRels(staging: Path): Seq[String] = {
-    val f = fsOf(staging)
+    val f = MetaFs.fs(spark, staging)
     if (!f.exists(staging)) Nil
     else walkLeaves(staging, f).map { case (_, vals) => relOf(vals) }
   }
@@ -879,7 +878,7 @@ private[sources] class PartitionedWorkspaceTable(
   }
 
   private[sources] def dropStaging(staging: Path): Unit = {
-    val f = fsOf(staging)
+    val f = MetaFs.fs(spark, staging)
     if (f.exists(staging)) f.delete(staging, true): Unit
   }
 
@@ -903,7 +902,7 @@ private[sources] class PartitionedWorkspaceTable(
 
   private[sources] def leafDirsWithValues(): Seq[(String, Seq[String])] = {
     val root = new Path(dir)
-    walkLeaves(root, fsOf(root))
+    walkLeaves(root, MetaFs.fs(spark, root))
   }
 
   /** Relative leaf path of one value tuple (`a=1/b=x`). */
@@ -953,7 +952,7 @@ private[sources] class PartitionedWorkspaceTable(
     * statement lock. */
   private[sources] def repairRetiredPartitions(): Unit = {
     val root = new Path(dir)
-    val f = fsOf(root)
+    val f = MetaFs.fs(spark, root)
     if (!f.exists(root)) return
     f.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(".retired_"))
@@ -980,12 +979,8 @@ private[sources] class PartitionedWorkspaceTable(
         // dropped here (deterministically, not age-gated — the park
         // debris proves the statement is dead, and this pass runs under
         // the table's DML lock).
-        val marker = new Path(st.getPath, "_feed")
-        if (f.exists(marker)) {
-          val in = f.open(marker)
-          val lines = (try new String(org.apache.hadoop.io.IOUtils
-            .readFullyToByteArray(in), "UTF-8") finally in.close())
-            .split('\n')
+        MetaFs.read(spark, new Path(st.getPath, "_feed")).foreach { txt =>
+          val lines = txt.split('\n')
           if (lines.length >= 2) {
             val feedStaged = new Path(
               PartitionChangeFeed.feedRoot(dir), lines(0).trim)
@@ -1026,7 +1021,7 @@ private[sources] class PartitionedWorkspaceTable(
     * copies under a live lock are an in-flight publish, not a crash. */
   private[sources] def repairRetiredPartitionsSafe(): Unit = {
     val root = new Path(dir)
-    val f = fsOf(root)
+    val f = MetaFs.fs(spark, root)
     if (!f.exists(root)) return
     val debris = f.listStatus(root).exists(st =>
       st.isDirectory && st.getPath.getName.startsWith(".retired_"))
@@ -1058,7 +1053,7 @@ private[sources] class PartitionedWorkspaceTable(
   private[sources] def publishPartitioned(staging: Path,
                                           readRels: Option[Seq[String]],
                                           feedStaged: Option[Path] = None): Unit = {
-    val f = fsOf(staging)
+    val f = MetaFs.fs(spark, staging)
     // heartbeat before any leaf is parked: the statement's SCAN may have
     // outlived the lock grace, and a stale-broken lock during the rename
     // window would let a load-time repair restore retired partitions
@@ -1069,7 +1064,7 @@ private[sources] class PartitionedWorkspaceTable(
     // the same rename that publishes the leaf (crash-atomic with its
     // data), and a failure here aborts the statement with the table
     // untouched. O(staged files) metadata reads, zero data pages.
-    val statsColsOpt = PartitionManifest.statsCols(f, dir)
+    val statsColsOpt = PartitionManifest.statsCols(spark, dir)
     if (f.exists(staging)) statsColsOpt.foreach { cols =>
       walkLeaves(staging, f).foreach { case (leafPath, _) =>
         PartitionManifest.writeLeafManifest(
@@ -1087,22 +1082,12 @@ private[sources] class PartitionedWorkspaceTable(
     // restored + no staged leaf data left) and lands the feed entry
     // instead of age-gating it away. The park root deletes with the
     // marker on every completed publish.
-    feedStaged.foreach { fp =>
-      f.mkdirs(park): Unit
-      // COMPLETE-OR-ABSENT (temp + one rename): a torn marker naming a
-      // garbled staging dir would make the repair judge "no staged leaf
-      // data left" vacuously true and fabricate a feed entry for a
-      // statement that never published; an absent marker only costs the
-      // age-gate fallback
-      val tmp = new Path(park,
-        s"._feed.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = f.create(tmp, false)
-      try out.write(s"${fp.getName}\n${staging.getName}".getBytes("UTF-8"))
-      finally out.close()
-      if (!f.rename(tmp, new Path(park, "_feed")))
-        throw new IllegalStateException(
-          s"feed marker rename failed in $park (table untouched)")
-    }
+    // COMPLETE-OR-ABSENT: a torn marker naming a garbled staging dir
+    // would make the repair judge "no staged leaf data left" vacuously
+    // true and fabricate a feed entry for a statement that never
+    // published; an absent marker only costs the age-gate fallback
+    feedStaged.foreach(fp => MetaFs.replace(spark, new Path(park, "_feed"),
+      s"${fp.getName}\n${staging.getName}"))
     val toRetire = (readRels match {
       case Some(rels) => rels
       case None => leafDirsWithValues().map { case (_, vals) => relOf(vals) }

@@ -100,21 +100,9 @@ class WorkspaceCatalog extends TableCatalog
       .filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
   }
 
-  private def readSidecar(name: String): Option[StructType] = {
-    val p = sidecarPath(name)
-    val f = fs(p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(org.apache.spark.sql.types.DataType.fromJson(
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-          .asInstanceOf[StructType])
-      } finally in.close()
-    }
-  }
+  private def readSidecar(name: String): Option[StructType] =
+    MetaFs.read(SparkSession.active, sidecarPath(name)).map(
+      org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Dropped columns stay in the sidecar as `__dropped_<id>` TOMBSTONES
     * (type + field id preserved, name retired): the sidecar remains ONE
@@ -125,13 +113,10 @@ class WorkspaceCatalog extends TableCatalog
     StructType(schema.fields.filterNot(
       _.name.startsWith(WorkspaceCatalog.DroppedPrefix)))
 
-  private def writeSidecar(name: String, schema: StructType): Unit = {
-    val p = sidecarPath(name)
-    val f = fs(p)
-    val out = f.create(p, true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** Replaced atomically: every `loadTable` parses the sidecar, so a
+    * write torn by a crash (CREATE, ALTER) must never be observable. */
+  private def writeSidecar(name: String, schema: StructType): Unit =
+    MetaFs.replace(SparkSession.active, sidecarPath(name), schema.json)
 
   private def allNames(): Seq[String] = (dirEntries() ++ sidecarEntries()).distinct
 
@@ -145,17 +130,8 @@ class WorkspaceCatalog extends TableCatalog
   private def partMarkerPath(name: String) =
     new org.apache.hadoop.fs.Path(s"$workspace/_graft_schema/$name.part")
 
-  private def readPartSpec(name: String): Option[String] = {
-    val p = partMarkerPath(name)
-    val f = fs(p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-  }
+  private def readPartSpec(name: String): Option[String] =
+    MetaFs.read(SparkSession.active, partMarkerPath(name)).map(_.trim)
 
   /** Marker text → partition levels (needs the declared schema to type the
     * temporal source columns). */
@@ -334,10 +310,7 @@ class WorkspaceCatalog extends TableCatalog
     val dir = tablePath(ident.name())
     fs(dir).mkdirs(dir): Unit
     writeSidecar(ident.name(), stamped)
-    val mp = partMarkerPath(ident.name())
-    val out = fs(mp).create(mp, true)
-    try out.write(marker.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    MetaFs.replace(SparkSession.active, partMarkerPath(ident.name()), marker)
     loadTable(ident)
   }
 
@@ -595,26 +568,16 @@ class WorkspaceCatalog extends TableCatalog
         (r.fieldNames()(0), r.newName())
     }
     if (renamePairs.nonEmpty && partMarker.isDefined) {
-      val mk = PartitionManifest.markerPath(tablePath(actual).toString)
-      PartitionManifest.statsCols(fs(mk), tablePath(actual).toString).foreach { cols =>
+      val spark = SparkSession.active
+      val dir = tablePath(actual).toString
+      PartitionManifest.statsCols(spark, dir).foreach { cols =>
         val mapped = cols.map(c => renamePairs.foldLeft(c) { case (n, (f, t)) =>
           if (n.equalsIgnoreCase(f)) t else n })
-        if (mapped != cols) {
-          // temp + rename, like the sidecar: an in-place overwrite torn by
-          // a crash would leave a garbled marker silently corrupting the
-          // per-leaf manifest pruning opt-in (ADVICE r17)
-          val f = fs(mk)
-          val tmp = new org.apache.hadoop.fs.Path(mk.getParent,
-            s".${mk.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-          val out = f.create(tmp, true)
-          try out.write(mapped.mkString(",")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          if (f.exists(mk)) f.delete(mk, false): Unit
-          if (!f.rename(tmp, mk))
-            throw new IllegalStateException(
-              s"stats-cols marker rename to $mk failed")
-        }
+        // replaced atomically, like the sidecar: a marker torn by a crash
+        // would silently corrupt the per-leaf manifest pruning opt-in
+        if (mapped != cols)
+          MetaFs.replace(spark, PartitionManifest.markerPath(dir),
+            mapped.mkString(","))
       }
     }
     loadTable(ident)

@@ -51,7 +51,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 /** Per-table, per-statement DML FENCE for workspace tables: one exclusive
   * claim file (`.<table>.__dml_lock`, atomic create-exclusive — the same
-  * primitive as the snapshot claim CAS, Sinks.claimVersion) acquired
+  * primitive as the snapshot claim CAS, MetaFs.createExclusive) acquired
   * BEFORE any statement task reads table data, released after publish or
   * abort. Two concurrent row-level statements against one table therefore
   * never interleave their read-copy-publish cycles: the loser aborts with
@@ -85,70 +85,40 @@ private[graft] object WorkspaceDmlLock {
     new Path(real.getParent, s".${real.getName}.__dml_lock")
   }
 
-  /** Create-exclusive WITH the owner token as content. The creation is
-    * the atomic step; the token write follows within the same call, so a
-    * racing reader can observe an empty just-created file — which reads
-    * as "token unknown" and is treated as held (never as breakable). */
-  private def tryCreate(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                        token: String): Boolean = {
-    val scheme = fs.getUri.getScheme
-    if (scheme == null || scheme == "file") {
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(p.toUri.getPath),
-          token.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE): Unit
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: java.nio.file.NoSuchFileException => false
-      }
-    } else {
-      try {
-        val out = fs.create(p, false)
-        try out.write(token.getBytes("UTF-8")) finally out.close()
-        true
-      }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-    }
-  }
-
-  /** The token currently in the lock file — None when the file is gone
-    * or unreadable (racing delete), Some("") for a legacy/manual empty
-    * lock. Comparisons treat any read failure as "unknown ≠ mine". */
-  private def readToken(fs: org.apache.hadoop.fs.FileSystem,
-                        p: Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim)
-      finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** The token currently in the lock or claim file — None when the file
+    * is gone or unreadable (racing delete), Some("") for a legacy/manual
+    * empty lock. Comparisons treat any read failure as "unknown ≠ mine".
+    * The lock is created exclusively WITH its token as content, the token
+    * write following the creation, so a racing reader can observe an
+    * empty just-created file — "token unknown", treated as held (never as
+    * breakable). */
+  private def tokenOf(spark: SparkSession, p: Path): Option[String] =
+    try MetaFs.read(spark, p).map(_.trim)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   def acquire(spark: SparkSession, dir: String): Handle = {
     val p = lockPath(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = MetaFs.fs(spark, p)
     val token = java.util.UUID.randomUUID().toString
-    if (tryCreate(fs, p, token)) return Handle(p, token)
+    if (MetaFs.createExclusive(spark, p, token)) return Handle(p, token)
     val graceMs = spark.conf
       .get("graft.workspace.dmlLockGraceMs", "900000").trim.toLong
     // snapshot the STALE holder's identity before deciding to break: if
     // the file's token changes between this read and the delete, the old
     // holder released and a NEW statement re-acquired — deleting then
     // would break a fresh lock, not a crashed one
-    val staleToken = readToken(fs, p)
+    val staleToken = tokenOf(spark, p)
     val stale =
       try System.currentTimeMillis() -
         fs.getFileStatus(p).getModificationTime > graceMs
       catch { case _: java.io.FileNotFoundException => true }
     if (stale) {
-      val now = readToken(fs, p)
+      val now = tokenOf(spark, p)
       if (now == staleToken || now.isEmpty) {
         // token unchanged (or file already gone) — still the crashed
         // holder's lock as far as the store can tell; break it
         fs.delete(p, false): Unit
-        if (tryCreate(fs, p, token)) return Handle(p, token)
+        if (MetaFs.createExclusive(spark, p, token)) return Handle(p, token)
       }
     }
     throw new java.util.ConcurrentModificationException(
@@ -161,8 +131,8 @@ private[graft] object WorkspaceDmlLock {
     * stale-broken and re-taken must not release the new holder's lock on
     * its way out — a token mismatch leaves the file alone. */
   def release(spark: SparkSession, h: Handle): Unit = {
-    val fs = h.path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (readToken(fs, h.path).contains(h.token)) fs.delete(h.path, false): Unit
+    if (tokenOf(spark, h.path).contains(h.token))
+      MetaFs.fs(spark, h.path).delete(h.path, false): Unit
   }
 
   /** HEARTBEAT: refresh the lock's mtime so the stale-break deadline
@@ -323,12 +293,10 @@ private[graft] object WorkspaceDmlLock {
     * the table lock, which the caller holds. */
   def verifyClaims(spark: SparkSession, paths: Seq[Path],
                    token: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     // bounded parallel fan-out (graft.Par): one token read per touched
     // partition is a serial driver round-trip train on wide statements
     graft.Par.each(paths) { p =>
-      val fs = p.getFileSystem(conf)
-      if (!readToken(fs, p).contains(token))
+      if (!tokenOf(spark, p).contains(token))
         throw new java.util.ConcurrentModificationException(
           s"partition claim $p was broken past graft.workspace.dmlLockGraceMs " +
             "and retaken by another statement during this statement's copy " +
@@ -377,7 +345,7 @@ private[graft] object WorkspaceDmlLock {
     val conf = spark.sessionState.newHadoopConf()
     graft.Par.each(paths) { p =>
       val fs = p.getFileSystem(conf)
-      if (readToken(fs, p).contains(token)) fs.delete(p, false): Unit
+      if (tokenOf(spark, p).contains(token)) fs.delete(p, false): Unit
     }
   }
 
@@ -405,7 +373,7 @@ private[graft] object WorkspaceDmlLock {
     graft.Par.each(paths) { p =>
       val fs = p.getFileSystem(conf)
       try {
-        if (readToken(fs, p).contains(token))
+        if (tokenOf(spark, p).contains(token))
           fs.setTimes(p, System.currentTimeMillis(), -1)
       } catch { case scala.util.control.NonFatal(_) => () }
     }
@@ -504,9 +472,6 @@ private[sources] class GraftWorkspaceTable(
     Seq(dir), declared, classOf[ParquetFileFormat])
   with SupportsDelete with SupportsRowLevelOperations {
 
-  private def fsOf(p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private[sources] def declaredSchema: Option[StructType] = declared
 
   /** Field-id reads ride EVERY scan of a workspace table: catalog-created
@@ -546,7 +511,7 @@ private[sources] class GraftWorkspaceTable(
     * DML is the contract (see class scaladoc). */
   private[sources] def swapIn(staging: Path): Unit = {
     val real = new Path(dir)
-    val f = fsOf(real)
+    val f = MetaFs.fs(spark, real)
     val trash = new Path(real.getParent,
       s".${real.getName}.__replaced_${java.util.UUID.randomUUID().toString.take(8)}")
     val hadLive = f.exists(real)
@@ -561,7 +526,7 @@ private[sources] class GraftWorkspaceTable(
   }
 
   private[sources] def dropStaging(staging: Path): Unit = {
-    val f = fsOf(staging)
+    val f = MetaFs.fs(spark, staging)
     if (f.exists(staging)) f.delete(staging, true): Unit
   }
 

@@ -50,13 +50,9 @@ object Streams {
                       statePartitions: Int = 8,
                       noDataBatch: Boolean = false)
                      (build: => DataFrame): DataFrame = {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val partsPrev = s.conf.getOption(partsKey)
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(partsKey, statePartitions.toString)
-    s.conf.set(noDataKey, noDataBatch.toString)
-    try {
+    graft.Session.withConfs(s,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) {
       val sinkMode = if (outputMode == "complete") "overwrite" else "append"
       val query = build.writeStream
         .outputMode(outputMode)
@@ -67,15 +63,6 @@ object Streams {
         }
         .start()
       query.awaitTermination()
-    } finally {
-      partsPrev match {
-        case Some(v) => s.conf.set(partsKey, v)
-        case None => s.conf.unset(partsKey)
-      }
-      noDataPrev match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None => s.conf.unset(noDataKey)
-      }
     }
     s.read.parquet(sink)
   }
@@ -93,28 +80,20 @@ object Streams {
   def runUpdateTagged(s: SparkSession, sink: String, chk: String,
                       statePartitions: Int = 8)
                      (build: => DataFrame): (DataFrame, Seq[StreamingQueryProgress]) = {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.getOption(partsKey)
-    s.conf.set(partsKey, statePartitions.toString)
-    val progress =
-      try {
-        val query = build.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            batch.withColumn("__batch", lit(batchId))
-              .write.mode("append").parquet(sink)
-          }
-          .start()
-        query.awaitTermination()
-        query.recentProgress.toSeq
-      } finally {
-        partsPrev match {
-          case Some(v) => s.conf.set(partsKey, v)
-          case None => s.conf.unset(partsKey)
+    val progress = graft.Session.withConfs(s,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
+      val query = build.writeStream
+        .outputMode("update")
+        .option("checkpointLocation", chk)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          batch.withColumn("__batch", lit(batchId))
+            .write.mode("append").parquet(sink)
         }
-      }
+        .start()
+      query.awaitTermination()
+      query.recentProgress.toSeq
+    }
     (s.read.parquet(sink), progress)
   }
 
@@ -261,15 +240,8 @@ object Streams {
                                 checkpointFile: String, outDir: String,
                                 run: Int): Int = {
     val cp = new org.apache.hadoop.fs.Path(checkpointFile)
-    val fs = cp.getFileSystem(s.sessionState.newHadoopConf())
-    val lastSeen =
-      if (!fs.exists(cp)) 1 // v=1 is the creating write: no change grain
-      else {
-        val in = fs.open(cp)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toInt
-        finally in.close()
-      }
+    // v=1 is the creating write: no change grain
+    val lastSeen = graft.sources.MetaFs.read(s, cp).map(_.trim.toInt).getOrElse(1)
     val committed = graft.operators.Sinks.snapshotCommitted(s, tableDir)
       .getOrElse(throw new IllegalStateException(
         s"no committed snapshot at $tableDir"))
@@ -278,14 +250,7 @@ object Streams {
       .changesBetween(s, tableDir, lastSeen, committed)
       .withColumn("run", lit(run))
       .write.mode("append").parquet(outDir)
-    val tmp = new org.apache.hadoop.fs.Path(cp.getParent,
-      s".${cp.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(cp.getParent): Unit
-    val out = fs.create(tmp, true)
-    try out.write(committed.toString.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(cp)) fs.delete(cp, false): Unit
-    if (!fs.rename(tmp, cp))
-      throw new IllegalStateException(s"checkpoint rename to $cp failed")
+    graft.sources.MetaFs.replace(s, cp, committed.toString)
     committed - lastSeen
   }
 
@@ -382,13 +347,9 @@ object Streams {
                          probe: Long => Unit = _ => (),
                          sinkFiles: Int = 1)
                         (build: => DataFrame): DataFrame = {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val partsPrev = s.conf.getOption(partsKey)
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(partsKey, statePartitions.toString)
-    s.conf.set(noDataKey, noDataBatch.toString)
-    try {
+    graft.Session.withConfs(s,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) {
       val query = build.writeStream
         .outputMode("complete")
         .option("checkpointLocation", chk)
@@ -411,15 +372,6 @@ object Streams {
         }
         .start()
       query.awaitTermination()
-    } finally {
-      partsPrev match {
-        case Some(v) => s.conf.set(partsKey, v)
-        case None => s.conf.unset(partsKey)
-      }
-      noDataPrev match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None => s.conf.unset(noDataKey)
-      }
     }
     graft.operators.Sinks.readSnapshot(s, tableDir)
   }

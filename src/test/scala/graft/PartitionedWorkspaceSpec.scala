@@ -1249,9 +1249,8 @@ class PartitionedWorkspaceSpec extends AnyFunSuite {
     graft.sources.PartitionManifest.enable(spark, tdir, Seq("n")): Unit
     spark.sql(s"ALTER TABLE $cat.pm RENAME COLUMN n TO num")
     // the opt-in marker followed the rename
-    val f = fs(ws)
     assert(graft.sources.PartitionManifest
-      .statsCols(f, tdir).contains(Seq("num")))
+      .statsCols(spark, tdir).contains(Seq("num")))
     // pre-rename manifests serve their leaves conservatively (no wrong
     // prune): a filter excluding every row still returns zero correctly
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.pm WHERE num > 1000")

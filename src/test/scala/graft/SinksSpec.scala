@@ -986,6 +986,11 @@ class SinksSpec extends AnyFunSuite {
     // commit goes straight into the repair loop, which must give up
     failsWithin(Sinks.writeSnapshotAs(df, table, 1))
     assert(Sinks.snapshotVersions(spark, table) == Seq(1))
+    // every failed swap attempt cleaned up its temp pointer file
+    val leftover = fs.listStatus(new org.apache.hadoop.fs.Path(table))
+      .map(_.getPath.getName).filter(_.contains("_latest.tmp."))
+    assert(leftover.isEmpty,
+      s"${leftover.length} temp pointer files left, e.g. ${leftover.headOption}")
     s.close()
   }
 
