@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.compat.Compat
-import graft.sources.MetaFs
+import graft.sources.{ColumnIds, MetaFs}
 
 /** Sink / materialization operators — SURVEY §2.1 S4/S5/S8/S9 + §2.8 C2/C3.
   *
@@ -146,7 +146,7 @@ object Sinks {
     * formats infer strings otherwise). */
   def readBack(spark: SparkSession, dir: String, name: String,
                format: String = "parquet",
-               schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+               schema: Option[StructType] = None): DataFrame = {
     val r = spark.read.format(format)
     val r2 = schema.map(r.schema).getOrElse(r)
     (if (format == "csv") r2.option("header", "true") else r2)
@@ -224,12 +224,93 @@ object Sinks {
     * Scale note: the claim/commit files are empty markers — per commit this
     * is O(1) tiny-file round-trips against the store, amortized over a
     * full-parallelism snapshot write; the loops retry only under actual
-    * contention on the SAME table. Returns the committed version number. */
+    * contention on the SAME table. Every version's data files carry the
+    * table's parquet field ids ([[publishWithIds]]). Returns the
+    * committed version number. */
   def writeSnapshot(df: DataFrame, tableDir: String,
                     commitTsMicros: Option[Long] = None): Int =
-    publishClaimed(df.sparkSession, tableDir, commitTsMicros) { v =>
-      microsBound(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$v")
+    publishWithIds(df.sparkSession, tableDir, df.schema, full = true) {
+      (rec, record) =>
+        publishClaimed(df.sparkSession, tableDir, commitTsMicros) { v =>
+          microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
+            .parquet(s"$tableDir/v=$v")
+          record()
+        }
     }
+
+  // ---- column identity: every flat version is field-id-stamped -------------
+
+  /** Run a publish of `incoming` columns against the table's recorded
+    * schema (`_schema.json`, the id registry — [[ColumnIds]]). `full`: the
+    * publish replaces the table's shape (a materialized version: live
+    * columns it lacks retire to tombstones, [[ColumnIds.rebind]]); else it
+    * is a delta, whose unknown columns extend the shape and whose wider
+    * types widen it. `publish` receives the record to stamp its data with
+    * ([[stamped]]) and a `record` action to call once its data has landed,
+    * before the pointer commit — a failed publish leaves the record as it
+    * was. A publish that changes the record runs under the table's DDL
+    * lock (the one ALTER takes), waiting a bounded while for a live holder:
+    * two concurrent first publishes must not both allocate ids. */
+  private def publishWithIds[T](spark: SparkSession, tableDir: String,
+                                incoming: StructType, full: Boolean)(
+      publish: (StructType, () => Unit) => T): T = {
+    def bind() = {
+      val existing = declaredSnapshotSchema(spark, tableDir)
+        .filter(ColumnIds.isStamped)
+      val next = nextRecord(existing, incoming, full)
+      (next.getOrElse(existing.getOrElse(incoming)),
+        next.filterNot(n => existing.exists(sameColumns(_, n))))
+    }
+    bind() match {
+      case (rec, None) => publish(rec, () => ())
+      case _ =>
+        val lock = graft.sources.WorkspaceDmlLock.acquireWait(spark, tableDir)
+        try {
+          val (rec, change) = bind()
+          publish(rec, () => change.foreach(declareSnapshotSchema(spark, tableDir, _)))
+        } finally graft.sources.WorkspaceDmlLock.release(spark, lock)
+    }
+  }
+
+  /** The record a publish of `incoming` implies (None: a delta on a table
+    * with no id-stamped record, which keeps serving by name). */
+  private def nextRecord(existing: Option[StructType], incoming: StructType,
+                         full: Boolean): Option[StructType] = {
+    val shape =
+      if (full) Some(incoming)
+      else existing.map { ex =>
+        val cur = ColumnIds.live(ex)
+        StructType(cur.fields.map(f =>
+          incoming.fields.find(_.name.equalsIgnoreCase(f.name))
+            .filter(i => graft.sources.SnapshotCatalog.widens(f.dataType, i.dataType))
+            .fold(f)(i => f.copy(dataType = i.dataType))) ++
+          incoming.fields.filterNot(i =>
+            cur.fieldNames.exists(_.equalsIgnoreCase(i.name))))
+      }
+    shape.map { sh =>
+      val nullable = StructType(sh.fields.map(_.copy(nullable = true)))
+      ColumnIds.rebind(nullable, existing.getOrElse(StructType(Nil)))
+    }
+  }
+
+  /** Same live columns in the same order (name, type, id) and the same
+    * tombstones — other field metadata and nullability aside. */
+  private def sameColumns(a: StructType, b: StructType): Boolean = {
+    def key(s: StructType) =
+      (ColumnIds.live(s).fields.toSeq
+        .map(f => (f.name, f.dataType, ColumnIds.idOf(f))),
+        s.fields.filter(f => ColumnIds.isTombstone(f.name))
+          .map(ColumnIds.idOf).toSet)
+    key(a) == key(b)
+  }
+
+  /** `df` with the ids of `record` on its columns (by name). */
+  private def stamped(df: DataFrame, record: StructType): DataFrame = {
+    val s = ColumnIds.withDeclaredIds(df.schema, Some(record))
+    if (s == df.schema) df
+    else df.select(s.fields.toSeq.map(f =>
+      df.col(ColumnIds.quoted(f.name)).as(f.name, f.metadata)): _*)
+  }
 
   /** The `_commits/v=N` timestamp record, CREATE-IF-ABSENT: a
     * [[writeSnapshotAs]] REPLAY (crash recovery) re-commits an
@@ -347,21 +428,15 @@ object Sinks {
       })
 
   /** The rows a compaction of committed `base` must materialize: resolved
-    * with HEAD rename semantics and conformed to the SERVED schema. A
-    * PINNED read (the pre-r17 shape) kept pre-rename physical names and
-    * pre-drop tombstone bytes — and the compacted folder, committed AFTER
-    * every recorded rename, serves with an empty replay window, so renamed
-    * columns would silently null-fill at the head and a re-ADD of a
-    * dropped name would RESURRECT the retired bytes (the metadata-only
-    * DROP relies on compaction retiring them physically). `base` is the
-    * committed head when the CAS claim fences (v == base + 1), so head
-    * semantics OF base is exactly the unpinned read, race-free. */
+    * under the table's recorded schema, head names and served columns
+    * only — a dropped column's bytes retire physically, and the compacted
+    * files carry the recorded ids. `base` is the committed head when the
+    * CAS claim fences (v == base + 1), so head semantics OF base is
+    * exactly the unpinned read, race-free. */
   private def compactionRows(spark: SparkSession, tableDir: String,
-                             base: Int): DataFrame = {
-    val raw = readSnapshotServed(spark, tableDir, base)
-    servedSnapshotSchema(spark, tableDir)
-      .map(graft.sources.SchemaEvolution.conform(raw, _)).getOrElse(raw)
-  }
+                             base: Int): DataFrame =
+    stamped(readSnapshotServed(spark, tableDir, base),
+      headSchema(spark, tableDir, base))
 
   /** Write a compacted version ATOMICALLY: [[writeCompacted]] output plus
     * its `_compaction` provenance stamp land in a staging dir and appear
@@ -415,19 +490,23 @@ object Sinks {
     * streaming-sink model this hook exists for, where a replay is a
     * re-execution of the same (single) writer. Independent writers on one
     * table use [[writeSnapshot]], whose claim files serialize allocation. */
-  def writeSnapshotAs(df: DataFrame, tableDir: String, version: Int): Int = {
-    microsBound(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$version")
-    // a REPLAY rewrote the version's data files under new names, so any
-    // manifest from the previous attempt enumerates files that no longer
-    // exist — drop it first, then carry fresh (stale skipping would be
-    // wrong; a missing manifest merely serves unpruned)
-    val mp = new org.apache.hadoop.fs.Path(s"$tableDir/_manifest/v=$version")
-    val mfs = mp.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    if (mfs.exists(mp)) mfs.delete(mp, true): Unit
-    carryManifest(df.sparkSession, tableDir, version)
-    commitPointerCas(df.sparkSession, tableDir, version, tsMicros = None)
-    version
-  }
+  def writeSnapshotAs(df: DataFrame, tableDir: String, version: Int): Int =
+    publishWithIds(df.sparkSession, tableDir, df.schema, full = true) {
+      (rec, record) =>
+        microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
+          .parquet(s"$tableDir/v=$version")
+        record()
+        // a REPLAY rewrote the version's data files under new names, so any
+        // manifest from the previous attempt enumerates files that no longer
+        // exist — drop it first, then carry fresh (stale skipping would be
+        // wrong; a missing manifest merely serves unpruned)
+        val mp = new org.apache.hadoop.fs.Path(s"$tableDir/_manifest/v=$version")
+        val mfs = mp.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+        if (mfs.exists(mp)) mfs.delete(mp, true): Unit
+        carryManifest(df.sparkSession, tableDir, version)
+        commitPointerCas(df.sparkSession, tableDir, version, tsMicros = None)
+        version
+    }
 
   // ---- optimistic multi-writer commits -------------------------------------
 
@@ -505,7 +584,8 @@ object Sinks {
   def publishStagedSnapshotFenced(spark: SparkSession, tableDir: String,
                                   staged: org.apache.hadoop.fs.Path,
                                   expectedBase: Int,
-                                  tsMicros: Option[Long] = None): Int = {
+                                  tsMicros: Option[Long] = None,
+                                  beforeCommit: () => Unit = () => ()): Int = {
     val f = staged.getFileSystem(spark.sessionState.newHadoopConf())
     val v = claimSuccessor(spark, tableDir, expectedBase).getOrElse {
       f.delete(staged, true)
@@ -518,6 +598,7 @@ object Sinks {
       val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
       if (!f.rename(staged, dest))
         throw new IllegalStateException(s"publish: rename $staged -> $dest failed")
+      beforeCommit()
     }
   }
 
@@ -657,9 +738,11 @@ object Sinks {
   private def claimNextVersion(spark: SparkSession, tableDir: String): Int = {
     var v = 0
     while (v == 0) {
+      // the STABLE pointer read: a concurrent swap on the local checksum
+      // filesystem can tear a plain read (ChecksumException)
       val next = (snapshotVersions(spark, tableDir) ++
         claimedVersions(spark, tableDir) ++
-        snapshotCommitted(spark, tableDir).toSeq).foldLeft(0)(math.max) + 1
+        snapshotCommittedStable(spark, tableDir).toSeq).foldLeft(0)(math.max) + 1
       if (MetaFs.createExclusive(spark,
           new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=$next"))) v = next
     }
@@ -739,11 +822,12 @@ object Sinks {
   /** Read the committed snapshot, or an explicit pinned `version` (time
     * travel). Unpinned reads NEVER trust folder listings — only the
     * atomically-swapped pointer — so a concurrent or crashed writer is
-    * invisible. An UNPINNED read of a schema-evolved table
-    * ([[declareSnapshotSchema]], SQL `ALTER TABLE ADD COLUMN`) serves the
-    * DECLARED schema — files written before the evolution null-fill;
-    * pinned reads keep their version's own schema (history is immutable,
-    * including its shape). */
+    * invisible. Columns resolve by parquet field id ([[ColumnIds]]): an
+    * UNPINNED read serves the table's recorded schema (`_schema.json`,
+    * after any metadata-only ALTER — files written before an ADD
+    * null-fill, renamed columns keep matching old files); a PINNED read
+    * serves the schema recorded for its version (history is immutable,
+    * including its shape and names). */
   def readSnapshot(spark: SparkSession, tableDir: String,
                    version: Option[Int] = None): DataFrame = {
     // PARTITIONED snapshots resolve through their carry manifests — a
@@ -753,23 +837,19 @@ object Sinks {
       return graft.sources.PartitionedSnapshot.read(spark, tableDir, version)
     val v = version.orElse(snapshotCommitted(spark, tableDir)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    if (version.isDefined) resolveVersion(spark, tableDir, v, depth = 0)
-    else {
-      val raw = readSnapshotServed(spark, tableDir, v)
-      servedSnapshotSchema(spark, tableDir)
-        .map(graft.sources.SchemaEvolution.conform(raw, _)).getOrElse(raw)
-    }
+    if (version.isDefined) resolveAt(spark, tableDir, v, versionSchema(spark, tableDir, v))
+    else readSnapshotServed(spark, tableDir, v)
   }
 
-  /** Declare the snapshot table's EVOLVED schema (the metadata half of
-    * `ALTER TABLE ADD COLUMN`): one `_schema.json` per table, no data
-    * published, no version folder touched. Unpinned reads conform to it
-    * (old files null-fill the added columns); pinned reads are untouched.
-    * The declared schema must be a SUPERSET-by-name of what is on disk —
-    * enforcement lives in the SQL face (SnapshotCatalog.alterTable), which
-    * only ever appends nullable columns. */
+  /** Record the snapshot table's schema (`_schema.json`, the id registry
+    * [[ColumnIds]] resolves by): every publish records the shape it
+    * writes ([[publishWithIds]]) and the SQL catalog's metadata-only
+    * ALTER records the evolved one — no data published, no version
+    * folder touched. The full record keeps dropped columns as
+    * `__dropped_<id>` tombstones, so their ids are never reused; serving
+    * filters them ([[servedSnapshotSchema]]). */
   def declareSnapshotSchema(spark: SparkSession, tableDir: String,
-                            schema: org.apache.spark.sql.types.StructType): Unit = {
+                            schema: StructType): Unit = {
     // complete-or-absent: a reader racing the write, or a crash
     // mid-write, must never observe a truncated JSON — every unpinned read
     // parses this file
@@ -778,173 +858,36 @@ object Sinks {
     declaredSchemaCache.remove(tableDir): Unit
   }
 
-  /** In-JVM memo for the `_schema.json` probe: the declared schema is read
-    * on EVERY unpinned read / feed-schema / DML bind, and the overwhelming
-    * common case is "no declared schema at all" — paying an FS round-trip
-    * per statement for a negative is the same tax the marker cache kills.
+  /** In-JVM memo for the `_schema.json` read: the recorded schema is read
+    * on EVERY unpinned read / feed-schema / DML bind / publish — paying an
+    * FS round-trip per statement is the same tax the marker cache kills.
     * Invalidated by the only writer ([[declareSnapshotSchema]]); an ALTER
     * from ANOTHER process becomes visible to this JVM's long-lived session
     * on its next cache turnover or restart — the same single-writer-DDL
     * visibility contract the workspace catalog documents for RENAME. */
   private val declaredSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[org.apache.spark.sql.types.StructType]]()
+    String, Option[StructType]]()
 
-  /** The declared evolved schema, if the table has one. */
+  /** The recorded schema, tombstones included; None for a table published
+    * before ids were recorded. */
   def declaredSnapshotSchema(spark: SparkSession, tableDir: String):
-      Option[org.apache.spark.sql.types.StructType] = {
+      Option[StructType] = {
     val hit = declaredSchemaCache.get(tableDir)
     if (hit != null) return hit
     val res = MetaFs.read(spark,
         new org.apache.hadoop.fs.Path(tableDir, "_schema.json"))
       .map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .asInstanceOf[StructType])
     if (declaredSchemaCache.size >= MarkerCacheMax) declaredSchemaCache.clear()
     declaredSchemaCache.put(tableDir, res): Unit
     res
   }
 
-  // ---- metadata-only RENAME COLUMN (r16) -----------------------------------
-
-  /** Field-metadata key carrying a column's rename chain inside the
-    * declared schema: `"<v1>:<urlenc-from1>;<v2>:<urlenc-from2>"`, oldest
-    * first — the names this field bore before each recorded rename, with
-    * the committed version each rename was declared at. Living INSIDE
-    * `_schema.json` means the evolved schema and its rename history land
-    * in ONE atomic write — no crash window where one exists without the
-    * other (a half-completed two-file ALTER would make unpinned reads
-    * null-fill a whole column). */
-  val RenamesKey = "graft.renames"
-
-  private[graft] def renameChainOf(
-      f: org.apache.spark.sql.types.StructField): Seq[(Int, String)] =
-    if (!f.metadata.contains(RenamesKey)) Nil
-    else f.metadata.getString(RenamesKey).split(';').toSeq
-      .filter(_.nonEmpty).map { e =>
-        val i = e.indexOf(':')
-        (e.take(i).toInt, java.net.URLDecoder.decode(e.drop(i + 1), "UTF-8"))
-      }
-
-  private[graft] def appendRenameChain(
-      f: org.apache.spark.sql.types.StructField, atVersion: Int,
-      to: String): org.apache.spark.sql.types.StructField = {
-    val entry = s"$atVersion:${java.net.URLEncoder.encode(f.name, "UTF-8")}"
-    val prior =
-      if (f.metadata.contains(RenamesKey)) f.metadata.getString(RenamesKey)
-      else ""
-    val chain = if (prior.isEmpty) entry else s"$prior;$entry"
-    f.copy(name = to,
-      metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putString(RenamesKey, chain).build())
-  }
-
-  /** The table's COLUMN-RENAME HISTORY: (atVersion, from, to) in global
-    * chronological order, reconstructed from the declared schema's
-    * per-field chains. `atVersion` is the committed version when the
-    * rename was declared — reads pinned at or below it keep the old name
-    * (history is immutable, including its names); the head and every
-    * later version serve the new name, with files written under old
-    * names resolving through a chronological conditional replay
-    * ([[applyRenames]]). Metadata-only: no version folder is touched, no
-    * byte reinterpreted — the replay is a plan-time column rename. */
-  def snapshotRenames(spark: SparkSession,
-                      tableDir: String): Seq[(Int, String, String)] =
-    declaredSnapshotSchema(spark, tableDir).map { s =>
-      s.fields.toSeq.flatMap { f =>
-        val chain = renameChainOf(f)
-        if (chain.isEmpty) Nil
-        else {
-          // each entry renamed its `from` into the NEXT entry's from (or
-          // the field's final name)
-          val tos = chain.drop(1).map(_._2) :+ f.name
-          chain.zip(tos).map { case ((v, from), to) => (v, from, to) }
-        }
-      }.sortBy(_._1) // stable: per-field order survives same-v ties
-    }.getOrElse(Nil)
-
-  /** The renames a READ pinned at `topV` serves: only those declared
-    * while the table sat at an EARLIER committed version
-    * (`atVersion < topV`). A rename declared at committed C does not
-    * retitle version C itself — pinned history keeps the names it
-    * committed under (the Iceberg time-travel contract); the head and
-    * every later version serve the new name. */
-  private def renamesWindowPinned(spark: SparkSession, tableDir: String,
-                                  topV: Int): Seq[(Int, String, String)] =
-    snapshotRenames(spark, tableDir).filter(_._1 < topV)
-
-  /** The renames that apply to FOLDER `v`'s frame within a resolution
-    * window: exactly those declared at or after the folder's own commit
-    * position (`atVersion >= v`) — a folder committed as version v was
-    * written with the names current THEN, so earlier renames are already
-    * baked into its physical names, and keying the replay on the folder's
-    * version (not on name presence) is what disambiguates a later ADD
-    * COLUMN that reuses a retired name. Chronological order preserved
-    * (chained renames compose). */
-  private def renamesForFolder(v: Int,
-                               window: Seq[(Int, String, String)]):
-      Seq[(String, String)] =
-    window.filter(_._1 >= v).map(r => (r._2, r._3))
-
-  /** Chronological replay of one folder's rename window over its frame.
-    * A pure plan-time projection: zero bytes move, pruning pushes
-    * through. The presence guards are a belt (a folder that somehow
-    * already carries the new name is left alone). */
-  private def applyRenames(df: DataFrame,
-                           renames: Seq[(String, String)]): DataFrame =
-    renames.foldLeft(df) { case (d, (from, to)) =>
-      if (d.columns.exists(_.equalsIgnoreCase(from)) &&
-          !d.columns.exists(_.equalsIgnoreCase(to)))
-        d.withColumnRenamed(from, to)
-      else d
-    }
-
-  /** Map one marker-recorded column name (thin keyCols, written with the
-    * names current at publish time) through a folder's rename window. */
-  private def renameKey(k: String, renames: Seq[(String, String)]): String =
-    renames.foldLeft(k) { case (n, (from, to)) =>
-      if (n.equalsIgnoreCase(from)) to else n }
-
-  /** Does HEAD serving of version `v` require the rename replay — i.e.
-    * was a rename declared at or after `v`'s commit whose old name is
-    * physically present in the folder? False for folders written after
-    * every rename (physical names already canonical — plain file serving
-    * keeps manifest skipping and full DML). Pinned serving NEVER needs
-    * the replay on its top folder (a pinned read only sees renames
-    * declared before its version, which are baked into the folder's own
-    * names); thin versions serve through the resolver anyway. Cost: one
-    * memoized footer-schema read. */
-  def renameAffected(spark: SparkSession, tableDir: String, v: Int): Boolean = {
-    val rn = renamesForFolder(v, snapshotRenames(spark, tableDir))
-    rn.nonEmpty && {
-      val phys = readVersionDir(spark, tableDir, v, "").schema
-      rn.exists { case (from, to) =>
-        phys.fieldNames.exists(_.equalsIgnoreCase(from)) &&
-          !phys.fieldNames.exists(_.equalsIgnoreCase(to))
-      }
-    }
-  }
-
-  /** The schema an UNPINNED read serves. With the rename history living
-    * inside `_schema.json` (field metadata), the declared schema IS the
-    * served schema — schema and history are one atomic artifact — minus
-    * DROPPED-column tombstones (r17): a metadata-only DROP COLUMN records
-    * the field under a reserved `__dropped_<k>` name (its rename chain is
-    * what keeps old folders' bytes resolving onto the tombstone instead of
-    * onto a later re-ADD of the same name); serving never projects them. */
+  /** The schema an UNPINNED read serves: the record minus dropped-column
+    * tombstones. */
   def servedSnapshotSchema(spark: SparkSession, tableDir: String):
-      Option[org.apache.spark.sql.types.StructType] =
-    declaredSnapshotSchema(spark, tableDir).map(s =>
-      org.apache.spark.sql.types.StructType(s.fields.filterNot(
-        _.name.startsWith(graft.sources.WorkspaceCatalog.DroppedPrefix))))
-
-  /** Drop any resolved tombstone columns from a frame — the terminal step
-    * of every read entry point (pinned AND unpinned): after the rename
-    * replay, a pre-drop folder's bytes sit under the reserved
-    * `__dropped_<k>` name, which no read may expose. */
-  private def dropTombstones(df: DataFrame): DataFrame = {
-    val t = df.columns.filter(
-      _.startsWith(graft.sources.WorkspaceCatalog.DroppedPrefix))
-    if (t.isEmpty) df else df.drop(t.toIndexedSeq: _*)
-  }
+      Option[StructType] =
+    declaredSnapshotSchema(spark, tableDir).map(ColumnIds.live)
 
   // ---- merge-on-read deletes (thin versions) -------------------------------
 
@@ -955,23 +898,30 @@ object Sinks {
     * Declaring keys ASSERTS uniqueness: a thin delete removes every row
     * sharing a matched key, which equals predicate-delete exactly when the
     * key identifies one row (the same contract thin upserts already
-    * enforce batch-side). Stored as a one-line `_keycols` file, replaced
-    * atomically (every DELETE plan parses it); idempotent re-declaration
-    * overwrites. */
+    * enforce batch-side). Stored as a one-line `_keycols` file of field
+    * ids (a RENAME never touches it), replaced atomically (every DELETE
+    * plan parses it); idempotent re-declaration overwrites. */
   def declareSnapshotKeys(spark: SparkSession, tableDir: String,
                           keyCols: Seq[String]): Unit = {
-    require(keyCols.nonEmpty && keyCols.forall(!_.contains(",")),
-      "key columns must be non-empty and ','-free (marker format)")
-    MetaFs.replace(spark,
-      new org.apache.hadoop.fs.Path(tableDir, "_keycols"), keyCols.mkString(","))
+    require(keyCols.nonEmpty, "key columns must be non-empty")
+    MetaFs.replace(spark, new org.apache.hadoop.fs.Path(tableDir, "_keycols"),
+      ColumnIds.idsOf(recordOf(spark, tableDir), keyCols)
+        .mkString(","))
   }
 
-  /** The declared row-identity columns, None if never declared. */
+  /** The declared row-identity columns under their current names, None if
+    * never declared. */
   def snapshotDeclaredKeys(spark: SparkSession,
                            tableDir: String): Option[Seq[String]] =
     MetaFs.read(spark,
       new org.apache.hadoop.fs.Path(tableDir, "_keycols"))
-      .map(_.trim.split(',').toSeq)
+      .map(ids => ColumnIds.namesOf(recordOf(spark, tableDir),
+        ids.trim.split(',').toSeq.map(_.toLong)))
+
+  private def recordOf(spark: SparkSession, tableDir: String) =
+    declaredSnapshotSchema(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"$tableDir records no schema — " +
+        "publish a version first"))
 
   /** Publish a TASK-STAGED thin delta (the `SupportsDelta` SQL DML path:
     * executors already wrote `_deletes`/`_upserts` parquet parts into
@@ -1015,21 +965,28 @@ object Sinks {
             ") — a MERGE source must be unique per key")
       }
     }
-    MetaFs.stage(spark,
-      new org.apache.hadoop.fs.Path(staged, "_base.json"),
-      s"$expectedBase\n${keyCols.mkString(",")}")
+    stageThinMeta(spark, staged, expectedBase, keyCols,
+      recordOf(spark, tableDir))
     val v = publishStagedSnapshotFenced(spark, tableDir, staged, expectedBase)
     if (changeFeedEnabled(spark, tableDir))
-      landChangeFeedSafe(spark, tableDir, v,
-        // the base resolves at names-as-of-THIS-commit (renames declared
-        // at the base's own version included — the delta parts already
-        // carry them), so a feed landed just after a RENAME is uniform
-        changeRows(resolveVersionR(spark, tableDir, expectedBase, 0,
-            renamesWindowPinned(spark, tableDir, v)), keyCols, v,
-          dels.map(_ => spark.read.parquet(s"$tableDir/v=$v/_deletes")),
-          ups.map(_ => spark.read.parquet(s"$tableDir/v=$v/_upserts"))))
+      landChangeFeedSafe(spark, tableDir, v, thinChangeRows(spark, tableDir, v))
     autoCompactIfDeep(spark, tableDir, v)
     v
+  }
+
+  /** A thin version's metadata riders, staged so they arrive with its
+    * delta parts in ONE rename: the `_base.json` marker — two lines,
+    * "<base>\n<key field ids>", an empty second line for a keyless
+    * APPEND — and `_pinschema.json`, the table record at publish, which
+    * is what a pinned read of the version serves. */
+  private def stageThinMeta(spark: SparkSession,
+                            staged: org.apache.hadoop.fs.Path, base: Int,
+                            keyCols: Seq[String],
+                            record: StructType): Unit = {
+    MetaFs.stage(spark, new org.apache.hadoop.fs.Path(staged, "_base.json"),
+      s"$base\n${ColumnIds.idsOf(record, keyCols).mkString(",")}")
+    MetaFs.stage(spark,
+      new org.apache.hadoop.fs.Path(staged, "_pinschema.json"), record.json)
   }
 
   // ---- change data feed -----------------------------------------------------
@@ -1076,39 +1033,34 @@ object Sinks {
   /** The feed's read schema for a table (base columns + change metadata) —
     * what a `readStream.schema(...)` consumer passes. */
   def changeFeedSchema(spark: SparkSession, tableDir: String):
-      org.apache.spark.sql.types.StructType = {
-    // UNPINNED read: an evolved table's feed carries the declared schema
-    val base = readSnapshot(spark, tableDir).schema
-    base.add("__change", org.apache.spark.sql.types.StringType)
+      StructType = {
+    // UNPINNED read: an evolved table's feed carries the served schema
+    val committed = snapshotCommitted(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    ColumnIds.live(headSchema(spark, tableDir, committed))
+      .add("__change", org.apache.spark.sql.types.StringType)
       .add("__version", org.apache.spark.sql.types.IntegerType)
   }
 
-  /** Change rows of one thin commit, in base column order — extended by
-    * any columns the upserts ADDED (post-ALTER writes), which delete rows
-    * null-fill. */
-  private def changeRows(rawBaseDf: DataFrame, keyCols: Seq[String], v: Int,
-                         deletes: Option[DataFrame],
-                         upserts: Option[DataFrame]): DataFrame = {
-    // never land DROPPED-column tombstone bytes into new feed files — the
-    // drop is usually a compliance action, and the feed is a fresh write
-    val baseDf = dropTombstones(rawBaseDf)
-    val extra = upserts.toSeq.flatMap(_.schema.fields).filterNot(f =>
-      baseDf.columns.exists(_.equalsIgnoreCase(f.name)))
-    val cols = baseDf.columns.toSeq ++ extra.map(_.name)
-    def typeOf(c: String): org.apache.spark.sql.types.DataType =
-      extra.find(_.name == c).map(_.dataType)
-        .getOrElse(baseDf.schema(c).dataType)
+  /** Change rows of committed thin version `v`, derived from its own
+    * delta parts under the schema recorded for it: live columns +
+    * `__change` + `__version`, delete rows null-filling the non-key
+    * columns. Every column keeps its field id, so later RENAMEs and
+    * DROPs resolve feed files like data files. */
+  private def thinChangeRows(spark: SparkSession, tableDir: String,
+                             v: Int): DataFrame = {
+    val schema = versionSchema(spark, tableDir, v)
+    val live = ColumnIds.live(schema)
+    val (dels, ups) = deltaParts(spark, tableDir, v, schema,
+      thinBase(spark, tableDir, v).map(_._2).getOrElse(Nil))
     def conform(df: DataFrame, change: String): DataFrame =
-      df.select(cols.map(c =>
-        if (df.columns.contains(c)) col(c)
-        else lit(null).cast(typeOf(c)).as(c)): _*)
+      df.select(live.fields.toSeq.map(f =>
+        (if (df.columns.contains(f.name)) col(ColumnIds.quoted(f.name))
+         else lit(null).cast(f.dataType)).as(f.name, f.metadata)): _*)
         .withColumn("__change", lit(change))
         .withColumn("__version", lit(v))
-    val parts =
-      deletes.map(d => conform(d.select(keyCols.map(col): _*).distinct(),
-        "delete")).toSeq ++
-        upserts.map(conform(_, "upsert")).toSeq
-    parts.reduce(_ unionByName _)
+    (dels.map(d => conform(d.distinct(), "delete")).toSeq ++
+      ups.map(conform(_, "upsert")).toSeq).reduce(_ unionByName _)
   }
 
   /** Land one committed thin version's change rows as `cdf/v{N}.parquet`
@@ -1160,7 +1112,7 @@ object Sinks {
         s"requested from v=$fromV")
     val fs = new org.apache.hadoop.fs.Path(tableDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val files: Seq[(Int, String)] = (fromV to toV).flatMap { v =>
+    val files: Seq[String] = (fromV to toV).flatMap { v =>
       val feed = new org.apache.hadoop.fs.Path(s"$tableDir/cdf/v$v.parquet")
       if (thinBase(spark, tableDir, v).isEmpty) {
         // a COMPACTION's change grain is exactly empty (its rows are the
@@ -1174,39 +1126,31 @@ object Sinks {
         throw new IllegalStateException(
           s"feed file for committed thin v=$v is missing (a landing crash) " +
             "— run Sinks.repairChangeFeed first")
-      else Some((v, feed.toString))
+      else Some(feed.toString)
     }
     if (files.isEmpty)
       // every version in range was a compaction: the change set is empty
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         changeFeedSchema(spark, tableDir))
     else {
-      // ONE evolution-proof path: read each feed file with its own schema,
-      // replay its version's rename window (no-op when no renames exist),
-      // and union by name. The union null-fills files from before an
-      // ALTER ADD COLUMN and COERCES across a widening ALTER COLUMN TYPE
-      // (int-era feed files union with bigint-era ones to bigint) — the
-      // previous mergeSchema fast path failed the parquet schema merge on
-      // exactly that type straddle (r16). Cost is the TVF's own grain
-      // either way: O(requested files) footer reads; feed files are
-      // per-commit deltas, so the plan is a union of tiny scans.
-      val renames = snapshotRenames(spark, tableDir)
-      val reads = files.map { case (v, f) =>
-        applyRenames(spark.read.parquet(f), renamesForFolder(v, renames))
-      }
+      // every feed file resolved onto the served schema by field id:
+      // files from before an ALTER ADD COLUMN null-fill, renamed columns
+      // keep their bytes, dropped ones are never served, and int-era files
+      // cast up under a widening ALTER COLUMN TYPE. Cost is the TVF's own
+      // grain: O(requested files) footer reads over per-commit deltas.
+      val target = changeFeedSchema(spark, tableDir)
       // BALANCED union (ADVICE r16): a left-deep reduce over a wide version
       // range builds an O(files)-deep plan tree that stresses the analyzer/
       // optimizer; pairing halves the depth to O(log files) with the same
-      // result (union is associative; unionByName resolves per pair)
+      // result (union is associative)
       def fold(xs: Seq[DataFrame]): DataFrame =
         if (xs.lengthCompare(1) == 0) xs.head
         else fold(xs.grouped(2).map {
-          case Seq(a, b) => a.unionByName(b, allowMissingColumns = true)
+          case Seq(a, b) => a.union(b)
           case Seq(a) => a
         }.toSeq)
-      // pre-drop feed files replay their column onto the tombstone name —
-      // the feed, like every read, never exposes it
-      dropTombstones(fold(reads))
+      fold(files.map(f =>
+        ColumnIds.resolve(spark.read.parquet(f), target)))
     }
   }
 
@@ -1297,31 +1241,17 @@ object Sinks {
     val committed = snapshotCommitted(spark, tableDir).getOrElse(return Seq.empty)
     val fs = new org.apache.hadoop.fs.Path(tableDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val hconf = spark.sessionState.newHadoopConf()
     // only commits AFTER the enable point: fabricating feed files for
     // pre-enable history would replay ancient changes into live consumers
     val since = changeFeedSince(spark, tableDir)
-    ((since + 1) to committed).flatMap { v =>
-      thinBase(spark, tableDir, v) match {
-        case Some((base, keyCols)) if !fs.exists(
-            new org.apache.hadoop.fs.Path(s"$tableDir/cdf/v$v.parquet")) =>
-          def part(name: String): Option[DataFrame] = {
-            val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/$name")
-            if (p.getFileSystem(hconf).exists(p))
-              Some(spark.read.parquet(p.toString))
-            else None
-          }
-          // names-as-of-v's COMMIT throughout, matching what the original
-          // landing wrote: the base resolves with exactly the renames
-          // visible at v, and v's own delta parts / marker keys already
-          // carry their commit-time names
-          val baseDf = resolveVersionR(spark, tableDir, base, 0,
-            renamesWindowPinned(spark, tableDir, v))
-          landChangeFeed(spark, tableDir, v,
-            changeRows(baseDf, keyCols, v, part("_deletes"), part("_upserts")))
-          Some(v)
-        case _ => None
-      }
+    ((since + 1) to committed).filter { v =>
+      thinBase(spark, tableDir, v).isDefined &&
+        !fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/cdf/v$v.parquet"))
+    }.map { v =>
+      // derived exactly as the original landing did: the version's own
+      // delta parts under the schema recorded for it
+      landChangeFeed(spark, tableDir, v, thinChangeRows(spark, tableDir, v))
+      v
     }
   }
 
@@ -1377,120 +1307,149 @@ object Sinks {
     declaredSchemaCache.remove(tableDir): Unit
   }
 
+  /** The (base, key field ids) marker of a THIN version, None for a
+    * materialized one; no keys = a keyless APPEND version. */
   def thinBase(spark: SparkSession, tableDir: String,
-               version: Int): Option[(Int, Seq[String])] =
-    cachedMarker[(Int, Seq[String])](spark, tableDir, version, "thin") {
+               version: Int): Option[(Int, Seq[Long])] =
+    cachedMarker[(Int, Seq[Long])](spark, tableDir, version, "thin") {
       MetaFs.read(spark,
         new org.apache.hadoop.fs.Path(s"$tableDir/v=$version/_base.json")).map { txt =>
-        // fixed two-line format: "<base>\n<keyCol,keyCol,...>" — no JSON
-        // parser dependency needed for two fields. An EMPTY second line is a
-        // keyless APPEND version (base ∪ upserts, no identity semantics).
         val lines = txt.trim.split('\n')
         val keys =
-          if (lines.length < 2 || lines(1).trim.isEmpty) Seq.empty[String]
-          else lines(1).trim.split(',').toSeq
+          if (lines.length < 2 || lines(1).trim.isEmpty) Seq.empty[Long]
+          else lines(1).trim.split(',').toSeq.map(_.toLong)
         (lines(0).trim.toInt, keys)
       }
     }
 
-  /** Read one version folder (or a delta sub-dir of it) with its SCHEMA
-    * memoized through the immutable-version cache: resolving a depth-D
-    * chain otherwise pays D parquet footer inferences PER STATEMENT —
-    * driver round-trips that dominate thin-commit latency at toy scale
-    * and planning latency at any scale. Folders are immutable once
-    * visible (staged publishes rename complete dirs in), so the memoized
-    * schema can never drift from the files. */
-  private def readVersionDir(spark: SparkSession, tableDir: String,
-                             v: Int, sub: String): DataFrame = {
-    val path = if (sub.isEmpty) s"$tableDir/v=$v" else s"$tableDir/v=$v/$sub"
-    val kind = if (sub.isEmpty) "schema" else s"schema:$sub"
-    cachedMarker[org.apache.spark.sql.types.StructType](
-        spark, tableDir, v, kind) {
-      // one footer, no inference job (FooterSchema scaladoc) for the flat
-      // common case; BUCKETED version dirs keep their data under b=K
-      // subdirs (no direct data file), where full inference must run so
-      // the partition-dir column participates exactly as before
-      Some(graft.sources.FooterSchema.of(spark, Seq(path))
-        .getOrElse(spark.read.parquet(path).schema))
-    } match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None => spark.read.parquet(path)
-    }
+  /** The schema recorded for version `v` — what a pinned read serves: a
+    * thin version's `_pinschema.json` (the table record at its publish,
+    * tombstones included), else the folder's own footer (names and types
+    * as committed; bucketed folders minus their `__bucket` layout
+    * column). Memoized through the immutable-version cache: resolving a
+    * depth-D chain otherwise pays D footer reads per statement. */
+  private def versionSchema(spark: SparkSession, tableDir: String,
+                            v: Int): StructType = {
+    val path = s"$tableDir/v=$v"
+    if (thinBase(spark, tableDir, v).isDefined)
+      cachedMarker[StructType](spark, tableDir, v, "pin") {
+        MetaFs.read(spark, new org.apache.hadoop.fs.Path(path, "_pinschema.json"))
+          .map(org.apache.spark.sql.types.DataType.fromJson(_)
+            .asInstanceOf[StructType])
+      }.orElse(declaredSnapshotSchema(spark, tableDir)).getOrElse(
+        throw new IllegalStateException(s"$path records no schema"))
+    else StructType(
+      ownSchema(spark, tableDir, v, "").filterNot(_.name == "__bucket"))
   }
 
-  private def resolveVersion(spark: SparkSession, tableDir: String,
-                             v: Int, depth: Int): DataFrame =
-    // PINNED semantics: the resolution window holds only the renames
-    // declared BEFORE the pinned version's commit; each folder in the
-    // chain then replays the window's entries at or after its own commit
-    // position, so every frame in the merge carries names-as-of-topV
-    dropTombstones(resolveVersionR(spark, tableDir, v, depth,
-      renamesWindowPinned(spark, tableDir, v)))
+  /** A version folder's (or delta sub-dir's) own data-file schema — names,
+    * types and field ids as written — memoized through the
+    * immutable-version cache: one footer, no inference job (FooterSchema
+    * scaladoc); BUCKETED folders keep their data under __bucket=K subdirs
+    * (no direct data file), where full inference runs. */
+  private def ownSchema(spark: SparkSession, tableDir: String, v: Int,
+                        sub: String): StructType = {
+    val path = if (sub.isEmpty) s"$tableDir/v=$v" else s"$tableDir/v=$v/$sub"
+    cachedMarker[StructType](
+        spark, tableDir, v, if (sub.isEmpty) "schema" else s"schema:$sub") {
+      Some(graft.sources.FooterSchema.of(spark, Seq(path))
+        .getOrElse(spark.read.parquet(path).schema))
+    }.get
+  }
 
-  /** The resolver at HEAD (unpinned) semantics: names after EVERY recorded
-    * rename — what the catalog's head markers splice into SQL plans. */
+  /** A folder (or delta sub-dir) of `v` read under its own names and
+    * resolved onto `schema` by field id ([[ColumnIds.resolve]]). */
+  private def readResolved(spark: SparkSession, tableDir: String, v: Int,
+                           sub: String,
+                           schema: StructType): DataFrame = {
+    val path = if (sub.isEmpty) s"$tableDir/v=$v" else s"$tableDir/v=$v/$sub"
+    ColumnIds.resolve(
+      spark.read.schema(ownSchema(spark, tableDir, v, sub)).parquet(path), schema)
+  }
+
+  /** Would Spark's own field-id reader mis-resolve materialized version `v`
+    * under the served schema? It matches a requested column by NAME when
+    * a file column of that name is requested under another id — the
+    * folder predates a `RENAME x TO y` followed by `ADD COLUMN x`. Such a
+    * head serves through the resolver ([[ColumnIds.resolve]]) until a
+    * rewrite. One memoized footer read. */
+  def idNameClash(spark: SparkSession, tableDir: String, v: Int): Boolean = {
+    val served = servedSnapshotSchema(spark, tableDir).getOrElse(return false)
+      .fields.filter(_.metadata.contains(ColumnIds.Key))
+    ownSchema(spark, tableDir, v, "").fields.exists(g =>
+      g.metadata.contains(ColumnIds.Key) &&
+        served.exists(f => ColumnIds.idOf(f) == ColumnIds.idOf(g)) &&
+        served.exists(f => f.name.equalsIgnoreCase(g.name) &&
+          ColumnIds.idOf(f) != ColumnIds.idOf(g)))
+  }
+
+  /** The full record an unpinned read of committed `v` resolves under. */
+  private def headSchema(spark: SparkSession, tableDir: String,
+                         v: Int): StructType =
+    declaredSnapshotSchema(spark, tableDir)
+      .getOrElse(versionSchema(spark, tableDir, v))
+
+  /** The resolver at HEAD (unpinned) semantics: `v`'s rows under the
+    * table's current record — what the catalog's head markers splice into
+    * SQL plans. */
   def readSnapshotServed(spark: SparkSession, tableDir: String,
                          v: Int): DataFrame =
-    dropTombstones(
-      resolveVersionR(spark, tableDir, v, 0, snapshotRenames(spark, tableDir)))
+    resolveAt(spark, tableDir, v, headSchema(spark, tableDir, v))
 
+  /** `v`'s rows under `schema`, served columns only. */
+  private def resolveAt(spark: SparkSession, tableDir: String, v: Int,
+                        schema: StructType): DataFrame = {
+    val df = resolveVersionR(spark, tableDir, v, 0, schema)
+    df.select(ColumnIds.live(schema).fieldNames.toSeq
+      .map(n => col(ColumnIds.quoted(n))): _*)
+  }
+
+  /** Resolve `v`'s chain with EVERY folder resolved onto one `schema` by
+    * field id — renamed, dropped and re-added columns resolve alike at
+    * every hop, and the frames of one merge always line up. Tombstones
+    * stay in `schema` (a thin hop may key on a since-dropped column);
+    * callers project them away. */
   private def resolveVersionR(spark: SparkSession, tableDir: String,
                               v: Int, depth: Int,
-                              window: Seq[(Int, String, String)]): DataFrame = {
+                              schema: StructType): DataFrame = {
     require(depth <= 64,
       s"merge-on-read chain deeper than 64 at $tableDir v=$v — compact it")
-    val renames = renamesForFolder(v, window)
     thinBase(spark, tableDir, v) match {
-      case None =>
-        val df = applyRenames(readVersionDir(spark, tableDir, v, ""), renames)
-        // bucketed versions carry a synthetic __bucket layout column —
-        // physical, not logical
-        if (bucketedLayout(spark, tableDir, v).isDefined) df.drop("__bucket")
-        else df
-      case Some((base, rawKeyCols)) =>
-        val baseDf = resolveVersionR(spark, tableDir, base, depth + 1, window)
-        val keyCols = rawKeyCols.map(renameKey(_, renames))
-        val hconf = spark.sessionState.newHadoopConf()
-        def part(name: String): Option[DataFrame] = {
-          val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/$name")
-          if (p.getFileSystem(hconf).exists(p))
-            Some(applyRenames(readVersionDir(spark, tableDir, v, name), renames))
-          else None
-        }
-        val kc = keyCols.map(org.apache.spark.sql.functions.col)
-        val ups = part("_upserts")
+      // a bucketed version's synthetic __bucket layout column is physical,
+      // not logical: the resolution projects it away
+      case None => readResolved(spark, tableDir, v, "", schema)
+      case Some((base, keyIds)) =>
+        val baseDf = resolveVersionR(spark, tableDir, base, depth + 1, schema)
+        val keyCols = ColumnIds.namesOf(schema, keyIds)
+        val (dels, ups) = deltaParts(spark, tableDir, v, schema, keyIds)
+        val kc = keyCols.map(c => col(ColumnIds.quoted(c)))
         // keyless APPEND version: nothing ever leaves the base
         val gone =
           if (keyCols.isEmpty) None
-          else (part("_deletes").toSeq ++ ups.map(_.select(kc: _*)).toSeq)
+          else (dels.toSeq ++ ups.map(_.select(kc: _*)).toSeq)
             .reduceOption(_ unionByName _)
         val kept = gone.fold(baseDf)(g =>
           baseDf.join(g.distinct(), keyCols, "left_anti"))
-        // the version's schema is the base's EXTENDED by any columns its
-        // upserts added (writes after an ALTER TABLE ADD COLUMN land full-
-        // schema deltas on a narrower base) and WIDENED wherever the
-        // upserts carry a wider type (writes after a widening ALTER COLUMN
-        // TYPE land e.g. bigint deltas on an int-typed base — conforming
-        // to the base's type would overflow-cast the delta, r16) — base
-        // rows null-fill additions and widen losslessly; an upsert can
-        // never be NARROWER than the base (writes bind to the table
-        // schema), so conform only widens
-        ups.fold(kept) { u =>
-          val extra = u.schema.fields.filterNot(f =>
-            baseDf.columns.exists(_.equalsIgnoreCase(f.name)))
-          val widened = baseDf.schema.fields.map { bf =>
-            u.schema.fields.find(_.name.equalsIgnoreCase(bf.name)) match {
-              case Some(uf) if graft.sources.SnapshotCatalog
-                  .widens(bf.dataType, uf.dataType) =>
-                bf.copy(dataType = uf.dataType)
-              case _ => bf
-            }
-          }
-          val target = org.apache.spark.sql.types.StructType(widened ++ extra)
-          graft.sources.SchemaEvolution.conform(kept, target)
-            .unionByName(graft.sources.SchemaEvolution.conform(u, target))
-        }
+        ups.fold(kept)(kept.unionByName(_))
     }
+  }
+
+  /** A thin version's `_deletes` (key columns) and `_upserts` (every
+    * column of `schema`), resolved by field id. */
+  private def deltaParts(spark: SparkSession, tableDir: String, v: Int,
+                         schema: StructType,
+                         keyIds: Seq[Long]): (Option[DataFrame], Option[DataFrame]) = {
+    val hconf = spark.sessionState.newHadoopConf()
+    def part(name: String, s: StructType) = {
+      val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/$name")
+      if (p.getFileSystem(hconf).exists(p))
+        Some(readResolved(spark, tableDir, v, name, s))
+      else None
+    }
+    val keys = ColumnIds.namesOf(schema, keyIds)
+    (part("_deletes", StructType(
+        keys.map(k => schema.fields.find(_.name == k).get))),
+      part("_upserts", schema))
   }
 
   /** TAKEDOWN AT 100 TB: publish the next version as a THIN merge-on-read
@@ -1557,8 +1516,6 @@ object Sinks {
                           expectedBase: Option[Int] = None): Int = {
     require(keyCols.nonEmpty || (deletes.isEmpty && upserts.nonEmpty),
       "keyless thin versions are APPENDs: upserts only, no deletes")
-    require(keyCols.forall(!_.contains(",")),
-      "thin-version key column names must not contain ',' (marker format)")
     // a duplicate key inside ONE upsert batch would materialize as
     // duplicate rows in every resolved read downstream — reject the
     // corrupt commit up front (one batch-sized grouped count; the cost of
@@ -1595,28 +1552,25 @@ object Sinks {
         s"thin commit on BUCKETED base v=$base of $tableDir: readers stay " +
           "correct but the zero-exchange join layout is gone until " +
           "Sinks.rebucketSnapshot re-materializes it")
-    val staged = new org.apache.hadoop.fs.Path(tableDir,
-      s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    deletes.foreach(
-      _.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
-        .transform(microsBound).write.parquet(new org.apache.hadoop.fs.Path(staged, "_deletes").toString))
-    upserts.foreach(
-      u => microsBound(u).write.parquet(new org.apache.hadoop.fs.Path(staged, "_upserts").toString))
-    MetaFs.stage(spark,
-      new org.apache.hadoop.fs.Path(staged, "_base.json"),
-      s"$base\n${keyCols.mkString(",")}")
-    val v = publishStagedSnapshotFenced(spark, tableDir, staged, base, commitTsMicros)
+    val keyRows = deletes.map(
+      _.select(keyCols.map(c => col(ColumnIds.quoted(c))): _*).distinct())
+    val v = publishWithIds(spark, tableDir,
+        upserts.getOrElse(keyRows.get).schema, full = false) { (rec, record) =>
+      val staged = new org.apache.hadoop.fs.Path(tableDir,
+        s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+      keyRows.foreach(d => microsBound(stamped(d, rec)).write
+        .parquet(new org.apache.hadoop.fs.Path(staged, "_deletes").toString))
+      upserts.foreach(u => microsBound(stamped(u, rec)).write
+        .parquet(new org.apache.hadoop.fs.Path(staged, "_upserts").toString))
+      stageThinMeta(spark, staged, base, keyCols, rec)
+      publishStagedSnapshotFenced(spark, tableDir, staged, base, commitTsMicros,
+        beforeCommit = record)
+    }
     // change data feed (opt-in): land this commit's change rows post-commit
     // — a crash in between is repaired from the version's own delta files
     // (repairChangeFeed), never from a second source of truth
     if (changeFeedEnabled(spark, tableDir))
-      landChangeFeedSafe(spark, tableDir, v,
-        changeRows(resolveVersionR(spark, tableDir, base, 0,
-            renamesWindowPinned(spark, tableDir, v)), keyCols, v,
-          // re-read the published delta (the input frames may hold
-          // now-consumed staging paths); v=N is immutable from here on
-          deletes.map(_ => spark.read.parquet(s"$tableDir/v=$v/_deletes")),
-          upserts.map(_ => spark.read.parquet(s"$tableDir/v=$v/_upserts"))))
+      landChangeFeedSafe(spark, tableDir, v, thinChangeRows(spark, tableDir, v))
     autoCompactIfDeep(spark, tableDir, v)
     v
   }
@@ -1657,20 +1611,23 @@ object Sinks {
         org.apache.spark.sql.types.LongType).contains(kt),
       s"bucketed snapshots need an integral key, got $kt")
     val spark = df.sparkSession
-    publishClaimed(spark, tableDir) { v =>
-      val vDir = s"$tableDir/v=$v"
-      // NULL keys are rejected IN the write pass (no extra job): pmod(null)
-      // would land rows in __bucket=__HIVE_DEFAULT_PARTITION__ and poison
-      // every subsequent bucketed read
-      df.withColumn("__bucket",
-          when(col(keyCol).isNull, raise_error(lit(
-            s"writeSnapshotBucketed: NULL in bucket key $keyCol — bucketed " +
-              "layouts require non-null keys")).cast("int"))
-            .otherwise(pmod(col(keyCol).cast("long"), lit(buckets.toLong)).cast("int")))
-        .transform(microsBound)
-        .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(vDir)
-      MetaFs.stage(spark,
-        new org.apache.hadoop.fs.Path(vDir, "_buckets"), s"$keyCol\n$buckets")
+    publishWithIds(spark, tableDir, df.schema, full = true) { (rec, record) =>
+      publishClaimed(spark, tableDir) { v =>
+        val vDir = s"$tableDir/v=$v"
+        // NULL keys are rejected IN the write pass (no extra job): pmod(null)
+        // would land rows in __bucket=__HIVE_DEFAULT_PARTITION__ and poison
+        // every subsequent bucketed read
+        stamped(df, rec).withColumn("__bucket",
+            when(col(keyCol).isNull, raise_error(lit(
+              s"writeSnapshotBucketed: NULL in bucket key $keyCol — bucketed " +
+                "layouts require non-null keys")).cast("int"))
+              .otherwise(pmod(col(keyCol).cast("long"), lit(buckets.toLong)).cast("int")))
+          .transform(microsBound)
+          .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(vDir)
+        MetaFs.stage(spark,
+          new org.apache.hadoop.fs.Path(vDir, "_buckets"), s"$keyCol\n$buckets")
+        record()
+      }
     }
   }
 
@@ -1711,17 +1668,20 @@ object Sinks {
                                 statsCols: Seq[String],
                                 maxRecordsPerFile: Long = 0L): Int = {
     val spark = df.sparkSession
-    publishClaimed(spark, tableDir) { v =>
-      val w = microsBound(df).write.mode(SaveMode.Overwrite)
-      (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
-       else w).parquet(s"$tableDir/v=$v")
-      // stats come off the just-written files' FOOTERS (min/max/null-count),
-      // not a second full read of the data — the build is O(#files) metadata
-      graft.sources.FooterStats
-        .manifestFrame(spark, s"$tableDir/v=$v",
-          graft.sources.FooterSchema.require(spark, s"$tableDir/v=$v"), statsCols)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/_manifest/v=$v")
+    publishWithIds(spark, tableDir, df.schema, full = true) { (rec, record) =>
+      publishClaimed(spark, tableDir) { v =>
+        val w = microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
+        (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
+         else w).parquet(s"$tableDir/v=$v")
+        // stats come off the just-written files' FOOTERS (min/max/null-count),
+        // not a second full read of the data — the build is O(#files) metadata
+        graft.sources.FooterStats
+          .manifestFrame(spark, s"$tableDir/v=$v",
+            graft.sources.FooterSchema.require(spark, s"$tableDir/v=$v"), statsCols)
+          .coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/_manifest/v=$v")
+        record()
+      }
     }
   }
 
@@ -1746,13 +1706,17 @@ object Sinks {
       r.isNullAt(1) || r.isNullAt(2) ||
         (r.getLong(1) <= hi && r.getLong(2) >= lo)
     }.map(_.getString(0))
-    // all files pruned (valid predicate range matching no data): parquet
-    // can't infer a schema from zero paths, so serve an empty DataFrame
-    // with the snapshot's schema instead
+    // the served columns by field id, like every read; all files pruned
+    // (valid predicate range matching no data) serves an empty frame
+    val schema = ColumnIds.live(
+      if (version.isDefined) versionSchema(spark, tableDir, v)
+      else headSchema(spark, tableDir, v))
     val df =
       if (kept.isEmpty)
-        spark.read.parquet(s"$tableDir/v=$v").where(lit(false))
-      else spark.read.parquet(kept.toIndexedSeq: _*)
+        ColumnIds.resolve(
+          spark.read.parquet(s"$tableDir/v=$v"), schema).where(lit(false))
+      else ColumnIds.resolve(
+          spark.read.parquet(kept.toIndexedSeq: _*), schema)
         .filter(col(statCol).between(lo, hi))
     (df, kept.length, total)
   }

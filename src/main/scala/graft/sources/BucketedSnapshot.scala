@@ -152,11 +152,9 @@ private class BucketedScan(spark: SparkSession, label: String, vDir: String,
   extends Scan with Batch with SupportsReportPartitioning {
 
   private def innerScan(paths: Seq[String]): Scan = {
-    // field-id reads ride along (r17): bucketed WORKSPACE tables carry ids
-    // (metadata-only RENAME/DROP); id-less snapshot versions are untouched
-    // because id-matching only engages when the requested schema has ids
-    val opts = new CaseInsensitiveStringMap(
-      java.util.Map.of("spark.sql.parquet.fieldId.read.enabled", "true"))
+    // field-id reads ride along: bucketed workspace tables and snapshot
+    // versions carry ids (metadata-only RENAME/DROP)
+    val opts = ColumnIds.withReadOption(CaseInsensitiveStringMap.empty())
     ParquetTable(s"${label}__bucket", spark, opts,
       paths, Some(dataSchema), classOf[ParquetFileFormat])
       .newScanBuilder(opts).build()

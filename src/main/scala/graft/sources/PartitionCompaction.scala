@@ -89,8 +89,7 @@ object PartitionCompaction {
         // id in the rewrite, or the compacted files would null-fill it /
         // resurrect dropped bytes (SQLConf key — isolated session, not a
         // reader option)
-        val iso = WorkspaceDml.isolatedSession(spark,
-          "spark.sql.parquet.fieldId.read.enabled" -> "true")
+        val iso = ColumnIds.readSession(spark)
         val rows: DataFrame =
           if (tbl.hasHidden && levels.length == 1)
             iso.read.schema(tbl.fileSchema).parquet(frag.map(_._2): _*)

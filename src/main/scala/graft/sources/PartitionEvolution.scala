@@ -99,8 +99,7 @@ object PartitionEvolution {
       // current rows, partition columns re-attached as data columns.
       // FIELD-ID read (r17): renamed/re-added columns must resolve by id
       // through the respec rewrite (SQLConf key — isolated session)
-      val iso = WorkspaceDml.isolatedSession(spark,
-        "spark.sql.parquet.fieldId.read.enabled" -> "true")
+      val iso = ColumnIds.readSession(spark)
       val rows: DataFrame =
         if (oldLevels.isEmpty) iso.read.schema(declared).parquet(dir.toString)
         else if (oldLevels.forall(_.inSchema))

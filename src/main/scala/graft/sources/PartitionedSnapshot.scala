@@ -92,8 +92,7 @@ object PartitionedSnapshot {
     * unpinned read, append shape and change diff serves. */
   private[graft] def liveSchema(spark: SparkSession,
                                 tableDir: String): StructType =
-    StructType(declaredSchema(spark, tableDir).fields.filterNot(
-      _.name.startsWith(WorkspaceCatalog.DroppedPrefix)))
+    ColumnIds.live(declaredSchema(spark, tableDir))
 
   /** Record the evolved declared schema (the SQL catalog's metadata-only
     * ALTER writes through here; complete-or-absent). */
@@ -351,28 +350,10 @@ object PartitionedSnapshot {
         }
     }.toSet
 
-  /** Assign `parquet.field.id` 1..n when the schema carries none — the
-    * same Iceberg-style identity the workspace catalog stamps at CREATE:
-    * readers match columns by id, so metadata-only RENAME/DROP+re-ADD
-    * never reinterpret old files' bytes. */
-  private def stampFieldIds(schema: StructType): StructType =
-    if (schema.fields.exists(_.metadata.contains("parquet.field.id"))) schema
-    else StructType(schema.fields.zipWithIndex.map { case (f, i) =>
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong("parquet.field.id", i + 1L).build())
-    })
-
-  /** A field-id-resolving read session: SQLConf-keyed (DataFrameReader
-    * options can't set it), so the maintenance reads run on an isolated
-    * clone — the partitioned-workspace precedent. */
-  private def idSession(spark: SparkSession): SparkSession =
-    WorkspaceDml.isolatedSession(spark,
-      "spark.sql.parquet.fieldId.read.enabled" -> "true")
-
   private[graft] def readDirsAs(spark: SparkSession, tableDir: String,
                                 schema: StructType,
                                 rels: Seq[String]): DataFrame = {
-    val iso = idSession(spark)
+    val iso = ColumnIds.readSession(spark)
     if (rels.isEmpty)
       iso.createDataFrame(
         iso.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -521,40 +502,6 @@ object PartitionedSnapshot {
     }
   }
 
-  /** A full rewrite's declared schema: the EXISTING sidecar's id space
-    * preserved (ADVICE r18 — re-stamping 1..n would discard
-    * `__dropped_<id>` tombstones and let changesBetween/later ALTERs
-    * resolve a reused id against dropped columns' old bytes in pre-rewrite
-    * version folders). Incoming fields re-map BY NAME onto the live
-    * sidecar ids (any ids the caller's df carries are ignored — a
-    * read-modify-rewrite round trip carries the same ids anyway); new
-    * names allocate above the sidecar's max (tombstones included); live
-    * sidecar fields the rewrite drops become tombstones so their ids can
-    * never be reused. */
-  private def rewriteSchema(incoming: StructType,
-                            existing: StructType): StructType = {
-    require(incoming.fieldNames.forall(
-        !_.startsWith(WorkspaceCatalog.DroppedPrefix)),
-      s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
-        "prefix (dropped-column tombstones)")
-    val idOf: Map[String, Long] = existing.fields.map(f =>
-      f.name.toLowerCase -> f.metadata.getLong("parquet.field.id")).toMap
-    var nextId = existing.fields.map(_.metadata.getLong("parquet.field.id"))
-      .foldLeft(0L)(math.max)
-    val live = incoming.fields.map { f =>
-      val id = idOf.getOrElse(f.name.toLowerCase, { nextId += 1; nextId })
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong("parquet.field.id", id).build())
-    }
-    val tombstones = existing.fields.collect {
-      case f if f.name.startsWith(WorkspaceCatalog.DroppedPrefix) => f
-      case f if !incoming.fieldNames.exists(_.equalsIgnoreCase(f.name)) =>
-        f.copy(name = s"${WorkspaceCatalog.DroppedPrefix}" +
-          f.metadata.getLong("parquet.field.id"))
-    }
-    StructType(live ++ tombstones)
-  }
-
   /** Stage `df` in the spec's layout and commit it as the next version —
     * v=1 for a new table (records `_partspec` + `_partschema.json`), a
     * full materialized rewrite afterwards. Claim-allocated (concurrent
@@ -562,7 +509,7 @@ object PartitionedSnapshot {
     * wins by design, like INSERT OVERWRITE — derived statements go
     * through the fenced paths. A rewrite of an EXISTING partitioned table
     * runs under the table's DDL statement lock (the one `alterTable`
-    * holds) and PRESERVES the sidecar's field-id space ([[rewriteSchema]])
+    * holds) and PRESERVES the sidecar's field-id space ([[ColumnIds.rebind]])
     * — without the lock a concurrent ALTER's sidecar write could be
     * silently lost, and a re-stamp would reuse tombstoned ids (ADVICE
     * r18). */
@@ -584,12 +531,9 @@ object PartitionedSnapshot {
         Some(declaredSchema(spark, tableDir))
       else None
     }
-    val declared = existingSidecar match {
-      case Some(ex) if ex.fields.nonEmpty &&
-          ex.fields.forall(_.metadata.contains("parquet.field.id")) =>
-        rewriteSchema(df.schema, ex)
-      case _ => stampFieldIds(df.schema)
-    }
+    val declared = existingSidecar.filter(ColumnIds.isStamped)
+      .map(ColumnIds.rebind(df.schema, _))
+      .getOrElse(ColumnIds.stamp(df.schema))
     val levels = PartitionedWorkspace.levelsOf(spec, declared)
     require(levels.nonEmpty && levels.forall(!_.inSchema),
       "partitioned snapshots take hidden levels only — `key:<col>` " +
@@ -617,8 +561,7 @@ object PartitionedSnapshot {
       .snapshotCommitted(spark, tableDir).isDefined
     // data files and the version's pinned serving schema take the LIVE
     // fields only; the sidecar keeps the full id space incl. tombstones
-    val live = StructType(declared.fields.filterNot(
-      _.name.startsWith(WorkspaceCatalog.DroppedPrefix)))
+    val live = ColumnIds.live(declared)
     val staging = newStaging(tableDir)
     val fs = MetaFs.fs(spark, staging)
     try {
@@ -1129,10 +1072,7 @@ private[graft] class PartitionedSnapshotTable(
       // field-id resolution for every SQL scan: a post-RENAME read must
       // match old files' columns by id, and a DROP+re-ADD must null-fill
       // rather than resurrect old bytes
-      val merged = new java.util.HashMap[String, String](
-        options.asCaseSensitiveMap())
-      merged.put("spark.sql.parquet.fieldId.read.enabled", "true"): Unit
-      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(merged)
+      val opts = ColumnIds.withReadOption(options)
       new org.apache.spark.sql.graftbridge.PrunedParquetScanBuilder(
         tableName, spark, declared, opts,
         filters => {

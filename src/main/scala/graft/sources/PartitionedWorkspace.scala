@@ -699,8 +699,7 @@ private[sources] class PartitionedWorkspaceTable(
     * DataFrameReader options cannot set this key (it is read from SQLConf),
     * so the reads run on an isolated session (cloned runtime conf, same
     * context/catalog — the flat-table deleteWhere precedent). */
-  private lazy val idSpark: SparkSession = WorkspaceDml.isolatedSession(
-    spark, "spark.sql.parquet.fieldId.read.enabled" -> "true")
+  private lazy val idSpark: SparkSession = ColumnIds.readSession(spark)
 
   /** Data-file schema: declared minus the IDENTITY columns (hive layout
     * stores those in directory names; a copy inside the file would be a
@@ -736,9 +735,7 @@ private[sources] class PartitionedWorkspaceTable(
       TableCapability.OVERWRITE_BY_FILTER, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.put("spark.sql.parquet.fieldId.read.enabled", "true"): Unit
-    val opts = new CaseInsensitiveStringMap(merged)
+    val opts = ColumnIds.withReadOption(options)
     if (!hasHidden)
       ParquetTable(tableName, spark, opts, Seq(dir), Some(declaredFull),
         classOf[ParquetFileFormat]).newScanBuilder(opts)
@@ -1493,9 +1490,8 @@ private class PartitionScopedScan(table: PartitionedWorkspaceTable,
         // MIXED layout (r18): identity values re-attach via basePath
         // discovery; the synthetic hidden dir needs its inner-schema
         // column, pruned right back out so readSchema stays the table row
-        val opts = new CaseInsensitiveStringMap(
-          java.util.Map.of("basePath", table.tableDir,
-            "spark.sql.parquet.fieldId.read.enabled", "true"))
+        val opts = ColumnIds.withReadOption(new CaseInsensitiveStringMap(
+          java.util.Map.of("basePath", table.tableDir)))
         val b = ParquetTable(s"${table.name}__cowscan", SparkSession.active,
           opts, leaves,
           Some(PartitionedWorkspace.innerReadSchema(
@@ -1506,15 +1502,13 @@ private class PartitionScopedScan(table: PartitionedWorkspaceTable,
           .pruneColumns(table.declaredSchemaFull)
         return b.build()
       }
-      val opts = new CaseInsensitiveStringMap(
-        java.util.Map.of("spark.sql.parquet.fieldId.read.enabled", "true"))
+      val opts = ColumnIds.withReadOption(CaseInsensitiveStringMap.empty())
       ParquetTable(s"${table.name}__cowscan", SparkSession.active, opts,
         leaves, Some(table.declaredSchemaFull), classOf[ParquetFileFormat])
         .newScanBuilder(opts).build()
     } else {
-      val opts = new CaseInsensitiveStringMap(
-        java.util.Map.of("basePath", table.tableDir,
-          "spark.sql.parquet.fieldId.read.enabled", "true"))
+      val opts = ColumnIds.withReadOption(new CaseInsensitiveStringMap(
+        java.util.Map.of("basePath", table.tableDir)))
       ParquetTable(s"${table.name}__cowscan", SparkSession.active, opts,
         if (paths.isEmpty) Seq(table.tableDir) else paths,
         Some(table.declaredSchemaFull), classOf[ParquetFileFormat])
@@ -1627,7 +1621,7 @@ private class PartitionedCowBatchWrite(table: PartitionedWorkspaceTable,
     table.levels.zip(levelOrdinals).collect {
       case (l, o) if l.inSchema => o
     }.toSet
-  private val fileSchema = WorkspaceDml.mergeFieldIds(
+  private val fileSchema = ColumnIds.withDeclaredIds(
     StructType(writeSchema.zipWithIndex
       .filterNot { case (_, i) => identityOrdinals.contains(i) }.map(_._1)),
     Some(table.fileSchema))

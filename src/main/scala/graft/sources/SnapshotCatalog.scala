@@ -134,11 +134,9 @@ class SnapshotCatalog extends TableCatalog
     else if (graft.operators.Sinks.thinBase(SparkSession.active,
         s"$workspace/$tableDir", version).isDefined)
       thinTable(tableDir, version, deletable = false)
-    // no rename routing for PINNED serving: a pinned read only sees
-    // renames declared before its version's commit, which are already
-    // baked into the folder's own physical names (the folder was written
-    // after them) — pinned versions keep the plain/manifest/bucketed
-    // fast paths unconditionally
+    // a pinned materialized version serves its own footer schema — the
+    // schema recorded for it, names as committed — on the plain /
+    // manifest / bucketed fast paths
     else graft.operators.Sinks.bucketedLayout(SparkSession.active,
         s"$workspace/$tableDir", version) match {
       case Some((keyCol, n)) =>
@@ -182,15 +180,11 @@ class SnapshotCatalog extends TableCatalog
       new PartitionedSnapshotTable(s"$t@v$committed", SparkSession.active,
         s"$workspace/$t", committed, pinned = false)
     else if (graft.operators.Sinks.thinBase(SparkSession.active,
-        s"$workspace/$t", committed).isDefined)
-      thinTable(t, committed, deletable = true)
-    else if (graft.operators.Sinks.renameAffected(SparkSession.active,
-        s"$workspace/$t", committed))
-      // a RENAMED head whose files still carry the old name serves through
-      // the resolver marker (new names via the plan-time replay). DML on
-      // it is the thin-hop path (declared keys required, like any MOR
-      // head); the next compaction/overwrite rewrites physical names and
-      // the full materialized fast path returns
+        s"$workspace/$t", committed).isDefined ||
+        graft.operators.Sinks.idNameClash(SparkSession.active,
+          s"$workspace/$t", committed))
+      // a materialized head whose files Spark's field-id reader would
+      // mis-resolve serves through the resolver marker too
       thinTable(t, committed, deletable = true)
     else graft.operators.Sinks.bucketedLayout(SparkSession.active,
         s"$workspace/$t", committed) match {
@@ -239,9 +233,8 @@ class SnapshotCatalog extends TableCatalog
     if (dirEntries().exists(_.equalsIgnoreCase(ident.name())))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         ident.namespace() :+ ident.name())
-    require(!schema.fieldNames.exists(
-        _.startsWith(WorkspaceCatalog.DroppedPrefix)),
-      s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
+    require(!schema.fieldNames.exists(ColumnIds.isTombstone),
+      s"'${ColumnIds.DroppedPrefix}' is a reserved column-name " +
         "prefix (dropped-column tombstones)")
     val spark = SparkSession.active
     if (partitions.nonEmpty) {
@@ -292,336 +285,69 @@ class SnapshotCatalog extends TableCatalog
     loadTable(ident)
   }
 
-  /** METADATA-ONLY schema evolution (r15): `ALTER TABLE ADD COLUMN`
-    * publishes NO data and touches NO version folder — it records the
-    * evolved schema as the table's `_schema.json`
-    * ([[graft.operators.Sinks.declareSnapshotSchema]]). Unpinned reads
-    * serve the evolved schema with pre-ALTER files null-filled (Spark's
-    * parquet reader resolves requested-but-absent columns to null
-    * natively); pinned `VERSION/TIMESTAMP AS OF` reads keep their
-    * version's own schema — history is immutable, including its shape.
-    * ADD COLUMN only, nullable only, flat only: a drop/retype would
-    * reinterpret bytes already pinned by history. The reference's own
-    * silent field tolerance (`arc_utils.py:685-689`) is the spec lineage —
-    * made explicit and loss-free here. */
+  /** METADATA-ONLY schema evolution: ADD COLUMN, RENAME COLUMN, DROP
+    * COLUMN and widening ALTER COLUMN TYPE record the evolved schema —
+    * `_schema.json` for flat tables, `_partschema.json` for partitioned
+    * ones — and touch NO version folder. Every data file carries parquet
+    * field ids and every unpinned read resolves columns by id
+    * ([[ColumnIds]]): a renamed column keeps matching old files, a
+    * dropped one stays recorded as a `__dropped_<id>` tombstone that
+    * serving filters out, and a re-ADD of its name takes a fresh id, so
+    * old bytes read as NULL under it. Pinned `VERSION/TIMESTAMP AS OF`
+    * reads keep the schema recorded for their version — history is
+    * immutable, including its shape. A partitioned table's level SOURCE
+    * columns are immutable by name AND type: the level derivation and
+    * every directory on disk bind them. The reference's own silent field
+    * tolerance (`arc_utils.py:685-689`) is the spec lineage — made
+    * explicit and loss-free here. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = resolve(ident)
     val spark = SparkSession.active
     val dir = s"$workspace/$t"
-    // DDL fence: ALTER is a read-modify-write of _schema.json — two
-    // concurrent ALTERs would silently drop one's column (last write
-    // wins). The statement lock serializes them; DML and readers never
-    // take this lock on snapshot tables, so they are unaffected.
-    WorkspaceDmlLock.withLock(spark, dir) { alterTableLocked(ident, dir, changes) }
-  }
-
-  private def alterTableLocked(ident: Identifier, dir: String,
-                               changes: Seq[TableChange]): Table = {
-    val spark = SparkSession.active
-    PartitionedSnapshot.partSpec(spark, dir).foreach(spec =>
-      return alterPartitioned(ident, dir, spec, changes))
-    val committed = graft.operators.Sinks.snapshotCommitted(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed snapshot for ${ident.name()}"))
-    if (graft.operators.Sinks.bucketedLayout(spark, dir, committed).isDefined)
-      throw new UnsupportedOperationException(
-        s"${ident.name()}'s head is a BUCKETED layout artifact — ALTER would desync the " +
-          "declared schema from the key-grouped scan; rebucketSnapshot " +
-          "after evolving, or evolve before bucketing")
-    // fold over the FULL declared schema — WITH dropped-column tombstones:
-    // their rename chains are what keep pre-drop folders resolving, and an
-    // ALTER that silently shed them would resurrect dropped bytes under a
-    // later re-ADD of the name. Serving filters them (servedSnapshotSchema).
-    val current = graft.operators.Sinks.declaredSnapshotSchema(spark, dir)
-      .getOrElse(graft.operators.Sinks.readSnapshot(spark, dir).schema)
-    def liveNames(s: StructType): Array[String] = s.fieldNames
-      .filterNot(_.startsWith(WorkspaceCatalog.DroppedPrefix))
-    val renames = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val evolved = changes.foldLeft(current) {
-      case (schema, add: TableChange.AddColumn) =>
-        require(add.fieldNames().length == 1,
-          "snapshot tables are flat; nested ADD COLUMN is not supported")
-        require(add.isNullable,
-          "added columns must be nullable (pinned history has no value for them)")
-        require(add.position() == null,
-          "ADD COLUMN ... FIRST/AFTER is not supported on snapshot tables " +
-            "(added columns append; files on disk are never reshaped)")
-        val colName = add.fieldNames()(0)
-        require(!colName.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
-            "prefix (dropped-column tombstones)")
-        if (schema.fieldNames.exists(_.equalsIgnoreCase(colName)))
-          throw new IllegalArgumentException(
-            s"column $colName already exists in ${ident.name()}")
-        schema.add(org.apache.spark.sql.types.StructField(
-          colName, add.dataType(), nullable = true))
-      case (schema, ren: TableChange.RenameColumn) =>
-        // METADATA-ONLY rename (r16): no version folder is touched, no
-        // byte rewritten — the rename lands in `_renames` (a chronological
-        // history the resolver replays over files written under old names)
-        // plus the evolved `_schema.json`. Unpinned reads serve the new
-        // name with old files resolving through the replay; pinned reads
-        // BELOW the rename keep their version's own names (the history
-        // entry carries the committed version it was declared at). Needs
-        // the MOR-aware session: rename-affected versions serve through
-        // the resolution rule, exactly like thin chains.
-        require(ren.fieldNames().length == 1,
-          "snapshot tables are flat; nested RENAME COLUMN is not supported")
-        if (!morAware)
+    val partitioned = PartitionedSnapshot.partSpec(spark, dir).isDefined
+    val surface = ColumnIds.Surface(
+      if (partitioned) "partitioned snapshots" else "snapshot tables",
+      ident.name(), "evolve by publishing new versions")
+    // DDL fence: ALTER is a read-modify-write of the schema record — two
+    // concurrent ALTERs would silently drop one's change (last write
+    // wins). The statement lock serializes them, and a publish that
+    // changes the recorded schema takes it too; readers never do.
+    WorkspaceDmlLock.withLock(spark, dir) {
+      if (partitioned)
+        PartitionedSnapshot.declareSchema(spark, dir, ColumnIds.evolve(
+          PartitionedSnapshot.declaredSchema(spark, dir), changes,
+          surface.copy(
+            frozen = PartitionedSnapshot.levelsOf(spark, dir)
+              .map(_.sourceCol.toLowerCase).toSet,
+            frozenRole = "partition source column",
+            frozenWhy = "the level derivation and every directory on disk " +
+              "bind it; republish (writePartitioned) to change the axis")))
+      else {
+        val committed = graft.operators.Sinks.snapshotCommitted(spark, dir)
+          .getOrElse(throw new IllegalStateException(
+            s"no committed snapshot for ${ident.name()}"))
+        if (graft.operators.Sinks.bucketedLayout(spark, dir, committed).isDefined)
           throw new UnsupportedOperationException(
-            s"RENAME COLUMN serves old-named files through the MOR-aware " +
-              "resolution rule — set spark.sql.extensions=" +
-              "graft.GraftExtensions on sessions using ${ident.name()}")
-        val to = ren.newName()
-        require(!to.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
-            "prefix (dropped-column tombstones)")
-        val fromField = schema.fields
-          .find(f => f.name.equalsIgnoreCase(ren.fieldNames()(0)) &&
-            !f.name.startsWith(WorkspaceCatalog.DroppedPrefix))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column ${ren.fieldNames()(0)} in ${ident.name()}"))
-        if (schema.fieldNames.exists(_.equalsIgnoreCase(to)))
-          throw new IllegalArgumentException(
-            s"column $to already exists in ${ident.name()}")
-        renames += ((fromField.name, to))
-        org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-          if (f.name.equalsIgnoreCase(fromField.name))
-            // final name + the chain entry, carried IN the field metadata
-            // (schema and rename history are one atomic _schema.json)
-            graft.operators.Sinks.appendRenameChain(f, committed, to)
-          else f))
-      case (schema, upd: TableChange.UpdateColumnType) =>
-        // METADATA-ONLY type WIDENING (r16): no version folder is touched —
-        // only the declared `_schema.json` changes. Safe because every
-        // allowed transition is value-exact AND order-preserving, and
-        // Spark 4's parquet reader natively serves old-typed files under
-        // the widened schema (vectorized type promotion) — so unpinned
-        // reads, thin-chain resolution (union coercion agrees), manifest
-        // pruning (stats compare kind-wise, not type-wise), and DML all
-        // just work; pinned VERSION/TIMESTAMP AS OF reads keep their
-        // version's own physical types — history is immutable, including
-        // its width. Anything non-widening gets the guided error below.
-        require(upd.fieldNames().length == 1,
-          "snapshot tables are flat; nested ALTER COLUMN is not supported")
-        val f = schema.fields
-          .find(x => x.name.equalsIgnoreCase(upd.fieldNames()(0)) &&
-            !x.name.startsWith(WorkspaceCatalog.DroppedPrefix))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column ${upd.fieldNames()(0)} in ${ident.name()}"))
-        val to = upd.newDataType()
-        if (!SnapshotCatalog.widens(f.dataType, to))
-          throw new UnsupportedOperationException(
-            s"ALTER COLUMN ${f.name} TYPE ${to.simpleString}: only lossless " +
-              s"WIDENINGS (tinyint/smallint/int->bigint, float->double, " +
-              s"decimal precision growth at the same scale) are " +
-              s"metadata-only; ${f.dataType.simpleString} -> " +
-              s"${to.simpleString} would reinterpret pinned history — " +
-              "evolve by publishing new versions")
-        org.apache.spark.sql.types.StructType(schema.fields.map(x =>
-          if (x.name.equalsIgnoreCase(f.name)) x.copy(dataType = to) else x))
-      case (schema, del: TableChange.DeleteColumn) =>
-        // METADATA-ONLY DROP COLUMN (r17, verdict r16 missing #1): the
-        // drop is recorded as a RENAME onto a reserved `__dropped_<k>`
-        // tombstone name inside `_schema.json` — the same per-field chain
-        // machinery that serves RENAME then does all three jobs at once:
-        // (a) reads pinned at or below the drop's committed version keep
-        // the column (the chain entry carries that version, exactly like a
-        // rename), (b) pre-drop folders' physical bytes replay onto the
-        // TOMBSTONE during resolution — which serving filters out
-        // (Sinks.servedSnapshotSchema / dropTombstones) — and (c) a later
-        // re-ADD of the same name is a brand-new field: old bytes resolve
-        // onto the tombstone, never onto it, so dropped data can never
-        // resurrect. No version folder is touched; the next compaction
-        // (which reads through the served projection) retires the bytes
-        // physically.
-        require(del.fieldNames().length == 1,
-          "snapshot tables are flat; nested DROP COLUMN is not supported")
-        if (!morAware)
-          throw new UnsupportedOperationException(
-            "DROP COLUMN serves pre-drop files through the MOR-aware " +
-              "resolution rule — set spark.sql.extensions=" +
-              "graft.GraftExtensions on sessions using " + ident.name())
-        val dn = del.fieldNames()(0)
-        val df = schema.fields
-          .find(f => f.name.equalsIgnoreCase(dn) &&
-            !f.name.startsWith(WorkspaceCatalog.DroppedPrefix))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column $dn in ${ident.name()}"))
-        graft.operators.Sinks.snapshotDeclaredKeys(spark, dir).foreach { keys =>
-          if (keys.exists(_.equalsIgnoreCase(dn)))
-            throw new UnsupportedOperationException(
-              s"cannot DROP declared row-identity column $dn of " +
-                s"${ident.name()} — thin versions resolve by it; redeclare " +
-                "keys (Sinks.declareSnapshotKeys) first")
-        }
-        require(liveNames(schema).length > 1,
-          s"cannot drop the last column of ${ident.name()}")
-        // tombstone names are unique by a monotone counter (tombstones
-        // never leave the sidecar)
-        val tomb = s"${WorkspaceCatalog.DroppedPrefix}${schema.fields
-          .count(_.name.startsWith(WorkspaceCatalog.DroppedPrefix)) + 1}"
-        StructType(schema.fields.map(f =>
-          if (f eq df)
-            graft.operators.Sinks.appendRenameChain(f, committed, tomb)
-          else f))
-      case (_, other) =>
-        throw new UnsupportedOperationException(
-          s"snapshot tables support ALTER TABLE ADD COLUMN, RENAME " +
-            s"COLUMN, DROP COLUMN and widening ALTER COLUMN TYPE only (got " +
-            s"${other.getClass.getSimpleName}); anything " +
-            "else would reinterpret pinned history — evolve by publishing " +
-            "new versions")
-    }
-    graft.operators.Sinks.declareSnapshotSchema(spark, dir, evolved)
-    // declared row-identity keys follow the rename (thin DML binds them);
-    // ordered after the schema write — a crash in between leaves old-named
-    // keys that the next DML statement fails loudly on, never silently
-    renames.foreach { case (from, to) =>
-      graft.operators.Sinks.snapshotDeclaredKeys(spark, dir).foreach { keys =>
-        if (keys.exists(_.equalsIgnoreCase(from)))
-          graft.operators.Sinks.declareSnapshotKeys(spark, dir,
-            keys.map(k => if (k.equalsIgnoreCase(from)) to else k))
+            s"${ident.name()}'s head is a BUCKETED layout artifact — ALTER would desync the " +
+              "declared schema from the key-grouped scan; rebucketSnapshot " +
+              "after evolving, or evolve before bucketing")
+        val keys = graft.operators.Sinks.snapshotDeclaredKeys(spark, dir)
+          .getOrElse(Nil)
+        changes.collect { case d: TableChange.DeleteColumn => d.fieldNames() }
+          .find(n => n.length == 1 && keys.exists(_.equalsIgnoreCase(n(0))))
+          .foreach(n => throw new UnsupportedOperationException(
+            s"cannot DROP declared row-identity column ${n(0)} of " +
+              s"${ident.name()} — thin versions resolve by it; redeclare " +
+              "keys (Sinks.declareSnapshotKeys) first"))
+        // the FULL record, tombstones included: their ids must never be
+        // reused by a later ADD
+        graft.operators.Sinks.declareSnapshotSchema(spark, dir, ColumnIds.evolve(
+          graft.operators.Sinks.declaredSnapshotSchema(spark, dir)
+            .getOrElse(graft.operators.Sinks.readSnapshot(spark, dir).schema),
+          changes, surface))
       }
+      loadTable(ident)
     }
-    loadTable(ident)
-  }
-
-  /** METADATA-ONLY schema evolution for PARTITIONED snapshots (r18, the
-    * q249/q250 matrix on the versioned hidden-layout store): ADD / RENAME /
-    * widening ALTER COLUMN TYPE / DROP all land in `_partschema.json`
-    * alone — no version folder is touched. Safe because every data file
-    * carries parquet FIELD IDS (stamped at `writePartitioned`) and every
-    * read — SQL scan, maintenance, change diff — resolves columns by id:
-    * a renamed column keeps matching old files, and a DROP + re-ADD of
-    * the same name takes a FRESH id (the dropped field stays in the
-    * sidecar as a `__dropped_<id>` tombstone), so old bytes null-fill
-    * rather than resurrect. Pinned `VERSION AS OF` reads below the ALTER
-    * keep their version's own `_pinschema.json` — history is immutable,
-    * including its shape. The PARTITION SOURCE column is immutable by
-    * name AND type: its name feeds the level derivation and its values
-    * are baked into every directory (the workspace guardrail, q250). */
-  private def alterPartitioned(ident: Identifier, dir: String, spec: String,
-                               changes: Seq[TableChange]): Table = {
-    val spark = SparkSession.active
-    // segment-wise parse (mixed 'key:src,days:ts' markers): EVERY level's
-    // source column is layout-baked
-    val sourceCols = spec.split(',').map(_.trim).map(seg =>
-      if (seg.contains(":")) seg.split(':').last else seg)
-      .map(_.toLowerCase).toSet
-    def requireNotSource(name: String, what: String): Unit =
-      if (sourceCols.contains(name.toLowerCase))
-        throw new UnsupportedOperationException(
-          s"$what $name: it is a partition source column of " +
-            s"${ident.name()} — the level derivation and every directory " +
-            "on disk bind it; republish (writePartitioned) to change the axis")
-    val current = PartitionedSnapshot.declaredSchema(spark, dir)
-    def idStamped = current.fields.nonEmpty &&
-      current.fields.forall(_.metadata.contains("parquet.field.id"))
-    def liveNames(s: StructType): Array[String] = s.fieldNames
-      .filterNot(_.startsWith(WorkspaceCatalog.DroppedPrefix))
-    val evolved = changes.foldLeft(current) {
-      case (schema, add: TableChange.AddColumn) =>
-        require(add.fieldNames().length == 1,
-          "partitioned snapshots are flat; nested ADD COLUMN is not supported")
-        require(add.isNullable,
-          "added columns must be nullable (pinned history has no value for them)")
-        require(add.position() == null,
-          "ADD COLUMN ... FIRST/AFTER is not supported (added columns " +
-            "append; files on disk are never reshaped)")
-        val name = add.fieldNames()(0)
-        require(!name.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
-            "prefix (dropped-column tombstones)")
-        if (schema.fieldNames.exists(_.equalsIgnoreCase(name)))
-          throw new IllegalArgumentException(
-            s"column $name already exists in ${ident.name()}")
-        // max over the FULL sidecar including tombstones: a reused id
-        // would resolve the dropped column's old bytes as the new column
-        val meta =
-          if (!idStamped) org.apache.spark.sql.types.Metadata.empty
-          else new org.apache.spark.sql.types.MetadataBuilder().putLong(
-            "parquet.field.id",
-            schema.fields.map(_.metadata.getLong("parquet.field.id")).max + 1L
-          ).build()
-        schema.add(org.apache.spark.sql.types.StructField(
-          name, add.dataType(), nullable = true, meta))
-      case (schema, ren: TableChange.RenameColumn) =>
-        require(ren.fieldNames().length == 1,
-          "partitioned snapshots are flat; nested RENAME COLUMN is not supported")
-        if (!idStamped)
-          throw new UnsupportedOperationException(
-            s"RENAME COLUMN needs parquet field ids on ${ident.name()} " +
-              "(tables written by writePartitioned carry them); republish " +
-              "to adopt them")
-        val from = ren.fieldNames()(0)
-        requireNotSource(from, "cannot RENAME")
-        val to = ren.newName()
-        require(!to.startsWith(WorkspaceCatalog.DroppedPrefix) &&
-            !from.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
-            "prefix (dropped-column tombstones)")
-        if (!schema.fieldNames.exists(_.equalsIgnoreCase(from)))
-          throw new IllegalArgumentException(
-            s"no column $from in ${ident.name()}")
-        if (schema.fieldNames.exists(_.equalsIgnoreCase(to)))
-          throw new IllegalArgumentException(
-            s"column $to already exists in ${ident.name()}")
-        StructType(schema.fields.map(f =>
-          if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f))
-      case (schema, upd: TableChange.UpdateColumnType) =>
-        require(upd.fieldNames().length == 1,
-          "partitioned snapshots are flat; nested ALTER COLUMN is not supported")
-        val fn = upd.fieldNames()(0)
-        // the source column's VALUES feed the path derivation — a width
-        // change could re-derive differently (bucket hashes by type)
-        requireNotSource(fn, "cannot ALTER TYPE of")
-        val f = schema.fields
-          .find(x => x.name.equalsIgnoreCase(fn) &&
-            !x.name.startsWith(WorkspaceCatalog.DroppedPrefix))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column $fn in ${ident.name()}"))
-        val to = upd.newDataType()
-        if (!SnapshotCatalog.widens(f.dataType, to))
-          throw new UnsupportedOperationException(
-            s"ALTER COLUMN ${f.name} TYPE ${to.simpleString}: only lossless " +
-              "WIDENINGS (tinyint/smallint/int->bigint, float->double, " +
-              "decimal precision growth at the same scale) are " +
-              s"metadata-only; ${f.dataType.simpleString} -> " +
-              s"${to.simpleString} would reinterpret pinned history — " +
-              "evolve by publishing new versions")
-        StructType(schema.fields.map(x =>
-          if (x.name.equalsIgnoreCase(f.name)) x.copy(dataType = to) else x))
-      case (schema, del: TableChange.DeleteColumn) =>
-        require(del.fieldNames().length == 1,
-          "partitioned snapshots are flat; nested DROP COLUMN is not supported")
-        if (!idStamped)
-          throw new UnsupportedOperationException(
-            s"DROP COLUMN needs parquet field ids on ${ident.name()} " +
-              "(tables written by writePartitioned carry them); republish " +
-              "to adopt them")
-        val dn = del.fieldNames()(0)
-        requireNotSource(dn, "cannot DROP")
-        val df = schema.fields
-          .find(f => f.name.equalsIgnoreCase(dn) &&
-            !f.name.startsWith(WorkspaceCatalog.DroppedPrefix))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column $dn in ${ident.name()}"))
-        require(liveNames(schema).length > 1,
-          s"cannot drop the last column of ${ident.name()}")
-        val id = df.metadata.getLong("parquet.field.id")
-        StructType(schema.fields.map(f =>
-          if (f eq df) f.copy(name = s"${WorkspaceCatalog.DroppedPrefix}$id")
-          else f))
-      case (_, other) =>
-        throw new UnsupportedOperationException(
-          s"partitioned snapshots support ALTER TABLE ADD COLUMN, RENAME " +
-            s"COLUMN, DROP COLUMN and widening ALTER COLUMN TYPE only (got " +
-            s"${other.getClass.getSimpleName}); anything else would " +
-            "reinterpret pinned history — evolve by publishing new versions")
-    }
-    PartitionedSnapshot.declareSchema(spark, dir, evolved)
-    loadTable(ident)
   }
 
   /** DROP removes the whole version store — the table's entire history.

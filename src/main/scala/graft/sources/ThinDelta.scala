@@ -82,9 +82,13 @@ private class ThinDeltaBatchWrite(spark: SparkSession, tableDir: String,
 
   private val staged = new Path(tableDir,
     s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-  private val rowSchema: StructType = info.schema()
-  private val idSchema: StructType = info.rowIdSchema().orElseThrow(() =>
-    new IllegalStateException("delta write without a rowId schema"))
+  // delta parts are data files of the table: they carry its field ids
+  private val record = graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir)
+  private val rowSchema: StructType =
+    ColumnIds.withDeclaredIds(info.schema(), record)
+  private val idSchema: StructType = ColumnIds.withDeclaredIds(
+    info.rowIdSchema().orElseThrow(() =>
+      new IllegalStateException("delta write without a rowId schema")), record)
 
   override def createBatchWriterFactory(p: PhysicalWriteInfo): DeltaWriterFactory = {
     def factory(schema: StructType): (OutputWriterFactory, SerializableHadoopConf) = {

@@ -51,28 +51,19 @@ private[graft] class ThinSnapshotTable(
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
-  /** The declared evolved schema, applied to HEAD serving only: pinned
-    * thin reads keep their version's own shape (history is immutable,
-    * including its columns). */
-  private def conformTo: Option[StructType] =
+  /** The resolved chain: the HEAD under the table's current record
+    * (renames, drops and ADDs applied by field id), a pinned marker under
+    * the schema recorded for its version (history is immutable, including
+    * its columns). */
+  private def resolved(): org.apache.spark.sql.DataFrame =
     if (deletable)
-      graft.operators.Sinks.servedSnapshotSchema(spark, tableDir)
-    else None
+      graft.operators.Sinks.readSnapshotServed(spark, tableDir, pinnedVersion)
+    else graft.operators.Sinks.readSnapshot(spark, tableDir, Some(pinnedVersion))
 
   /** The resolved chain as an ANALYZED logical plan — what the resolution
     * rule splices in place of this table's relation. Recomputed per call:
     * a plan is single-use (its expression IDs must be fresh per splice). */
-  def resolvedPlan(): LogicalPlan = {
-    // head serving resolves with EVERY recorded rename (unpinned names);
-    // a pinned marker keeps the names its version committed under
-    val raw =
-      if (deletable)
-        graft.operators.Sinks.readSnapshotServed(spark, tableDir, pinnedVersion)
-      else
-        graft.operators.Sinks.readSnapshot(spark, tableDir, Some(pinnedVersion))
-    conformTo.map(SchemaEvolution.conform(raw, _)).getOrElse(raw)
-      .queryExecution.analyzed
-  }
+  def resolvedPlan(): LogicalPlan = resolved().queryExecution.analyzed
 
   /** Row-identity columns: the table's declared keys if any, else the
     * thin head's own `_base` marker keys. Empty for a KEYLESS append
@@ -81,20 +72,18 @@ private[graft] class ThinSnapshotTable(
   private def keyCols: Seq[String] =
     graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir)
       .orElse(graft.operators.Sinks.thinBase(spark, tableDir, pinnedVersion)
-        .map(_._2).filter(_.nonEmpty))
+        .map(_._2).filter(_.nonEmpty)
+        .flatMap(ids => graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir)
+          .map(ColumnIds.namesOf(_, ids))))
       .getOrElse(Seq.empty)
 
   /** Resolved-chain schema with the chain's key columns NON-NULLABLE —
     * thin versions exist by row identity, and Spark's delta rewrite
     * refuses nullable row IDs. */
   private lazy val resolvedSchema: StructType = {
-    val base = conformTo.getOrElse {
-      if (deletable)
-        graft.operators.Sinks.readSnapshotServed(spark, tableDir, pinnedVersion)
-          .schema
-      else graft.operators.Sinks
-        .readSnapshot(spark, tableDir, Some(pinnedVersion)).schema
-    }
+    val base =
+      (if (deletable) graft.operators.Sinks.servedSnapshotSchema(spark, tableDir)
+       else None).getOrElse(resolved().schema)
     val keys = keyCols
     StructType(base.map(f =>
       if (keys.exists(_.equalsIgnoreCase(f.name))) f.copy(nullable = false)
@@ -198,11 +187,10 @@ private[graft] class ThinSnapshotTable(
       .reduceOption(_ && _).getOrElse(lit(true))
     // one filtered read of the resolved chain (predicates reach the base
     // scan through the anti joins) emits only the MATCHED KEYS; the thin
-    // publish is O(keys) and fenced on this handle's bound version.
-    // Conformed to the served schema so a predicate on an ALTER-added
-    // column resolves (null in pre-ALTER rows).
-    val raw = graft.operators.Sinks.readSnapshotServed(spark, tableDir, pinnedVersion)
-    val keys = conformTo.map(SchemaEvolution.conform(raw, _)).getOrElse(raw)
+    // publish is O(keys) and fenced on this handle's bound version. The
+    // served schema binds, so a predicate on an ALTER-added column
+    // resolves (null in pre-ALTER rows).
+    val keys = resolved()
       .filter(coalesce(cond, lit(false)))
       .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
     graft.operators.Sinks.deleteSnapshotKeys(

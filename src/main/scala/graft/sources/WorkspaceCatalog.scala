@@ -104,15 +104,6 @@ class WorkspaceCatalog extends TableCatalog
     MetaFs.read(SparkSession.active, sidecarPath(name)).map(
       org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
 
-  /** Dropped columns stay in the sidecar as `__dropped_<id>` TOMBSTONES
-    * (type + field id preserved, name retired): the sidecar remains ONE
-    * atomic artifact AND the next ADD COLUMN's max(id)+1 can never reuse
-    * a dropped id — id reuse would resolve the dropped column's old bytes
-    * as the new column. Serving always filters them out. */
-  private def liveFields(schema: StructType): StructType =
-    StructType(schema.fields.filterNot(
-      _.name.startsWith(WorkspaceCatalog.DroppedPrefix)))
-
   /** Replaced atomically: every `loadTable` parses the sidecar, so a
     * write torn by a crash (CREATE, ALTER) must never be observable. */
   private def writeSidecar(name: String, schema: StructType): Unit =
@@ -153,7 +144,7 @@ class WorkspaceCatalog extends TableCatalog
     // swap (forward or back) before trusting marker + layout — lock-aware,
     // one exists() probe on the common path
     PartitionEvolution.recoverSafe(SparkSession.active, workspace, actual)
-    val declared = readSidecar(actual).map(liveFields)
+    val declared = readSidecar(actual).map(ColumnIds.live)
     val dir = tablePath(actual)
     // a truncate may have left no directory at all — the scan's file index
     // requires the root path to exist, so re-place the (empty) directory
@@ -193,43 +184,25 @@ class WorkspaceCatalog extends TableCatalog
   private def tablePath(name: String) =
     new org.apache.hadoop.fs.Path(s"$workspace/$name.parquet")
 
-  /** Assign `parquet.field.id` 1..n when the declared schema carries none —
-    * the Iceberg-style identity that makes RENAME COLUMN metadata-only:
-    * Spark's parquet reader matches columns by ID when the requested schema
-    * has them, so files written under an old name keep resolving. Stamped
-    * at CREATE so EVERY data file of a catalog-created table carries ids
-    * (the write side honors field-id metadata by default); schemas that
-    * already carry ids are left untouched. */
-  private def stampFieldIds(schema: StructType): StructType =
-    if (schema.fields.exists(_.metadata.contains("parquet.field.id"))) schema
-    else StructType(schema.fields.zipWithIndex.map { case (f, i) =>
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong("parquet.field.id", i + 1L).build())
-    })
-
-  private def isIdStamped(schema: StructType): Boolean =
-    schema.fields.nonEmpty &&
-      schema.fields.forall(_.metadata.contains("parquet.field.id"))
-
   /** CREATE TABLE: place `<workspace>/<name>.parquet` and seed it with an
     * empty parquet file carrying the declared schema, so the table survives
     * a session restart (schema lives in the parquet footer, not in catalog
     * memory) and an immediate read returns zero rows rather than a
     * schema-inference failure. CTAS appends its query result right after.
-    * The declared schema is field-id-stamped (see [[stampFieldIds]]). */
+    * The declared schema is field-id-stamped ([[ColumnIds.stamp]]): the
+    * identity that makes RENAME and DROP COLUMN metadata-only. */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table = {
     if (allNames().exists(_.equalsIgnoreCase(ident.name())))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         ident.namespace() :+ ident.name())
-    require(!schema.fieldNames.exists(
-        _.startsWith(WorkspaceCatalog.DroppedPrefix)),
-      s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name " +
+    require(!schema.fieldNames.exists(ColumnIds.isTombstone),
+      s"'${ColumnIds.DroppedPrefix}' is a reserved column-name " +
         "prefix (dropped-column tombstones)")
     if (partitions.nonEmpty) return createPartitioned(ident, schema, partitions)
     val spark = SparkSession.active
-    val stamped = stampFieldIds(schema)
+    val stamped = ColumnIds.stamp(schema)
     // seed an empty schema-bearing parquet (plain spark.read.parquet on the
     // dir works before the first INSERT) AND the sidecar (survives the
     // truncate that removes every file in the dir — see sidecar scaladoc).
@@ -306,7 +279,7 @@ class WorkspaceCatalog extends TableCatalog
       schema.fields.filterNot(fd => idCols.exists(_.equalsIgnoreCase(fd.name))) ++
         idCols.flatMap(c => schema.fields.find(_.name.equalsIgnoreCase(c))))
     val marker = levels.map(PartitionedWorkspace.markerOf).mkString(",")
-    val stamped = stampFieldIds(canonical)
+    val stamped = ColumnIds.stamp(canonical)
     val dir = tablePath(ident.name())
     fs(dir).mkdirs(dir): Unit
     writeSidecar(ident.name(), stamped)
@@ -389,161 +362,50 @@ class WorkspaceCatalog extends TableCatalog
     }
   }
 
-  /** `ALTER TABLE ADD COLUMN(S)`: METADATA-ONLY — the one DDL a landing
-    * workspace eventually needs (append-only evolution). The new column is
-    * appended to the declared read schema in the sidecar; no data file is
-    * rewritten. Old footers reconcile the missing column to null under the
-    * declared schema (standard parquet missing-column semantics — the same
-    * mechanism `SchemaEvolution.readConformed` drives read-side), and new
-    * INSERTs carry it physically. At 100 TB this is the only acceptable
-    * shape: an add-column that rewrote the table would be a full-corpus
-    * write for a nullable default. Other ALTERs (drop/rename/retype) would
-    * change the meaning of bytes already on disk — still rejected. */
+  /** METADATA-ONLY schema evolution ([[ColumnIds.evolve]]): ADD COLUMN,
+    * RENAME COLUMN, DROP COLUMN and widening ALTER COLUMN TYPE change the
+    * declared sidecar schema alone — no data file is rewritten. Every
+    * catalog-created table is field-id-stamped and every read resolves by
+    * id, so old footers null-fill an added column, a renamed column keeps
+    * matching files written under its old name, and a dropped column
+    * stays in the sidecar as a `__dropped_<id>` tombstone whose id a
+    * re-ADD never reuses. At 100 TB this is the only acceptable shape: an
+    * add-column that rewrote the table would be a full-corpus write for a
+    * nullable default. A partitioned table's level source columns never
+    * rename or drop — their names are baked into every directory on disk
+    * (`col=value` / `<ts>_day=`), so that is a relayout
+    * (PartitionEvolution.repartition) — but they MAY widen: identity
+    * values live in directory names, which parse under the declared type,
+    * so no byte is reinterpreted. The read-modify-write of the sidecar
+    * runs under the table's DDL lock, the one the snapshot catalog's
+    * ALTER takes: two concurrent ADDs would otherwise both allocate
+    * max(id) + 1. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val actual = allNames().find(_.equalsIgnoreCase(ident.name()))
       .getOrElse(throw new NoSuchTableException(ident.namespace() :+ ident.name()))
+    val spark = SparkSession.active
+    val dir = tablePath(actual).toString
+    WorkspaceDmlLock.withLock(spark, dir) { alterLocked(ident, actual, changes) }
+    loadTable(ident)
+  }
+
+  private def alterLocked(ident: Identifier, actual: String,
+                          changes: Seq[TableChange]): Unit = {
     val partMarker = readPartSpec(actual)
-    // partitioned tables (r17): the full metadata-only matrix — ADD,
-    // RENAME, DROP, widening ALTER COLUMN TYPE — lifts onto the hive
-    // layout (field ids are stamped at CREATE, and since r17 every V1 read
-    // in the DML/maintenance paths resolves by id on an isolated session).
-    // The PARTITION columns themselves stay immutable: their names are
-    // baked into every directory on disk (`col=value` / `<ts>_day=`), so a
-    // rename/drop would be a full relayout, not a metadata edit — route
-    // through PartitionEvolution.repartition. Identity partition columns
-    // MAY widen (their values live in directory names, which parse under
-    // the declared type — no byte is reinterpreted).
-    // segment-wise marker parse (the r18 MIXED grammar: 'src,days:ts'):
-    // every level's SOURCE column is layout-baked, identity or hidden
-    val partCols: Set[String] = partMarker.toSeq.flatMap(
-      _.split(',').toSeq.map(_.trim).map(seg =>
-        if (seg.contains(":")) seg.split(':').last else seg))
-      .map(_.toLowerCase).toSet
-    def requireNotPartitionCol(name: String, what: String): Unit =
-      if (partCols.contains(name.toLowerCase))
-        throw new UnsupportedOperationException(
-          s"$what $name: it is a partition column of ${ident.name()} — its " +
-            "name is baked into the directory layout; respec the table " +
-            "(PartitionEvolution.repartition) to change partitioning")
-    changes.foreach {
-      case ren: TableChange.RenameColumn if ren.fieldNames().length == 1 =>
-        requireNotPartitionCol(ren.fieldNames()(0), "cannot RENAME")
-      case del: TableChange.DeleteColumn if del.fieldNames().length == 1 =>
-        requireNotPartitionCol(del.fieldNames()(0), "cannot DROP")
-      case _ => ()
-    }
     val current = readSidecar(actual).getOrElse {
       // pre-existing (non-DDL-created) table: adopt its footer schema as
       // the declared schema, then evolve that
       FooterSchema.require(SparkSession.active, tablePath(actual).toString)
     }
-    val evolved = changes.foldLeft(current) {
-      case (schema, add: TableChange.AddColumn) =>
-        require(add.fieldNames().length == 1,
-          "workspace tables are flat; nested ADD COLUMN is not supported")
-        require(add.isNullable,
-          "added columns must be nullable (existing rows have no value for them)")
-        val name = add.fieldNames()(0)
-        require(!name.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name prefix")
-        if (schema.fieldNames.exists(_.equalsIgnoreCase(name)))
-          throw new IllegalArgumentException(s"column $name already exists in ${ident.name()}")
-        val meta =
-          if (!isIdStamped(schema)) org.apache.spark.sql.types.Metadata.empty
-          else {
-            // keep the id sequence whole: new column = max(id) + 1, never a
-            // reused id (a reused id would resolve OLD bytes as the new column)
-            val next = schema.fields
-              .map(_.metadata.getLong("parquet.field.id")).max + 1L
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong("parquet.field.id", next).build()
-          }
-        schema.add(org.apache.spark.sql.types.StructField(
-          name, add.dataType(), nullable = true, meta))
-      case (schema, ren: TableChange.RenameColumn) =>
-        // METADATA-ONLY rename, safe under parquet field ids: the reader
-        // matches columns by id, so files written under the old name keep
-        // resolving and files written after carry the new name — no byte
-        // on disk is reinterpreted. Requires an id-stamped table (anything
-        // this catalog created); id-less tables get the CTAS guidance.
-        require(ren.fieldNames().length == 1,
-          "workspace tables are flat; nested RENAME COLUMN is not supported")
-        if (!isIdStamped(schema))
-          throw new UnsupportedOperationException(
-            s"RENAME COLUMN needs parquet field ids on ${ident.name()} " +
-              "(tables created by this catalog carry them); rewrite via CREATE TABLE ... AS")
-        val from = ren.fieldNames()(0)
-        val to = ren.newName()
-        require(!to.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"'${WorkspaceCatalog.DroppedPrefix}' is a reserved column-name prefix")
-        require(!from.startsWith(WorkspaceCatalog.DroppedPrefix),
-          s"no column $from in ${ident.name()}")
-        if (!schema.fieldNames.exists(_.equalsIgnoreCase(from)))
-          throw new IllegalArgumentException(s"no column $from in ${ident.name()}")
-        if (schema.fieldNames.exists(_.equalsIgnoreCase(to)))
-          throw new IllegalArgumentException(s"column $to already exists in ${ident.name()}")
-        StructType(schema.fields.map { f =>
-          if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f
-        })
-      case (schema, upd: TableChange.UpdateColumnType) =>
-        // METADATA-ONLY type WIDENING (r16), same lattice as the snapshot
-        // store (SnapshotCatalog.widens): only the declared sidecar
-        // changes; catalog reads bind it and Spark's parquet reader
-        // natively serves old-typed files under the widened schema, so a
-        // directory mixing pre- and post-ALTER files stays one consistent
-        // table. Non-widening changes keep the CTAS guidance.
-        require(upd.fieldNames().length == 1,
-          "workspace tables are flat; nested ALTER COLUMN is not supported")
-        val f = schema.fields
-          .find(_.name.equalsIgnoreCase(upd.fieldNames()(0)))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column ${upd.fieldNames()(0)} in ${ident.name()}"))
-        val to = upd.newDataType()
-        if (!SnapshotCatalog.widens(f.dataType, to))
-          throw new UnsupportedOperationException(
-            s"ALTER COLUMN ${f.name} TYPE ${to.simpleString}: only lossless " +
-              s"WIDENINGS (tinyint/smallint/int->bigint, float->double, " +
-              s"decimal precision growth at the same scale) are " +
-              s"metadata-only; ${f.dataType.simpleString} -> " +
-              s"${to.simpleString} would reinterpret bytes already on " +
-              "disk — rewrite via CREATE TABLE ... AS")
-        StructType(schema.fields.map(x =>
-          if (x.name.equalsIgnoreCase(f.name)) x.copy(dataType = to) else x))
-      case (schema, del: TableChange.DeleteColumn) =>
-        // METADATA-ONLY drop (r16), safe under parquet field ids: the
-        // declared schema stops projecting the column (files keep their
-        // bytes; readers never request the id), and the field stays in
-        // the sidecar as a `__dropped_<id>` tombstone so a later ADD of
-        // the SAME NAME takes a fresh id and reads the old files as NULL
-        // — never as the dropped column's resurrected values. Id-less
-        // tables refuse: their reads match by NAME, so a re-ADD would
-        // resurrect old bytes with nothing to prevent it.
-        require(del.fieldNames().length == 1,
-          "workspace tables are flat; nested DROP COLUMN is not supported")
-        if (!isIdStamped(schema))
-          throw new UnsupportedOperationException(
-            s"DROP COLUMN needs parquet field ids on ${ident.name()} " +
-              "(tables created by this catalog carry them); rewrite via " +
-              "CREATE TABLE ... AS")
-        val dn = del.fieldNames()(0)
-        val df = schema.fields
-          .find(f => f.name.equalsIgnoreCase(dn) &&
-            !f.name.startsWith(WorkspaceCatalog.DroppedPrefix))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column $dn in ${ident.name()}"))
-        require(liveFields(schema).fields.length > 1,
-          s"cannot drop the last column of ${ident.name()}")
-        val id = df.metadata.getLong("parquet.field.id")
-        StructType(schema.fields.map(f =>
-          if (f eq df) f.copy(name = s"${WorkspaceCatalog.DroppedPrefix}$id")
-          else f))
-      case (_, other) =>
-        throw new UnsupportedOperationException(
-          s"workspace tables support ALTER TABLE ADD COLUMN, RENAME COLUMN, " +
-            s"DROP COLUMN and widening ALTER COLUMN TYPE only " +
-            s"(got ${other.getClass.getSimpleName}); " +
-            "rewrite via CREATE TABLE ... AS for anything else")
-    }
+    val evolved = ColumnIds.evolve(current, changes, ColumnIds.Surface(
+      "workspace tables", ident.name(), "rewrite via CREATE TABLE ... AS",
+      frozen = partMarker.toSeq
+        .flatMap(PartitionedWorkspace.levelsOf(_, current))
+        .map(_.sourceCol.toLowerCase).toSet,
+      frozenRole = "partition column",
+      frozenWhy = "its name is baked into the directory layout; respec the " +
+        "table (PartitionEvolution.repartition) to change partitioning",
+      frozenMayWiden = true))
     // restore canonical hive order: IDENTITY partition columns stay LAST
     // in partition order (hidden segments — ':'-bearing — are plain data
     // columns with no schema-position constraint; a MIXED marker's
@@ -580,11 +442,5 @@ class WorkspaceCatalog extends TableCatalog
             mapped.mkString(","))
       }
     }
-    loadTable(ident)
   }
-}
-
-private[graft] object WorkspaceCatalog {
-  /** Reserved name prefix for dropped-column tombstones in the sidecar. */
-  val DroppedPrefix = "__dropped_"
 }

@@ -182,7 +182,8 @@ private[graft] object WorkspaceDmlLock {
   // aborting; everything else keeps the instant abort (retryable).
 
   /** [[acquire]] with bounded retry — for the partitioned COW path's SHORT
-    * table-lock windows only (probe, claim, publish). */
+    * table-lock windows (probe, claim, publish) and a flat snapshot publish
+    * that records a changed schema. */
   def acquireWait(spark: SparkSession, dir: String): Handle = {
     val waitMs = spark.conf
       .get("graft.workspace.dmlLockWaitMs", "15000").trim.toLong
@@ -426,31 +427,7 @@ private[graft] object WorkspaceDml {
     }
   }
 
-  /** Copy `parquet.field.id` metadata from the DECLARED schema onto the
-    * write schema (matched by case-insensitive name). V2 writes (CTAS
-    * append, the COW ReplaceData write) carry the QUERY's attributes, whose
-    * metadata is whatever the query produced — usually nothing — while an
-    * id-stamped table needs EVERY data file to carry ids (an id-less file
-    * under an id-requesting read schema fails loudly by design). */
-  def mergeFieldIds(query: StructType, declared: Option[StructType]): StructType =
-    declared match {
-      case Some(d) if d.fields.exists(_.metadata.contains("parquet.field.id")) =>
-        val byName = d.fields.map(f => f.name.toLowerCase -> f).toMap
-        StructType(query.fields.map { f =>
-          byName.get(f.name.toLowerCase) match {
-            case Some(df) if df.metadata.contains("parquet.field.id") &&
-                !f.metadata.contains("parquet.field.id") =>
-              f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong("parquet.field.id",
-                  df.metadata.getLong("parquet.field.id")).build())
-            case _ => f
-          }
-        })
-      case _ => query
-    }
-
-  /** [[LogicalWriteInfo]] with a substituted schema (see [[mergeFieldIds]]). */
+  /** [[LogicalWriteInfo]] with a substituted schema (see [[ColumnIds.withDeclaredIds]]). */
   def withSchema(info: LogicalWriteInfo, s: StructType): LogicalWriteInfo =
     new LogicalWriteInfo {
       override def options(): CaseInsensitiveStringMap = info.options()
@@ -475,25 +452,22 @@ private[sources] class GraftWorkspaceTable(
   private[sources] def declaredSchema: Option[StructType] = declared
 
   /** Field-id reads ride EVERY scan of a workspace table: catalog-created
-    * tables are id-stamped (WorkspaceCatalog.stampFieldIds), which makes
+    * tables are id-stamped ([[ColumnIds.stamp]]), which makes
     * RENAME COLUMN metadata-only — the parquet reader matches columns by id
     * when the requested schema carries ids, so files written under an old
     * name still resolve. The option merges into the scan's hadoop conf
     * (never the session); id-less tables (fixtures) are untouched because
     * id-matching only engages when the requested schema has ids. */
   override def newScanBuilder(options: CaseInsensitiveStringMap):
-      org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder = {
-    val merged = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.put("spark.sql.parquet.fieldId.read.enabled", "true"): Unit
-    super.newScanBuilder(new CaseInsensitiveStringMap(merged))
-  }
+      org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder =
+    super.newScanBuilder(ColumnIds.withReadOption(options))
 
   /** V2 writes (the CTAS append) carry the query's metadata-less schema —
     * re-stamp the declared field ids so every file of an id-stamped table
-    * carries them (see [[WorkspaceDml.mergeFieldIds]]). */
+    * carries them ([[ColumnIds.withDeclaredIds]]). */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     super.newWriteBuilder(WorkspaceDml.withSchema(info,
-      WorkspaceDml.mergeFieldIds(info.schema(), declared)))
+      ColumnIds.withDeclaredIds(info.schema(), declared)))
 
   /** Fresh staging directory INSIDE the workspace (same filesystem, so the
     * commit swap is two renames, never a copy). The name is dot-prefixed
@@ -547,7 +521,7 @@ private[sources] class GraftWorkspaceTable(
     // read+write on an ISOLATED session (same SparkContext and catalog,
     // cloned runtime conf) with the key set only there
     val iso = WorkspaceDml.isolatedSession(spark,
-      "spark.sql.parquet.fieldId.read.enabled" -> "true",
+      ColumnIds.ReadConf,
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     WorkspaceDmlLock.withLock(spark, dir) {
       // the file LISTING happens at DataFrameReader.parquet — it must run
@@ -622,7 +596,7 @@ private[sources] class CowOperation(
           val staging = stage()
           // re-stamp declared field ids: the COW rewrite's row schema comes
           // from the query plan and may have shed the id metadata
-          val stamped = WorkspaceDml.mergeFieldIds(info.schema(), declared)
+          val stamped = ColumnIds.withDeclaredIds(info.schema(), declared)
           // the staged files are DATA files a footer-built manifest may
           // later index — the write must emit INT64 TIMESTAMP_MICROS (see
           // Sinks.microsBound). FileWrite captures its conf from the
@@ -728,17 +702,21 @@ private[sources] class SnapshotDmlTable(
       org.apache.spark.sql.connector.catalog.TableCapability.OVERWRITE_BY_FILTER,
       org.apache.spark.sql.connector.catalog.TableCapability.TRUNCATE)
 
-  def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    // columns resolve by field id: a renamed column keeps matching the
+    // bound version's files, a re-added one null-fills over dropped bytes
+    val opts = ColumnIds.withReadOption(options)
     // a manifest-bearing committed version serves with driver-side file
     // skipping; the COW DML scan rides the same builder, which is safe by
     // the skip contract (a file drops only when the pushed predicate is
     // provably false for every row it holds)
     if (ManifestPrune.exists(spark, tableDir, boundVersion))
       new org.apache.spark.sql.graftbridge.ManifestPrunedScanBuilder(
-        tableName, spark, tableDir, boundVersion, schema, options)
+        tableName, spark, tableDir, boundVersion, schema, opts)
     else
-      ParquetTable(tableName, spark, options, Seq(committedDir), Some(schema),
-        classOf[ParquetFileFormat]).newScanBuilder(options)
+      ParquetTable(tableName, spark, opts, Seq(committedDir), Some(schema),
+        classOf[ParquetFileFormat]).newScanBuilder(opts)
+  }
 
   /** SQL INSERT publishes a VERSION, never touches v=N in place:
     * `INSERT INTO` = a keyless thin APPEND (O(batch) bytes, fenced on this
@@ -806,12 +784,13 @@ private[sources] class SnapshotDmlTable(
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
     val cond = filters.flatMap(WorkspaceDml.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    // read with the SERVED schema (not bare footers): a predicate on a
-    // column added by ALTER must resolve — its values are null in
-    // pre-ALTER files, which the reader fills natively
-    def boundRead =
-      spark.read.schema(StructType(schema.map(_.copy(nullable = true))))
-        .parquet(committedDir)
+    // resolve the SERVED schema by field id (not bare footers): a
+    // predicate on a column added by ALTER must resolve — null in
+    // pre-ALTER files — and a renamed one must match its old-named files
+    def boundRead = ColumnIds.resolve(
+      spark.read.schema(FooterSchema.require(spark, committedDir))
+        .parquet(committedDir),
+      StructType(schema.map(_.copy(nullable = true))))
     graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir) match {
       case Some(keyCols) =>
         // declared row identity ⇒ THIN merge-on-read delete: one filtered
@@ -856,7 +835,8 @@ private[sources] class SnapshotDmlTable(
           case None =>
             new CowOperation(
               opts => SnapshotDmlTable.this.newScanBuilder(opts),
-              None, info.command(), s"${tableName}__vdml",
+              graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir),
+              info.command(), s"${tableName}__vdml",
               () => stagingPath(),
               publishIfUnconflicted,
               discard)

@@ -740,7 +740,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
       "grp predicate must reach the base parquet scan:\n" + physical.take(1200))
   }
 
-  test("RENAME COLUMN is metadata-only: replay over old files, pinned names, thin DML, compaction escape") {
+  test("RENAME COLUMN is metadata-only: field ids resolve old files, pinned names, thin DML, compaction") {
     val (cat, ws) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.rn AS " +
       "SELECT id AS doc_id, CONCAT('d', id) AS body FROM RANGE(50)")
@@ -755,7 +755,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     Thread.sleep(1100)
     spark.sql(s"ALTER TABLE $cat.rn RENAME COLUMN body TO text")
     assert(vMtimes() == before, "RENAME touched a version folder")
-    // unpinned read: new name, old rows resolve through the replay
+    // unpinned read: new name, old rows resolve by field id
     assert(spark.table(s"$cat.rn").columns.toSeq == Seq("doc_id", "text"))
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.rn WHERE text = 'd7'")
       .first().getLong(0) == 1)
@@ -776,8 +776,8 @@ class SnapshotSqlSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT text FROM $cat.rn WHERE doc_id = 5")
       .first().getString(0) == "patched")
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.rn").first().getLong(0) == 51)
-    // ADD COLUMN reusing the RETIRED name: the conditional replay must not
-    // leak old 'body' bytes into the new 'body' column
+    // ADD COLUMN reusing the RETIRED name takes a fresh field id: old
+    // 'body' bytes must not leak into the new 'body' column
     spark.sql(s"ALTER TABLE $cat.rn ADD COLUMN body DOUBLE")
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.rn WHERE body IS NOT NULL")
       .first().getLong(0) == 0, "old-named bytes leaked into the reused name")
@@ -789,11 +789,15 @@ class SnapshotSqlSpec extends AnyFunSuite {
       .first().getLong(0) == 1)
     assert(spark.table(s"$cat.rn").columns.toSeq ==
       Seq("doc_id", "txt", "body"))
-    // compaction rewrites PHYSICAL names canonical: the head leaves the
-    // resolver-marker path and full materialized serving (COW DML) returns
+    // compaction materializes the chain: the head serves as a plain
+    // materialized DML table again, row-level DML included
     val vc = Sinks.compactSnapshot(spark, dir, targetRows = 1000000L)
-    assert(!Sinks.renameAffected(spark, dir, vc),
-      "compacted files must carry the canonical names")
+    val head = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
+        Array.empty[String], "rn"))
+    assert(head.getClass.getSimpleName == "SnapshotDmlTable",
+      s"compacted head v=$vc served as ${head.getClass.getSimpleName}")
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.rn WHERE txt = 'patched'")
       .first().getLong(0) == 1)
     spark.sql(s"UPDATE $cat.rn SET txt = 'cow' WHERE doc_id = 6")
@@ -802,6 +806,61 @@ class SnapshotSqlSpec extends AnyFunSuite {
     // pinned history across the whole dance: v2 still serves 'body'
     assert(spark.sql(s"SELECT * FROM $cat.rn VERSION AS OF 2")
       .columns.toSeq == Seq("doc_id", "body"))
+  }
+
+  test("RENAME on a keyless materialized head: the head stays a COW DML table") {
+    val (cat, ws) = freshCatalog()
+    import spark.implicits._
+    val dir = s"$ws/rnk"
+    Sinks.writeSnapshot(
+      (1L to 10L).map(i => (i, s"b$i")).toDF("id", "body"), dir)   // v1
+    spark.sql(s"ALTER TABLE $cat.rnk RENAME COLUMN body TO text")
+    // no declared keys: the UPDATE is a copy-on-write version publish
+    spark.sql(s"UPDATE $cat.rnk SET text = 'patched' WHERE id = 3")
+    val got = spark.sql(s"SELECT id, text FROM $cat.rnk ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(got.length == 10)
+    assert(got(2) == ((3L, "patched")))
+    assert(got(3) == ((4L, "b4")), "old-named files must resolve by field id")
+    assert(Sinks.thinBase(spark, dir, 2).isEmpty, "COW publishes a materialized v=2")
+    assert(spark.sql(s"SELECT * FROM $cat.rnk VERSION AS OF 1")
+      .columns.toSeq == Seq("id", "body"))
+    // RENAME then re-ADD of the old name on a materialized head: the
+    // pre-rename files' 'body' column must stay under 'text'
+    Sinks.writeSnapshot(
+      (1L to 10L).map(i => (i, s"b$i")).toDF("id", "body"), s"$ws/rnk2")
+    spark.sql(s"ALTER TABLE $cat.rnk2 RENAME COLUMN body TO text")
+    spark.sql(s"ALTER TABLE $cat.rnk2 ADD COLUMN body DOUBLE")
+    val readd = spark.sql(s"SELECT id, text, body FROM $cat.rnk2 ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.isNullAt(2)))
+    assert(readd.toSeq == (1L to 10L).map(i => (i, s"b$i", true)))
+  }
+
+  test("a session without the graft extensions can RENAME and read the head") {
+    val (cat, ws) = freshCatalog()
+    import spark.implicits._
+    Sinks.writeSnapshot(
+      (1L to 5L).map(i => (i, s"b$i")).toDF("id", "body"), s"$ws/plain")
+    // a session whose state is built with NO extensions (no
+    // ResolveThinSnapshots rule), sharing the test context and catalogs
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plain = classOf[org.apache.spark.sql.classic.SparkSession]
+      .getConstructors.find(_.getParameterCount == 6).get
+      .newInstance(classic.sparkContext, Some(classic.sharedState), None,
+        new org.apache.spark.sql.SparkSessionExtensions,
+        Map.empty[String, String], Map.empty[String, String])
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(!plain.sessionState.analyzer.extendedResolutionRules
+      .exists(_.isInstanceOf[graft.sources.ResolveThinSnapshots]))
+    plain.conf.set(s"spark.sql.catalog.$cat", "graft.sources.SnapshotCatalog")
+    plain.conf.set(s"spark.sql.catalog.$cat.workspace", ws)
+    org.apache.spark.sql.SparkSession.setActiveSession(plain)
+    try {
+      plain.sql(s"ALTER TABLE $cat.plain RENAME COLUMN body TO text")
+      val got = plain.sql(s"SELECT id, text FROM $cat.plain ORDER BY id")
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      assert(got.toSeq == (1L to 5L).map(i => (i, s"b$i")))
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
   }
 
   test("table_changes spans a RENAME: feed files unify under the new name") {

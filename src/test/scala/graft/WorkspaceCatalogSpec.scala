@@ -124,6 +124,48 @@ class WorkspaceCatalogSpec extends AnyFunSuite {
     intercept[Exception] {
       spark.sql("ALTER TABLE graftalt.evo ALTER COLUMN n_name TYPE DOUBLE") }
     intercept[Exception] { spark.sql("ALTER TABLE graftalt.evo ADD COLUMN score STRING") }
+    // FIRST/AFTER would reshape files on disk: refused, sidecar untouched
+    val sidecar = new java.io.File(s"${scratch.dir}/_graft_schema/evo.json")
+    val declared = java.nio.file.Files.readString(sidecar.toPath)
+    val first = intercept[Exception] {
+      spark.sql("ALTER TABLE graftalt.evo ADD COLUMN x INT FIRST") }
+    assert(first.getMessage.contains("FIRST/AFTER"), first.getMessage)
+    assert(java.nio.file.Files.readString(sidecar.toPath) == declared)
+  }
+
+  test("concurrent ADD COLUMNs serialize on the DDL lock: none lost, ids distinct") {
+    val (scratch, cat) = dmlWorkspace()
+    spark.sql(s"CREATE TABLE $cat.cc (k BIGINT)")
+    val n = 8
+    val barrier = new java.util.concurrent.CyclicBarrier(n)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until n).map { i =>
+      new Thread(() =>
+        try {
+          barrier.await()
+          // a held lock fails fast, as on the snapshot catalog, and the
+          // local checksum filesystem can tear a sidecar read that races a
+          // replace: the loser retries the statement
+          var done = false
+          while (!done)
+            try { spark.sql(s"ALTER TABLE $cat.cc ADD COLUMN c$i STRING"); done = true }
+            catch { case e: Throwable
+                if Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+                  c.isInstanceOf[java.util.ConcurrentModificationException] ||
+                    c.isInstanceOf[org.apache.hadoop.fs.ChecksumException]) =>
+              Thread.sleep(10) }
+        } catch { case t: Throwable => errors.add(t): Unit })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    val sidecar = org.apache.spark.sql.types.DataType.fromJson(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(
+        s"${scratch.dir}/_graft_schema/cc.json")))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(sidecar.fieldNames.toSet == ((0 until n).map(i => s"c$i") :+ "k").toSet,
+      sidecar.fieldNames.toSeq.toString)
+    val ids = sidecar.fields.map(_.metadata.getLong("parquet.field.id"))
+    assert(ids.distinct.length == ids.length, ids.toSeq.toString)
   }
 
   test("DROP COLUMN is metadata-only; a re-ADD of the same name reads old " +
