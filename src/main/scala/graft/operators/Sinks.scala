@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.compat.Compat
-import graft.sources.{ColumnIds, MetaFs}
+import graft.sources.{ColumnIds, MetaFs, SnapshotRecord}
 
 /** Sink / materialization operators — SURVEY §2.1 S4/S5/S8/S9 + §2.8 C2/C3.
   *
@@ -229,80 +229,27 @@ object Sinks {
     * committed version number. */
   def writeSnapshot(df: DataFrame, tableDir: String,
                     commitTsMicros: Option[Long] = None): Int =
-    publishWithIds(df.sparkSession, tableDir, df.schema, full = true) {
-      (rec, record) =>
-        publishClaimed(df.sparkSession, tableDir, commitTsMicros) { v =>
-          microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
-            .parquet(s"$tableDir/v=$v")
-          record()
-        }
+    publishWithIds(df.sparkSession, tableDir, df.schema, full = true) { rec =>
+      publishClaimed(df.sparkSession, tableDir, commitTsMicros) { v =>
+        microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
+          .parquet(s"$tableDir/v=$v")
+        SnapshotRecord.stage(df.sparkSession, s"$tableDir/v=$v", rec)
+      }
     }
 
   // ---- column identity: every flat version is field-id-stamped -------------
 
-  /** Run a publish of `incoming` columns against the table's recorded
-    * schema (`_schema.json`, the id registry — [[ColumnIds]]). `full`: the
-    * publish replaces the table's shape (a materialized version: live
-    * columns it lacks retire to tombstones, [[ColumnIds.rebind]]); else it
-    * is a delta, whose unknown columns extend the shape and whose wider
-    * types widen it. `publish` receives the record to stamp its data with
-    * ([[stamped]]) and a `record` action to call once its data has landed,
-    * before the pointer commit — a failed publish leaves the record as it
-    * was. A publish that changes the record runs under the table's DDL
-    * lock (the one ALTER takes), waiting a bounded while for a live holder:
-    * two concurrent first publishes must not both allocate ids. */
+  /** [[SnapshotRecord.publish]] onto the committed head. */
   private def publishWithIds[T](spark: SparkSession, tableDir: String,
                                 incoming: StructType, full: Boolean)(
-      publish: (StructType, () => Unit) => T): T = {
-    def bind() = {
-      val existing = declaredSnapshotSchema(spark, tableDir)
-        .filter(ColumnIds.isStamped)
-      val next = nextRecord(existing, incoming, full)
-      (next.getOrElse(existing.getOrElse(incoming)),
-        next.filterNot(n => existing.exists(sameColumns(_, n))))
-    }
-    bind() match {
-      case (rec, None) => publish(rec, () => ())
-      case _ =>
-        val lock = graft.sources.WorkspaceDmlLock.acquireWait(spark, tableDir)
-        try {
-          val (rec, change) = bind()
-          publish(rec, () => change.foreach(declareSnapshotSchema(spark, tableDir, _)))
-        } finally graft.sources.WorkspaceDmlLock.release(spark, lock)
-    }
-  }
-
-  /** The record a publish of `incoming` implies (None: a delta on a table
-    * with no id-stamped record, which keeps serving by name). */
-  private def nextRecord(existing: Option[StructType], incoming: StructType,
-                         full: Boolean): Option[StructType] = {
-    val shape =
-      if (full) Some(incoming)
-      else existing.map { ex =>
-        val cur = ColumnIds.live(ex)
-        StructType(cur.fields.map(f =>
-          incoming.fields.find(_.name.equalsIgnoreCase(f.name))
-            .filter(i => graft.sources.SnapshotCatalog.widens(f.dataType, i.dataType))
-            .fold(f)(i => f.copy(dataType = i.dataType))) ++
-          incoming.fields.filterNot(i =>
-            cur.fieldNames.exists(_.equalsIgnoreCase(i.name))))
-      }
-    shape.map { sh =>
-      val nullable = StructType(sh.fields.map(_.copy(nullable = true)))
-      ColumnIds.rebind(nullable, existing.getOrElse(StructType(Nil)))
-    }
-  }
-
-  /** Same live columns in the same order (name, type, id) and the same
-    * tombstones — other field metadata and nullability aside. */
-  private def sameColumns(a: StructType, b: StructType): Boolean = {
-    def key(s: StructType) =
-      (ColumnIds.live(s).fields.toSeq
-        .map(f => (f.name, f.dataType, ColumnIds.idOf(f))),
-        s.fields.filter(f => ColumnIds.isTombstone(f.name))
-          .map(ColumnIds.idOf).toSet)
-    key(a) == key(b)
-  }
+      publish: StructType => T): T =
+    SnapshotRecord.publish(spark, tableDir,
+      // a pointer that cannot be read fails this publish's commit anyway;
+      // binding no record then allocates fresh ids above the floor, which
+      // are still unique
+      try snapshotCommittedStable(spark, tableDir)
+      catch { case scala.util.control.NonFatal(_) => None },
+      incoming, full)(publish)
 
   /** `df` with the ids of `record` on its columns (by name). */
   private def stamped(df: DataFrame, record: StructType): DataFrame = {
@@ -423,31 +370,33 @@ object Sinks {
                           targetRows: Long): Option[Int] =
     claimSuccessor(spark, tableDir, base).map(
       commitClaimed(spark, tableDir, _, tsMicros = None) { v =>
+        val record = headSchema(spark, tableDir, base)
         stageCompactedVersion(spark, tableDir,
-          compactionRows(spark, tableDir, base), v, base, targetRows)
+          compactionRows(spark, tableDir, base, record), record, v, base,
+          targetRows)
       })
 
   /** The rows a compaction of committed `base` must materialize: resolved
     * under the table's recorded schema, head names and served columns
     * only — a dropped column's bytes retire physically, and the compacted
-    * files carry the recorded ids. `base` is the committed head when the
-    * CAS claim fences (v == base + 1), so head semantics OF base is
-    * exactly the unpinned read, race-free. */
+    * files carry the ids of `record`, the record `base` serves. `base` is
+    * the committed head when the CAS claim fences (v == base + 1), so
+    * head semantics OF base is exactly the unpinned read, race-free. */
   private def compactionRows(spark: SparkSession, tableDir: String,
-                             base: Int): DataFrame =
-    stamped(readSnapshotServed(spark, tableDir, base),
-      headSchema(spark, tableDir, base))
+                             base: Int, record: StructType): DataFrame =
+    stamped(readSnapshotServed(spark, tableDir, base), record)
 
   /** Write a compacted version ATOMICALLY: [[writeCompacted]] output plus
-    * its `_compaction` provenance stamp land in a staging dir and appear
-    * as `v=N` in ONE rename — the marker is visible from the folder's
-    * first observable instant, preserving [[cachedMarker]]'s invariant
-    * (markers appear atomically with their folder; a probe of a
+    * its `_compaction` provenance stamp and its `record` land in a staging
+    * dir and appear as `v=N` in ONE rename — the marker is visible from
+    * the folder's first observable instant, preserving [[cachedMarker]]'s
+    * invariant (markers appear atomically with their folder; a probe of a
     * half-written folder could otherwise permanently negative-cache the
     * `compact` kind). A crash mid-stage leaves `.compact_staging_*`
     * debris for [[vacuumOrphans]]' age-out, never a visible folder. */
   private def stageCompactedVersion(spark: SparkSession, tableDir: String,
-                                    rows: DataFrame, v: Int, base: Int,
+                                    rows: DataFrame, record: StructType,
+                                    v: Int, base: Int,
                                     targetRows: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(tableDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -457,6 +406,7 @@ object Sinks {
       writeCompacted(rows, staged.toString, targetRows): Unit
       MetaFs.stage(spark,
         new org.apache.hadoop.fs.Path(staged, "_compaction"), base.toString)
+      SnapshotRecord.stage(spark, staged.toString, record)
       val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
       if (!fs.rename(staged, dest))
         throw new IllegalStateException(
@@ -491,21 +441,20 @@ object Sinks {
     * re-execution of the same (single) writer. Independent writers on one
     * table use [[writeSnapshot]], whose claim files serialize allocation. */
   def writeSnapshotAs(df: DataFrame, tableDir: String, version: Int): Int =
-    publishWithIds(df.sparkSession, tableDir, df.schema, full = true) {
-      (rec, record) =>
-        microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
-          .parquet(s"$tableDir/v=$version")
-        record()
-        // a REPLAY rewrote the version's data files under new names, so any
-        // manifest from the previous attempt enumerates files that no longer
-        // exist — drop it first, then carry fresh (stale skipping would be
-        // wrong; a missing manifest merely serves unpruned)
-        val mp = new org.apache.hadoop.fs.Path(s"$tableDir/_manifest/v=$version")
-        val mfs = mp.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-        if (mfs.exists(mp)) mfs.delete(mp, true): Unit
-        carryManifest(df.sparkSession, tableDir, version)
-        commitPointerCas(df.sparkSession, tableDir, version, tsMicros = None)
-        version
+    publishWithIds(df.sparkSession, tableDir, df.schema, full = true) { rec =>
+      microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
+        .parquet(s"$tableDir/v=$version")
+      SnapshotRecord.stage(df.sparkSession, s"$tableDir/v=$version", rec)
+      // a REPLAY rewrote the version's data files under new names, so any
+      // manifest from the previous attempt enumerates files that no longer
+      // exist — drop it first, then carry fresh (stale skipping would be
+      // wrong; a missing manifest merely serves unpruned)
+      val mp = new org.apache.hadoop.fs.Path(s"$tableDir/_manifest/v=$version")
+      val mfs = mp.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+      if (mfs.exists(mp)) mfs.delete(mp, true): Unit
+      carryManifest(df.sparkSession, tableDir, version)
+      commitPointerCas(df.sparkSession, tableDir, version, tsMicros = None)
+      version
     }
 
   // ---- optimistic multi-writer commits -------------------------------------
@@ -584,8 +533,7 @@ object Sinks {
   def publishStagedSnapshotFenced(spark: SparkSession, tableDir: String,
                                   staged: org.apache.hadoop.fs.Path,
                                   expectedBase: Int,
-                                  tsMicros: Option[Long] = None,
-                                  beforeCommit: () => Unit = () => ()): Int = {
+                                  tsMicros: Option[Long] = None): Int = {
     val f = staged.getFileSystem(spark.sessionState.newHadoopConf())
     val v = claimSuccessor(spark, tableDir, expectedBase).getOrElse {
       f.delete(staged, true)
@@ -598,7 +546,6 @@ object Sinks {
       val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
       if (!f.rename(staged, dest))
         throw new IllegalStateException(s"publish: rename $staged -> $dest failed")
-      beforeCommit()
     }
   }
 
@@ -823,8 +770,8 @@ object Sinks {
     * travel). Unpinned reads NEVER trust folder listings — only the
     * atomically-swapped pointer — so a concurrent or crashed writer is
     * invisible. Columns resolve by parquet field id ([[ColumnIds]]): an
-    * UNPINNED read serves the table's recorded schema (`_schema.json`,
-    * after any metadata-only ALTER — files written before an ADD
+    * UNPINNED read serves the head's record after any metadata-only
+    * ALTER ([[declaredSnapshotSchema]] — files written before an ADD
     * null-fill, renamed columns keep matching old files); a PINNED read
     * serves the schema recorded for its version (history is immutable,
     * including its shape and names). */
@@ -841,47 +788,29 @@ object Sinks {
     else readSnapshotServed(spark, tableDir, v)
   }
 
-  /** Record the snapshot table's schema (`_schema.json`, the id registry
-    * [[ColumnIds]] resolves by): every publish records the shape it
-    * writes ([[publishWithIds]]) and the SQL catalog's metadata-only
-    * ALTER records the evolved one — no data published, no version
-    * folder touched. The full record keeps dropped columns as
-    * `__dropped_<id>` tombstones, so their ids are never reused; serving
-    * filters them ([[servedSnapshotSchema]]). */
+  /** [[SnapshotRecord.alter]] on the committed head; the caller holds
+    * the table's DDL lock. */
+  def alterSnapshotSchema(spark: SparkSession, tableDir: String)(
+      change: (StructType, Long) => StructType): Unit = {
+    val head = snapshotCommittedStable(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    SnapshotRecord.alter(spark, tableDir, head,
+      versionSchema(spark, tableDir, head))(change)
+  }
+
+  /** Replace the record the committed head serves by `schema` (an ALTER
+    * whose result is given whole), as [[alterSnapshotSchema]]. */
   def declareSnapshotSchema(spark: SparkSession, tableDir: String,
-                            schema: StructType): Unit = {
-    // complete-or-absent: a reader racing the write, or a crash
-    // mid-write, must never observe a truncated JSON — every unpinned read
-    // parses this file
-    MetaFs.replace(spark,
-      new org.apache.hadoop.fs.Path(tableDir, "_schema.json"), schema.json)
-    declaredSchemaCache.remove(tableDir): Unit
-  }
+                            schema: StructType): Unit =
+    alterSnapshotSchema(spark, tableDir)((_, _) => schema)
 
-  /** In-JVM memo for the `_schema.json` read: the recorded schema is read
-    * on EVERY unpinned read / feed-schema / DML bind / publish — paying an
-    * FS round-trip per statement is the same tax the marker cache kills.
-    * Invalidated by the only writer ([[declareSnapshotSchema]]); an ALTER
-    * from ANOTHER process becomes visible to this JVM's long-lived session
-    * on its next cache turnover or restart — the same single-writer-DDL
-    * visibility contract the workspace catalog documents for RENAME. */
-  private val declaredSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[StructType]]()
-
-  /** The recorded schema, tombstones included; None for a table published
-    * before ids were recorded. */
+  /** The record an unpinned read serves now, tombstones included; None
+    * for a table with no committed version, or one published before ids
+    * were recorded. */
   def declaredSnapshotSchema(spark: SparkSession, tableDir: String):
-      Option[StructType] = {
-    val hit = declaredSchemaCache.get(tableDir)
-    if (hit != null) return hit
-    val res = MetaFs.read(spark,
-        new org.apache.hadoop.fs.Path(tableDir, "_schema.json"))
-      .map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[StructType])
-    if (declaredSchemaCache.size >= MarkerCacheMax) declaredSchemaCache.clear()
-    declaredSchemaCache.put(tableDir, res): Unit
-    res
-  }
+      Option[StructType] =
+    snapshotCommittedStable(spark, tableDir)
+      .flatMap(SnapshotRecord.at(spark, tableDir, _))
 
   /** The schema an UNPINNED read serves: the record minus dropped-column
     * tombstones. */
@@ -915,10 +844,11 @@ object Sinks {
                            tableDir: String): Option[Seq[String]] =
     MetaFs.read(spark,
       new org.apache.hadoop.fs.Path(tableDir, "_keycols"))
-      .map(ids => ColumnIds.namesOf(recordOf(spark, tableDir),
-        ids.trim.split(',').toSeq.map(_.toLong)))
+      .map(txt => ColumnIds.keyNames(recordOf(spark, tableDir),
+        txt.trim.split(',').toSeq.map(_.trim)))
 
-  private def recordOf(spark: SparkSession, tableDir: String) =
+  /** [[declaredSnapshotSchema]], required. */
+  private[graft] def recordOf(spark: SparkSession, tableDir: String): StructType =
     declaredSnapshotSchema(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"$tableDir records no schema — " +
         "publish a version first"))
@@ -935,7 +865,8 @@ object Sinks {
                                             tableDir: String,
                                             keyCols: Seq[String],
                                             expectedBase: Int,
-                                            staged: org.apache.hadoop.fs.Path): Int = {
+                                            staged: org.apache.hadoop.fs.Path,
+                                            record: StructType): Int = {
     val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
     def deltaDir(name: String): Option[String] = {
       val p = new org.apache.hadoop.fs.Path(staged, name)
@@ -965,8 +896,7 @@ object Sinks {
             ") — a MERGE source must be unique per key")
       }
     }
-    stageThinMeta(spark, staged, expectedBase, keyCols,
-      recordOf(spark, tableDir))
+    stageThinMeta(spark, staged, expectedBase, keyCols, record)
     val v = publishStagedSnapshotFenced(spark, tableDir, staged, expectedBase)
     if (changeFeedEnabled(spark, tableDir))
       landChangeFeedSafe(spark, tableDir, v, thinChangeRows(spark, tableDir, v))
@@ -977,16 +907,14 @@ object Sinks {
   /** A thin version's metadata riders, staged so they arrive with its
     * delta parts in ONE rename: the `_base.json` marker — two lines,
     * "<base>\n<key field ids>", an empty second line for a keyless
-    * APPEND — and `_pinschema.json`, the table record at publish, which
-    * is what a pinned read of the version serves. */
+    * APPEND — and the version's own record ([[SnapshotRecord.stage]]). */
   private def stageThinMeta(spark: SparkSession,
                             staged: org.apache.hadoop.fs.Path, base: Int,
                             keyCols: Seq[String],
                             record: StructType): Unit = {
     MetaFs.stage(spark, new org.apache.hadoop.fs.Path(staged, "_base.json"),
       s"$base\n${ColumnIds.idsOf(record, keyCols).mkString(",")}")
-    MetaFs.stage(spark,
-      new org.apache.hadoop.fs.Path(staged, "_pinschema.json"), record.json)
+    SnapshotRecord.stage(spark, staged.toString, record)
   }
 
   // ---- change data feed -----------------------------------------------------
@@ -1052,7 +980,7 @@ object Sinks {
     val schema = versionSchema(spark, tableDir, v)
     val live = ColumnIds.live(schema)
     val (dels, ups) = deltaParts(spark, tableDir, v, schema,
-      thinBase(spark, tableDir, v).map(_._2).getOrElse(Nil))
+      ColumnIds.keyNames(schema, thinBase(spark, tableDir, v).map(_._2).getOrElse(Nil)))
     def conform(df: DataFrame, change: String): DataFrame =
       df.select(live.fields.toSeq.map(f =>
         (if (df.columns.contains(f.name)) col(ColumnIds.quoted(f.name))
@@ -1269,7 +1197,9 @@ object Sinks {
     *    rename a complete staged dir in; plain writes create materialized
     *    folders, whose marker absence is the correct answer mid-write);
     *  - a NEGATIVE result is cached only when the version FOLDER exists —
-    *    probing a yet-unpublished version never poisons the cache;
+    *    probing a yet-unpublished version never poisons the cache — and
+    *    never when `negative` is off, for a marker a plain write adds
+    *    after its data (the version's record);
     *  - the only way a (dir, version) pair can change kind is folder
     *    DELETION followed by number reuse — every deleting path
     *    ([[expireSnapshots]], [[vacuumOrphans]], the SQL catalog's DROP)
@@ -1279,14 +1209,15 @@ object Sinks {
   private val markerCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int, String), Option[Any]]()
 
-  private def cachedMarker[T](spark: SparkSession, tableDir: String,
-                              version: Int, kind: String)(
+  private[graft] def cachedMarker[T](spark: SparkSession, tableDir: String,
+                                     version: Int, kind: String,
+                                     negative: Boolean = true)(
       read: => Option[T]): Option[T] = {
     val k = (tableDir, version, kind)
     val hit = markerCache.get(k)
     if (hit != null) return hit.asInstanceOf[Option[T]]
     val res = read
-    val cacheable = res.isDefined || {
+    val cacheable = res.isDefined || negative && {
       val vp = new org.apache.hadoop.fs.Path(s"$tableDir/v=$version")
       vp.getFileSystem(spark.sessionState.newHadoopConf()).exists(vp)
     }
@@ -1299,48 +1230,46 @@ object Sinks {
 
   /** Drop every cached marker of `tableDir` — called by the paths that
     * DELETE version folders, after which a version number can be reused.
-    * Clears the declared-schema memo too (a DROP + re-CREATE of the same
-    * name must not inherit the dropped incarnation's schema). */
+    * Clears the registry memo too (a DROP + re-CREATE of the same name
+    * must not inherit the dropped incarnation's schema). */
   private[graft] def invalidateMarkerCache(tableDir: String): Unit = {
     val it = markerCache.keySet.iterator
     while (it.hasNext) if (it.next()._1 == tableDir) it.remove()
-    declaredSchemaCache.remove(tableDir): Unit
+    SnapshotRecord.forget(tableDir)
   }
 
-  /** The (base, key field ids) marker of a THIN version, None for a
-    * materialized one; no keys = a keyless APPEND version. */
+  /** The (base, key tokens) marker of a THIN version, None for a
+    * materialized one; no keys = a keyless APPEND version. The tokens are
+    * field ids ([[ColumnIds.keyNames]] resolves them). */
   def thinBase(spark: SparkSession, tableDir: String,
-               version: Int): Option[(Int, Seq[Long])] =
-    cachedMarker[(Int, Seq[Long])](spark, tableDir, version, "thin") {
+               version: Int): Option[(Int, Seq[String])] =
+    cachedMarker[(Int, Seq[String])](spark, tableDir, version, "thin") {
       MetaFs.read(spark,
         new org.apache.hadoop.fs.Path(s"$tableDir/v=$version/_base.json")).map { txt =>
         val lines = txt.trim.split('\n')
         val keys =
-          if (lines.length < 2 || lines(1).trim.isEmpty) Seq.empty[Long]
-          else lines(1).trim.split(',').toSeq.map(_.toLong)
+          if (lines.length < 2 || lines(1).trim.isEmpty) Seq.empty[String]
+          else lines(1).trim.split(',').toSeq.map(_.trim)
         (lines(0).trim.toInt, keys)
       }
     }
 
-  /** The schema recorded for version `v` — what a pinned read serves: a
-    * thin version's `_pinschema.json` (the table record at its publish,
-    * tombstones included), else the folder's own footer (names and types
-    * as committed; bucketed folders minus their `__bucket` layout
-    * column). Memoized through the immutable-version cache: resolving a
-    * depth-D chain otherwise pays D footer reads per statement. */
-  private def versionSchema(spark: SparkSession, tableDir: String,
-                            v: Int): StructType = {
-    val path = s"$tableDir/v=$v"
-    if (thinBase(spark, tableDir, v).isDefined)
-      cachedMarker[StructType](spark, tableDir, v, "pin") {
-        MetaFs.read(spark, new org.apache.hadoop.fs.Path(path, "_pinschema.json"))
-          .map(org.apache.spark.sql.types.DataType.fromJson(_)
-            .asInstanceOf[StructType])
-      }.orElse(declaredSnapshotSchema(spark, tableDir)).getOrElse(
-        throw new IllegalStateException(s"$path records no schema"))
-    else StructType(
-      ownSchema(spark, tableDir, v, "").filterNot(_.name == "__bucket"))
-  }
+  /** The schema recorded for version `v` — what a pinned read serves: its
+    * own record ([[SnapshotRecord.own]], tombstones included); for a
+    * version published without one, the folder's own footer (names and
+    * types as committed; bucketed folders minus their `__bucket` layout
+    * column), or the table's record for a thin one. Memoized through the
+    * immutable-version cache: resolving a depth-D chain otherwise pays D
+    * footer reads per statement. */
+  private[graft] def versionSchema(spark: SparkSession, tableDir: String,
+                                   v: Int): StructType =
+    SnapshotRecord.own(spark, tableDir, v).getOrElse {
+      if (thinBase(spark, tableDir, v).isDefined)
+        declaredSnapshotSchema(spark, tableDir).getOrElse(
+          throw new IllegalStateException(s"$tableDir/v=$v records no schema"))
+      else StructType(
+        ownSchema(spark, tableDir, v, "").filterNot(_.name == "__bucket"))
+    }
 
   /** A version folder's (or delta sub-dir's) own data-file schema — names,
     * types and field ids as written — memoized through the
@@ -1374,7 +1303,7 @@ object Sinks {
     * head serves through the resolver ([[ColumnIds.resolve]]) until a
     * rewrite. One memoized footer read. */
   def idNameClash(spark: SparkSession, tableDir: String, v: Int): Boolean = {
-    val served = servedSnapshotSchema(spark, tableDir).getOrElse(return false)
+    val served = ColumnIds.live(headSchema(spark, tableDir, v))
       .fields.filter(_.metadata.contains(ColumnIds.Key))
     ownSchema(spark, tableDir, v, "").fields.exists(g =>
       g.metadata.contains(ColumnIds.Key) &&
@@ -1386,7 +1315,7 @@ object Sinks {
   /** The full record an unpinned read of committed `v` resolves under. */
   private def headSchema(spark: SparkSession, tableDir: String,
                          v: Int): StructType =
-    declaredSnapshotSchema(spark, tableDir)
+    SnapshotRecord.at(spark, tableDir, v)
       .getOrElse(versionSchema(spark, tableDir, v))
 
   /** The resolver at HEAD (unpinned) semantics: `v`'s rows under the
@@ -1418,10 +1347,10 @@ object Sinks {
       // a bucketed version's synthetic __bucket layout column is physical,
       // not logical: the resolution projects it away
       case None => readResolved(spark, tableDir, v, "", schema)
-      case Some((base, keyIds)) =>
+      case Some((base, keyTokens)) =>
         val baseDf = resolveVersionR(spark, tableDir, base, depth + 1, schema)
-        val keyCols = ColumnIds.namesOf(schema, keyIds)
-        val (dels, ups) = deltaParts(spark, tableDir, v, schema, keyIds)
+        val keyCols = ColumnIds.keyNames(schema, keyTokens)
+        val (dels, ups) = deltaParts(spark, tableDir, v, schema, keyCols)
         val kc = keyCols.map(c => col(ColumnIds.quoted(c)))
         // keyless APPEND version: nothing ever leaves the base
         val gone =
@@ -1434,11 +1363,11 @@ object Sinks {
     }
   }
 
-  /** A thin version's `_deletes` (key columns) and `_upserts` (every
+  /** A thin version's `_deletes` (columns `keys`) and `_upserts` (every
     * column of `schema`), resolved by field id. */
   private def deltaParts(spark: SparkSession, tableDir: String, v: Int,
                          schema: StructType,
-                         keyIds: Seq[Long]): (Option[DataFrame], Option[DataFrame]) = {
+                         keys: Seq[String]): (Option[DataFrame], Option[DataFrame]) = {
     val hconf = spark.sessionState.newHadoopConf()
     def part(name: String, s: StructType) = {
       val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/$name")
@@ -1446,7 +1375,6 @@ object Sinks {
         Some(readResolved(spark, tableDir, v, name, s))
       else None
     }
-    val keys = ColumnIds.namesOf(schema, keyIds)
     (part("_deletes", StructType(
         keys.map(k => schema.fields.find(_.name == k).get))),
       part("_upserts", schema))
@@ -1555,7 +1483,7 @@ object Sinks {
     val keyRows = deletes.map(
       _.select(keyCols.map(c => col(ColumnIds.quoted(c))): _*).distinct())
     val v = publishWithIds(spark, tableDir,
-        upserts.getOrElse(keyRows.get).schema, full = false) { (rec, record) =>
+        upserts.getOrElse(keyRows.get).schema, full = false) { rec =>
       val staged = new org.apache.hadoop.fs.Path(tableDir,
         s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
       keyRows.foreach(d => microsBound(stamped(d, rec)).write
@@ -1563,8 +1491,7 @@ object Sinks {
       upserts.foreach(u => microsBound(stamped(u, rec)).write
         .parquet(new org.apache.hadoop.fs.Path(staged, "_upserts").toString))
       stageThinMeta(spark, staged, base, keyCols, rec)
-      publishStagedSnapshotFenced(spark, tableDir, staged, base, commitTsMicros,
-        beforeCommit = record)
+      publishStagedSnapshotFenced(spark, tableDir, staged, base, commitTsMicros)
     }
     // change data feed (opt-in): land this commit's change rows post-commit
     // — a crash in between is repaired from the version's own delta files
@@ -1611,7 +1538,7 @@ object Sinks {
         org.apache.spark.sql.types.LongType).contains(kt),
       s"bucketed snapshots need an integral key, got $kt")
     val spark = df.sparkSession
-    publishWithIds(spark, tableDir, df.schema, full = true) { (rec, record) =>
+    publishWithIds(spark, tableDir, df.schema, full = true) { rec =>
       publishClaimed(spark, tableDir) { v =>
         val vDir = s"$tableDir/v=$v"
         // NULL keys are rejected IN the write pass (no extra job): pmod(null)
@@ -1626,7 +1553,7 @@ object Sinks {
           .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(vDir)
         MetaFs.stage(spark,
           new org.apache.hadoop.fs.Path(vDir, "_buckets"), s"$keyCol\n$buckets")
-        record()
+        SnapshotRecord.stage(spark, vDir, rec)
       }
     }
   }
@@ -1668,7 +1595,7 @@ object Sinks {
                                 statsCols: Seq[String],
                                 maxRecordsPerFile: Long = 0L): Int = {
     val spark = df.sparkSession
-    publishWithIds(spark, tableDir, df.schema, full = true) { (rec, record) =>
+    publishWithIds(spark, tableDir, df.schema, full = true) { rec =>
       publishClaimed(spark, tableDir) { v =>
         val w = microsBound(stamped(df, rec)).write.mode(SaveMode.Overwrite)
         (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
@@ -1680,7 +1607,7 @@ object Sinks {
             graft.sources.FooterSchema.require(spark, s"$tableDir/v=$v"), statsCols)
           .coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/_manifest/v=$v")
-        record()
+        SnapshotRecord.stage(spark, s"$tableDir/v=$v", rec)
       }
     }
   }

@@ -90,17 +90,36 @@ private[graft] object ColumnIds {
   def isStamped(schema: StructType): Boolean =
     schema.fields.nonEmpty && schema.fields.forall(_.metadata.contains(Key))
 
+  /** The highest field id `schema` carries, tombstones included; 0 for
+    * none. */
+  def maxId(schema: StructType): Long =
+    schema.fields.filter(_.metadata.contains(Key)).map(idOf).foldLeft(0L)(math.max)
+
+  /** A record's identity: its live columns in order (name, type, id) and
+    * its tombstone ids — nullability and other metadata aside. Two
+    * records with one fingerprint resolve every data file alike. */
+  def fingerprint(schema: StructType): String = {
+    def id(f: StructField) = if (f.metadata.contains(Key)) idOf(f).toString else ""
+    val key = live(schema).fields.map(f => s"${f.name}:${f.dataType.json}:${id(f)}")
+      .mkString("|") + "#" + schema.fields.filter(f => isTombstone(f.name))
+      .map(id).sorted.mkString(",")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
+  }
+
   /** A full rewrite's recorded schema: `incoming` re-mapped BY NAME onto
     * the ids `existing` records (ids `incoming` carries are ignored); new
-    * names allocate above the max id, tombstones included; live fields
-    * the rewrite lacks become tombstones, so their ids can never be
-    * reused. */
-  def rebind(incoming: StructType, existing: StructType): StructType = {
+    * names allocate above the max id (tombstones included) and above
+    * `floor`, the highest id the table ever allocated; live fields the
+    * rewrite lacks become tombstones, so their ids can never be reused. */
+  def rebind(incoming: StructType, existing: StructType,
+             floor: Long = 0L): StructType = {
     require(incoming.fieldNames.forall(!isTombstone(_)),
       s"'$DroppedPrefix' is a reserved column-name prefix (dropped-column tombstones)")
     val idFor: Map[String, Long] = existing.fields.map(f =>
       f.name.toLowerCase -> idOf(f)).toMap
-    var nextId = existing.fields.map(idOf).foldLeft(0L)(math.max)
+    var nextId = math.max(floor, maxId(existing))
     val kept = incoming.fields.map { f =>
       withId(f, idFor.getOrElse(f.name.toLowerCase, { nextId += 1; nextId }))
     }
@@ -110,6 +129,23 @@ private[graft] object ColumnIds {
         f.copy(name = s"$DroppedPrefix${idOf(f)}")
     }
     StructType(kept ++ tombstones)
+  }
+
+  /** A delta write's record: `existing` extended by the columns of
+    * `incoming` it lacks and widened where `incoming` carries a wider
+    * type — the ALTER fold's ADD and ALTER TYPE ([[evolve]]), so a delta
+    * allocates ids and widens by the same rules as ALTER. */
+  def extend(existing: StructType, incoming: StructType, s: Surface,
+             floor: Long = 0L): StructType = {
+    val cur = live(existing)
+    evolve(existing, incoming.fields.toSeq.flatMap { i =>
+      cur.fields.find(_.name.equalsIgnoreCase(i.name)) match {
+        case None => Seq(TableChange.addColumn(Array(i.name), i.dataType, true))
+        case Some(f) if SnapshotCatalog.widens(f.dataType, i.dataType) =>
+          Seq(TableChange.updateColumnType(Array(f.name), i.dataType))
+        case _ => Nil
+      }
+    }, s, floor)
   }
 
   /** `query` with the ids of `declared` put on by case-insensitive name.
@@ -135,6 +171,12 @@ private[graft] object ColumnIds {
       .getOrElse(throw new IllegalStateException(
         s"no column with field id $id in ${schema.simpleString}")).name)
 
+  /** The column names a key marker (`_keycols`, a thin version's
+    * `_base.json`) lists: field ids, resolved under `schema`; a marker
+    * written before field ids lists the names themselves. */
+  def keyNames(schema: => StructType, tokens: Seq[String]): Seq[String] =
+    tokens.map(t => t.toLongOption.fold(t)(id => namesOf(schema, Seq(id)).head))
+
   /** The ids of live columns `names` under `schema`. */
   def idsOf(schema: StructType, names: Seq[String]): Seq[Long] =
     names.map(n => live(schema).fields.find(_.name.equalsIgnoreCase(n))
@@ -158,11 +200,12 @@ private[graft] object ColumnIds {
     * max + 1 over the full schema), RENAME (same id), widening ALTER
     * COLUMN TYPE ([[SnapshotCatalog.widens]]) and DROP (renamed onto the
     * `__dropped_<id>` tombstone) applied to a recorded schema, tombstones
-    * included. RENAME and DROP need an id-stamped schema: on an id-less
-    * one reads match by name, so a rename would null-fill old files and a
-    * re-ADD would resurrect dropped bytes. */
+    * included; an ADD's id is also above `floor`, the highest id the
+    * table ever allocated. RENAME and DROP need an id-stamped schema: on
+    * an id-less one reads match by name, so a rename would null-fill old
+    * files and a re-ADD would resurrect dropped bytes. */
   def evolve(schema: StructType, changes: Seq[TableChange],
-             s: Surface): StructType = {
+             s: Surface, floor: Long = 0L): StructType = {
     def flat(names: Array[String], op: String): String = {
       require(names.length == 1,
         s"${s.kind} are flat; nested $op is not supported")
@@ -202,7 +245,7 @@ private[graft] object ColumnIds {
         val added = StructField(name, add.dataType(), nullable = true)
         cur.add(
           if (!isStamped(cur)) added
-          else withId(added, cur.fields.map(idOf).max + 1L))
+          else withId(added, math.max(floor, maxId(cur)) + 1L))
       case (cur, ren: TableChange.RenameColumn) =>
         val from = flat(ren.fieldNames(), "RENAME COLUMN")
         notFrozen(from, "cannot RENAME")

@@ -287,9 +287,10 @@ class SnapshotCatalog extends TableCatalog
 
   /** METADATA-ONLY schema evolution: ADD COLUMN, RENAME COLUMN, DROP
     * COLUMN and widening ALTER COLUMN TYPE record the evolved schema —
-    * `_schema.json` for flat tables, `_partschema.json` for partitioned
-    * ones — and touch NO version folder. Every data file carries parquet
-    * field ids and every unpinned read resolves columns by id
+    * the ALTER layer of `_schema.json` for flat tables
+    * ([[graft.operators.Sinks.alterSnapshotSchema]]), `_partschema.json`
+    * for partitioned ones — and touch NO version folder. Every data file
+    * carries parquet field ids and every unpinned read resolves columns by id
     * ([[ColumnIds]]): a renamed column keeps matching old files, a
     * dropped one stays recorded as a `__dropped_<id>` tombstone that
     * serving filters out, and a re-ADD of its name takes a fresh id, so
@@ -311,7 +312,7 @@ class SnapshotCatalog extends TableCatalog
     // DDL fence: ALTER is a read-modify-write of the schema record — two
     // concurrent ALTERs would silently drop one's change (last write
     // wins). The statement lock serializes them, and a publish that
-    // changes the recorded schema takes it too; readers never do.
+    // changes the shape takes it too; readers never do.
     WorkspaceDmlLock.withLock(spark, dir) {
       if (partitioned)
         PartitionedSnapshot.declareSchema(spark, dir, ColumnIds.evolve(
@@ -339,12 +340,10 @@ class SnapshotCatalog extends TableCatalog
             s"cannot DROP declared row-identity column ${n(0)} of " +
               s"${ident.name()} — thin versions resolve by it; redeclare " +
               "keys (Sinks.declareSnapshotKeys) first"))
-        // the FULL record, tombstones included: their ids must never be
-        // reused by a later ADD
-        graft.operators.Sinks.declareSnapshotSchema(spark, dir, ColumnIds.evolve(
-          graft.operators.Sinks.declaredSnapshotSchema(spark, dir)
-            .getOrElse(graft.operators.Sinks.readSnapshot(spark, dir).schema),
-          changes, surface))
+        // the FULL record, tombstones included, and the id floor: no id
+        // is ever reused by a later ADD
+        graft.operators.Sinks.alterSnapshotSchema(spark, dir)(
+          ColumnIds.evolve(_, changes, surface, _))
       }
       loadTable(ident)
     }

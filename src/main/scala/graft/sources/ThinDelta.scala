@@ -82,13 +82,14 @@ private class ThinDeltaBatchWrite(spark: SparkSession, tableDir: String,
 
   private val staged = new Path(tableDir,
     s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-  // delta parts are data files of the table: they carry its field ids
-  private val record = graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir)
+  // delta parts are data files of the table: they carry its field ids,
+  // and the version records the record they are stamped under
+  private val record = graft.operators.Sinks.recordOf(spark, tableDir)
   private val rowSchema: StructType =
-    ColumnIds.withDeclaredIds(info.schema(), record)
+    ColumnIds.withDeclaredIds(info.schema(), Some(record))
   private val idSchema: StructType = ColumnIds.withDeclaredIds(
     info.rowIdSchema().orElseThrow(() =>
-      new IllegalStateException("delta write without a rowId schema")), record)
+      new IllegalStateException("delta write without a rowId schema")), Some(record))
 
   override def createBatchWriterFactory(p: PhysicalWriteInfo): DeltaWriterFactory = {
     def factory(schema: StructType): (OutputWriterFactory, SerializableHadoopConf) = {
@@ -108,7 +109,7 @@ private class ThinDeltaBatchWrite(spark: SparkSession, tableDir: String,
 
   override def commit(msgs: Array[WriterCommitMessage]): Unit =
     graft.operators.Sinks.publishThinStagedDelta(
-      spark, tableDir, keyCols, boundVersion, staged): Unit
+      spark, tableDir, keyCols, boundVersion, staged, record): Unit
 
   override def abort(msgs: Array[WriterCommitMessage]): Unit = {
     val f = staged.getFileSystem(spark.sessionState.newHadoopConf())

@@ -73,8 +73,7 @@ private[graft] class ThinSnapshotTable(
     graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir)
       .orElse(graft.operators.Sinks.thinBase(spark, tableDir, pinnedVersion)
         .map(_._2).filter(_.nonEmpty)
-        .flatMap(ids => graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir)
-          .map(ColumnIds.namesOf(_, ids))))
+        .map(ColumnIds.keyNames(graft.operators.Sinks.recordOf(spark, tableDir), _)))
       .getOrElse(Seq.empty)
 
   /** Resolved-chain schema with the chain's key columns NON-NULLABLE —

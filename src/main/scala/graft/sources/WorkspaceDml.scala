@@ -669,6 +669,11 @@ private[sources] class SnapshotDmlTable(
   private val boundVersion: Int =
     committedDir.split("v=").last.toInt
 
+  /** The record a copy-on-write rewrite stamps its files with and stages
+    * as its version's own ([[SnapshotRecord.stage]]). */
+  private lazy val boundRecord: Option[StructType] =
+    graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir)
+
   override def name(): String = tableName
 
   /** Declared row-identity columns surface NON-NULLABLE: declaring keys
@@ -774,6 +779,7 @@ private[sources] class SnapshotDmlTable(
         s"$tableName: table moved from v=$boundVersion to v=${cur.getOrElse(0)} " +
           "during DML — re-read and retry the statement")
     }
+    boundRecord.foreach(SnapshotRecord.stage(spark, staged.toString, _))
     graft.operators.Sinks.publishStagedSnapshotFenced(
       spark, tableDir, staged, boundVersion): Unit
   }
@@ -835,7 +841,7 @@ private[sources] class SnapshotDmlTable(
           case None =>
             new CowOperation(
               opts => SnapshotDmlTable.this.newScanBuilder(opts),
-              graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir),
+              boundRecord,
               info.command(), s"${tableName}__vdml",
               () => stagingPath(),
               publishIfUnconflicted,

@@ -994,6 +994,88 @@ class SinksSpec extends AnyFunSuite {
     s.close()
   }
 
+  test("a publish whose commit fails leaves the committed shape as it was; " +
+       "the ids it allocated are never reused") {
+    import spark.implicits._
+    import graft.sources.ColumnIds
+    import org.apache.spark.sql.connector.catalog.TableChange
+    val s = new graft.Session.Scratch
+    val t = s"${s.dir}/failed_shape"
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Sinks.writeSnapshot(Seq((1L, "a", 10)).toDF("id", "v", "extra"), t): Unit
+    // a FILE where the commit records go: every later commit record fails,
+    // after the version's data has landed
+    val commits = new org.apache.hadoop.fs.Path(s"$t/_commits")
+    fs.delete(commits, true): Unit
+    fs.create(commits, false).close()
+    // a full publish that omits `extra` (would retire it), retypes `v` and
+    // adds `more` (allocates an id)
+    intercept[Exception] {
+      Sinks.writeSnapshot(Seq((2L, 7, "m")).toDF("id", "v", "more"), t)
+    }
+    assert(Sinks.snapshotCommitted(spark, t).contains(1))
+    val head = Sinks.readSnapshot(spark, t)
+    assert(head.columns.toSeq == Seq("id", "v", "extra"))
+    assert(head.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+      .toSeq == Seq((1L, "a", 10)))
+    fs.delete(commits, true): Unit
+    // the column the failed publish would have retired still renames
+    Sinks.alterSnapshotSchema(spark, t)(ColumnIds.evolve(_,
+      Seq(TableChange.renameColumn(Array("extra"), "kept")),
+      ColumnIds.Surface("snapshot tables", "failed_shape", "republish"), _))
+    assert(Sinks.readSnapshot(spark, t).columns.toSeq == Seq("id", "v", "kept"))
+    // id 4 went to the failed publish's `more`: the next new column gets 5
+    Sinks.writeSnapshot(Seq((3L, "c", 30, "o")).toDF("id", "v", "kept", "other"), t): Unit
+    val ids = Sinks.declaredSnapshotSchema(spark, t).get.fields
+      .map(f => f.name -> ColumnIds.idOf(f)).toMap
+    assert(ids == Map("id" -> 1L, "v" -> 2L, "kept" -> 3L, "other" -> 5L), ids)
+    s.close()
+  }
+
+  test("a thin delta bound before a concurrent RENAME commits under the " +
+       "renamed record") {
+    import spark.implicits._
+    import graft.sources.ColumnIds
+    import org.apache.spark.sql.connector.catalog.TableChange
+    val s = new graft.Session.Scratch
+    val t = s"${s.dir}/alter_race"
+    Sinks.writeSnapshot(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t): Unit
+    val bound = Sinks.declaredSnapshotSchema(spark, t).get
+    // the delta's parts land under the record it bound...
+    val staged = new org.apache.hadoop.fs.Path(t, ".dml_staging_race")
+    val ups = Seq((1L, "z")).toDF("id", "v")
+    ups.select(ColumnIds.withDeclaredIds(ups.schema, Some(bound)).fields.toSeq
+        .map(f => col(f.name).as(f.name, f.metadata)): _*)
+      .write.parquet(new org.apache.hadoop.fs.Path(staged, "_upserts").toString)
+    // ...an ALTER lands before its publish
+    Sinks.alterSnapshotSchema(spark, t)(ColumnIds.evolve(_,
+      Seq(TableChange.renameColumn(Array("v"), "w")),
+      ColumnIds.Surface("snapshot tables", "alter_race", "republish"), _))
+    Sinks.publishThinStagedDelta(spark, t, Seq("id"), 1, staged, bound): Unit
+    val head = Sinks.readSnapshot(spark, t)
+    assert(head.columns.toSeq == Seq("id", "w"))
+    assert(head.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("z", "b"))
+    s.close()
+  }
+
+  test("key markers written before field ids (column names) still resolve") {
+    import spark.implicits._
+    import graft.sources.MetaFs
+    val s = new graft.Session.Scratch
+    val t = s"${s.dir}/name_keys"
+    Sinks.writeSnapshot(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t): Unit
+    Sinks.declareSnapshotKeys(spark, t, Seq("id"))
+    val v2 = Sinks.deleteSnapshotKeys(spark, t, Seq(1L).toDF("id"), Seq("id"))
+    MetaFs.replace(spark, new org.apache.hadoop.fs.Path(t, "_keycols"), "id")
+    MetaFs.replace(spark,
+      new org.apache.hadoop.fs.Path(s"$t/v=$v2/_base.json"), "1\nid")
+    Sinks.invalidateMarkerCache(t)
+    assert(Sinks.snapshotDeclaredKeys(spark, t).contains(Seq("id")))
+    assert(Sinks.readSnapshot(spark, t).collect().map(_.getLong(0)).toSeq == Seq(2L))
+    s.close()
+  }
+
   test("per-writer TIMESTAMP_MICROS: sink writes under an INT96-default " +
        "session carry footer-usable ts stats; the caller's conf is untouched") {
     // a fresh session pinned to Spark's INT96 default — the shared test
