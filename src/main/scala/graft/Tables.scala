@@ -21,23 +21,26 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Scan one table. Pure `spark.read.parquet` — no eager materialization;
-    * Catalyst handles pruning/pushdown from whatever the caller stacks on.
+  /** Scan one table: a parquet batch read planned from the table's footer
+    * ([[graft.sources.FooterSchema.read]]) — no schema-inference job, no
+    * eager materialization; Catalyst handles pruning/pushdown from whatever
+    * the caller stacks on.
     *
     * The `events.ts` column is normalized to session-timezone TIMESTAMP
     * whatever the fixture generation wrote — see [[normalizeEventTs]]. */
-  // Analyzed-plan cache: repeated loads of the same table re-list files and
-  // re-read parquet footers (~50-100 ms each) — across a 50-query bench run
-  // that's seconds of pure metadata overhead. DataFrames are immutable lazy
-  // plans, so caching per (session, dir, name) is safe; this mirrors what a
-  // catalog-backed table (WorkspaceCatalog / metastore) gives for free.
+  // Analyzed-plan cache: a repeated load of the same table would again
+  // stat and list the path, open its footer and resolve a new relation
+  // (a few ms each, no Spark job). DataFrames are immutable lazy plans, so
+  // caching per (session, dir, name) is safe and hands every caller the
+  // same plan; this mirrors what a catalog-backed table (WorkspaceCatalog /
+  // metastore) gives for free.
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     cache.getOrElseUpdate((spark, dir, name), {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(path(dir, name))
+      val df = graft.sources.FooterSchema.read(spark, path(dir, name))
       if (name == "events") normalizeEventTs(df) else df
     })
 

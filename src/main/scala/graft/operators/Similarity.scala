@@ -522,7 +522,7 @@ object Similarity {
     index.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
 
   def ivfOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.FooterSchema.read(spark, path)
 
   /** Patch a persisted [[ivfWriteIndex]] layout after an assignment change
     * (re-pivot, delta ingest): rewrite ONLY the lists whose membership

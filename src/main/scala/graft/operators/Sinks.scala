@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.compat.Compat
-import graft.sources.{ColumnIds, MetaFs, SnapshotRecord}
+import graft.sources.{ColumnIds, FooterSchema, MetaFs, SnapshotRecord}
 
 /** Sink / materialization operators — SURVEY §2.1 S4/S5/S8/S9 + §2.8 C2/C3.
   *
@@ -577,14 +577,14 @@ object Sinks {
       val prev = snapshotVersions(spark, tableDir).filter(_ < v).reverse
         .find(p => graft.sources.ManifestPrune.exists(spark, tableDir, p))
         .getOrElse(return)
-      val statsCols = graft.sources.FooterSchema
+      val statsCols = FooterSchema
         .require(spark, graft.sources.ManifestPrune.manifestDir(tableDir, prev))
         .fieldNames.filter(_.startsWith("min_")).map(_.drop(4)).toSeq
       // schema inference reads footers, not data — the whole carry stays
       // metadata-only (the r14 wart was a FULL data re-read of the version
       // just published, a 2× write-path I/O tax at 100 TB; the footers
       // already hold the same min/max, plus null counts the agg never had)
-      val writtenSchema = graft.sources.FooterSchema.require(spark, s"$tableDir/v=$v")
+      val writtenSchema = FooterSchema.require(spark, s"$tableDir/v=$v")
       val cols = statsCols.filter(writtenSchema.fieldNames.contains)
       if (cols.isEmpty) return
       // temp dir + ONE rename: a manifest must appear COMPLETE or not at
@@ -887,7 +887,7 @@ object Sinks {
     }
     ups.foreach { u =>
       val kc = keyCols.map(col)
-      val dup = spark.read.parquet(u).groupBy(kc: _*)
+      val dup = FooterSchema.read(spark, u).groupBy(kc: _*)
         .count().filter(col("count") > 1)
       if (!dup.isEmpty) {
         fs.delete(staged, true): Unit
@@ -1078,7 +1078,7 @@ object Sinks {
           case Seq(a) => a
         }.toSeq)
       fold(files.map(f =>
-        ColumnIds.resolve(spark.read.parquet(f), target)))
+        ColumnIds.resolve(FooterSchema.read(spark, f), target)))
     }
   }
 
@@ -1281,8 +1281,8 @@ object Sinks {
     val path = if (sub.isEmpty) s"$tableDir/v=$v" else s"$tableDir/v=$v/$sub"
     cachedMarker[StructType](
         spark, tableDir, v, if (sub.isEmpty) "schema" else s"schema:$sub") {
-      Some(graft.sources.FooterSchema.of(spark, Seq(path))
-        .getOrElse(spark.read.parquet(path).schema))
+      Some(FooterSchema.of(spark, Seq(path))
+        .getOrElse(FooterSchema.read(spark, path).schema))
     }.get
   }
 
@@ -1604,7 +1604,7 @@ object Sinks {
         // not a second full read of the data — the build is O(#files) metadata
         graft.sources.FooterStats
           .manifestFrame(spark, s"$tableDir/v=$v",
-            graft.sources.FooterSchema.require(spark, s"$tableDir/v=$v"), statsCols)
+            FooterSchema.require(spark, s"$tableDir/v=$v"), statsCols)
           .coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/_manifest/v=$v")
         SnapshotRecord.stage(spark, s"$tableDir/v=$v", rec)
@@ -1624,7 +1624,7 @@ object Sinks {
                          version: Option[Int] = None): (DataFrame, Int, Int) = {
     val v = version.orElse(snapshotCommitted(spark, tableDir)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val manifest = spark.read.parquet(s"$tableDir/_manifest/v=$v")
+    val manifest = FooterSchema.read(spark, s"$tableDir/_manifest/v=$v")
       .select(col("file"), col(s"min_$statCol").cast("long").as("lo"),
         col(s"max_$statCol").cast("long").as("hi"))
       .collect()
@@ -1641,9 +1641,9 @@ object Sinks {
     val df =
       if (kept.isEmpty)
         ColumnIds.resolve(
-          spark.read.parquet(s"$tableDir/v=$v"), schema).where(lit(false))
+          FooterSchema.read(spark, s"$tableDir/v=$v"), schema).where(lit(false))
       else ColumnIds.resolve(
-          spark.read.parquet(kept.toIndexedSeq: _*), schema)
+          FooterSchema.read(spark, kept.toIndexedSeq: _*), schema)
         .filter(col(statCol).between(lo, hi))
     (df, kept.length, total)
   }

@@ -1553,7 +1553,7 @@ object PipelineQueries {
       val path = s"${scratch.dir}/docs_by_source"
       Tables.load(s, dir, "documents")
         .write.mode("overwrite").partitionBy("source").parquet(path)
-      s.read.parquet(path)
+      graft.sources.FooterSchema.read(s, path)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
     },
@@ -1787,7 +1787,7 @@ object PipelineQueries {
       val path = s"${scratch.dir}/docs_compacted"
       graft.operators.Sinks.writeCompacted(
         Tables.load(s, dir, "documents"), path, targetRows = 200L)
-      s.read.parquet(path)
+      graft.sources.FooterSchema.read(s, path)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
     },
@@ -2160,7 +2160,7 @@ object PipelineQueries {
               .cast("string").cast("double").as("qty"))
           .write.mode("overwrite").parquet(out)
       }
-      s.read.parquet(out).orderBy("o_orderstatus")
+      graft.sources.FooterSchema.read(s, out).orderBy("o_orderstatus")
     },
 
     // ---- sinks: Z-order-clustered layout round trip -----------------------
@@ -2184,7 +2184,7 @@ object PipelineQueries {
       val path = s"${scratch.dir}/orders_z"
       Bucketing.writeZOrdered(Tables.load(s, dir, "orders"),
         "o_custkey", "o_orderdate", path, numFiles = 16)
-      s.read.parquet(path)
+      graft.sources.FooterSchema.read(s, path)
         .filter(col("o_custkey").between(10, 60) &&
           col("o_orderdate") >= to_timestamp(lit("1997-01-01 00:00:00")) &&
           col("o_orderdate") < to_timestamp(lit("1998-01-01 00:00:00")))
@@ -5228,7 +5228,7 @@ object PipelineQueries {
         docs.filter(col("doc_id") % 7 === 0)
           .withColumn("n_chars", col("n_chars") + 500), Seq("doc_id")): Unit
       graft.streaming.Streams.runChangeFeedCollect(s, chk, tdir, out, run = 2)
-      s.read.parquet(out)
+      graft.sources.FooterSchema.read(s, out)
         .groupBy(col("run"), col("__version").as("version"),
           col("__change").as("change"))
         .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_ids"))
@@ -5501,7 +5501,7 @@ object PipelineQueries {
         s"WHERE doc_id BETWEEN $lo AND $hi")
       // distinct data files the pruned scan will open
       val planned = plannedFiles(q).size
-      val total = s.read.parquet(s"$ws/$tbl/_manifest/v=1").count().toInt
+      val total = graft.sources.FooterSchema.read(s, s"$ws/$tbl/_manifest/v=1").count().toInt
       q.withColumn("files_kept", lit(planned))
         .withColumn("files_total", lit(total))
         .orderBy("doc_id")
@@ -6360,7 +6360,7 @@ object PipelineQueries {
         .filter(col("ts") >= lit(lo) && col("ts") <= lit(hi))
         .select("event_id", "event_type")
       val kept = plannedFiles(q).size
-      val total = s.read.parquet(s"$ws/$tbl/_manifest/v=1").count().toInt
+      val total = graft.sources.FooterSchema.read(s, s"$ws/$tbl/_manifest/v=1").count().toInt
       q.withColumn("files_kept", lit(kept))
         .withColumn("files_total", lit(total))
         .orderBy("event_id")
@@ -6827,7 +6827,7 @@ object PipelineQueries {
         "TIMESTAMP '2024-01-06 12:00:00' AS ts, 'ins' AS event_type")
       graft.streaming.Streams.runPartitionFeedCollect(
         s, chk, tdir, declared, out, run = 2)
-      s.read.parquet(out)
+      graft.sources.FooterSchema.read(s, out)
         .groupBy(col("run"), col("_change_type").as("change"),
           col("event_type").as("etype"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_ids"))
@@ -7522,7 +7522,7 @@ object PipelineQueries {
         s, tdir, s"$chk/v", out, run = 2): Unit
       val pass3 = graft.streaming.Streams.collectPartitionedChanges(
         s, tdir, s"$chk/v", out, run = 3)
-      s.read.parquet(out)
+      graft.sources.FooterSchema.read(s, out)
         .groupBy(col("run"), col("_version").as("version"),
           col("_change_type").as("change"), col("event_type").as("etype"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_ids"))
@@ -7870,7 +7870,7 @@ object PipelineQueries {
           }
         val owned = files(root)
         val rows =
-          if (owned.isEmpty) 0L else s.read.parquet(owned: _*).count()
+          if (owned.isEmpty) 0L else graft.sources.FooterSchema.read(s, owned: _*).count()
         val inherit = graft.sources.MetaFs.read(s,
           new org.apache.hadoop.fs.Path(root, "_carry")).exists(_.startsWith("#base "))
         (rows, inherit)

@@ -442,7 +442,7 @@ object RelationalQueries {
         specs = Some(Seq(FieldSpec("P_PARTKEY", "pid"), FieldSpec("p_brand", "brand"),
                          FieldSpec("p_size", "psize"))),
         where = Some("psize > 25"))
-      s.read.parquet(out).orderBy("pid")
+      graft.sources.FooterSchema.read(s, out).orderBy("pid")
     },
 
     // ---- skew salting: two-phase agg ≡ plain agg (deterministic salts) -----

@@ -3,32 +3,37 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Driver-side parquet schema read — ONE footer, zero Spark jobs.
+/** The program's one parquet batch-read planner: a schema from ONE footer,
+  * zero Spark jobs.
   *
-  * Every `spark.read.parquet(dir).schema` call plans a throwaway relation:
-  * an InMemoryFileIndex listing plus a schema-inference pass that runs as a
-  * 1-task Spark JOB (`ParquetFileFormat.mergeSchemasInParallel`), ~30 ms of
-  * job plus 50–250 ms of driver planning around it. The catalog layer asks
-  * "what is this table's schema" dozens of times per multi-statement face
-  * (claims, manifests, conformance checks), so those throwaway relations
-  * were a measurable slice of every DML face (JobTrace on q234: 10 of 22
-  * jobs were schema-only `parquet at ...` jobs). At 100 TB the same call is
-  * worse — the listing alone touches the namenode/object store for every
-  * file in the dir.
+  * A bare `spark.read.parquet(paths)` plans its relation with a
+  * schema-inference pass that runs as a 1-task Spark JOB
+  * (`ParquetFileFormat.mergeSchemasInParallel`), ~30 ms of job plus
+  * 50–250 ms of driver planning around it, only to learn what one footer
+  * holds: once per table open, once per file of a change-feed fold, and
+  * dozens of times per multi-statement face in the catalog layer (JobTrace
+  * on q234: 10 of 22 jobs were schema-only `parquet at ...` jobs).
   *
-  * This helper answers the same question from ONE parquet footer on the
+  * [[of]] answers the schema question from ONE parquet footer on the
   * driver, the way Spark's own inference does for Spark-written files: the
   * writer embeds the exact Spark `StructType` (field-id metadata included)
   * under the `org.apache.spark.sql.parquet.row.metadata` footer key;
   * falling back to the parquet→Spark converter for foreign files. The
   * result is `.asNullable`-normalized — identical to what
-  * `spark.read.parquet(...).schema` returns. Callers pass dirs whose files
-  * share one schema (engine-written version/partition dirs — uniform by
+  * `spark.read.parquet(...).schema` returns. [[read]] plans the batch read
+  * itself under that schema; every batch parquet read in the program goes
+  * through it.
+  *
+  * Callers pass paths whose files share one schema (engine-written
+  * version/partition dirs, fixture tables, sink outputs — uniform by
   * construction); the first data file by name is authoritative, matching
-  * inference with `mergeSchema=false`.
+  * inference with `mergeSchema=false`. [[read]] falls back to Spark's own
+  * inference, keeping its behaviour and errors, when no direct data file
+  * is found (a hive-partitioned layout, a missing path, a glob, an empty
+  * directory) or when the session sets `spark.sql.parquet.mergeSchema`.
   */
 object FooterSchema {
 
@@ -54,13 +59,17 @@ object FooterSchema {
 
   /** Schema of the first `*.parquet` data file found across `dirs`
     * (searched in order, names sorted; `_`/`.`-prefixed entries skipped,
-    * exactly Spark's data-file filter). None when no data file exists. */
+    * exactly Spark's data-file filter; a path naming a file is that file).
+    * None when no data file exists. */
   def of(spark: SparkSession, dirs: Seq[String]): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
     dirs.iterator.flatMap { d =>
       val dir = new Path(d)
       val fs = dir.getFileSystem(conf)
-      val status = if (fs.exists(dir)) Some(fs.getFileStatus(dir)) else None
+      // one metadata round trip: a missing path is "no file here"
+      val status =
+        try Some(fs.getFileStatus(dir))
+        catch { case _: java.io.FileNotFoundException => None }
       val files =
         if (status.isEmpty) Seq.empty
         else if (status.get.isFile) Seq(status.get) // a single-file table
@@ -97,4 +106,14 @@ object FooterSchema {
   def require(spark: SparkSession, dir: String): StructType =
     of(spark, Seq(dir)).getOrElse(
       throw new IllegalArgumentException(s"no parquet data file under $dir"))
+
+  /** `spark.read.parquet(paths: _*)` planned from [[of]]'s footer schema —
+    * no inference job. Plain inference (Spark's behaviour and errors) when
+    * no direct data file is found or the session merges schemas. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    (if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+     else of(spark, paths)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None         => spark.read.parquet(paths: _*)
+    }
 }

@@ -148,7 +148,7 @@ object ManifestPrune {
     * pushed conjunct must be possibly-satisfiable for a file to survive. */
   def keptFiles(spark: SparkSession, tableDir: String, version: Int,
                 pushed: Seq[sources.Filter]): (Seq[String], Int) = {
-    val mdf = spark.read.parquet(manifestDir(tableDir, version))
+    val mdf = FooterSchema.read(spark, manifestDir(tableDir, version))
     val statCols = mdf.columns.filter(_.startsWith("min_")).map(_.drop(4))
       .filter(c => mdf.columns.contains(s"max_$c"))
     val hasRowCount = mdf.columns.contains("rowcount")

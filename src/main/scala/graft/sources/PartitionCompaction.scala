@@ -63,7 +63,7 @@ object PartitionCompaction {
             "tables with snapshot_compact"))
       val declared = MetaFs.read(spark, PartitionEvolution.sidecar(ws, table))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(spark.read.parquet(dir.toString).schema)
+        .getOrElse(FooterSchema.read(spark, dir.toString).schema)
       val levels = PartitionEvolution.levelsOf(marker, declared)
       require(levels.nonEmpty, s"empty partition marker for $table")
       val tbl = new PartitionedWorkspaceTable(

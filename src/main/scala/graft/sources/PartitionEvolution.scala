@@ -70,7 +70,7 @@ object PartitionEvolution {
       val oldMarker = MetaFs.read(spark, partMarker(ws, table)).map(_.trim)
       val declared = MetaFs.read(spark, sidecar(ws, table))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(spark.read.parquet(dir.toString).schema)
+        .getOrElse(FooterSchema.read(spark, dir.toString).schema)
       val oldLevels = levelsOf(oldMarker.getOrElse(""), declared)
 
       // COMPOSE WITH THE DML CRASH PROTOCOL before reading a byte: a

@@ -794,8 +794,7 @@ private[sources] class SnapshotDmlTable(
     // predicate on a column added by ALTER must resolve — null in
     // pre-ALTER files — and a renamed one must match its old-named files
     def boundRead = ColumnIds.resolve(
-      spark.read.schema(FooterSchema.require(spark, committedDir))
-        .parquet(committedDir),
+      FooterSchema.read(spark, committedDir),
       StructType(schema.map(_.copy(nullable = true))))
     graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir) match {
       case Some(keyCols) =>

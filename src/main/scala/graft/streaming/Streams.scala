@@ -64,7 +64,7 @@ object Streams {
         .start()
       query.awaitTermination()
     }
-    s.read.parquet(sink)
+    graft.sources.FooterSchema.read(s, sink)
   }
 
   /** [[runAvailableNow]] in UPDATE mode with per-batch provenance: every
@@ -94,7 +94,7 @@ object Streams {
       query.awaitTermination()
       query.recentProgress.toSeq
     }
-    (s.read.parquet(sink), progress)
+    (graft.sources.FooterSchema.read(s, sink), progress)
   }
 
   /** Backtick-quote an identifier for interpolation into generated SQL —

@@ -42,7 +42,7 @@ object ScaleUp {
     Files.createDirectories(Paths.get(dst))
 
     def read(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+      graft.sources.FooterSchema.read(spark, s"$src/$name.parquet")
 
     // Write as ONE file named <name>.parquet (the fixture layout): parquet
     // row groups keep it splittable, so local[32] still parallelizes scans.
