@@ -76,8 +76,14 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point: the native SQL functions, the
   * MOR-aware resolution rule that serves thin snapshot chains through the
-  * SQL catalog ([[graft.sources.ResolveThinSnapshots]]), and the
-  * `table_changes` table-valued function over the change data feed. */
+  * SQL catalog ([[graft.sources.ResolveThinSnapshots]]), the
+  * `table_changes` table-valued function over the change data feed — and
+  * `file:` I/O: the live context's Hadoop configuration is pointed at
+  * [[graft.sources.LocalFs]], unless the user named their own `file:`
+  * classes. Without Hadoop's native library, its local filesystem forks a
+  * `chmod` or `readlink` process on every file created and every
+  * `FileContext` rename — every write, commit and streaming checkpoint;
+  * `LocalFs` makes those calls through java.nio. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   /** `table_changes('<catalog>.<table>' | '<tableDir>', fromV [, toV])`:
@@ -316,6 +322,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    Bridge.activeContext.foreach(sc =>
+      graft.sources.LocalFs.install(sc.hadoopConfiguration))
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),

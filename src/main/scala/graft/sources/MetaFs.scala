@@ -64,7 +64,11 @@ private[graft] object MetaFs {
     * file. The local filesystem implements the overwrite as
     * check-delete-rename; in-process writers racing one target serialize
     * themselves (the snapshot pointer's swap lock). A failed write or
-    * rename throws and deletes the temp file. */
+    * rename throws and deletes the temp file. On `file:` under the graft
+    * extensions the `FileContext` resolves to [[GraftLocalFs]]
+    * ([[LocalFs]]): no process forks, but the overwrite is still
+    * check-delete-rename, data and `.crc` moved apart, so a racing reader
+    * can still see a `ChecksumException`. */
   def replace(spark: SparkSession, p: Path, content: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val target = p.getFileSystem(conf).makeQualified(p)

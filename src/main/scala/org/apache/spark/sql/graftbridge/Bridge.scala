@@ -20,6 +20,11 @@ object Bridge {
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = true)
 
+  /** The live `SparkContext`, if there is one (`SparkContext.getActive` is
+    * `private[spark]`); never creates one. */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
+
   /** Register a temp SQL function on a live session (the
     * `FunctionRegistry` is `private[sql]` too). */
   def registerTempFunction(spark: org.apache.spark.sql.SparkSession, name: String,
