@@ -240,8 +240,8 @@ object Sinks {
   // ---- column identity: every flat version is field-id-stamped -------------
 
   /** [[SnapshotRecord.publish]] onto the committed head. */
-  private def publishWithIds[T](spark: SparkSession, tableDir: String,
-                                incoming: StructType, full: Boolean)(
+  private[graft] def publishWithIds[T](spark: SparkSession, tableDir: String,
+                                       incoming: StructType, full: Boolean)(
       publish: StructType => T): T =
     SnapshotRecord.publish(spark, tableDir,
       // a pointer that cannot be read fails this publish's commit anyway;
@@ -333,85 +333,51 @@ object Sinks {
     * write outage. Returns the committed compacted version.
     *
     * Safe beside live writers (the SQL `snapshot_compact` face runs it, and
-    * a SQL user cannot audit what else is committing to the table).
-    * Optimistic: bind the committed base, claim the next version, and
-    * require the claim to be the IMMEDIATE successor — an intervening
-    * claim means another writer got between the base read and the claim,
-    * so release and re-bind against the new head (the rows to compact have
-    * changed). Converges in one pass on an idle table; after
-    * [[CompactRetries]] lost races it throws
-    * `ConcurrentModificationException` (compaction is maintenance — a
-    * busy table defers, it never overwrites a concurrent commit). */
+    * a SQL user cannot audit what else is committing to the table): the
+    * compaction is a base-derived publish ([[publishDerived]]), so a
+    * concurrent commit re-stages it against the new head, and a busy
+    * table defers with `ConcurrentModificationException` — it never
+    * overwrites a concurrent commit. */
   def compactSnapshot(spark: SparkSession, tableDir: String,
                       targetRows: Long): Int = {
     require(graft.sources.PartitionedSnapshot.partSpec(spark, tableDir).isEmpty,
       s"$tableDir is a PARTITIONED snapshot — a flat compaction would " +
         "destroy its layout; use PartitionedSnapshot.compactTable " +
         "(SQL snapshot_compact routes there)")
-    Iterator.continually {
-      val base = snapshotCommitted(spark, tableDir).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-      compactOnto(spark, tableDir, base, targetRows)
-    }.take(CompactRetries).flatten.nextOption().getOrElse(
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot_compact at $tableDir: lost the claim race $CompactRetries " +
-          "times to concurrent writers; retry when the table quiesces"))
+    publishDerived(spark, tableDir, "snapshot_compact", CompactStaging)(
+      stageCompactedVersion(spark, tableDir, targetRows))
   }
 
-  /** Lost claim races [[compactSnapshot]] absorbs before deferring. */
-  private val CompactRetries = 5
-
-  /** The claim-fenced compaction body [[compactSnapshot]] and
-    * [[autoCompactCas]] share: claim the IMMEDIATE successor of `base`
-    * (None — claim released — if another writer claimed in between),
-    * stage the resolved rows OF `base` with their `_compaction` stamp,
-    * commit through the repair loop. */
-  private def compactOnto(spark: SparkSession, tableDir: String, base: Int,
-                          targetRows: Long): Option[Int] =
-    claimSuccessor(spark, tableDir, base).map(
-      commitClaimed(spark, tableDir, _, tsMicros = None) { v =>
-        val record = headSchema(spark, tableDir, base)
-        stageCompactedVersion(spark, tableDir,
-          compactionRows(spark, tableDir, base, record), record, v, base,
-          targetRows)
-      })
+  private val CompactStaging = ".compact_staging_"
 
   /** The rows a compaction of committed `base` must materialize: resolved
     * under the table's recorded schema, head names and served columns
     * only — a dropped column's bytes retire physically, and the compacted
-    * files carry the ids of `record`, the record `base` serves. `base` is
-    * the committed head when the CAS claim fences (v == base + 1), so
-    * head semantics OF base is exactly the unpinned read, race-free. */
+    * files carry the ids of `record`, the record `base` serves. The fence
+    * publishes only onto `base` itself (v == base + 1), so head semantics
+    * OF base is exactly the unpinned read, race-free. */
   private def compactionRows(spark: SparkSession, tableDir: String,
                              base: Int, record: StructType): DataFrame =
     stamped(readSnapshotServed(spark, tableDir, base), record)
 
-  /** Write a compacted version ATOMICALLY: [[writeCompacted]] output plus
-    * its `_compaction` provenance stamp and its `record` land in a staging
-    * dir and appear as `v=N` in ONE rename — the marker is visible from
-    * the folder's first observable instant, preserving [[cachedMarker]]'s
-    * invariant (markers appear atomically with their folder; a probe of a
+  /** Stage a compaction of committed `base` into `staged`: the
+    * [[writeCompacted]] output plus its `_compaction` provenance stamp and
+    * the record `base` serves, so all of them appear as `v=N` in the
+    * fenced publish's ONE rename — the marker is visible from the folder's
+    * first observable instant, preserving [[cachedMarker]]'s invariant
+    * (markers appear atomically with their folder; a probe of a
     * half-written folder could otherwise permanently negative-cache the
-    * `compact` kind). A crash mid-stage leaves `.compact_staging_*`
-    * debris for [[vacuumOrphans]]' age-out, never a visible folder. */
+    * `compact` kind). */
   private def stageCompactedVersion(spark: SparkSession, tableDir: String,
-                                    rows: DataFrame, record: StructType,
-                                    v: Int, base: Int,
-                                    targetRows: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val staged = new org.apache.hadoop.fs.Path(tableDir,
-      s".compact_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      writeCompacted(rows, staged.toString, targetRows): Unit
-      MetaFs.stage(spark,
-        new org.apache.hadoop.fs.Path(staged, "_compaction"), base.toString)
-      SnapshotRecord.stage(spark, staged.toString, record)
-      val dest = new org.apache.hadoop.fs.Path(tableDir, s"v=$v")
-      if (!fs.rename(staged, dest))
-        throw new IllegalStateException(
-          s"compaction publish: rename $staged -> $dest failed")
-    } finally if (fs.exists(staged)) fs.delete(staged, true): Unit
+                                    targetRows: Long)(
+      base: Int, staged: org.apache.hadoop.fs.Path): Boolean = {
+    val record = headSchema(spark, tableDir, base)
+    writeCompacted(compactionRows(spark, tableDir, base, record),
+      staged.toString, targetRows): Unit
+    MetaFs.stage(spark,
+      new org.apache.hadoop.fs.Path(staged, "_compaction"), base.toString)
+    SnapshotRecord.stage(spark, staged.toString, record)
+    true
   }
 
   /** The version this compacted version materialized, if `v` was written
@@ -500,22 +466,13 @@ object Sinks {
     v
   }
 
-  /** Claim the next version only if it is the IMMEDIATE successor of
-    * `base`: claims serialize allocation (atomic exclusive create), so
-    * `v == base + 1` proves no other writer even CLAIMED since the caller
-    * bound `base`. Otherwise the claim is released and None returned. */
-  private def claimSuccessor(spark: SparkSession, tableDir: String,
-                             base: Int): Option[Int] = {
-    val v = claimNextVersion(spark, tableDir)
-    if (v == base + 1) Some(v)
-    else { releaseClaim(spark, tableDir, v); None }
-  }
-
   /** Publish an ALREADY-STAGED data folder as the next snapshot version,
     * with a COMPLETE lost-update fence for writers whose staged output
     * DERIVES from a specific base version (thin merge-on-read deltas,
     * copy-on-write DML, partitioned-snapshot publishes): the claim must be
-    * the IMMEDIATE successor of `expectedBase` ([[claimSuccessor]]); any
+    * the IMMEDIATE successor of `expectedBase` — claims serialize
+    * allocation (atomic exclusive create), so `v == base + 1` proves no
+    * other writer even CLAIMED since the caller bound the base; any
     * intervening claim aborts the publish (claim released, staging
     * deleted, `ConcurrentModificationException`) instead of silently
     * chaining past the other writer's changes. This closes the window a
@@ -535,7 +492,9 @@ object Sinks {
                                   expectedBase: Int,
                                   tsMicros: Option[Long] = None): Int = {
     val f = staged.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = claimSuccessor(spark, tableDir, expectedBase).getOrElse {
+    val v = claimNextVersion(spark, tableDir)
+    if (v != expectedBase + 1) {
+      releaseClaim(spark, tableDir, v)
       f.delete(staged, true)
       throw new java.util.ConcurrentModificationException(
         s"fenced publish at $tableDir: staged output derives from " +
@@ -547,6 +506,48 @@ object Sinks {
       if (!f.rename(staged, dest))
         throw new IllegalStateException(s"publish: rename $staged -> $dest failed")
     }
+  }
+
+  /** Attempts a base-derived publish makes before it defers. */
+  private val DerivedAttempts = 5
+
+  /** The one retry shell of every publish whose output DERIVES from the
+    * committed head — compaction and the partitioned appends, drops, row
+    * deletes and compactions: bind the head (`base` instead, on the first
+    * attempt, when given), `stage` against it into a fresh staging dir
+    * (`prefix` plus a random suffix) that this shell OWNS — deleted on a
+    * throw, and when `stage` returns false (nothing to publish: the bound
+    * head is returned) — then [[publishStagedSnapshotFenced]]. A lost fence means another writer
+    * claimed in between, so the staged output derives from a stale base:
+    * re-bind and re-stage, `attempts` times in all, then throw
+    * `ConcurrentModificationException` — a busy table defers, it never
+    * overwrites a concurrent commit. */
+  private[graft] def publishDerived(spark: SparkSession, tableDir: String,
+                                    op: String, prefix: String,
+                                    attempts: Int = DerivedAttempts,
+                                    base: Option[Int] = None)(
+      stage: (Int, org.apache.hadoop.fs.Path) => Boolean): Int = {
+    var attempt = 0
+    while (attempt < attempts) {
+      // the STABLE pointer read: racing another writer's swap on the local
+      // checksum filesystem can tear a plain read (ChecksumException)
+      val bound = base.filter(_ => attempt == 0)
+        .orElse(snapshotCommittedStable(spark, tableDir))
+        .getOrElse(throw new IllegalStateException(
+          s"no committed snapshot at $tableDir"))
+      val staging = new org.apache.hadoop.fs.Path(tableDir,
+        prefix + java.util.UUID.randomUUID().toString.take(8))
+      val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+      try {
+        if (!stage(bound, staging)) return bound
+        try return publishStagedSnapshotFenced(spark, tableDir, staging, bound)
+        catch { case _: java.util.ConcurrentModificationException =>
+          attempt += 1 }
+      } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
+    }
+    throw new java.util.ConcurrentModificationException(
+      s"$op at $tableDir: lost the claim race $attempts times to concurrent " +
+        "writers; retry when the table quiesces")
   }
 
   /** MANIFEST CONTINUITY: a DML/overwrite/compaction on a manifest-bearing
@@ -1143,13 +1144,14 @@ object Sinks {
             s"64-hop resolver stop", e)
     }
 
-  /** Auto-compaction of the triggering commit `base`: ONE claim-fenced
-    * attempt of [[compactSnapshot]]'s body ([[compactOnto]]). Any
-    * intervening claim — i.e. any concurrent writer since — forfeits: the
-    * claim is released and the depth debt defers to THAT writer's own
-    * auto-compaction check. On a failure the claim is released too (the
-    * caller swallows the error post-commit; a leaked claim would wedge
-    * every later fenced publish). On a change-feed-enabled table the
+  /** Auto-compaction of the triggering commit `base`: ONE fenced attempt
+    * of [[compactSnapshot]]'s publish, staged from `base` itself. Any
+    * intervening claim — i.e. any concurrent writer since — forfeits
+    * without a throw: the claim is released and the depth debt defers to
+    * THAT writer's own auto-compaction check. Any other failure throws
+    * with no claim and no staging left behind (the caller swallows the
+    * error post-commit; a leaked claim would wedge every later fenced
+    * publish). On a change-feed-enabled table the
     * compacted version's empty change grain is declared via the
     * `_compaction` stamp, so `table_changes` ranges keep spanning the
     * history a plain INSERT transparently triggered compaction on.
@@ -1159,7 +1161,10 @@ object Sinks {
     * pre-existing claim fences the triggering statement itself.) */
   private[graft] def autoCompactCas(spark: SparkSession, tableDir: String,
                                     base: Int): Unit =
-    compactOnto(spark, tableDir, base, AutoCompactTargetRows): Unit
+    try publishDerived(spark, tableDir, "auto-compaction", CompactStaging,
+      attempts = 1, base = Some(base))(
+      stageCompactedVersion(spark, tableDir, AutoCompactTargetRows)): Unit
+    catch { case _: java.util.ConcurrentModificationException => () }
 
   /** Re-derive and land any committed THIN version whose feed file is
     * missing (writer crashed between the version commit and the landing).

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** PARTITIONED VERSIONED tables — the snapshot protocol × a hidden
   * directory layout (VERDICT r16 missing #5: the versioned store had no
@@ -18,16 +18,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * {{{
   *   <t>/_partspec            days:ts            (the table marker)
-  *   <t>/_partschema.json     declared schema    (reads + empty versions)
+  *   <t>/_schema.json         id floor + ALTER layer
   *   <t>/v=1/ts_day=19723/…parquet               (physically owned)
   *   <t>/v=2/_carry           19723 -> v=1/ts_day=19723   (reused, 0 bytes)
   *   <t>/v=2/ts_day=19730/…parquet               (this version's new day)
   * }}}
   *
   * Each version folder also records its own `_op` (operation + base, the
-  * `snapshot_history` classification) and `_pinschema.json` (the live
-  * schema AT PUBLISH — what a pinned `VERSION AS OF` read serves after
-  * later metadata-only ALTERs; history is immutable, including its shape).
+  * `snapshot_history` classification) and its schema record, the flat
+  * store's [[SnapshotRecord]]: `_pinschema.json`, the full schema,
+  * tombstones included, its data files were stamped under. It rides the
+  * version's rename, so a failed publish never changes a committed shape;
+  * a pinned `VERSION AS OF` read serves it, an unpinned read serves
+  * [[SnapshotRecord.at]] (the ALTER layer over it, if any).
   *
   * Carry ENTRY lines are SINGLE-HOP by construction: a materialized carry
   * holds RESOLVED table-relative paths, so entry resolution never
@@ -70,7 +73,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
 object PartitionedSnapshot {
 
   private def specPath(tableDir: String) = new Path(tableDir, "_partspec")
-  private def schemaPath(tableDir: String) = new Path(tableDir, "_partschema.json")
   private def carryPath(tableDir: String, v: Int) =
     new Path(s"$tableDir/v=$v/_carry")
 
@@ -78,42 +80,19 @@ object PartitionedSnapshot {
   def partSpec(spark: SparkSession, tableDir: String): Option[String] =
     MetaFs.read(spark, specPath(tableDir)).map(_.trim)
 
-  /** The FULL declared schema — including `__dropped_<id>` tombstones
-    * (metadata-only DROP COLUMN leaves the field in the sidecar so its
-    * parquet id can never be reused). Serving filters them
-    * ([[liveSchema]]). */
-  def declaredSchema(spark: SparkSession, tableDir: String): StructType = {
-    val txt = MetaFs.read(spark, schemaPath(tableDir))
-    require(txt.isDefined, s"$tableDir has no _partschema.json")
-    DataType.fromJson(txt.get).asInstanceOf[StructType]
-  }
+  /** The full record a read of committed `v` resolves under: `v`'s own
+    * when `pinned`, else the one an unpinned read of head `v` serves
+    * ([[SnapshotRecord.at]]). Reads serve its live columns. */
+  private[graft] def recordOf(spark: SparkSession, tableDir: String, v: Int,
+                              pinned: Boolean = false): StructType =
+    (if (pinned) SnapshotRecord.own(spark, tableDir, v)
+     else SnapshotRecord.at(spark, tableDir, v)).getOrElse(
+      throw new IllegalStateException(s"$tableDir v=$v records no schema"))
 
-  /** The declared schema minus dropped-column tombstones — what every
-    * unpinned read, append shape and change diff serves. */
-  private[graft] def liveSchema(spark: SparkSession,
-                                tableDir: String): StructType =
-    ColumnIds.live(declaredSchema(spark, tableDir))
-
-  /** Record the evolved declared schema (the SQL catalog's metadata-only
-    * ALTER writes through here; complete-or-absent). */
-  private[graft] def declareSchema(spark: SparkSession, tableDir: String,
-                                   schema: StructType): Unit =
-    MetaFs.replace(spark, schemaPath(tableDir), schema.json)
-
-  /** A version's own pinned serving schema — the live schema at its
-    * publish. Absent on pre-r18 folders (falls back to the table's
-    * current live schema). */
-  private[graft] def pinSchemaOf(spark: SparkSession, tableDir: String,
-                                 v: Int): Option[StructType] =
-    MetaFs.read(spark, new Path(s"$tableDir/v=$v/_pinschema.json"))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-
-  /** The schema a read of version `v` serves: the version's own pin when
-    * pinned, the table's current live schema otherwise. */
-  private[graft] def servingSchema(spark: SparkSession, tableDir: String,
-                                   pinnedV: Option[Int]): StructType =
-    pinnedV.flatMap(pinSchemaOf(spark, tableDir, _))
-      .getOrElse(liveSchema(spark, tableDir))
+  private def committedHead(spark: SparkSession, tableDir: String): Int =
+    graft.operators.Sinks.snapshotCommittedStable(spark, tableDir)
+      .getOrElse(throw new IllegalStateException(
+        s"no committed snapshot at $tableDir"))
 
   /** A version's `_op` record: operation name + optional base version
     * (`snapshot_history`'s classification metadata, staged with the data
@@ -131,7 +110,8 @@ object PartitionedSnapshot {
                               tableDir: String): Seq[PartLevel] = {
     val spec = partSpec(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(s"$tableDir is not a partitioned snapshot"))
-    PartitionedWorkspace.levelsOf(spec, declaredSchema(spark, tableDir))
+    PartitionedWorkspace.levelsOf(spec,
+      recordOf(spark, tableDir, committedHead(spark, tableDir)))
   }
 
   /** One partition's MAP KEY: the bare path value for single-level tables
@@ -360,63 +340,32 @@ object PartitionedSnapshot {
     else iso.read.schema(schema).parquet(rels.map(r => s"$tableDir/$r"): _*)
   }
 
-  /** Stage the version-folder metadata riders into the staging dir: the
-    * `_op` history record and the `_pinschema.json` pinned serving
-    * schema — both arrive with the data in ONE atomic rename. */
-  private def stageMeta(spark: SparkSession, staging: Path, op: String,
-                        base: Option[Int], pin: StructType): Unit = {
+  /** Stage the version's `_op` history record into the staging dir — it
+    * arrives with the data in ONE atomic rename. */
+  private def stageOp(spark: SparkSession, staging: Path, op: String,
+                      base: Option[Int]): Unit =
     MetaFs.stage(spark, new Path(staging, "_op"),
       op + base.map(b => s":$b").getOrElse(""))
-    MetaFs.stage(spark, new Path(staging, "_pinschema.json"), pin.json)
-  }
 
-  private def newStaging(tableDir: String): Path = new Path(tableDir,
-    s".psnap_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+  private val StagingPrefix = ".psnap_staging_"
 
-  /** Optimistic retry shell for every base-derived publish: bind the
-    * committed base, stage against it into a fresh staging dir this shell
-    * OWNS (any failure mid-stage deletes it — no debris), fence-publish;
-    * a lost fence means another writer committed (or claimed) in between —
-    * re-bind and RE-STAGE, because the staged content derives from a
-    * stale base. `stage` returning false is the no-op fast path (nothing
-    * matched; the empty staging dir is dropped). */
-  private def retryFenced(op: String, spark: SparkSession, tableDir: String)
-                         (stage: (Int, Path) => Boolean): Int = {
-    val maxRetries = 5
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      // STABLE pointer read: racing another writer's swap on the local
-      // checksum filesystem can tear (ChecksumException) — the shared
-      // swap-lock read retries it away
-      val committed = graft.operators.Sinks
-        .snapshotCommittedStable(spark, tableDir)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed snapshot at $tableDir"))
-      val staging = newStaging(tableDir)
-      val fs = MetaFs.fs(spark, staging)
-      val staged =
-        try stage(committed, staging)
-        catch { case t: Throwable =>
-          if (fs.exists(staging)) fs.delete(staging, true): Unit
-          throw t
+  /** Every base-derived publish: the shared fenced shell
+    * ([[graft.operators.Sinks.publishDerived]]) with the bound base's
+    * record handed to `stage`, and staged with the version's `_op` when
+    * `stage` stages anything. The manifest carry of the fenced publish is
+    * a no-op here (partitioned tables keep manifests in their leaves,
+    * never under a `_manifest/` root). */
+  private def publishDerived(spark: SparkSession, tableDir: String, op: String)(
+      stage: (Int, StructType, Path) => Boolean): Int =
+    graft.operators.Sinks.publishDerived(spark, tableDir, op, StagingPrefix) {
+      (base, staging) =>
+        val rec = recordOf(spark, tableDir, base)
+        stage(base, rec, staging) && {
+          stageOp(spark, staging, op, Some(base))
+          SnapshotRecord.stage(spark, staging.toString, rec)
+          true
         }
-      if (!staged) {
-        if (fs.exists(staging)) fs.delete(staging, true): Unit
-        return committed
-      }
-      // the flat store's fenced publish, whole: the claim must be the
-      // IMMEDIATE successor of the staged base; its manifest carry is a
-      // no-op here (partitioned tables keep manifests in their leaves, never
-      // under a `_manifest/` root)
-      try return graft.operators.Sinks.publishStagedSnapshotFenced(
-        spark, tableDir, staging, committed)
-      catch { case _: java.util.ConcurrentModificationException =>
-        attempt += 1 }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"$op at $tableDir: lost the claim race $maxRetries times — " +
-        "another writer keeps committing; retry when the table quiesces")
-  }
 
   private def targetRowsPerFile(spark: SparkSession): Long = spark.conf
     .get("graft.repartition.targetRowsPerFile", "5000000").trim.toLong
@@ -439,13 +388,10 @@ object PartitionedSnapshot {
     // never need to — published dirs are immutable, the stamp is
     // leaf-local temp+rename (complete-or-absent)
     WorkspaceDmlLock.withLock(spark, tableDir) {
-      val live = liveSchema(spark, tableDir)
+      val committed = committedHead(spark, tableDir)
+      val live = ColumnIds.live(recordOf(spark, tableDir, committed))
       val resolved = FooterStats.resolveCols(live,
         cols.filter(c => live.fieldNames.exists(_.equalsIgnoreCase(c))))
-      val committed = graft.operators.Sinks
-        .snapshotCommittedStable(spark, tableDir)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed snapshot at $tableDir"))
       val dirs = resolvedPartitions(spark, tableDir, committed).map(_._2)
       graft.Par.each(dirs)(rel => PartitionManifest.writeLeafManifest(
         spark, new Path(s"$tableDir/$rel"), live, resolved))
@@ -463,10 +409,7 @@ object PartitionedSnapshot {
   def partitionStats(spark: SparkSession, tableDir: String,
                      version: Option[Int] = None):
       Seq[(String, Int, Int, Long)] = {
-    val v = version.getOrElse(graft.operators.Sinks
-      .snapshotCommittedStable(spark, tableDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed snapshot at $tableDir")))
+    val v = version.getOrElse(committedHead(spark, tableDir))
     val conf = spark.sessionState.newHadoopConf()
     resolvedDirLists(spark, tableDir, v).map { case (key, rels) =>
       val files = rels.flatMap { rel =>
@@ -503,38 +446,18 @@ object PartitionedSnapshot {
   }
 
   /** Stage `df` in the spec's layout and commit it as the next version —
-    * v=1 for a new table (records `_partspec` + `_partschema.json`), a
-    * full materialized rewrite afterwards. Claim-allocated (concurrent
-    * writers never collide on a number); full rewrites are last-committed-
-    * wins by design, like INSERT OVERWRITE — derived statements go
-    * through the fenced paths. A rewrite of an EXISTING partitioned table
-    * runs under the table's DDL statement lock (the one `alterTable`
-    * holds) and PRESERVES the sidecar's field-id space ([[ColumnIds.rebind]])
-    * — without the lock a concurrent ALTER's sidecar write could be
-    * silently lost, and a re-stamp would reuse tombstoned ids (ADVICE
-    * r18). */
-  def writePartitioned(df: DataFrame, tableDir: String, spec: String): Int =
-    if (partSpec(df.sparkSession, tableDir).isDefined)
-      WorkspaceDmlLock.withLock(df.sparkSession, tableDir) {
-        writePartitionedImpl(df, tableDir, spec)
-      }
-    else writePartitionedImpl(df, tableDir, spec)
-
-  private def writePartitionedImpl(df: DataFrame, tableDir: String,
-                                   spec: String): Int = {
+    * v=1 for a new table (records `_partspec`), a full materialized
+    * rewrite afterwards. Claim-allocated (concurrent writers never collide
+    * on a number); full rewrites are last-committed-wins by design, like
+    * INSERT OVERWRITE — derived statements go through the fenced paths.
+    * The version's record binds like a flat full write's
+    * ([[SnapshotRecord.publish]]): kept names keep their ids, new names
+    * allocate above the table's id floor, omitted columns retire to
+    * tombstones, and a shape change runs under the table's DDL lock (the
+    * one `alterTable` holds). */
+  def writePartitioned(df: DataFrame, tableDir: String, spec: String): Int = {
     val spark = df.sparkSession
-    // inside the lock for rewrites: the sidecar read below and the write
-    // at publish form one read-modify-write against concurrent ALTERs
-    val existingSidecar: Option[StructType] = {
-      val p = schemaPath(tableDir)
-      if (partSpec(spark, tableDir).isDefined && MetaFs.fs(spark, p).exists(p))
-        Some(declaredSchema(spark, tableDir))
-      else None
-    }
-    val declared = existingSidecar.filter(ColumnIds.isStamped)
-      .map(ColumnIds.rebind(df.schema, _))
-      .getOrElse(ColumnIds.stamp(df.schema))
-    val levels = PartitionedWorkspace.levelsOf(spec, declared)
+    val levels = PartitionedWorkspace.levelsOf(spec, df.schema)
     require(levels.nonEmpty && levels.forall(!_.inSchema),
       "partitioned snapshots take hidden levels only — `key:<col>` " +
         "identity-valued levels (the column stays in the files) over at " +
@@ -542,7 +465,7 @@ object PartitionedSnapshot {
         "'key:src,days:ts'; bare identity columns route to the " +
         "partitioned workspace catalog (their hive value re-attachment " +
         "needs the live-table reader)")
-    PartitionedWorkspace.validateLevels(declared, levels)
+    PartitionedWorkspace.validateLevels(df.schema, levels)
     partSpec(spark, tableDir) match {
       case Some(existing) => require(existing == spec,
         s"$tableDir is already partitioned as '$existing'")
@@ -557,33 +480,34 @@ object PartitionedSnapshot {
             "place would serve them empty through the partitioned reader; " +
             "write the partitioned table to a fresh directory")
     }
-    val isRewrite = graft.operators.Sinks
-      .snapshotCommitted(spark, tableDir).isDefined
-    // data files and the version's pinned serving schema take the LIVE
-    // fields only; the sidecar keeps the full id space incl. tombstones
-    val live = ColumnIds.live(declared)
-    val staging = newStaging(tableDir)
-    val fs = MetaFs.fs(spark, staging)
-    try {
-      PartitionEvolution.stageLayoutWrite(
-        spark, df, live, levels, staging, targetRowsPerFile(spark))
-      stampStagedManifests(spark, tableDir, staging, live)
-      stageMeta(spark, staging, if (isRewrite) "overwrite" else "create",
-        None, live)
-      graft.operators.Sinks.publishClaimed(spark, tableDir) { v =>
-        val dest = new Path(s"$tableDir/v=$v")
-        if (!fs.rename(staging, dest))
-          throw new IllegalStateException(
-            s"partitioned snapshot publish: rename $staging -> $dest failed")
-        // markers strictly AFTER the data rename (ADVICE r17: a crash
-        // before this point must leave NO routing marker behind) and
-        // BEFORE the pointer commit (a reader resolving the new version
-        // must find them). Schema first, spec last — the spec IS the
-        // routing flip, written only once everything it routes to exists.
-        MetaFs.replace(spark, schemaPath(tableDir), declared.json)
-        MetaFs.replace(spark, specPath(tableDir), spec)
-      }
-    } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
+    val op = if (graft.operators.Sinks.snapshotCommitted(spark, tableDir)
+      .isDefined) "overwrite" else "create"
+    graft.operators.Sinks.publishWithIds(spark, tableDir, df.schema,
+        full = true) { rec =>
+      // data files take the LIVE fields; the record keeps the tombstones
+      val live = ColumnIds.live(rec)
+      val staging = new Path(tableDir,
+        s"$StagingPrefix${java.util.UUID.randomUUID().toString.take(8)}")
+      val fs = MetaFs.fs(spark, staging)
+      try {
+        PartitionEvolution.stageLayoutWrite(
+          spark, df, live, levels, staging, targetRowsPerFile(spark))
+        stampStagedManifests(spark, tableDir, staging, live)
+        stageOp(spark, staging, op, None)
+        SnapshotRecord.stage(spark, staging.toString, rec)
+        graft.operators.Sinks.publishClaimed(spark, tableDir) { v =>
+          val dest = new Path(s"$tableDir/v=$v")
+          if (!fs.rename(staging, dest))
+            throw new IllegalStateException(
+              s"partitioned snapshot publish: rename $staging -> $dest failed")
+          // the routing marker strictly AFTER the data rename (ADVICE r17:
+          // a crash before this point must leave NO marker behind) and
+          // BEFORE the pointer commit (a reader resolving the new version
+          // must find it)
+          MetaFs.replace(spark, specPath(tableDir), spec)
+        }
+      } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
+    }
   }
 
   /** ZERO-COPY partition retention: publish the next version as ONE carry
@@ -594,7 +518,7 @@ object PartitionedSnapshot {
     * Returns the committed version (unchanged if nothing matched). */
   def dropPartitions(spark: SparkSession, tableDir: String,
                      values: Seq[String]): Int =
-    retryFenced("dropPartitions", spark, tableDir) { (committed, staging) =>
+    publishDerived(spark, tableDir, "drop_partitions") { (committed, _, staging) =>
       val current = resolvedPartitions(spark, tableDir, committed)
       val drop = values.toSet
       if (!current.exists(e => drop.contains(e._1))) false
@@ -602,8 +526,6 @@ object PartitionedSnapshot {
         // everything this version serves is a CARRY: owned dirs of the
         // base become single-hop refs into the base's folder. Staged like
         // every publish — the carry file must appear complete-or-absent
-        stageMeta(spark, staging, "drop_partitions", Some(committed),
-          liveSchema(spark, tableDir))
         writeCarry(spark, new Path(staging, "_carry"),
           current.filterNot(e => drop.contains(e._1)))
         true
@@ -663,16 +585,13 @@ object PartitionedSnapshot {
     * empty batch returns the committed version unchanged (ADVICE r18: it
     * used to publish a pointless carry-only version per no-op INSERT). */
   def appendRows(spark: SparkSession, tableDir: String, df: DataFrame): Int = {
-    val live = liveSchema(spark, tableDir)
     val levels = levelsOf(spark, tableDir)
-    val shaped = df.select(live.fieldNames.map(
-      org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    val touched = touchedKeysOf(levels, shaped)
-    if (touched.isEmpty)
-      return graft.operators.Sinks.snapshotCommittedStable(spark, tableDir)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed snapshot at $tableDir"))
-    retryFenced("appendRows", spark, tableDir) { (committed, staging) =>
+    val touched = touchedKeysOf(levels, df)
+    if (touched.isEmpty) return committedHead(spark, tableDir)
+    publishDerived(spark, tableDir, "append") { (committed, rec, staging) =>
+      val live = ColumnIds.live(rec)
+      val shaped = df.select(live.fieldNames.map(
+        org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       val current = resolvedPartitions(spark, tableDir, committed)
       val depth = appendDepth(spark)
       val chainLen = current.groupBy(_._1).view.mapValues(_.size).toMap
@@ -685,7 +604,6 @@ object PartitionedSnapshot {
         PartitionEvolution.stageLayoutWrite(
           spark, shaped, live, levels, staging, targetRowsPerFile(spark))
         stampStagedManifests(spark, tableDir, staging, live)
-        stageMeta(spark, staging, "append", Some(committed), live)
         val ckpt = carryCheckpointInterval(spark)
         if (ckpt > 1 &&
             chainVersions(spark, tableDir, committed).length < ckpt)
@@ -700,7 +618,6 @@ object PartitionedSnapshot {
         PartitionEvolution.stageLayoutWrite(spark, oldRows.unionByName(shaped),
           live, levels, staging, targetRowsPerFile(spark))
         stampStagedManifests(spark, tableDir, staging, live)
-        stageMeta(spark, staging, "append", Some(committed), live)
         writeCarry(spark, new Path(staging, "_carry"), carried)
       }
       true
@@ -762,10 +679,7 @@ object PartitionedSnapshot {
         s"DELETE on partitioned snapshot $tableDir: condition " +
           s"'$f' is not expressible as a source filter — run the delete " +
           "through PartitionedSnapshot.deleteRowsWhere(cond) instead")))
-    val committed = graft.operators.Sinks
-      .snapshotCommittedStable(spark, tableDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed snapshot at $tableDir"))
+    val committed = committedHead(spark, tableDir)
     val keys = resolvedPartitions(spark, tableDir, committed)
       .map(_._1).distinct
     val candidates = keys.filter(k =>
@@ -792,10 +706,10 @@ object PartitionedSnapshot {
   def deleteRowsWhere(spark: SparkSession, tableDir: String,
                       cond: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val live = liveSchema(spark, tableDir)
     val levels = levelsOf(spark, tableDir)
-    val pruneFilters = condConjuncts(spark, tableDir, live, cond)
-    retryFenced("deleteRowsWhere", spark, tableDir) { (committed, staging) =>
+    publishDerived(spark, tableDir, "delete_rows") { (committed, rec, staging) =>
+      val live = ColumnIds.live(rec)
+      val pruneFilters = condConjuncts(spark, tableDir, live, cond)
       val current = resolvedPartitions(spark, tableDir, committed)
       // DISCOVERY PRUNE (r19, VERDICT r18 #2): before the discovery scan,
       // drop every dir whose partition values PROVE the conjunction false
@@ -819,7 +733,6 @@ object PartitionedSnapshot {
           PartitionEvolution.stageLayoutWrite(
             spark, survivors, live, levels, staging, targetRowsPerFile(spark))
           stampStagedManifests(spark, tableDir, staging, live)
-          stageMeta(spark, staging, "delete_rows", Some(committed), live)
           writeCarry(spark, new Path(staging, "_carry"), carried)
           true
         }
@@ -832,25 +745,26 @@ object PartitionedSnapshot {
     * re-clustered, zero carries) — retires accumulated carry indirection
     * and small-files debt without a write outage, and physically sheds
     * dropped-column bytes (the rewrite stages through the LIVE schema).
-    * Fenced like every derived publish. The flat store's
-    * `compactSnapshot` refuses partitioned dirs toward this.
+    * Fenced like every derived publish, through the one shell the flat
+    * store's `compactSnapshot` shares; that call refuses partitioned dirs
+    * toward this one.
     * `targetRows` overrides the session's rows-per-file sizing when given
     * (the `snapshot_compact('t', targetRows)` SQL argument threads here —
     * ADVICE r18: it was silently ignored for partitioned handles). */
   def compactTable(spark: SparkSession, tableDir: String,
                    targetRows: Option[Long] = None): Int = {
-    val live = liveSchema(spark, tableDir)
     val levels = levelsOf(spark, tableDir)
-    retryFenced("compactTable", spark, tableDir) { (committed, staging) =>
-      // read through the LIVE schema (not the version's pin): the rewrite
-      // physically sheds dropped-column bytes and adopts renamed names
+    publishDerived(spark, tableDir, "compact") { (committed, rec, staging) =>
+      // read through the head's LIVE columns (not the version's own
+      // record): the rewrite physically sheds dropped-column bytes and
+      // adopts renamed names
+      val live = ColumnIds.live(rec)
       val rows = readDirsAs(spark, tableDir, live,
         resolvedPartitions(spark, tableDir, committed).map(_._2))
       PartitionEvolution.stageLayoutWrite(
         spark, rows, live, levels, staging,
         targetRows.getOrElse(targetRowsPerFile(spark)))
       stampStagedManifests(spark, tableDir, staging, live)
-      stageMeta(spark, staging, "compact", Some(committed), live)
       true
     }
   }
@@ -876,7 +790,7 @@ object PartitionedSnapshot {
         s"no committed snapshot at $tableDir"))
     require(fromV >= 1 && toV >= fromV && toV <= committed,
       s"changesBetween range ($fromV, $toV] must be within [1, $committed]")
-    val live = liveSchema(spark, tableDir)
+    val live = ColumnIds.live(recordOf(spark, tableDir, committed))
     val steps = ((fromV + 1) to toV).map { v =>
       val prev = resolvedDirLists(spark, tableDir, v - 1).toMap
       val cur = resolvedDirLists(spark, tableDir, v).toMap
@@ -936,26 +850,23 @@ object PartitionedSnapshot {
     * O(touched partitions + batch), never the table. */
   private[graft] def readTouchedFor(spark: SparkSession, tableDir: String,
                                     df: DataFrame): DataFrame = {
-    val live = liveSchema(spark, tableDir)
     val touched = touchedKeysOf(levelsOf(spark, tableDir), df)
-    val committed = graft.operators.Sinks
-      .snapshotCommittedStable(spark, tableDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed snapshot at $tableDir"))
+    val committed = committedHead(spark, tableDir)
+    val live = ColumnIds.live(recordOf(spark, tableDir, committed))
     readDirsAs(spark, tableDir, live,
       resolvedPartitions(spark, tableDir, committed)
         .filter(e => touched(e._1)).map(_._2))
   }
 
   /** Read a version (committed pointer when None): the resolved partition
-    * dirs under the version's serving schema — its own pinned shape for an
-    * explicit version, the table's live schema for the head. */
+    * dirs under the live columns of its record ([[recordOf]]) — its own
+    * for an explicit version, the head's unpinned one otherwise. */
   def read(spark: SparkSession, tableDir: String,
            version: Option[Int] = None): DataFrame = {
     val v = version.orElse(
       graft.operators.Sinks.snapshotCommitted(spark, tableDir)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val schema = servingSchema(spark, tableDir, version)
+    val schema = ColumnIds.live(recordOf(spark, tableDir, v, version.isDefined))
     readDirsAs(spark, tableDir, schema,
       resolvedPartitions(spark, tableDir, v).map(_._2))
   }
@@ -1000,8 +911,8 @@ private[graft] class PartitionedSnapshotTable(
     PartitionedSnapshot.deleteWhere(spark, tableDir, filters): Unit
   }
 
-  private lazy val declared = PartitionedSnapshot.servingSchema(
-    spark, tableDir, if (pinned) Some(version) else None)
+  private lazy val declared = ColumnIds.live(
+    PartitionedSnapshot.recordOf(spark, tableDir, version, pinned))
   private lazy val levels = PartitionedSnapshot.levelsOf(spark, tableDir)
 
   override def name(): String = tableName

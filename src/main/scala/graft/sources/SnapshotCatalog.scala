@@ -286,10 +286,10 @@ class SnapshotCatalog extends TableCatalog
   }
 
   /** METADATA-ONLY schema evolution: ADD COLUMN, RENAME COLUMN, DROP
-    * COLUMN and widening ALTER COLUMN TYPE record the evolved schema —
-    * the ALTER layer of `_schema.json` for flat tables
-    * ([[graft.operators.Sinks.alterSnapshotSchema]]), `_partschema.json`
-    * for partitioned ones — and touch NO version folder. Every data file
+    * COLUMN and widening ALTER COLUMN TYPE record the evolved schema as
+    * the ALTER layer of `_schema.json`
+    * ([[graft.operators.Sinks.alterSnapshotSchema]]), one path for flat
+    * and partitioned tables alike, and touch NO version folder. Every data file
     * carries parquet field ids and every unpinned read resolves columns by id
     * ([[ColumnIds]]): a renamed column keeps matching old files, a
     * dropped one stays recorded as a `__dropped_<id>` tombstone that
@@ -314,16 +314,7 @@ class SnapshotCatalog extends TableCatalog
     // wins). The statement lock serializes them, and a publish that
     // changes the shape takes it too; readers never do.
     WorkspaceDmlLock.withLock(spark, dir) {
-      if (partitioned)
-        PartitionedSnapshot.declareSchema(spark, dir, ColumnIds.evolve(
-          PartitionedSnapshot.declaredSchema(spark, dir), changes,
-          surface.copy(
-            frozen = PartitionedSnapshot.levelsOf(spark, dir)
-              .map(_.sourceCol.toLowerCase).toSet,
-            frozenRole = "partition source column",
-            frozenWhy = "the level derivation and every directory on disk " +
-              "bind it; republish (writePartitioned) to change the axis")))
-      else {
+      if (!partitioned) {
         val committed = graft.operators.Sinks.snapshotCommitted(spark, dir)
           .getOrElse(throw new IllegalStateException(
             s"no committed snapshot for ${ident.name()}"))
@@ -340,11 +331,19 @@ class SnapshotCatalog extends TableCatalog
             s"cannot DROP declared row-identity column ${n(0)} of " +
               s"${ident.name()} — thin versions resolve by it; redeclare " +
               "keys (Sinks.declareSnapshotKeys) first"))
-        // the FULL record, tombstones included, and the id floor: no id
-        // is ever reused by a later ADD
-        graft.operators.Sinks.alterSnapshotSchema(spark, dir)(
-          ColumnIds.evolve(_, changes, surface, _))
       }
+      val layout =
+        if (!partitioned) surface
+        else surface.copy(
+          frozen = PartitionedSnapshot.levelsOf(spark, dir)
+            .map(_.sourceCol.toLowerCase).toSet,
+          frozenRole = "partition source column",
+          frozenWhy = "the level derivation and every directory on disk " +
+            "bind it; republish (writePartitioned) to change the axis")
+      // the FULL record, tombstones included, and the id floor: no id is
+      // ever reused by a later ADD
+      graft.operators.Sinks.alterSnapshotSchema(spark, dir)(
+        ColumnIds.evolve(_, changes, layout, _))
       loadTable(ident)
     }
   }

@@ -5,15 +5,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.operators.Sinks
 
-/** The schema record of a flat snapshot table — what [[ColumnIds]]
-  * resolves its data files by. Every id-stamped version carries its own
-  * record, `_pinschema.json` ([[stage]]): the table's full schema,
-  * tombstones included, that its data files were stamped under. It lands
-  * inside the version folder before the pointer commit, so a version and
-  * its shape become visible in one swap, and a failed or crashed publish
-  * leaves every committed version's shape as it was. The table's
-  * `_schema.json` ([[Registry]]) holds what no version carries: the id
-  * floor and the ALTER layer. A pinned read of `v` serves `v`'s own
+/** The schema record of a snapshot table, flat or partitioned — what
+  * [[ColumnIds]] resolves its data files by. Every id-stamped version
+  * carries its own record, `_pinschema.json` ([[stage]]): the table's full
+  * schema, tombstones included, that its data files were stamped under.
+  * It lands inside the version folder before the pointer commit, so a
+  * version and its shape become visible in one swap, and a failed or
+  * crashed publish leaves every committed version's shape as it was. The
+  * table's `_schema.json` ([[Registry]]) holds what no version carries:
+  * the id floor and the ALTER layer. A pinned read of `v` serves `v`'s own
   * record; an unpinned read of head `v` serves [[at]]. */
 private[graft] object SnapshotRecord {
 
@@ -52,7 +52,8 @@ private[graft] object SnapshotRecord {
     * recorded is one StructType JSON, a layer over versions without a
     * record. */
   private final case class Registry(maxId: Long, from: Set[String],
-                                    layer: Option[StructType]) {
+                                    layer: Option[StructType],
+                                    legacy: Boolean = false) {
     def render: String = s"$maxId\n${from.mkString(",")}\n${layer.fold("")(_.json)}"
   }
 
@@ -82,11 +83,27 @@ private[graft] object SnapshotRecord {
     val hit = if (fresh) null else cache.get(tableDir)
     if (hit != null) return hit
     val gen = generation.get()
-    val res = MetaFs.read(spark, new Path(tableDir, "_schema.json"))
-      .fold(Registry(0L, Set.empty, None))(parse)
+    val res = MetaFs.read(spark, new Path(tableDir, "_schema.json")).map(parse)
+      .orElse(MetaFs.read(spark, new Path(tableDir, "_partschema.json"))
+        .map(legacy(spark, tableDir, _)))
+      .getOrElse(Registry(0L, Set.empty, None))
     if (cache.size >= CacheMax) cache.clear()
     cache.compute(tableDir, (_, old) => if (generation.get() == gen) res else old): Unit
     res
+  }
+
+  /** A partitioned table written before its versions recorded their full
+    * shape: its `_partschema.json` is the evolved schema, tombstones
+    * included, that the head served. It reads as a layer over the head's
+    * own record, with its own max id as the floor; the first ALTER or
+    * shape-changing publish writes `_schema.json` in its place. */
+  private def legacy(spark: SparkSession, tableDir: String,
+                     txt: String): Registry = {
+    val layer = struct(txt)
+    val head = Sinks.snapshotCommittedStable(spark, tableDir)
+      .flatMap(own(spark, tableDir, _))
+    Registry(ColumnIds.maxId(layer), Set(head.fold(NoRecord)(ColumnIds.fingerprint),
+      ColumnIds.fingerprint(layer)), Some(layer), legacy = true)
   }
 
   /** Complete-or-absent: every unpinned read parses this file. */
@@ -146,7 +163,8 @@ private[graft] object SnapshotRecord {
     * runs under the table's DDL lock (the one ALTER takes), waiting a
     * bounded while for a live holder, so no ALTER lands between its bind
     * and its commit; if it allocates ids it raises the id floor before it
-    * lands, so two publishes never allocate one id. */
+    * lands, so two publishes never allocate one id. It also writes a
+    * [[legacy]] registry out as `_schema.json`. */
   def publish[T](spark: SparkSession, tableDir: String, head: => Option[Int],
                  incoming: StructType, full: Boolean)(
       body: StructType => T): T = {
@@ -170,8 +188,9 @@ private[graft] object SnapshotRecord {
         try {
           val reg = registry(spark, tableDir, fresh = true)
           val (rec, _) = bind(reg)
-          if (ColumnIds.maxId(rec) > reg.maxId)
-            write(spark, tableDir, reg.copy(maxId = ColumnIds.maxId(rec)))
+          if (ColumnIds.maxId(rec) > reg.maxId || reg.legacy)
+            write(spark, tableDir,
+              reg.copy(maxId = math.max(reg.maxId, ColumnIds.maxId(rec))))
           body(rec)
         } finally WorkspaceDmlLock.release(spark, lock)
     }

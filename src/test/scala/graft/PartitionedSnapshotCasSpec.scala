@@ -369,4 +369,118 @@ class PartitionedSnapshotCasSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT id, n, body FROM $cat.alt")
       .orderBy("id").collect().map(_.toSeq).toSeq == headBefore)
   }
+
+  test("a partitioned rewrite whose commit fails leaves the committed " +
+       "shape as it was; its ids are never reused") {
+    import spark.implicits._
+    import graft.sources.ColumnIds
+    val (cat, ws) = freshCatalog()
+    val dir = s"$ws/failshape"
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val ts = new java.sql.Timestamp(t0)
+    PartitionedSnapshot.writePartitioned(Seq((1L, ts, "a", 10))
+      .toDF("id", "ts", "v", "extra"), dir, "days:ts"): Unit
+    // a FILE where the commit records go: the next commit fails after its
+    // version folder has landed
+    val commits = new org.apache.hadoop.fs.Path(s"$dir/_commits")
+    fs.delete(commits, true): Unit
+    fs.create(commits, false).close()
+    // a rewrite that omits `extra` (would retire it), retypes `v` and adds
+    // `more` (allocates an id)
+    intercept[Exception] {
+      PartitionedSnapshot.writePartitioned(Seq((2L, ts, 7, "m"))
+        .toDF("id", "ts", "v", "more"), dir, "days:ts")
+    }
+    assert(Sinks.snapshotCommitted(spark, dir).contains(1))
+    val head = PartitionedSnapshot.read(spark, dir)
+    assert(head.columns.toSeq == Seq("id", "ts", "v", "extra"),
+      head.columns.toSeq)
+    assert(head.collect().map(r => (r.getLong(0), r.getString(2), r.getInt(3)))
+      .toSeq == Seq((1L, "a", 10)))
+    fs.delete(commits, true): Unit
+    // the column the failed rewrite would have retired still renames
+    spark.sql(s"ALTER TABLE $cat.failshape RENAME COLUMN extra TO kept")
+    assert(PartitionedSnapshot.read(spark, dir).columns.toSeq ==
+      Seq("id", "ts", "v", "kept"))
+    // id 5 went to the failed rewrite's `more`: the next new column gets 6
+    PartitionedSnapshot.writePartitioned(Seq((3L, ts, "c", 30, "o"))
+      .toDF("id", "ts", "v", "kept", "other"), dir, "days:ts"): Unit
+    val ids = Sinks.declaredSnapshotSchema(spark, dir).get.fields
+      .map(f => f.name -> ColumnIds.idOf(f)).toMap
+    assert(ids == Map("id" -> 1L, "ts" -> 2L, "v" -> 3L, "kept" -> 4L,
+      "other" -> 6L), ids)
+  }
+
+  test("a wedged foreign claim defers partitioned derived publishes: " +
+       "no pointer move, no staging debris, no claim of their own left") {
+    val (_, ws) = freshCatalog()
+    val dir = s"$ws/wedged"
+    seed(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // another writer holds v=2: claimed, never committed
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/_claims/v=2"), false)
+      .close()
+    Seq[(String, () => Int)](
+      "compactTable" -> (() => PartitionedSnapshot.compactTable(spark, dir)),
+      "dropPartitions" -> (() =>
+        PartitionedSnapshot.dropPartitions(spark, dir, Seq(day0.toString)))
+    ).foreach { case (name, publish) =>
+      intercept[java.util.ConcurrentModificationException](publish())
+      assert(Sinks.snapshotCommitted(spark, dir).contains(1), name)
+      assert(!fs.listStatus(new org.apache.hadoop.fs.Path(dir)).exists(
+        _.getPath.getName.startsWith(".psnap_staging_")), s"$name: staging debris")
+      val claims = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/_claims"))
+        .map(_.getPath.getName).filter(_.startsWith("v=")).toSet
+      assert(claims == Set("v=1", "v=2"), s"$name: $claims")
+    }
+    assert(PartitionedSnapshot.read(spark, dir).count() == 40)
+  }
+
+  test("a table in the earlier partitioned format still serves: " +
+       "_partschema.json is read as the registry until the next ALTER") {
+    import spark.implicits._
+    import graft.sources.ColumnIds
+    val (cat, ws) = freshCatalog()
+    val dir = s"$ws/legacy"
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def put(rel: String, txt: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/$rel"), true)
+      try out.write(txt.getBytes("UTF-8")) finally out.close()
+    }
+    val ts = new java.sql.Timestamp(t0)
+    PartitionedSnapshot.writePartitioned(Seq((1L, ts, "a", 10))
+      .toDF("id", "ts", "v", "extra"), dir, "days:ts"): Unit
+    spark.sql(s"ALTER TABLE $cat.legacy DROP COLUMN extra")
+    PartitionedSnapshot.appendRows(spark, dir,
+      Seq((2L, ts, "b")).toDF("id", "ts", "v")): Unit
+    // rewrite the table into the earlier format: each version records its
+    // live schema only, the table-level `_partschema.json` holds the
+    // evolved schema with its tombstone, and there is no `_schema.json`
+    val full = Sinks.declaredSnapshotSchema(spark, dir).get
+    assert(full.fieldNames.toSeq == Seq("id", "ts", "v", "__dropped_4"))
+    put("v=2/_pinschema.json", ColumnIds.live(full).json)
+    put("_partschema.json", full.json)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_schema.json"), false): Unit
+    Sinks.invalidateMarkerCache(dir)
+    // unpinned: the evolved schema; pinned: each version's own shape
+    val head = PartitionedSnapshot.read(spark, dir)
+    assert(head.columns.toSeq == Seq("id", "ts", "v"))
+    assert(head.count() == 2)
+    val v1 = spark.sql(s"SELECT * FROM $cat.legacy VERSION AS OF 1")
+    assert(v1.columns.toSeq == Seq("id", "ts", "v", "extra"))
+    assert(v1.collect().map(_.getInt(3)).toSeq == Seq(10))
+    assert(spark.sql(s"SELECT * FROM $cat.legacy VERSION AS OF 2")
+      .columns.toSeq == Seq("id", "ts", "v"))
+    // a re-ADD of the dropped name allocates above the tombstone and
+    // null-fills; the ALTER writes the registry in the current format
+    spark.sql(s"ALTER TABLE $cat.legacy ADD COLUMN extra INT")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_schema.json")))
+    assert(ColumnIds.idOf(Sinks.declaredSnapshotSchema(spark, dir).get("extra")) == 5L)
+    assert(spark.sql(s"SELECT extra FROM $cat.legacy").collect()
+      .forall(_.isNullAt(0)), "dropped bytes resurrected")
+    assert(spark.sql(s"SELECT COUNT(*) FROM $cat.legacy").first().getLong(0) == 2)
+  }
 }

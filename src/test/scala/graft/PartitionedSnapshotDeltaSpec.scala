@@ -205,7 +205,7 @@ class PartitionedSnapshotDeltaSpec extends AnyFunSuite {
         col("ts") < lit("2024-07-02 00:00:00").cast("timestamp")) == 3)
   }
 
-  test("writePartitioned REWRITE preserves the sidecar id space: " +
+  test("writePartitioned REWRITE preserves the record id space: " +
        "tombstones carry forward, kept names keep their ids, new names " +
        "allocate above max — and a later ALTER ADD never reuses (ADVICE r18)") {
     import spark.implicits._
@@ -222,7 +222,7 @@ class PartitionedSnapshotDeltaSpec extends AnyFunSuite {
         new java.sql.Timestamp(t0 + i * 1000L), i.toInt * 10, s"x$i"))
       .toDF("id", "ts", "n", "extra")
     assert(PartitionedSnapshot.writePartitioned(df2, dir, "days:ts") == 2)
-    val sidecar = PartitionedSnapshot.declaredSchema(spark, dir)
+    val sidecar = Sinks.declaredSnapshotSchema(spark, dir).get
     def idOf(name: String): Long =
       sidecar(name).metadata.getLong("parquet.field.id")
     assert(idOf("id") == 1L && idOf("ts") == 2L && idOf("n") == 3L)
@@ -233,7 +233,7 @@ class PartitionedSnapshotDeltaSpec extends AnyFunSuite {
     // re-ADD of the dropped NAME takes a fresh id and null-fills — the
     // rewrite kept the id space, so v=1's txt bytes can never resurrect
     spark.sql(s"ALTER TABLE $cat.rw ADD COLUMN txt STRING")
-    assert(PartitionedSnapshot.declaredSchema(spark, dir)("txt")
+    assert(Sinks.declaredSnapshotSchema(spark, dir).get("txt")
       .metadata.getLong("parquet.field.id") == 6L,
       "re-ADD reused a dropped id")
     assert(spark.sql(s"SELECT txt FROM $cat.rw").collect()
