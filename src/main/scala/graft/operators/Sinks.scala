@@ -197,12 +197,16 @@ object Sinks {
     *  2. COMMIT is a REPAIR LOOP, not a blind swap ([[commitPointerCas]]):
     *     record `_commits/v=N` (create-if-absent, after the data lands),
     *     then loop — read the pointer, target = max(recorded commits), swap
-    *     to the target if the pointer is behind, re-check. The rename is
-    *     last-writer-wins, so a slower writer can transiently demote the
-    *     pointer; the re-check sees the regression (the newer writer's
-    *     record is durable) and repairs it. Every writer exits only when
-    *     pointer ≥ max(recorded), so the pointer CONVERGES to the newest
-    *     recorded commit no matter the interleaving.
+    *     to the target if the pointer is behind, re-check. Each swap is one
+    *     atomic rename ([[MetaFs.replace]]), so a read sees the old pointer
+    *     or the new one; but the rename is last-writer-wins, so a slower
+    *     writer whose target was listed before a newer record landed can
+    *     demote the pointer. Its re-check sees the regression (the newer
+    *     record is durable) and repairs it: every writer exits only when
+    *     pointer ≥ max(recorded), so among writers that finish the pointer
+    *     CONVERGES to the newest recorded commit. A writer that crashes
+    *     right after a demoting swap leaves the pointer below a commit
+    *     another writer already returned, until the next commit repairs it.
     *
     * Consequences:
     *  - a writer crash before the record leaves `_latest` on the previous
@@ -247,7 +251,7 @@ object Sinks {
       // a pointer that cannot be read fails this publish's commit anyway;
       // binding no record then allocates fresh ids above the floor, which
       // are still unique
-      try snapshotCommittedStable(spark, tableDir)
+      try snapshotCommitted(spark, tableDir)
       catch { case scala.util.control.NonFatal(_) => None },
       incoming, full)(publish)
 
@@ -273,20 +277,11 @@ object Sinks {
       ts.toString): Unit
   }
 
-  /** Same-JVM swap serialization: `FileContext.rename(OVERWRITE)` is
-    * namenode-atomic on HDFS, but the LOCAL filesystem implements overwrite
-    * as check-delete-rename — two in-process writers can interleave and one
-    * throws. One process-wide lock removes the local race (Spark local mode,
-    * the spec's thread race); cross-process local-FS writers remain
-    * best-effort, which the repair loop's retry absorbs. */
-  private val PointerSwapLock = new Object
-
   /** Atomic pointer swap ([[MetaFs.replace]]). */
   private def swapPointer(spark: SparkSession, tableDir: String,
-                          version: Int): Unit = PointerSwapLock.synchronized {
+                          version: Int): Unit =
     MetaFs.replace(spark,
       new org.apache.hadoop.fs.Path(tableDir, "_latest"), version.toString)
-  }
 
   /** Commit timestamps (micros) per version from the `_commits/` records,
     * restricted to versions AT OR BELOW the committed pointer (a
@@ -295,15 +290,10 @@ object Sinks {
     * an empty map. */
   def snapshotCommitTimes(spark: SparkSession, tableDir: String): Map[Int, Long] = {
     val committed = snapshotCommitted(spark, tableDir).getOrElse(return Map.empty)
-    val dir = new org.apache.hadoop.fs.Path(s"$tableDir/_commits")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return Map.empty
-    fs.listStatus(dir).toSeq
-      .map(_.getPath)
-      .flatMap(p => MetaFs.versionOf(p.getName)
-        .filter(_ <= committed)
-        .flatMap(v => MetaFs.read(spark, p)
-          .map(ts => v -> ts.trim.toLong)))
+    recordedCommits(spark, tableDir).filter(_ <= committed)
+      .flatMap(v => MetaFs.read(spark,
+        new org.apache.hadoop.fs.Path(s"$tableDir/_commits/v=$v"))
+        .map(ts => v -> ts.trim.toLong))
       .toMap
   }
 
@@ -426,23 +416,13 @@ object Sinks {
   // ---- optimistic multi-writer commits -------------------------------------
 
   /** Versions already CLAIMED by some writer (data may not exist yet). */
-  private def claimedVersions(spark: SparkSession, tableDir: String): Seq[Int] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$tableDir/_claims")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap(st =>
-      MetaFs.versionOf(st.getPath.getName))
-  }
+  private def claimedVersions(spark: SparkSession, tableDir: String): Seq[Int] =
+    MetaFs.versions(spark, new org.apache.hadoop.fs.Path(s"$tableDir/_claims"))
 
   /** Every version with a commit RECORD, pointer-independent (unlike
     * [[snapshotCommitTimes]], which is the read-side view). */
-  private def recordedCommits(spark: SparkSession, tableDir: String): Seq[Int] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$tableDir/_commits")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap(st =>
-      MetaFs.versionOf(st.getPath.getName))
-  }
+  private def recordedCommits(spark: SparkSession, tableDir: String): Seq[Int] =
+    MetaFs.versions(spark, new org.apache.hadoop.fs.Path(s"$tableDir/_commits"))
 
   /** The publish every unfenced flat writer shares: claim the next version
     * ([[claimNextVersion]]), `land` its folder, then [[commitClaimed]]. */
@@ -457,13 +437,45 @@ object Sinks {
     * releases the claim unless the commit already recorded. */
   private def commitClaimed(spark: SparkSession, tableDir: String, v: Int,
                             tsMicros: Option[Long])(land: Int => Unit): Int = {
+    val claim = new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=$v")
+    val beat = ClaimBeats.scheduleWithFixedDelay(() =>
+      try MetaFs.touch(spark, claim)
+      catch { case scala.util.control.NonFatal(_) => () },
+      ClaimBeatMs, ClaimBeatMs, java.util.concurrent.TimeUnit.MILLISECONDS)
     try {
       land(v)
       carryManifest(spark, tableDir, v)
       commitPointerCas(spark, tableDir, v, tsMicros)
     } catch { case scala.util.control.NonFatal(e) =>
-      releaseClaimIfUnpublished(spark, tableDir, v); throw e }
+      releaseClaimIfUnpublished(spark, tableDir, v); throw e
+    } finally beat.cancel(false)
     v
+  }
+
+  /** While [[commitClaimed]] lands and commits, the holder refreshes its
+    * claim's modification time every [[ClaimBeatMs]], so a waiting
+    * [[publishDerived]] can tell a live writer from a crashed one: a claim
+    * not refreshed for [[ClaimLeaseMs]] (ten missed beats) has no live
+    * holder. A lapse on a live one only makes the waiter defer early. */
+  private val ClaimBeatMs = 200L
+  private val ClaimLeaseMs = 10 * ClaimBeatMs
+
+  private lazy val ClaimBeats =
+    java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
+      val t = new Thread(r, "graft-claim-heartbeat"); t.setDaemon(true); t
+    }
+
+  /** Waits while the claim at `bound + 1` is live — until the pointer
+    * leaves `bound`, the claim goes, or its lease lapses. */
+  private def awaitClaim(spark: SparkSession, tableDir: String,
+                         bound: Int): Unit = {
+    val claim = new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=${bound + 1}")
+    val fs = MetaFs.fs(spark, claim)
+    def live = try System.currentTimeMillis() -
+        fs.getFileStatus(claim).getModificationTime <= ClaimLeaseMs
+      catch { case _: java.io.FileNotFoundException => false }
+    while (live && snapshotCommitted(spark, tableDir).contains(bound))
+      Thread.sleep(ClaimBeatMs)
   }
 
   /** Publish an ALREADY-STAGED data folder as the next snapshot version,
@@ -521,29 +533,40 @@ object Sinks {
     * claimed in between, so the staged output derives from a stale base:
     * re-bind and re-stage, `attempts` times in all, then throw
     * `ConcurrentModificationException` — a busy table defers, it never
-    * overwrites a concurrent commit. */
+    * overwrites a concurrent commit. An attempt whose bound head already
+    * has a claim or a folder at head+1 cannot win the fence: it is lost
+    * without staging, and the next one first waits while that claim is
+    * live ([[awaitClaim]]: a live writer's commit moves the head). A
+    * crashed writer's claim lapses after [[ClaimLeaseMs]], and from then
+    * on every attempt is lost at once until [[vacuumOrphans]] ages the
+    * claim out — even one that would have had nothing to publish, since
+    * only staging would tell. */
   private[graft] def publishDerived(spark: SparkSession, tableDir: String,
                                     op: String, prefix: String,
                                     attempts: Int = DerivedAttempts,
                                     base: Option[Int] = None)(
       stage: (Int, org.apache.hadoop.fs.Path) => Boolean): Int = {
+    val fs = MetaFs.fs(spark, new org.apache.hadoop.fs.Path(tableDir))
     var attempt = 0
     while (attempt < attempts) {
-      // the STABLE pointer read: racing another writer's swap on the local
-      // checksum filesystem can tear a plain read (ChecksumException)
       val bound = base.filter(_ => attempt == 0)
-        .orElse(snapshotCommittedStable(spark, tableDir))
+        .orElse(snapshotCommitted(spark, tableDir))
         .getOrElse(throw new IllegalStateException(
           s"no committed snapshot at $tableDir"))
-      val staging = new org.apache.hadoop.fs.Path(tableDir,
-        prefix + java.util.UUID.randomUUID().toString.take(8))
-      val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
-      try {
-        if (!stage(bound, staging)) return bound
-        try return publishStagedSnapshotFenced(spark, tableDir, staging, bound)
-        catch { case _: java.util.ConcurrentModificationException =>
-          attempt += 1 }
-      } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=${bound + 1}")) ||
+          fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/v=${bound + 1}"))) {
+        attempt += 1
+        if (attempt < attempts) awaitClaim(spark, tableDir, bound)
+      } else {
+        val staging = new org.apache.hadoop.fs.Path(tableDir,
+          prefix + java.util.UUID.randomUUID().toString.take(8))
+        try {
+          if (!stage(bound, staging)) return bound
+          try return publishStagedSnapshotFenced(spark, tableDir, staging, bound)
+          catch { case _: java.util.ConcurrentModificationException =>
+            attempt += 1 }
+        } finally if (fs.exists(staging)) fs.delete(staging, true): Unit
+      }
     }
     throw new java.util.ConcurrentModificationException(
       s"$op at $tableDir: lost the claim race $attempts times to concurrent " +
@@ -645,40 +668,6 @@ object Sinks {
         releaseClaim(spark, tableDir, v)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** [[snapshotCommitted]] hardened for concurrent-writer windows: the
-    * LOCAL checksum filesystem renames the pointer and its .crc sidecar as
-    * two moves, so a read racing a swap can throw ChecksumException —
-    * share the swap lock (serializes in-JVM) and retry a torn
-    * cross-process read, the same discipline as [[commitPointerCas]]'s
-    * pointer read. */
-  private[graft] def snapshotCommittedStable(spark: SparkSession,
-                                             tableDir: String): Option[Int] = {
-    var attempt = 0
-    while (true) {
-      PointerSwapLock.synchronized {
-        // retry ONLY the torn-read shapes the cross-process swap race can
-        // produce (crc/data renamed as two moves on the local checksum FS:
-        // ChecksumException; a half-visible file: EOF; the exists→open
-        // window of a rename swap: FileNotFound). A persistent unrelated
-        // failure (permissions, connectivity) surfaces on the first throw
-        // instead of spinning 100 hot iterations under the JVM-wide swap
-        // lock (ADVICE r18).
-        try return snapshotCommitted(spark, tableDir)
-        catch {
-          case e @ (_: org.apache.hadoop.fs.ChecksumException |
-                    _: java.io.EOFException |
-                    _: java.io.FileNotFoundException) =>
-            if (attempt >= 100) throw e
-        }
-      }
-      attempt += 1
-      // tiny backoff OUTSIDE the lock: let the racing swap's second move
-      // land instead of re-reading the torn window back-to-back
-      Thread.sleep(math.min(2L * attempt, 50L))
-    }
-    None // unreachable
-  }
-
   /** The CAS allocation loop (move 1 of [[writeSnapshot]]'s protocol),
     * shared by every claiming publisher: max over folders, claims and the
     * pointer, then try to claim — a lost race re-reads past the winner's
@@ -686,11 +675,9 @@ object Sinks {
   private def claimNextVersion(spark: SparkSession, tableDir: String): Int = {
     var v = 0
     while (v == 0) {
-      // the STABLE pointer read: a concurrent swap on the local checksum
-      // filesystem can tear a plain read (ChecksumException)
       val next = (snapshotVersions(spark, tableDir) ++
         claimedVersions(spark, tableDir) ++
-        snapshotCommittedStable(spark, tableDir).toSeq).foldLeft(0)(math.max) + 1
+        snapshotCommitted(spark, tableDir).toSeq).foldLeft(0)(math.max) + 1
       if (MetaFs.createExclusive(spark,
           new org.apache.hadoop.fs.Path(s"$tableDir/_claims/v=$next"))) v = next
     }
@@ -708,12 +695,13 @@ object Sinks {
     * its time; a crash between record and swap leaves a timestamped orphan
     * that stays invisible (resolution only considers versions at or below
     * the pointer) until the next commit promotes it. The loop then swaps
-    * the pointer FORWARD to max(recorded commits) until it is at or past
-    * it — a pointer already there is left alone, so the pointer never
-    * moves back. Bounded: after [[CommitStallLimit]] attempts in a row
-    * without pointer progress (a `_latest` the store refuses to replace,
-    * say) it rethrows the last swap error, backing off between failed
-    * swaps like [[snapshotCommittedStable]]. */
+    * the pointer to max(recorded commits) until it reads at or past it — a
+    * pointer already there is left alone; a swap whose listing a newer
+    * record overtook can demote it, and the re-check repairs that (the
+    * crash window this leaves is in [[writeSnapshot]]'s protocol).
+    * Bounded: after [[CommitStallLimit]] attempts in a row without pointer
+    * progress (a `_latest` the store refuses to replace, say) it rethrows
+    * the last swap error, backing off between failed swaps. */
   private def commitPointerCas(spark: SparkSession, tableDir: String,
                                version: Int, tsMicros: Option[Long]): Unit = {
     writeCommitRecord(spark, tableDir, version, tsMicros)
@@ -721,16 +709,11 @@ object Sinks {
     var stalled = 0
     var last: Throwable = null
     while (true) {
-      // the pointer READ shares the swap lock: on the local checksum
-      // filesystem a concurrent swap renames the data file and its .crc
-      // sidecar as TWO moves, and an unserialized read in that window
-      // throws ChecksumException (HDFS renames atomically — the lock only
-      // matters in-JVM). A torn read from a cross-process writer still
-      // surfaces as an exception → treated as "behind, retry".
-      val cur = PointerSwapLock.synchronized {
+      // a pointer that cannot be read counts as behind: the swap below
+      // replaces it
+      val cur =
         try snapshotCommitted(spark, tableDir).getOrElse(0)
         catch { case scala.util.control.NonFatal(_) => -1 }
-      }
       val target = recordedCommits(spark, tableDir).foldLeft(version)(math.max)
       if (cur >= target) return
       if (cur > best) { best = cur; stalled = 0 }
@@ -738,9 +721,8 @@ object Sinks {
         throw Option(last).getOrElse(new IllegalStateException(
           s"snapshot commit at $tableDir: the pointer did not reach v=$target"))
       stalled += 1
-      // a concurrent swap can make this attempt fail (local-FS rename is
-      // not atomic cross-process); the loop's re-check IS the retry —
-      // convergence only needs SOME writer's swap to land
+      // the loop's re-check IS the retry: convergence only needs SOME
+      // writer's swap to land
       try swapPointer(spark, tableDir, target)
       catch { case scala.util.control.NonFatal(e) =>
         last = e
@@ -793,7 +775,7 @@ object Sinks {
     * the table's DDL lock. */
   def alterSnapshotSchema(spark: SparkSession, tableDir: String)(
       change: (StructType, Long) => StructType): Unit = {
-    val head = snapshotCommittedStable(spark, tableDir).getOrElse(
+    val head = snapshotCommitted(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
     SnapshotRecord.alter(spark, tableDir, head,
       versionSchema(spark, tableDir, head))(change)
@@ -810,7 +792,7 @@ object Sinks {
     * were recorded. */
   def declaredSnapshotSchema(spark: SparkSession, tableDir: String):
       Option[StructType] =
-    snapshotCommittedStable(spark, tableDir)
+    snapshotCommitted(spark, tableDir)
       .flatMap(SnapshotRecord.at(spark, tableDir, _))
 
   /** The schema an UNPINNED read serves: the record minus dropped-column
@@ -1839,9 +1821,11 @@ object Sinks {
     // claim) leaves a claim file no folder-keyed cleanup above ever
     // reaches — and a leaked claim at `base+1` wedges every fenced publish
     // indefinitely. Age-out by the claim FILE's mtime: a live writer's
-    // claim is younger than any sane grace, and its folder (once a byte
-    // lands) protects the number regardless.
+    // heartbeat keeps its claim younger than any sane grace, and its
+    // folder (once a byte lands) protects the number regardless.
     val claimsDir = new org.apache.hadoop.fs.Path(s"$tableDir/_claims")
+    Seq(root, claimsDir, new org.apache.hadoop.fs.Path(s"$tableDir/_commits"))
+      .foreach(MetaFs.vacuumTemps(spark, _, graceMs))
     if (fs.exists(claimsDir)) {
       val folders = snapshotVersions(spark, tableDir).toSet
       fs.listStatus(claimsDir).toSeq
@@ -1895,7 +1879,10 @@ object Sinks {
         now - s.getModificationTime > graceMs
     }
     debris.foreach(s => fs.delete(s.getPath, true))
-    debris.map(_.getPath.toString)
+    // crashed lock and sidecar writes leave metadata temp siblings
+    val temps = Seq(root, new org.apache.hadoop.fs.Path(root, "_graft_schema"))
+      .flatMap(MetaFs.vacuumTemps(spark, _, graceMs))
+    (debris.map(_.getPath) ++ temps).map(_.toString)
   }
 
   /** [[snapshotDiff]]'s engine over any two same-schema tables. */

@@ -12,7 +12,9 @@ import org.apache.hadoop.fs.permission.FsPermission
 
 /** The local filesystem every `file:` path of the engine goes through once
   * the graft extensions are loaded: Spark's parquet writer and its commit
-  * protocol, the streaming checkpoint and [[MetaFs]].
+  * protocol, the streaming checkpoint, and the listings, directories and
+  * deletes around the metadata files (whose reads and writes [[MetaFs]]
+  * makes through java.nio).
   *
   * Without the Hadoop native library (a pip-installed PySpark, a plain
   * Spark tarball on a desktop) Hadoop's `RawLocalFileSystem` forks a

@@ -90,7 +90,7 @@ object PartitionedSnapshot {
       throw new IllegalStateException(s"$tableDir v=$v records no schema"))
 
   private def committedHead(spark: SparkSession, tableDir: String): Int =
-    graft.operators.Sinks.snapshotCommittedStable(spark, tableDir)
+    graft.operators.Sinks.snapshotCommitted(spark, tableDir)
       .getOrElse(throw new IllegalStateException(
         s"no committed snapshot at $tableDir"))
 

@@ -100,7 +100,7 @@ private[graft] object SnapshotRecord {
   private def legacy(spark: SparkSession, tableDir: String,
                      txt: String): Registry = {
     val layer = struct(txt)
-    val head = Sinks.snapshotCommittedStable(spark, tableDir)
+    val head = Sinks.snapshotCommitted(spark, tableDir)
       .flatMap(own(spark, tableDir, _))
     Registry(ColumnIds.maxId(layer), Set(head.fold(NoRecord)(ColumnIds.fingerprint),
       ColumnIds.fingerprint(layer)), Some(layer), legacy = true)

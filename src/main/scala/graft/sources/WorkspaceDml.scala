@@ -88,10 +88,10 @@ private[graft] object WorkspaceDmlLock {
   /** The token currently in the lock or claim file — None when the file
     * is gone or unreadable (racing delete), Some("") for a legacy/manual
     * empty lock. Comparisons treat any read failure as "unknown ≠ mine".
-    * The lock is created exclusively WITH its token as content, the token
-    * write following the creation, so a racing reader can observe an
-    * empty just-created file — "token unknown", treated as held (never as
-    * breakable). */
+    * The lock is created exclusively WITH its token as content; on a store
+    * where the token write follows the creation ([[MetaFs.createExclusive]])
+    * a racing reader can observe an empty just-created file — "token
+    * unknown", treated as held (never as breakable). */
   private def tokenOf(spark: SparkSession, p: Path): Option[String] =
     try MetaFs.read(spark, p).map(_.trim)
     catch { case scala.util.control.NonFatal(_) => None }

@@ -930,6 +930,98 @@ class SinksSpec extends AnyFunSuite {
     s.close()
   }
 
+  test("a derived publish under a wedged foreign claim defers without staging") {
+    import spark.implicits._
+    val s = new graft.Session.Scratch
+    val table = s"${s.dir}/wedged_stage"
+    val head = Sinks.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), table)
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // a crashed writer's claim at head+1: every fence onto head is lost
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"$table/_claims/v=${head + 1}"), false).close()
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    intercept[java.util.ConcurrentModificationException] {
+      Sinks.publishDerived(spark, table, "probe", ".probe_staging_") { (_, _) =>
+        stages.incrementAndGet(); true
+      }
+    }
+    assert(stages.get == 0, s"staged ${stages.get} times under a claim it cannot win")
+    assert(Sinks.snapshotCommitted(spark, table).contains(head))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$table/_claims/v=${head + 2}")))
+    s.close()
+  }
+
+  test("a derived publish waits out a live writer's claim at head+1, then commits onto its version") {
+    import spark.implicits._
+    val s = new graft.Session.Scratch
+    val table = s"${s.dir}/live_claim"
+    Sinks.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), table)
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    // a flat writer that holds its claim at head+1 for 3 s, longer than
+    // the claim lease: its rows take that long to compute
+    def slowWriter(id: Long): (Int, scala.concurrent.Future[Int]) = {
+      val head = Sinks.snapshotCommitted(spark, table).get
+      val rows = spark.range(1).map { _ => Thread.sleep(3000L); (id, "w") }
+        .toDF("id", "v")
+      val w = scala.concurrent.Future(Sinks.writeSnapshot(rows, table))
+      val claim = new org.apache.hadoop.fs.Path(s"$table/_claims/v=${head + 1}")
+      while (!fs.exists(claim)) Thread.sleep(10L)
+      (head, w)
+    }
+    def done(w: scala.concurrent.Future[Int]): Int = scala.concurrent.Await
+      .result(w, scala.concurrent.duration.Duration("120s"))
+    val (h1, w1) = slowWriter(2L)
+    val compacted = Sinks.compactSnapshot(spark, table, targetRows = 1000L)
+    assert(done(w1) == h1 + 1)
+    assert(compacted == h1 + 2, "the compaction must commit after the writer")
+    assert(Sinks.compactionBase(spark, table, compacted).contains(h1 + 1))
+    assert(Sinks.readSnapshot(spark, table).as[(Long, String)].collect()
+      .toSeq == Seq((2L, "w")))
+    // a derived publish with nothing to publish returns the writer's head
+    val (h2, w2) = slowWriter(3L)
+    val noop = Sinks.publishDerived(spark, table, "probe", ".probe_staging_") {
+      (_, _) => false }
+    assert(done(w2) == h2 + 1)
+    assert(noop == h2 + 1)
+    s.close()
+  }
+
+  test("janitors: aged metadata temp siblings drop (table and workspace), fresh survive") {
+    import spark.implicits._
+    val s = new graft.Session.Scratch
+    val table = s"${s.dir}/temps"
+    val head = Sinks.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), table)
+    val ws = s"${s.dir}/ws_temps"
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val old = System.currentTimeMillis() - 120000L
+    def put(p: String, aged: Boolean): org.apache.hadoop.fs.Path = {
+      val f = new org.apache.hadoop.fs.Path(p)
+      fs.create(f, false).close()
+      if (aged) fs.setTimes(f, old, -1)
+      f
+    }
+    // what a crash between a temp write and its link or rename leaves
+    val aged = Seq(s"$table/_claims/.v=9.tmp.0123abcd",
+      s"$table/_commits/.v=9.tmp.4567cdef", s"$table/._latest.tmp.89abcdef",
+      s"$ws/..t.__dml_lock.tmp.deadbeef",
+      s"$ws/_graft_schema/.t.json.tmp.cafef00d").map(put(_, aged = true))
+    val fresh = put(s"$table/_claims/.v=10.tmp.00000000", aged = false)
+    val named = put(s"$ws/.t.tmp.notatemp", aged = true)
+    Sinks.vacuumOrphans(spark, table, graceMs = 60000L): Unit
+    val gone = Sinks.vacuumWorkspaceStaging(spark, ws, graceMs = 60000L)
+    assert(gone.size == 2 && gone.forall(_.contains(".tmp.")), gone)
+    aged.foreach(p => assert(!fs.exists(p), s"$p must be vacuumed"))
+    assert(fs.exists(fresh) && fs.exists(named))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$table/_claims/v=$head")))
+    assert(Sinks.snapshotCommitted(spark, table).contains(head))
+    s.close()
+  }
+
   test("every flat publish claims its version: a foreign claim at head+1 is never written into") {
     import spark.implicits._
     val s = new graft.Session.Scratch

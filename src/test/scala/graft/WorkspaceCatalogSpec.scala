@@ -143,16 +143,14 @@ class WorkspaceCatalogSpec extends AnyFunSuite {
       new Thread(() =>
         try {
           barrier.await()
-          // a held lock fails fast, as on the snapshot catalog, and the
-          // local checksum filesystem can tear a sidecar read that races a
-          // replace: the loser retries the statement
+          // a held lock fails fast, as on the snapshot catalog: the loser
+          // retries the statement
           var done = false
           while (!done)
             try { spark.sql(s"ALTER TABLE $cat.cc ADD COLUMN c$i STRING"); done = true }
             catch { case e: Throwable
-                if Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
-                  c.isInstanceOf[java.util.ConcurrentModificationException] ||
-                    c.isInstanceOf[org.apache.hadoop.fs.ChecksumException]) =>
+                if Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(
+                  _.isInstanceOf[java.util.ConcurrentModificationException]) =>
               Thread.sleep(10) }
         } catch { case t: Throwable => errors.add(t): Unit })
     }
