@@ -77,7 +77,11 @@ object GraftFunctions {
 /** `spark.sql.extensions` entry point: the native SQL functions, the
   * MOR-aware resolution rule that serves thin snapshot chains through the
   * SQL catalog ([[graft.sources.ResolveThinSnapshots]]), the
-  * `table_changes` table-valued function over the change data feed — and
+  * `table_changes` table-valued function over the change data feed, the
+  * one place that decides scan-side parallelism
+  * ([[SplitAwareRepartition]]: a costly per-row expression over a scan of
+  * too few splits gets a round-robin exchange below it, for every operator
+  * a user calls) — and
   * `file:` I/O: the live context's Hadoop configuration is pointed at
   * [[graft.sources.LocalFs]], unless the user named their own `file:`
   * classes. Without Hadoop's native library, its local filesystem forks a
@@ -347,5 +351,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         plan))
     }
     ext.injectResolutionRule(graft.sources.ResolveThinSnapshots(_))
+    ext.injectOptimizerRule(SplitAwareRepartition(_))
   }
 }

@@ -11,8 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`/root/repo/TESTDATA.md`) follow this layout.
   *
   * At cluster scale this is the thinnest possible veneer over Spark's
-  * DataSource V2 parquet reader, so predicate pushdown, column pruning and
-  * partition pruning all apply unchanged.
+  * parquet reader. Spark 4.1's default `spark.sql.sources.useV1SourceList`
+  * names parquet, so a load plans a V1 `LogicalRelation` over a
+  * `HadoopFsRelation` (the node [[SplitAwareRepartition]] matches);
+  * predicate pushdown, column pruning and partition pruning all apply
+  * unchanged.
   */
 object Tables {
   val All: Seq[String] = Seq(

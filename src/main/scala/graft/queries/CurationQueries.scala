@@ -68,9 +68,7 @@ object CurationQueries {
          |  CAST(len(regexp_extract_all(t, '${Curation.Ipv4Pattern}')) AS INT) AS n_ips,
          |  ${Curation.redactPiiSql("t")} AS red_text
          |FROM i ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // repartition before the regex count+redact stage (single-split
-      // fixture, q58 note) — also spreads the range-sort sampling pass,
-      // which re-evaluates this projection
+      // stays: regex built-ins are no kernel to SplitAwareRepartition
       Tables.load(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), injectCol.as("t"))
@@ -96,10 +94,7 @@ object CurationQueries {
          |  CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
          |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      // repartition before the chunk+digest stage (single-split fixture —
-      // see q58 note)
       val withParas = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), Curation.wordChunks(col("text"), 10).as("paras"))
       Curation.paragraphDedupStats(withParas, col("paras"), "doc_id")
         .orderBy("doc_id")
@@ -117,14 +112,10 @@ object CurationQueries {
          |  CAST(${Curation.topElementCountSql("ws")} AS DOUBLE) / CAST(len(ws) AS DOUBLE) AS top_word_frac
          |FROM c ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      // repartition + the projection-boundary operator: single-split fixture
-      // AND interpreted HOF metrics (see Curation.repetitionMetrics — the
-      // inlined form re-built the shingle array per distinct element,
-      // ~50 ms/row at sf0.1)
-      Curation.repetitionMetrics(
-          Tables.load(s, dir, "documents")
-            .repartition(s.sparkContext.defaultParallelism),
-          "text", "doc_id")
+      // the projection-boundary operator: interpreted HOF metrics (see
+      // Curation.repetitionMetrics — the inlined form re-built the shingle
+      // array per distinct element, ~50 ms/row at sf0.1)
+      Curation.repetitionMetrics(Tables.load(s, dir, "documents"), "text", "doc_id")
         .orderBy("doc_id")
     },
 
@@ -144,11 +135,7 @@ object CurationQueries {
          |FROM cg JOIN tg USING (gh)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      // repartition before the gram-hash stage: the fixture is one parquet
-      // split, which would otherwise run ~800k md5-derived gram hashes on a
-      // single core (same pattern as the multimodal decode queries)
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       Curation.decontaminationHits(
           docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
           docs.filter(pmod(col("doc_id"), lit(10)) === 0),
@@ -190,13 +177,10 @@ object CurationQueries {
     }) { (s, dir) =>
       import graft.operators.Similarity
       import graft.functions.VectorExprs
-      // repartition before quantization: the fixture is one parquet split,
-      // which would otherwise quantize + score the whole corpus on a single
-      // core (same pattern as q56/q58/q70–q72). Self-dots are computed ONCE
-      // next to the codes — the scan-side score is then a single fused
-      // integer dot per row; the query's self-dot rides the broadcast row.
+      // Self-dots are computed ONCE next to the codes — the scan-side score
+      // is then a single fused integer dot per row; the query's self-dot
+      // rides the broadcast row.
       val codes = Tables.load(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("embedding"),
           Similarity.quantizeInt8(col("embedding")).as("qv"))
         .withColumn("sd", VectorExprs.intDotF(col("qv"), col("qv")))
@@ -233,10 +217,7 @@ object CurationQueries {
         concat(when(length(c) % 5 === 0, lit("cookie ")).otherwise(lit("")),
           c,
           when(length(c) % 3 === 0, lit(".")).otherwise(lit(""))))
-      // repartition before the chunk+boilerplate HOF stage (single-split
-      // fixture, q58 note)
       Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), lines.as("ls"))
         .select(col("doc_id"), col("ls"),
           Curation.removeBoilerplateLines(col("ls"), minWords = 4).as("ks"))
@@ -295,7 +276,6 @@ object CurationQueries {
       import graft.operators.Similarity
       import graft.functions.VectorExprs
       val codes = Tables.load(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("embedding"),
           Similarity.quantizeInt4(col("embedding")).as("qv"))
         .withColumn("sd", VectorExprs.int4DotF(col("qv"), col("qv")))
@@ -341,7 +321,7 @@ object CurationQueries {
       val (m, k) = (8, 16)
       val emb = Tables.load(s, dir, "embeddings")
       val cb = Similarity.pqCodebook(emb, "embedding", "vec_id", k)
-      // repartition before encode: single-split fixture (q66 note)
+      // stays: the encode sits above a cross join, out of SplitAwareRepartition's reach
       val codes = emb.repartition(s.sparkContext.defaultParallelism)
         .crossJoin(cb)
         .select(col("vec_id"), col("embedding"),
@@ -379,9 +359,7 @@ object CurationQueries {
          |FROM dh JOIN f USING (gh)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      // repartition before the gram-hash stage (single-split fixture, q58 note)
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       Curation.dupSpanStats(docs, "text", "doc_id", w = 3)
         .orderBy("doc_id")
     },
@@ -830,10 +808,7 @@ object CurationQueries {
       s"""SELECT id AS doc_id, chunk_idx, start_tok, n_chunk_tokens, chunk_text
          |FROM ($cs) ORDER BY doc_id, chunk_idx""".stripMargin
     }) { (s, dir) =>
-      // repartition before the chunk Generate (single-split fixture, q58 note)
-      Curation.chunkSliding(
-          Tables.load(s, dir, "documents")
-            .repartition(s.sparkContext.defaultParallelism),
+      Curation.chunkSliding(Tables.load(s, dir, "documents"),
           "text", "doc_id", ChunkTokens, ChunkStride)
         .orderBy("doc_id", "chunk_idx")
     },

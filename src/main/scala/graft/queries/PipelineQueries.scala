@@ -662,7 +662,6 @@ object PipelineQueries {
       import graft.functions.VectorExprs
       val w = Similarity.hyperplaneWeights(8, AnnDim)
       val emb = Tables.load(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
       val proj = emb.select(col("vec_id"), col("embedding"),
         Similarity.randomProjection(col("embedding"), w).as("proj"))
       val q = broadcast(proj.filter(col("vec_id") === 0)
@@ -780,8 +779,7 @@ object PipelineQueries {
          |  CAST(len(regexp_extract_all(text, '${TextAnalysis.TokenPattern}')) AS INT) AS n_tokens,
          |  CAST(length(text) AS INT) AS n_chars_m
          |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // repartition before the regex token counts (single-split fixture,
-      // q58 note)
+      // stays: regex built-ins are no kernel to SplitAwareRepartition
       Tables.load(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism).select(
           col("doc_id"),
@@ -820,10 +818,7 @@ object PipelineQueries {
          |  lang
          |FROM sc ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      // repartition before the stopword-scoring HOFs (single-split fixture,
-      // q58 note)
-      Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism).select(
+      Tables.load(s, dir, "documents").select(
           col("doc_id"),
           TextAnalysis.langId(col("text")).as("lang_pred"),
           col("lang"))
@@ -851,10 +846,7 @@ object PipelineQueries {
     Q("q53_fingerprint",
       s"""SELECT doc_id, ${TextAnalysis.fingerprintSql("text")} AS fp
          |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // repartition before the fingerprint scalar stage (single-split
-      // fixture, q58 note)
       Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")
     },
@@ -1053,8 +1045,7 @@ object PipelineQueries {
     Q("q62_json_extract",
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
         |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-      // repartition before the per-row JSON synth+parse (single-split
-      // fixture, q58 note) — also spreads the range-sort sampling pass
+      // stays: get_json_object is no kernel to SplitAwareRepartition
       Streams.withJsonProp(
           Tables.load(s, dir, "events")
             .repartition(s.sparkContext.defaultParallelism), "k", "k")
@@ -1078,11 +1069,7 @@ object PipelineQueries {
         |                  c -> c // 16 = b.bucket)) AS cnt
         |FROM documents d, (SELECT unnest(generate_series(0, 15)) AS bucket) b
         |ORDER BY doc_id, bucket""".stripMargin) { (s, dir) =>
-      // decode-heavy stage: repartition to core count BEFORE the per-row
-      // ImageIO work (SCALE.md) — the fixture is one parquet split, which
-      // would otherwise serialize every encode+decode onto a single core
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       val media = Multimodal.asMedia(docs, "text", "image")
       Multimodal.histogram16(
           media.select("doc_id", "media_bytes", "media_meta"), "doc_id")
@@ -1104,9 +1091,7 @@ object PipelineQueries {
         |  CAST(list_sum(list_transform(sm, x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS energy,
         |  CAST(list_sum(sm) AS BIGINT) AS sum_s
         |FROM s ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // repartition before the per-row codec work, same reason as q70/q71
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       Multimodal.audioStats(Multimodal.asAudio(docs, "text"), "doc_id")
         .orderBy("doc_id")
     },
@@ -1122,9 +1107,7 @@ object PipelineQueries {
         |    [CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT) FOR i IN generate_series(1, length(text))]),
         |    (acc, b) -> (acc * 31 + b) % 1000000007) AS checksum
         |FROM f ORDER BY doc_id, frame_idx""".stripMargin) { (s, dir) =>
-      // repartition before the decode map for the same reason as q71
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       val media = Multimodal.asMedia(docs, "text", "image")
       Multimodal.sampleFrames(media.select("doc_id", "media_bytes", "media_meta"), "doc_id")
         .orderBy("doc_id", "frame_idx")
@@ -2564,7 +2547,6 @@ object PipelineQueries {
          |ORDER BY id_a, id_b""".stripMargin
     }) { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       val media = Multimodal.asMedia(docs, "text", "image")
       Multimodal.phashPairs(media, "doc_id", maxDist = 3)
         .orderBy("id_a", "id_b")
@@ -2610,7 +2592,6 @@ object PipelineQueries {
          |ORDER BY id_a, id_b""".stripMargin
     }) { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       Multimodal.audioFingerprintPairs(
           Multimodal.asAudio(docs, "text"), "doc_id", maxDist = 3)
         .orderBy("id_a", "id_b")
@@ -2645,7 +2626,6 @@ object PipelineQueries {
     }) { (s, dir) =>
       import graft.operators.AudioExprs
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       // NOTE: no filter on the kernel outputs — a predicate over a struct
       // field would push down and re-evaluate the whole encode+decode per
       // row (2× codec cost, measured); silent tracks emit (0,0,0) rows
@@ -3154,12 +3134,7 @@ object PipelineQueries {
       // keeps exercising the distributed trainer as its declared contract).
       val merges = TextAnalysis.bpeTrainLocal(docs, "text", k = 5)
         .map(m => (m._2, m._3))
-      // Repartition before the encode projection (the q70/q71 decode-map
-      // discipline): the fixture is one parquet file, so the per-row
-      // replace-chain encode otherwise runs 1-task — twice, because the
-      // range sort's sampling pass evaluates the child projection too.
-      docs.repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"),
+      docs.select(col("doc_id"),
           TextAnalysis.bpeSegmentCount(col("text"), merges).as("n_bpe"))
         .orderBy("doc_id")
     },
@@ -3920,7 +3895,6 @@ object PipelineQueries {
          |ORDER BY t.doc_id""".stripMargin
     }) { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       Multimodal.asMedia(docs, "text", "video")
         .select(col("doc_id"),
           graft.operators.MediaExprs.videoShots(col("media_bytes"), col("media_meta.n_bytes"),
@@ -3979,7 +3953,6 @@ object PipelineQueries {
          |ORDER BY id_a, id_b""".stripMargin
     }) { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       Multimodal.videoDhashPairs(
           Multimodal.asMedia(docs, "text", "video"), "doc_id", maxDist = 3)
         .orderBy("id_a", "id_b")
@@ -4502,9 +4475,7 @@ object PipelineQueries {
          |FROM bpe_enc ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
       val bc = bpeVocab(s, dir)
-      // repartition before the kernel encode (single-split fixture, q58 note)
       Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
           graft.functions.BpeExprs.bpeEncode(col("text"), bc).as("bpe_seg"))
         .withColumn("n_bpe",

@@ -21,6 +21,19 @@ class PlansSpec extends AnyFunSuite {
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** The documents fixture rewritten as defaultParallelism files: the
+    * at-scale shape (a multi-split scan), where `SplitAwareRepartition`
+    * adds nothing. The one-file fixture gets the rule's round-robin
+    * exchange under any kernel; the single-split twins below pin that it is
+    * the only exchange added. */
+  private lazy val splitDocs: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("plans_split_")
+      .resolve("documents").toString
+    Tables.load(spark, sf, "documents")
+      .repartition(spark.sparkContext.defaultParallelism).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   test("scan pushdown: filter reaches parquet, read schema pruned (q02 shape)") {
     val plan = formatted(SparkEntry.queries("q02_scan_pushdown")(spark, sf))
     assert(plan.contains("PushedFilters: ["), plan)
@@ -48,11 +61,19 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("minhash signature is a pure scan — zero exchanges before the signature") {
-    val sig = Dedup.minhashSignature(
-      Tables.load(spark, sf, "documents"), "text", "doc_id", k = 8, w = 5)
+    val sig = Dedup.minhashSignature(splitDocs, "text", "doc_id", k = 8, w = 5)
     val plan = sig.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("Generate"), plan) // no explode either
+  }
+
+  test("minhash signature on one split: the rule's round-robin is the only exchange") {
+    val plan = SplitPlans.physical(spark)(Dedup.minhashSignature(
+      Tables.load(spark, sf, "documents"), "text", "doc_id", k = 8, w = 5))
+    val ex = SplitPlans.exchanges(plan)
+    assert(ex.length == 1 &&
+      SplitPlans.isRuleExchange(ex.head, spark.sparkContext.defaultParallelism), plan)
+    assert(!plan.toString.contains("Generate"), plan)
   }
 
   test("exact-dedup survivor exchange carries digests, never text (q36/q80 shape)") {
@@ -252,21 +273,28 @@ class PlansSpec extends AnyFunSuite {
       exchanges.toString))
   }
 
+  private def incrementalDedupPlan(docs: DataFrame) =
+    SplitPlans.physical(spark)(Dedup.incrementalDedup(
+      docs.filter(col("source") =!= "src0"), docs.filter(col("source") === "src0"),
+      "text", "doc_id", k = 8, w = 5, bands = 4, rows = 2))
+
   test("incremental dedup: no exchange ever carries the batch text") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val docs = Tables.load(spark, sf, "documents")
-      val kept = Dedup.incrementalDedup(
-        docs.filter(col("source") =!= "src0"), docs.filter(col("source") === "src0"),
-        "text", "doc_id", k = 8, w = 5, bands = 4, rows = 2)
-      val plan = kept.queryExecution.executedPlan
-      // rejection keys (digests, band sigs, ids) may shuffle; text never does
-      val exchanges = plan.collect {
-        case e: ShuffleExchangeExec => e.child.output.map(_.name)
-      }
-      exchanges.foreach(cols => assert(!cols.contains("text"), exchanges.toString))
-    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    // rejection keys (digests, band sigs, ids) may shuffle; text never does
+    val exchanges = SplitPlans.exchanges(incrementalDedupPlan(splitDocs))
+      .map(_.child.output.map(_.name))
+    exchanges.foreach(cols => assert(!cols.contains("text"), exchanges.toString))
+  }
+
+  test("incremental dedup on one split: only the rule's round-robins carry text") {
+    val single = SplitPlans.exchanges(incrementalDedupPlan(Tables.load(spark, sf, "documents")))
+    val (added, rest) = single.partition(
+      SplitPlans.isRuleExchange(_, spark.sparkContext.defaultParallelism))
+    assert(added.nonEmpty, single.mkString("\n"))
+    rest.foreach(e => assert(!e.child.output.map(_.name).contains("text"), e.toString))
+    def kinds(es: Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]) =
+      es.map(_.outputPartitioning.getClass.getSimpleName).sorted
+    assert(kinds(rest) == kinds(SplitPlans.exchanges(incrementalDedupPlan(splitDocs))),
+      single.mkString("\n"))
   }
 
   test("rebalance seed ranking (q193): no unpartitioned window, exchanges vector-free") {
