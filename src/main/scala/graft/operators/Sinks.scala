@@ -1263,8 +1263,8 @@ object Sinks {
     * immutable-version cache: one footer, no inference job (FooterSchema
     * scaladoc); BUCKETED folders keep their data under __bucket=K subdirs
     * (no direct data file), where full inference runs. */
-  private def ownSchema(spark: SparkSession, tableDir: String, v: Int,
-                        sub: String): StructType = {
+  private[graft] def ownSchema(spark: SparkSession, tableDir: String, v: Int,
+                               sub: String): StructType = {
     val path = if (sub.isEmpty) s"$tableDir/v=$v" else s"$tableDir/v=$v/$sub"
     cachedMarker[StructType](
         spark, tableDir, v, if (sub.isEmpty) "schema" else s"schema:$sub") {
@@ -1283,25 +1283,9 @@ object Sinks {
       spark.read.schema(ownSchema(spark, tableDir, v, sub)).parquet(path), schema)
   }
 
-  /** Would Spark's own field-id reader mis-resolve materialized version `v`
-    * under the served schema? It matches a requested column by NAME when
-    * a file column of that name is requested under another id — the
-    * folder predates a `RENAME x TO y` followed by `ADD COLUMN x`. Such a
-    * head serves through the resolver ([[ColumnIds.resolve]]) until a
-    * rewrite. One memoized footer read. */
-  def idNameClash(spark: SparkSession, tableDir: String, v: Int): Boolean = {
-    val served = ColumnIds.live(headSchema(spark, tableDir, v))
-      .fields.filter(_.metadata.contains(ColumnIds.Key))
-    ownSchema(spark, tableDir, v, "").fields.exists(g =>
-      g.metadata.contains(ColumnIds.Key) &&
-        served.exists(f => ColumnIds.idOf(f) == ColumnIds.idOf(g)) &&
-        served.exists(f => f.name.equalsIgnoreCase(g.name) &&
-          ColumnIds.idOf(f) != ColumnIds.idOf(g)))
-  }
-
   /** The full record an unpinned read of committed `v` resolves under. */
-  private def headSchema(spark: SparkSession, tableDir: String,
-                         v: Int): StructType =
+  private[graft] def headSchema(spark: SparkSession, tableDir: String,
+                                v: Int): StructType =
     SnapshotRecord.at(spark, tableDir, v)
       .getOrElse(versionSchema(spark, tableDir, v))
 
@@ -1511,7 +1495,7 @@ object Sinks {
     * in `__bucket=i` subfolders of the version by `pmod(key, n)` (integral
     * keys — the canonical co-location layout two fact/dim tables share),
     * and the version carries a `_buckets` marker (`keyCol\nn`). The
-    * bucketed SQL read ([[graft.sources.BucketedSnapshotTable]]) reports
+    * bucketed SQL read ([[graft.sources.FlatSnapshotTable]]) reports
     * `KeyGroupedPartitioning(graft_bucket(n, key))`, so a join of two
     * tables bucketed the SAME way runs with ZERO exchange on either side
     * (Spark's storage-partitioned join; enable
@@ -1603,36 +1587,36 @@ object Sinks {
     * on `statCol` intersects [lo,hi] (closed interval; a file with a NULL
     * min/max — all-null column chunk — is conservatively kept), hand Spark
     * the surviving file list directly, and re-apply the exact predicate.
-    * Pruning correctness never depends on the manifest: it only SKIPS
-    * files the range test proves empty for the predicate. Returns the
-    * pruned DataFrame plus (files kept, files total) for audits. */
+    * The skip is [[graft.sources.ManifestPrune.keptFiles]] under
+    * `statCol >= lo AND statCol <= hi`, the column named as the version's
+    * files (and so its manifest) name it, by field id. Pruning correctness
+    * never depends on the manifest: it only SKIPS files the range test
+    * proves empty for the predicate. Returns the pruned DataFrame plus
+    * (files kept, files total) for audits. */
   def readSnapshotPruned(spark: SparkSession, tableDir: String,
                          statCol: String, lo: Long, hi: Long,
                          version: Option[Int] = None): (DataFrame, Int, Int) = {
     val v = version.orElse(snapshotCommitted(spark, tableDir)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val manifest = FooterSchema.read(spark, s"$tableDir/_manifest/v=$v")
-      .select(col("file"), col(s"min_$statCol").cast("long").as("lo"),
-        col(s"max_$statCol").cast("long").as("hi"))
-      .collect()
-    val total = manifest.length
-    val kept = manifest.filter { r =>
-      r.isNullAt(1) || r.isNullAt(2) ||
-        (r.getLong(1) <= hi && r.getLong(2) >= lo)
-    }.map(_.getString(0))
-    // the served columns by field id, like every read; all files pruned
-    // (valid predicate range matching no data) serves an empty frame
+    // the served columns by field id, like every read
     val schema = ColumnIds.live(
       if (version.isDefined) versionSchema(spark, tableDir, v)
       else headSchema(spark, tableDir, v))
-    val df =
-      if (kept.isEmpty)
-        ColumnIds.resolve(
-          FooterSchema.read(spark, s"$tableDir/v=$v"), schema).where(lit(false))
-      else ColumnIds.resolve(
-          FooterSchema.read(spark, kept.toIndexedSeq: _*), schema)
-        .filter(col(statCol).between(lo, hi))
-    (df, kept.length, total)
+    val stat = schema.fields.find(_.name.equalsIgnoreCase(statCol)).getOrElse(
+      throw new IllegalArgumentException(s"no column $statCol in ${schema.simpleString}"))
+    val own = ownSchema(spark, tableDir, v, "")
+    // files without the column (added after them) hold no stats for it
+    val (kept, total) = graft.sources.ManifestPrune.keptFiles(spark, tableDir, v,
+      ColumnIds.sources(own, StructType(Seq(stat))).head.toSeq.flatMap(n =>
+        Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(n, lo),
+          org.apache.spark.sql.sources.LessThanOrEqual(n, hi))))
+    // all files pruned (valid predicate range matching no data) serves an
+    // empty frame
+    val df = ColumnIds.resolve(spark.read.schema(own)
+      .parquet((if (kept.isEmpty) Seq(s"$tableDir/v=$v") else kept): _*), schema)
+    (if (kept.isEmpty) df.where(lit(false))
+     else df.filter(col(ColumnIds.quoted(stat.name)).between(lo, hi)),
+      kept.length, total)
   }
 
   /** `DESCRIBE HISTORY` for the snapshot store: one row per version

@@ -10,12 +10,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * partitioned workspace tables, flat and partitioned snapshots): a
   * column IS its `parquet.field.id`, its name is a label. Every data file
   * carries the ids and every read resolves the table's recorded schema by
-  * id — Spark's field-id matching ([[ReadConf]]) on the workspace and
-  * partitioned scans, [[resolve]] on the flat snapshot store — so a
-  * metadata-only RENAME keeps matching old files, a DROP keeps the field
-  * as a `__dropped_<id>` tombstone (its id is never reused) and a re-ADD
-  * of a dropped name takes a fresh id: old bytes read as NULL under it,
-  * never resurrected. How ids are assigned, carried onto writes, resolved
+  * id, so a metadata-only RENAME keeps matching old files, a DROP keeps
+  * the field as a `__dropped_<id>` tombstone (its id is never reused) and
+  * a re-ADD of a dropped name takes a fresh id: old bytes read as NULL
+  * under it, never resurrected. The flat snapshot store decides the
+  * matching itself ([[sources]]): its frames resolve by projection
+  * ([[resolve]]) and its SQL scans request each file column under its own
+  * name ([[readSchema]]), so no reader setting is involved. Spark's
+  * field-id reader ([[ReadConf]]) serves only the workspace tables and
+  * the partitioned snapshots, whose scans span files with different own
+  * names. How ids are assigned, carried onto writes, resolved
   * and evolved by `ALTER TABLE` is decided here and nowhere else. */
 private[graft] object ColumnIds {
 
@@ -46,16 +50,36 @@ private[graft] object ColumnIds {
     * column's, and a widened type casts up. A plain projection over a
     * by-name read, it needs no reader setting and holds on every reader
     * path and session the plan later runs on; filters push through it. */
-  def resolve(df: DataFrame, target: StructType): DataFrame = {
-    val own = df.schema.fields
-    val byId = own.filter(_.metadata.contains(Key)).map(f => idOf(f) -> f.name).toMap
-    df.select(target.fields.toSeq.map { t =>
-      val src =
-        if (t.metadata.contains(Key) && byId.nonEmpty) byId.get(idOf(t))
-        else own.find(_.name.equalsIgnoreCase(t.name)).map(_.name)
-      src.fold(lit(null))(n => col(quoted(n)))
-        .cast(t.dataType).as(t.name, t.metadata)
+  def resolve(df: DataFrame, target: StructType): DataFrame =
+    df.select(target.fields.toSeq.zip(sources(df.schema, target)).map {
+      case (t, src) =>
+        src.fold(lit(null))(n => col(quoted(n))).cast(t.dataType).as(t.name, t.metadata)
     }: _*)
+
+  /** The file column that serves each column of `target` in files whose
+    * own schema is `own`: the one with the same field id (by name when
+    * either side carries none); None when the files lack it. The one id
+    * decision behind [[resolve]] and [[readSchema]]. */
+  def sources(own: StructType, target: StructType): Seq[Option[String]] = {
+    val byId = own.fields.filter(_.metadata.contains(Key)).map(f => idOf(f) -> f.name).toMap
+    target.fields.toSeq.map { t =>
+      if (t.metadata.contains(Key) && byId.nonEmpty) byId.get(idOf(t))
+      else own.find(_.name.equalsIgnoreCase(t.name)).map(_.name)
+    }
+  }
+
+  /** What a parquet scan of files whose own schema is `own` requests so
+    * that its output is `target`, column for column: each column under
+    * the own name of the file column that serves it ([[sources]]) with
+    * the target's type, or under an unused placeholder name where the
+    * files lack it (the reader fills it with NULL). No field-id metadata
+    * and every column nullable, so any reader matches by name. */
+  def readSchema(own: StructType, target: StructType): StructType = {
+    val taken = own.fieldNames.map(_.toLowerCase).toSet
+    val absent = Iterator.from(0).map(i => s"__absent_$i").filterNot(taken)
+    StructType(target.fields.zip(sources(own, target)).map { case (t, src) =>
+      StructField(src.getOrElse(absent.next()), t.dataType, nullable = true)
+    })
   }
 
   /** A column name as a backquoted identifier. */

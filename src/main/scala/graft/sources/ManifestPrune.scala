@@ -167,31 +167,20 @@ object ManifestPrune {
     }.map(_.getString(mdf.columns.indexOf("file"))).toSeq
     (kept, total)
   }
-}
 
-/** A PINNED manifest-bearing snapshot version served through SQL
-  * (`VERSION/TIMESTAMP AS OF`): read-only by contract (history is
-  * immutable), reads go through [[ManifestPrune]]-backed file skipping
-  * via the bridge scan builder. Plain `Table` by composition — the r13
-  * FileTable-fallback lesson. */
-private[sources] class ManifestSnapshotTable(
-    tableName: String,
-    spark: SparkSession,
-    tableDir: String,
-    version: Int)
-  extends org.apache.spark.sql.connector.catalog.Table
-  with org.apache.spark.sql.connector.catalog.SupportsRead {
-
-  override def name(): String = tableName
-  override lazy val schema: org.apache.spark.sql.types.StructType =
-    FooterSchema.require(spark, s"$tableDir/v=$version")
-  override def capabilities():
-      java.util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    java.util.Set.of(
-      org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ)
-  override def newScanBuilder(
-      options: org.apache.spark.sql.util.CaseInsensitiveStringMap):
-      org.apache.spark.sql.connector.read.ScanBuilder =
-    new org.apache.spark.sql.graftbridge.ManifestPrunedScanBuilder(
-      tableName, spark, tableDir, version, schema, options)
+  /** The paths a scan of `version` under `pushed` reads: [[keptFiles]],
+    * or the whole version folder when the manifest cannot be read
+    * (unpruned planning, always correct) — the manifest is an
+    * optimization, never the correctness path. */
+  def prunedPaths(spark: SparkSession, tableDir: String, version: Int,
+                  pushed: Seq[sources.Filter]): Seq[String] =
+    try keptFiles(spark, tableDir, version, pushed)._1
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(ManifestPrune.getClass).warn(
+          s"manifest read for $tableDir v=$version failed; serving the " +
+            s"FULL version unpruned (delete _manifest/v=$version or " +
+            s"rewrite with writeSnapshotWithManifest)", e)
+        Seq(s"$tableDir/v=$version")
+    }
 }

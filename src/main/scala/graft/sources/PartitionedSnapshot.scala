@@ -976,8 +976,7 @@ private[graft] class PartitionedSnapshotTable(
             declared.fields.find(_.name.equalsIgnoreCase(f.name))
               .getOrElse(f)))
         override def build(): org.apache.spark.sql.connector.read.Scan =
-          new BucketedScan(spark, tableName, tableDir, kept, required,
-            keyCol, n)
+          new BucketedScan(spark, tableName, kept, required, keyCol, n)
       }
     case _ =>
       // field-id resolution for every SQL scan: a post-RENAME read must

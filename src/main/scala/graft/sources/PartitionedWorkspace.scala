@@ -796,7 +796,7 @@ private[sources] class PartitionedWorkspaceTable(
               declaredFull.fields.find(_.name.equalsIgnoreCase(f.name))
                 .getOrElse(f)))
           override def build(): Scan = new BucketedScan(spark, tableName,
-            dir, kept, required, keyCol, n)
+            kept, required, keyCol, n)
         }
       case hidden =>
         // hidden temporal level (days/hours/months): serve the LEAF

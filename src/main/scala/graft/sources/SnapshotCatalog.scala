@@ -5,8 +5,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -26,14 +24,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * read resolves ONLY through the `_latest` pointer (never folder listings
   * — the [[graft.operators.Sinks.readSnapshot]] crash-orphan rule), so a
   * concurrent or crashed writer is invisible to SQL readers too. Each
-  * resolved version is served as Spark's own `ParquetTable`, so pushdown /
-  * pruning / vectorization apply unchanged.
+  * resolved version of a flat table is served by one table class,
+  * [[FlatSnapshotTable]] (head or pinned; thin, bucketed and
+  * manifest-bearing versions are properties of its scan and DML
+  * contract), whose scans are Spark's own parquet scans with columns
+  * resolved by field id inside the scan, so pushdown / pruning /
+  * vectorization apply unchanged; a partitioned table's by
+  * [[PartitionedSnapshotTable]].
   *
   * Every WRITE is a VERSION (r13): `CREATE TABLE`/CTAS publish v=1 through
   * the atomic protocol, `INSERT INTO` publishes a keyless thin APPEND,
   * `INSERT OVERWRITE` a new materialized version, and DML
   * (DELETE/UPDATE/MERGE) publishes copy-on-write or O(delta) thin
-  * versions ([[SnapshotDmlTable]]/[[ThinDeltaOperation]]) — nothing ever
+  * versions ([[FlatSnapshotTable]]/[[ThinDeltaOperation]]) — nothing ever
   * reopens a committed `v=N` folder. `TIMESTAMP AS OF` resolves through
   * the per-version `_commits/` records the protocol writes just before
   * each pointer swap (newest version committed ≤ ts; versions remain the
@@ -95,65 +98,22 @@ class SnapshotCatalog extends TableCatalog
     dirEntries().find(_.equalsIgnoreCase(ident.name()))
       .getOrElse(throw new NoSuchTableException(ident.namespace() :+ ident.name()))
 
-  /** Is this session MOR-aware? Thin chains are served through a marker
-    * table that [[ResolveThinSnapshots]] expands at analysis time — the
-    * rule rides `spark.sql.extensions=graft.GraftExtensions`. A session
-    * without it gets the r12 guided error instead of an unscannable
-    * marker. */
-  private def morAware: Boolean =
-    SparkSession.active.sessionState.analyzer.extendedResolutionRules
-      .exists(_.isInstanceOf[ResolveThinSnapshots])
-
-  /** Serving a thin merge-on-read version needs the MOR-aware resolution
-    * rule (the chain resolver cannot be expressed as a DSv2 file scan —
-    * the same contract Iceberg puts on non-MOR-aware readers): with the
-    * graft extensions active a marker table expands into the resolver's
-    * plan; without them, compact to serve. */
-  private def thinTable(tableDir: String, version: Int,
-                        deletable: Boolean): Table = {
-    if (!morAware)
-      throw new UnsupportedOperationException(
-        s"$tableDir v=$version is a merge-on-read chain; this session lacks " +
-          "the MOR-aware resolution rule — set spark.sql.extensions=" +
-          "graft.GraftExtensions to serve it, or materialize it first " +
-          "(Sinks.compactSnapshot; Sinks.readSnapshot resolves it directly)")
-    new ThinSnapshotTable(s"$tableDir@v$version", SparkSession.active,
-      s"$workspace/$tableDir", version, deletable)
-  }
-
-  private def serve(tableDir: String, version: Int): Table = {
-    val vDir = s"$workspace/$tableDir/v=$version"
-    val vPath = new org.apache.hadoop.fs.Path(vDir)
+  /** The table serving `version` of table `t`: the head (`pinned = false`,
+    * DML-capable — each statement publishes a NEW version, the one read is
+    * never touched) or a read-only `VERSION/TIMESTAMP AS OF` read. */
+  private def serve(t: String, version: Int, pinned: Boolean): Table = {
+    val spark = SparkSession.active
+    val dir = s"$workspace/$t"
+    val vPath = new org.apache.hadoop.fs.Path(s"$dir/v=$version")
     if (!fs(vPath).exists(vPath) || !fs(vPath).getFileStatus(vPath).isDirectory)
-      throw new IllegalArgumentException(
-        s"snapshot version $version does not exist under $tableDir")
-    if (PartitionedSnapshot.partSpec(SparkSession.active,
-        s"$workspace/$tableDir").isDefined)
-      new PartitionedSnapshotTable(s"$tableDir@v$version", SparkSession.active,
-        s"$workspace/$tableDir", version, pinned = true)
-    else if (graft.operators.Sinks.thinBase(SparkSession.active,
-        s"$workspace/$tableDir", version).isDefined)
-      thinTable(tableDir, version, deletable = false)
-    // a pinned materialized version serves its own footer schema — the
-    // schema recorded for it, names as committed — on the plain /
-    // manifest / bucketed fast paths
-    else graft.operators.Sinks.bucketedLayout(SparkSession.active,
-        s"$workspace/$tableDir", version) match {
-      case Some((keyCol, n)) =>
-        new BucketedSnapshotTable(s"$tableDir@v$version", SparkSession.active,
-          s"$workspace/$tableDir", version, keyCol, n)
-      case None if ManifestPrune.exists(SparkSession.active,
-          s"$workspace/$tableDir", version) =>
-        // manifest-bearing version: file skipping from the driver-side
-        // stats manifest reaches SQL readers (the r13 gap — the manifest
-        // existed but only Sinks.readSnapshotPruned consulted it)
-        new ManifestSnapshotTable(s"$tableDir@v$version", SparkSession.active,
-          s"$workspace/$tableDir", version)
-      case None =>
-        ParquetTable(s"$tableDir@v$version", SparkSession.active,
-          CaseInsensitiveStringMap.empty(), Seq(vDir), None,
-          classOf[ParquetFileFormat])
-    }
+      throw (
+        if (pinned) new IllegalArgumentException(
+          s"snapshot version $version does not exist under $t")
+        else new IllegalStateException(
+          s"committed snapshot v=$version missing under $t"))
+    if (PartitionedSnapshot.partSpec(spark, dir).isDefined)
+      new PartitionedSnapshotTable(s"$t@v$version", spark, dir, version, pinned)
+    else new FlatSnapshotTable(s"$t@v$version", spark, dir, version, pinned)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -161,42 +121,7 @@ class SnapshotCatalog extends TableCatalog
     val committed = graft.operators.Sinks
       .snapshotCommitted(SparkSession.active, s"$workspace/$t")
       .getOrElse(throw new IllegalStateException(s"no committed snapshot for $t"))
-    // the UNPINNED table is DML-capable: DELETE/UPDATE/MERGE publish a NEW
-    // immutable version through the claim-CAS protocol — the version being
-    // read is never touched (see [[SnapshotDmlTable]]). Pinned reads
-    // (VERSION/TIMESTAMP AS OF via serve()) stay read-only. A thin HEAD is
-    // served through the MOR marker — readable, INSERT-capable, and
-    // row-level-DML-capable (each statement chains another thin hop).
-    val vDir = s"$workspace/$t/v=$committed"
-    val vPath = new org.apache.hadoop.fs.Path(vDir)
-    if (!fs(vPath).exists(vPath))
-      throw new IllegalStateException(
-        s"committed snapshot v=$committed missing under $t")
-    if (PartitionedSnapshot.partSpec(SparkSession.active,
-        s"$workspace/$t").isDefined)
-      // the partitioned-snapshot HEAD is INSERT-capable (each statement a
-      // fenced O(touched) appendRows version, r18); retention/rewrites
-      // stay the explicit PartitionedSnapshot maintenance calls + TVFs
-      new PartitionedSnapshotTable(s"$t@v$committed", SparkSession.active,
-        s"$workspace/$t", committed, pinned = false)
-    else if (graft.operators.Sinks.thinBase(SparkSession.active,
-        s"$workspace/$t", committed).isDefined ||
-        graft.operators.Sinks.idNameClash(SparkSession.active,
-          s"$workspace/$t", committed))
-      // a materialized head whose files Spark's field-id reader would
-      // mis-resolve serves through the resolver marker too
-      thinTable(t, committed, deletable = true)
-    else graft.operators.Sinks.bucketedLayout(SparkSession.active,
-        s"$workspace/$t", committed) match {
-      case Some((keyCol, n)) =>
-        // bucketed versions are read-only LAYOUT artifacts (the point is
-        // the reported partitioning); republish to change them
-        new BucketedSnapshotTable(s"$t@v$committed", SparkSession.active,
-          s"$workspace/$t", committed, keyCol, n)
-      case None =>
-        new SnapshotDmlTable(s"$t@v$committed", SparkSession.active,
-          s"$workspace/$t", vDir)
-    }
+    serve(t, committed, pinned = false)
   }
 
   /** SQL `VERSION AS OF <v>`. `toIntOption`, not digits-then-`toInt`: an
@@ -206,7 +131,7 @@ class SnapshotCatalog extends TableCatalog
     val v = version.toIntOption.filter(_ >= 0).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot versions are non-negative integers, got '$version'"))
-    serve(resolve(ident), v)
+    serve(resolve(ident), v, pinned = true)
   }
 
   /** SQL `TIMESTAMP AS OF <ts>`: resolve to the newest version committed
@@ -218,7 +143,7 @@ class SnapshotCatalog extends TableCatalog
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val t = resolve(ident)
     serve(t, graft.operators.Sinks.snapshotVersionAt(
-      SparkSession.active, s"$workspace/$t", timestampMicros))
+      SparkSession.active, s"$workspace/$t", timestampMicros), pinned = true)
   }
 
   /** SQL-native table lifecycle (r13): `CREATE TABLE` publishes v=1 as an

@@ -642,213 +642,6 @@ private[sources] class CowOperation(
     }
 }
 
-/** The snapshot catalog's DML-capable table: the COMMITTED version served
-  * as a plain `ParquetTable`, plus row-level DML that publishes a NEW
-  * immutable version instead of touching the one being read —
-  * `DELETE FROM snap.t` / `UPDATE snap.t` / `MERGE INTO snap.t` each land
-  * their copy-on-write output in a staging folder and commit it through
-  * [[graft.operators.Sinks.publishStagedSnapshotFenced]] (claim CAS fenced
-  * on the bound version + rename + repair-loop pointer commit). Consequences a takedown pipeline needs:
-  * the pre-DML version stays pinned-readable (`VERSION AS OF`), the diff
-  * between versions IS the audited change set, a crash mid-DML leaves an
-  * invisible orphan, and concurrent writers serialize on version claims.
-  * PINNED reads (`VERSION AS OF` / `TIMESTAMP AS OF`) stay read-only —
-  * rewriting history is not a thing. */
-private[sources] class SnapshotDmlTable(
-    tableName: String,
-    spark: SparkSession,
-    tableDir: String,
-    committedDir: String)
-  extends org.apache.spark.sql.connector.catalog.Table
-  with org.apache.spark.sql.connector.catalog.SupportsRead
-  with org.apache.spark.sql.connector.catalog.SupportsWrite
-  with SupportsDelete with SupportsRowLevelOperations {
-
-  /** The version this handle's DML derives from (the committed pointer at
-    * loadTable time). */
-  private val boundVersion: Int =
-    committedDir.split("v=").last.toInt
-
-  /** The record a copy-on-write rewrite stamps its files with and stages
-    * as its version's own ([[SnapshotRecord.stage]]). */
-  private lazy val boundRecord: Option[StructType] =
-    graft.operators.Sinks.declaredSnapshotSchema(spark, tableDir)
-
-  override def name(): String = tableName
-
-  /** Declared row-identity columns surface NON-NULLABLE: declaring keys
-    * asserts identity (nulls would be meaningless), and Spark's delta
-    * rewrite refuses nullable row IDs outright. A schema-evolved table
-    * (ALTER TABLE ADD COLUMN) serves its DECLARED schema — the bound
-    * version's files null-fill the added columns natively in the parquet
-    * reader. */
-  override lazy val schema: StructType = {
-    val base = graft.operators.Sinks.servedSnapshotSchema(spark, tableDir)
-      .getOrElse(graft.sources.FooterSchema.require(spark, committedDir))
-    graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir) match {
-      case Some(keys) => StructType(base.map(f =>
-        if (keys.exists(_.equalsIgnoreCase(f.name))) f.copy(nullable = false)
-        else f))
-      case None => base
-    }
-  }
-
-  /** COMPOSITION, not FileTable inheritance, deliberately (r13 bugfix):
-    * Spark's `FallBackFileSourceV2` rewrites INSERT on any `FileTable`
-    * into a V1 insert that writes INTO the committed version folder —
-    * silently MUTATING pinned history. As a plain `Table`, INSERT stays on
-    * the V2 path where [[newWriteBuilder]] publishes a NEW version; reads
-    * still delegate to a genuine `ParquetTable` scan builder. */
-  override def capabilities():
-      java.util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    java.util.Set.of(
-      org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ,
-      org.apache.spark.sql.connector.catalog.TableCapability.V1_BATCH_WRITE,
-      org.apache.spark.sql.connector.catalog.TableCapability.OVERWRITE_BY_FILTER,
-      org.apache.spark.sql.connector.catalog.TableCapability.TRUNCATE)
-
-  def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // columns resolve by field id: a renamed column keeps matching the
-    // bound version's files, a re-added one null-fills over dropped bytes
-    val opts = ColumnIds.withReadOption(options)
-    // a manifest-bearing committed version serves with driver-side file
-    // skipping; the COW DML scan rides the same builder, which is safe by
-    // the skip contract (a file drops only when the pushed predicate is
-    // provably false for every row it holds)
-    if (ManifestPrune.exists(spark, tableDir, boundVersion))
-      new org.apache.spark.sql.graftbridge.ManifestPrunedScanBuilder(
-        tableName, spark, tableDir, boundVersion, schema, opts)
-    else
-      ParquetTable(tableName, spark, opts, Seq(committedDir), Some(schema),
-        classOf[ParquetFileFormat]).newScanBuilder(opts)
-  }
-
-  /** SQL INSERT publishes a VERSION, never touches v=N in place:
-    * `INSERT INTO` = a keyless thin APPEND (O(batch) bytes, fenced on this
-    * handle's bound version); `INSERT OVERWRITE` = a new MATERIALIZED
-    * version holding exactly the query result (history stays pinned). */
-  def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with org.apache.spark.sql.connector.write.SupportsOverwrite {
-      private var overwriteAll = false
-      override def truncate(): WriteBuilder = { overwriteAll = true; this }
-      override def overwrite(filters: Array[sources.Filter]): WriteBuilder = {
-        require(filters.forall(_.isInstanceOf[sources.AlwaysTrue]),
-          "snapshot tables support full INSERT OVERWRITE only (a new " +
-            "materialized version); use DML for partial rewrites")
-        overwriteAll = true; this
-      }
-      override def build(): Write = new org.apache.spark.sql.connector.write.V1Write {
-        override def toInsertableRelation: sources.InsertableRelation =
-          new sources.InsertableRelation {
-            override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-              if (overwrite || overwriteAll)
-                graft.operators.Sinks.writeSnapshot(data, tableDir): Unit
-              else
-                graft.operators.Sinks.appendSnapshotRows(spark, tableDir, data,
-                  expectedBase = Some(boundVersion)): Unit
-            }
-          }
-      }
-    }
-
-  private def stagingPath(): Path =
-    new Path(tableDir,
-      s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-
-  private def discard(p: Path): Unit = {
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (f.exists(p)) f.delete(p, true): Unit
-  }
-
-  /** OPTIMISTIC CONFLICT DETECTION: this handle's DML output derives from
-    * [[boundVersion]] — publishing it after another writer committed a
-    * newer version would silently DISCARD that writer's changes (the
-    * classic lost update). The cheap pointer pre-check catches a conflict
-    * that already committed (fast, friendly error); the FENCED publish
-    * ([[graft.operators.Sinks.publishStagedSnapshotFenced]]) closes the
-    * remaining window completely — claims serialize allocation, so the
-    * publish only lands if its claim is `boundVersion + 1`, i.e. no other
-    * writer even claimed since this handle was bound. A conflicted
-    * statement aborts with its staging discarded; the caller re-reads and
-    * retries. */
-  private def publishIfUnconflicted(staged: Path): Unit = {
-    val cur = graft.operators.Sinks.snapshotCommitted(spark, tableDir)
-    if (!cur.contains(boundVersion)) {
-      discard(staged)
-      throw new java.util.ConcurrentModificationException(
-        s"$tableName: table moved from v=$boundVersion to v=${cur.getOrElse(0)} " +
-          "during DML — re-read and retry the statement")
-    }
-    boundRecord.foreach(SnapshotRecord.stage(spark, staged.toString, _))
-    graft.operators.Sinks.publishStagedSnapshotFenced(
-      spark, tableDir, staged, boundVersion): Unit
-  }
-
-  override def canDeleteWhere(filters: Array[sources.Filter]): Boolean =
-    filters.forall(WorkspaceDml.toColumn(_).isDefined)
-
-  override def deleteWhere(filters: Array[sources.Filter]): Unit = {
-    val cond = filters.flatMap(WorkspaceDml.toColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    // resolve the SERVED schema by field id (not bare footers): a
-    // predicate on a column added by ALTER must resolve — null in
-    // pre-ALTER files — and a renamed one must match its old-named files
-    def boundRead = ColumnIds.resolve(
-      FooterSchema.read(spark, committedDir),
-      StructType(schema.map(_.copy(nullable = true))))
-    graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir) match {
-      case Some(keyCols) =>
-        // declared row identity ⇒ THIN merge-on-read delete: one filtered
-        // scan of the bound version emits the MATCHED KEYS (predicate
-        // pushdown reaches the parquet scan), and the published version
-        // costs O(keys) bytes instead of a whole-table rewrite — the
-        // takedown cost model a 100 TB table demands. Fenced on this
-        // handle's bound version, same as the COW path.
-        val keys = boundRead
-          .filter(coalesce(cond, lit(false)))
-          .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-        graft.operators.Sinks.deleteSnapshotKeys(spark, tableDir, keys,
-          keyCols, expectedBase = Some(boundVersion)): Unit
-      case None =>
-        val remaining = boundRead
-          .filter(!coalesce(cond, lit(false)))
-        // stage the new version's full contents, then the conditional
-        // publish — data-complete before any pointer moves, conflicts
-        // detected
-        val staged = stagingPath()
-        try {
-          graft.operators.Sinks.microsBound(remaining).write.parquet(staged.toString)
-          publishIfUnconflicted(staged)
-        } catch { case t: Throwable => discard(staged); throw t }
-    }
-  }
-
-  /** Row-level UPDATE/MERGE/non-translatable DELETE: with DECLARED row
-    * identity the statement publishes an O(delta) THIN version through
-    * Spark's delta rewrite ([[ThinDeltaOperation]] — pruned scan of the
-    * touched rows, per-task delta files, fenced publish); without declared
-    * keys it stays the whole-table copy-on-write version publish. */
-  override def newRowLevelOperationBuilder(
-      info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    new RowLevelOperationBuilder {
-      override def build(): RowLevelOperation =
-        graft.operators.Sinks.snapshotDeclaredKeys(spark, tableDir) match {
-          case Some(keyCols) =>
-            new ThinDeltaOperation(spark, tableDir, boundVersion,
-              keyCols, info.command(),
-              opts => SnapshotDmlTable.this.newScanBuilder(opts))
-          case None =>
-            new CowOperation(
-              opts => SnapshotDmlTable.this.newScanBuilder(opts),
-              boundRecord,
-              info.command(), s"${tableName}__vdml",
-              () => stagingPath(),
-              publishIfUnconflicted,
-              discard)
-        }
-    }
-}
-
 /** Group-based `ReplaceData` rows arrive tagged: the rewrite prepends a
   * `__row_operation` INT (RowDeltaUtils.OPERATION_COLUMN) to every row, and
   * Spark's write exec only strips it when the operation requires METADATA
