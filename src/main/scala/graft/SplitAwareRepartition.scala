@@ -3,7 +3,8 @@ package graft
 import scala.annotation.tailrec
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, UserDefinedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, HigherOrderFunction,
+  SortOrder, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Collect, First, Last, ListAgg}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -26,7 +27,17 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * higher-order function or a UDF, in a projection or generator: a filter's
   * condition would be pushed back below the exchange.
   *
-  * Round-robin changes which rows meet in which task and in what order, so
+  * Under a global sort the exchange is the sort's own. Where a prefix of
+  * the sort keys are scan columns, passed up the chain unchanged or renamed
+  * by an alias (a generator's output is not one), the rule puts
+  * `RepartitionByExpression(prefix, n)` above the scan instead: a
+  * `RangePartitioning(n)` exchange, again never coalesced by AQE, that the
+  * projections carry up to the sort, so Spark adds no second exchange. The
+  * kernel then runs once per row, after the shuffle; over a round-robin,
+  * the sort's range exchange would run it twice, in its sampling job and
+  * in its map stage. A sort on no scan column keeps the round-robin.
+  *
+  * Either exchange changes which rows meet in which task and in what order, so
   * the rule stays out of any subtree whose result depends on that: under a
   * nondeterministic expression, an arrival-order aggregate (`first`,
   * `last`, `collect_list`/`collect_set`, `listagg`; `dropDuplicates`
@@ -43,11 +54,15 @@ case class SplitAwareRepartition(spark: SparkSession) extends Rule[LogicalPlan] 
     if (plan.isStreaming) plan
     else place(plan, spark.sparkContext.defaultParallelism, orderFree = true)
 
-  private def place(p: LogicalPlan, n: Int, orderFree: Boolean): LogicalPlan =
-    if (pinsInput(p)) p
-    else if (orderFree && fires(p, n))
-      p.transformUp { case r: LogicalRelation => Repartition(n, shuffle = true, r) }
-    else {
+  private def place(p: LogicalPlan, n: Int, orderFree: Boolean): LogicalPlan = p match {
+    case _ if pinsInput(p) => p
+    case _ if orderFree && fires(p, n) => atScan(p)(Repartition(n, shuffle = true, _))
+    case s: Sort if s.global && fires(s.child, n) =>
+      val keys = rangeKeys(s)
+      s.copy(child = atScan(s.child)(r =>
+        if (keys.isEmpty) Repartition(n, shuffle = true, r)
+        else RepartitionByExpression(keys, r, Some(n))))
+    case _ =>
       val childFree = p match {
         case s: Sort if s.global => true
         case _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail | _: Command => false
@@ -55,7 +70,35 @@ case class SplitAwareRepartition(spark: SparkSession) extends Rule[LogicalPlan] 
         case _ => orderFree
       }
       p.mapChildren(place(_, n, childFree))
+  }
+
+  private def atScan(chain: LogicalPlan)(exchange: LogicalRelation => LogicalPlan) =
+    chain.transformUp { case r: LogicalRelation => exchange(r) }
+
+  /** The longest prefix of `s`'s keys that are columns of the scan at the
+    * bottom of its child chain, passed up unchanged or renamed by an alias
+    * (a generator's output is none), as sort orders over the scan's own
+    * attributes. */
+  private def rangeKeys(s: Sort): Seq[SortOrder] = {
+    @tailrec def trace(a: Attribute, q: LogicalPlan): Option[Attribute] = q match {
+      case Project(list, child) =>
+        list.collectFirst {
+          case b: Attribute if b.exprId == a.exprId => b
+          case al @ Alias(b: Attribute, _) if al.exprId == a.exprId => b
+        } match {
+          case Some(b) => trace(b, child)
+          case None => None
+        }
+      case Filter(_, child) => trace(a, child)
+      case g: Generate if !g.generatorOutput.exists(_.exprId == a.exprId) => trace(a, g.child)
+      case r: LogicalRelation => r.output.find(_.exprId == a.exprId)
+      case _ => None
     }
+    s.order.iterator.map(o => o.child match {
+      case a: Attribute => trace(a, s.child).map(SortOrder(_, o.direction, o.nullOrdering, Nil))
+      case _ => None
+    }).takeWhile(_.isDefined).flatten.toSeq
+  }
 
   private def pinsInput(p: LogicalPlan): Boolean = p match {
     case _: Sample | _: RebalancePartitions => true

@@ -117,30 +117,20 @@ object BpeKernel {
 
   /** Whole-document encode: words are lowercase-letter runs of
     * `lower(text)` (exactly `regexp_extract_all(lower(text), '[a-z]+')`,
-    * the [[graft.operators.TextAnalysis.words]] tokenization — the scan
-    * walks the UTF8String-lowered text so the pre-regex lowering is the
-    * engine's own); every word segments greedily and the surviving tokens
-    * join with single spaces into one token stream (count = its length). */
+    * the [[graft.operators.TextAnalysis.words]] tokenization, scanned by
+    * [[TextMetrics.letterRuns]]); every word segments greedily and the
+    * surviving tokens join with single spaces into one token stream
+    * (count = its length). */
   def encodeDoc(text: UTF8String, m: MergeRanks): UTF8String = {
-    val s = text.toLowerCase.toString
-    val sb = new java.lang.StringBuilder(s.length + 16)
-    var i = 0
-    val len = s.length
-    var any = false
-    while (i < len) {
-      val c = s.charAt(i)
-      if (c >= 'a' && c <= 'z') {
-        var j = i + 1
-        while (j < len && s.charAt(j) >= 'a' && s.charAt(j) <= 'z') j += 1
-        val toks = segmentWord(s.substring(i, j), m)
-        var t = 0
-        while (t < toks.length) {
-          if (any) sb.append(' ')
-          sb.append(toks(t)); any = true; t += 1
-        }
-        i = j
-      } else i += 1
-    }
+    val sb = new java.lang.StringBuilder(text.numBytes + 16)
+    TextMetrics.letterRuns(text)({ (s, i, j) =>
+      val toks = segmentWord(s.substring(i, j), m)
+      var t = 0
+      while (t < toks.length) {
+        if (sb.length > 0) sb.append(' ')
+        sb.append(toks(t)); t += 1
+      }
+    }, _ => ())
     UTF8String.fromString(sb.toString)
   }
 

@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `size(filter(...))`);
   *  - chunks/grams: [[graft.operators.Curation.wordChunks]] /
   *    [[Fns.wordShingles]] windowing, including the short-text edges;
-  *  - lang words: maximal [a-z]+ runs of the Unicode-lowercased text
+  *  - lang words: maximal [a-z]+ runs of the root-locale-lowercased text
   *    (≡ `regexp_extract_all(lower(text), '[a-z]+')`);
   *  - CJK count: chars in [0x4e00, 0x9fff] (≡ the single-char-class regex
   *    count).
@@ -57,6 +57,26 @@ object TextMetrics {
 
   private def tokens(text: UTF8String): Array[String] =
     text.trim().toString.split("\\s+", -1)
+
+  /** Walks `lower(text)` once: `word(s, i, j)` for each maximal `[a-z]+`
+    * run `s[i, j)` and `other(c)` for every char outside one, so a kernel
+    * tokenizing here equals `regexp_extract_all(lower(text), '[a-z]+')`.
+    * It lowers in the root locale, as the DuckDB oracle's `lower` does.
+    * `UTF8String.toLowerCase` (and Spark's `lower`) lower non-ASCII text
+    * in the JVM's default locale instead, and a Turkish one turns `I`
+    * into a dotless `ı` that falls out of the runs. */
+  def letterRuns(text: UTF8String)(word: (String, Int, Int) => Unit,
+      other: Char => Unit): Unit = {
+    val s = text.toString.toLowerCase(java.util.Locale.ROOT)
+    val len = s.length
+    var i = 0
+    while (i < len) {
+      var j = i
+      while (j < len && s.charAt(j) >= 'a' && s.charAt(j) <= 'z') j += 1
+      if (j > i) { word(s, i, j); i = j }
+      else { other(s.charAt(i)); i += 1 }
+    }
+  }
 
   /** [nTokens, sumLen, topWordCount, nAlpha, nDigit] in one pass. */
   def wordStats(text: UTF8String): Array[Long] = {
@@ -128,32 +148,18 @@ object TextMetrics {
     Array(nChunks.toLong, chunkSet.size.toLong, nGrams.toLong, top.toLong)
   }
 
-  /** [nWords, cjkCount, hits_en, hits_es, hits_fr, hits_de] in one pass.
-    * Words are maximal [a-z]+ runs of the Unicode-lowercased text. */
+  /** [nWords, cjkCount, hits_en, hits_es, hits_fr, hits_de] in one pass
+    * over the [[letterRuns]]. */
   def langStats(text: UTF8String): Array[Long] = {
-    val s = text.toLowerCase.toString
     var nWords = 0L
     var cjk = 0L
     val hits = new Array[Long](stopSets.length)
-    val sb = new java.lang.StringBuilder(24)
-    def flush(): Unit = if (sb.length > 0) {
+    letterRuns(text)({ (s, i, j) =>
       nWords += 1
-      val w = sb.toString
+      val w = s.substring(i, j)
       var k = 0
       while (k < stopSets.length) { if (stopSets(k).contains(w)) hits(k) += 1; k += 1 }
-      sb.setLength(0)
-    }
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch >= 'a' && ch <= 'z') sb.append(ch)
-      else {
-        flush()
-        if (ch >= 0x4e00 && ch <= 0x9fff) cjk += 1
-      }
-      i += 1
-    }
-    flush()
+    }, ch => if (ch >= 0x4e00 && ch <= 0x9fff) cjk += 1)
     Array(nWords, cjk) ++ hits
   }
 

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec,
   InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
@@ -35,6 +35,16 @@ object SplitPlans {
   def isRuleExchange(e: ShuffleExchangeExec, n: Int): Boolean =
     e.outputPartitioning == RoundRobinPartitioning(n) &&
       e.shuffleOrigin == REPARTITION_BY_NUM && overScan(e.child)
+
+  /** The rule's exchange under a global sort: a range split to `n`
+    * partitions on the scan columns `keys`, directly above a scan. */
+  def isRangeRuleExchange(e: ShuffleExchangeExec, n: Int, keys: String*): Boolean =
+    e.outputPartitioning match {
+      case RangePartitioning(order, m) =>
+        m == n && order.map(_.child.references.head.name) == keys &&
+          e.shuffleOrigin == REPARTITION_BY_NUM && overScan(e.child)
+      case _ => false
+    }
 }
 
 /** [[SplitAwareRepartition]]: where it adds its round-robin exchange, and
@@ -133,6 +143,84 @@ class SplitAwareRepartitionSpec extends AnyFunSuite {
       .orderBy(col("k").desc, col("doc_id")).limit(5))
     val rr = roundRobin(plan)
     assert(rr.length == 1 && overScan(rr.head.child), plan)
+  }
+
+  test("a global sort on a scan column runs the kernel once per row") {
+    val calls = spark.sparkContext.longAccumulator("split_rule_kernel_calls")
+    val bump = udf((t: String) => { calls.add(1); t.length })
+    val rows = spark.read.parquet(oneFile)
+      .select(col("doc_id").as("id"), bump(col("text")).as("k"))
+      .orderBy("id").collect()
+    assert(rows.map(_.getLong(0)).toSeq == (0L until 200L))
+    assert(calls.value == 200L, s"the kernel ran ${calls.value} times for 200 rows")
+  }
+
+  test("a global sort on a scan column puts one range exchange below the kernel") {
+    val plan = physical(spark)(spark.read.parquet(oneFile)
+      .select(col("doc_id"), kernel(col("text")).as("k"))
+      .orderBy(col("doc_id")))
+    val ex = exchanges(plan)
+    assert(ex.length == 1 && isRangeRuleExchange(ex.head, n, "doc_id"), plan)
+    assert(!ex.head.child.toString.contains("graft_word_stats"), plan)
+    assert(roundRobin(plan).isEmpty, plan)
+  }
+
+  test("a sort key the kernel computes keeps the round-robin") {
+    val plan = physical(spark)(spark.read.parquet(oneFile)
+      .select(col("doc_id"), kernel(col("text")).as("k"))
+      .orderBy(col("k"), col("doc_id")))
+    val rr = roundRobin(plan)
+    assert(rr.length == 1 && isRuleExchange(rr.head, n), plan)
+    assert(exchanges(plan).length == 2, plan)
+  }
+
+  test("a sort key renamed by an alias is traced to the scan column") {
+    val plan = physical(spark)(spark.read.parquet(oneFile)
+      .select(col("doc_id").as("id"), kernel(col("text")).as("k"))
+      .orderBy(col("id"), col("k")))
+    val ex = exchanges(plan)
+    assert(ex.length == 1 && isRangeRuleExchange(ex.head, n, "doc_id"), plan)
+  }
+
+  test("the traced key prefix stops at a generator's output") {
+    def exploded = spark.read.parquet(oneFile)
+      .select(col("doc_id"), explode(TextMetricExprs.wordStats(col("text"))).as("s"))
+    val prefix = physical(spark)(exploded.orderBy(col("doc_id"), col("s")))
+    assert(exchanges(prefix).length == 1 &&
+      isRangeRuleExchange(exchanges(prefix).head, n, "doc_id"), prefix)
+    val none = physical(spark)(exploded.orderBy(col("s"), col("doc_id")))
+    assert(roundRobin(none).length == 1 && exchanges(none).length == 2, none)
+  }
+
+  test("desc_nulls_last over nullable scan keys returns the rows the plan without the rule does") {
+    val dir = tmp("split_rule_nulls_").resolve("t").toString
+    spark.range(200)
+      .select(when(col("id") % 7 =!= 0, col("id") % 50).as("key"), col("id").as("doc_id"),
+        concat(lit("the cat "), col("id").cast("string")).as("text"))
+      .coalesce(1).write.parquet(dir)
+    def q = spark.read.parquet(dir)
+      .select(col("key"), col("doc_id"), kernel(col("text")).as("k"))
+      .orderBy(col("key").desc_nulls_last, col("doc_id"))
+    val plan = physical(spark)(q)
+    assert(exchanges(plan).length == 1 &&
+      isRangeRuleExchange(exchanges(plan).head, n, "key", "doc_id"), plan)
+    val withRule = q.collect().toSeq
+    val without = Session.withConfs(spark,
+        "spark.sql.optimizer.excludedRules" -> "graft.SplitAwareRepartition") {
+      assert(roundRobin(physical(spark)(q)).isEmpty)
+      q.collect().toSeq
+    }
+    assert(withRule == without)
+    assert(withRule.head.getLong(0) == 49L && withRule.last.isNullAt(0))
+  }
+
+  test("under AQE the sort's output keeps defaultParallelism partitions") {
+    val df = spark.read.parquet(oneFile)
+      .select(col("doc_id"), kernel(col("text")).as("k"))
+      .orderBy(col("doc_id"))
+    val sizes = Session.withConfs(spark, "spark.sql.adaptive.enabled" -> "true")(
+      df.queryExecution.toRdd.mapPartitions(it => Iterator(it.size)).collect().toSeq)
+    assert(sizes.length == n && sizes.sum == 200, sizes)
   }
 
   test("a write keeps it out: one input split still writes one file") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{Fns, TextMetricExprs}
+import graft.functions.{BpeKernel, Fns, TextMetricExprs, TextMetrics}
 import graft.operators.{Curation, TextAnalysis}
 
 /** The compiled text-metric kernels must be value-identical to the
@@ -80,6 +80,20 @@ class TextMetricsSpec extends AnyFunSuite {
       val expected = (0 until 6).map(i => r.getLong(2 + i))
       assert(k == expected, s"langStats mismatch for doc ${r.getLong(0)}: $k vs $expected")
     }
+  }
+
+  test("langStats and BpeKernel lower in the root locale under a Turkish default") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val doc = "IS IT 中文? Istanbul"
+    val m = BpeKernel.mergeRanks(Seq(("i", "s"), ("i", "t")))
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // the oracle's words, which no JVM locale moves: is, it, istanbul
+      val t = UTF8String.fromString(doc)
+      assert(TextMetrics.langStats(t).toSeq == Seq(3L, 2L, 1L, 0L, 0L, 0L))
+      assert(BpeKernel.encodeDoc(t, m).toString == "is it is t a n b u l")
+    } finally java.util.Locale.setDefault(default)
   }
 
   test("bpeTopMerges: hand-computed greedy merges, ties and overlaps included") {
