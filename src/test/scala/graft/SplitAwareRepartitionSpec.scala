@@ -47,9 +47,10 @@ object SplitPlans {
     }
 }
 
-/** [[SplitAwareRepartition]]: where it adds its round-robin exchange, and
-  * every place it must stay out of. Plans are inspected with AQE off, so
-  * the static physical tree holds every exchange. */
+/** [[SplitAwareRepartition]]: where it adds its round-robin exchange, where
+  * a global sort's range exchange takes its place, and every place it must
+  * stay out of. Plans are inspected with AQE off, so the static physical
+  * tree holds every exchange. */
 class SplitAwareRepartitionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val n = spark.sparkContext.defaultParallelism
