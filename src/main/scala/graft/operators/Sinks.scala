@@ -1050,20 +1050,17 @@ object Sinks {
       // cast up under a widening ALTER COLUMN TYPE. Cost is the TVF's own
       // grain: O(requested files) footer reads over per-commit deltas.
       val target = changeFeedSchema(spark, tableDir)
-      // BALANCED union (ADVICE r16): a left-deep reduce over a wide version
-      // range builds an O(files)-deep plan tree that stresses the analyzer/
-      // optimizer; pairing halves the depth to O(log files) with the same
-      // result (union is associative)
-      def fold(xs: Seq[DataFrame]): DataFrame =
-        if (xs.lengthCompare(1) == 0) xs.head
-        else fold(xs.grouped(2).map {
-          case Seq(a, b) => a.union(b)
-          case Seq(a) => a
-        }.toSeq)
-      fold(files.map(f =>
+      balancedUnion(files.map(f =>
         ColumnIds.resolve(FooterSchema.read(spark, f), target)))
     }
   }
+
+  /** The union of `xs` (one schema, at least one frame), BALANCED (ADVICE
+    * r16): a left-deep reduce builds an O(frames)-deep plan tree that
+    * stresses the analyzer; pairing keeps it O(log frames) deep. */
+  private[graft] def balancedUnion(xs: Seq[DataFrame]): DataFrame =
+    if (xs.lengthCompare(1) == 0) xs.head
+    else balancedUnion(xs.grouped(2).map(_.reduce(_ union _)).toSeq)
 
   /** [[landChangeFeed]] for the POST-COMMIT call sites: by the time the
     * feed lands, `v=N` is already committed, so a thrown filesystem error
@@ -1273,16 +1270,6 @@ object Sinks {
     }.get
   }
 
-  /** A folder (or delta sub-dir) of `v` read under its own names and
-    * resolved onto `schema` by field id ([[ColumnIds.resolve]]). */
-  private def readResolved(spark: SparkSession, tableDir: String, v: Int,
-                           sub: String,
-                           schema: StructType): DataFrame = {
-    val path = if (sub.isEmpty) s"$tableDir/v=$v" else s"$tableDir/v=$v/$sub"
-    ColumnIds.resolve(
-      spark.read.schema(ownSchema(spark, tableDir, v, sub)).parquet(path), schema)
-  }
-
   /** The full record an unpinned read of committed `v` resolves under. */
   private[graft] def headSchema(spark: SparkSession, tableDir: String,
                                 v: Int): StructType =
@@ -1317,7 +1304,8 @@ object Sinks {
     thinBase(spark, tableDir, v) match {
       // a bucketed version's synthetic __bucket layout column is physical,
       // not logical: the resolution projects it away
-      case None => readResolved(spark, tableDir, v, "", schema)
+      case None => ColumnIds.read(spark, ownSchema(spark, tableDir, v, ""),
+        Seq(s"$tableDir/v=$v"), schema)
       case Some((base, keyTokens)) =>
         val baseDf = resolveVersionR(spark, tableDir, base, depth + 1, schema)
         val keyCols = ColumnIds.keyNames(schema, keyTokens)
@@ -1343,7 +1331,7 @@ object Sinks {
     def part(name: String, s: StructType) = {
       val p = new org.apache.hadoop.fs.Path(s"$tableDir/v=$v/$name")
       if (p.getFileSystem(hconf).exists(p))
-        Some(readResolved(spark, tableDir, v, name, s))
+        Some(ColumnIds.read(spark, ownSchema(spark, tableDir, v, name), Seq(p.toString), s))
       else None
     }
     (part("_deletes", StructType(
@@ -1612,8 +1600,8 @@ object Sinks {
           org.apache.spark.sql.sources.LessThanOrEqual(n, hi))))
     // all files pruned (valid predicate range matching no data) serves an
     // empty frame
-    val df = ColumnIds.resolve(spark.read.schema(own)
-      .parquet((if (kept.isEmpty) Seq(s"$tableDir/v=$v") else kept): _*), schema)
+    val df = ColumnIds.read(spark, own,
+      if (kept.isEmpty) Seq(s"$tableDir/v=$v") else kept, schema)
     (if (kept.isEmpty) df.where(lit(false))
      else df.filter(col(ColumnIds.quoted(stat.name)).between(lo, hi)),
       kept.length, total)

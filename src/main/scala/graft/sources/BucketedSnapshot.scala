@@ -1,13 +1,15 @@
 package graft.sources
 
+import java.util.OptionalLong
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.Expressions
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportPartitioning, HasPartitionKey}
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -45,71 +47,111 @@ private[sources] object GraftBucketFunction extends UnboundFunction {
   }
 }
 
-private case class BucketInputPartition(bucket: Int, inner: InputPartition)
+/** A split of group `group` of a [[GroupedScan]], keyed by its bucket. */
+private case class GroupedInputPartition(group: Int, bucket: Int, inner: InputPartition)
   extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(bucket)
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
-/** A BUCKETED scan for storage-partitioned joins: one key-tagged group of
-  * file splits per bucket directory ([[HasPartitionKey]]), reporting
-  * `KeyGroupedPartitioning(graft_bucket(n, key))` — with
-  * `spark.sql.sources.v2.bucketing.enabled=true`, a join of two tables
-  * bucketed the same way runs WITHOUT shuffling either side (the 100 TB
-  * co-located merge). File reading itself is Spark's own vectorized
-  * parquet reader: the inner per-bucket `ParquetScan`s supply the splits
-  * and the shared reader factory, this class only re-groups them by
-  * bucket and tags the key. Serves the bucketed flat snapshot versions
-  * ([[FlatSnapshotTable]]), the bucket-partitioned snapshots and the
-  * bucketed workspace tables.
-  *
-  * `read` is the flat snapshot store's request (`ColumnIds.readSchema`:
-  * `dataSchema`'s columns under the files' own names, output column for
-  * column); without it the files are read under `dataSchema` by Spark's
-  * field-id reader, as the partitioned and workspace surfaces do. */
-private class BucketedScan(spark: SparkSession, label: String,
-                           dirs: Seq[(Int, String)], dataSchema: StructType,
-                           keyCol: String, buckets: Int,
-                           read: Option[StructType] = None)
-  extends Scan with Batch with SupportsReportPartitioning {
-
-  private def innerScan(paths: Seq[String]): Scan = {
-    val opts =
-      if (read.isDefined) CaseInsensitiveStringMap.empty()
-      else ColumnIds.withReadOption(CaseInsensitiveStringMap.empty())
-    ParquetTable(s"${label}__bucket", spark, opts,
-      paths, Some(read.getOrElse(dataSchema)), classOf[ParquetFileFormat])
-      .newScanBuilder(opts).build()
+/** Reads each split with its group's reader. */
+private case class GroupedReaderFactory(groups: Seq[PartitionReaderFactory])
+  extends PartitionReaderFactory {
+  private def on[T](p: InputPartition)(f: (PartitionReaderFactory, InputPartition) => T): T = {
+    val g = p.asInstanceOf[GroupedInputPartition]
+    f(groups(g.group), g.inner)
   }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    on(p)(_.createReader(_))
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
+    on(p)(_.createColumnarReader(_))
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    on(p)(_.supportColumnarReads(_))
+}
 
-  override def readSchema(): StructType = dataSchema
-  override def description(): String =
-    s"$label bucketed scan (graft_bucket($buckets, $keyCol))"
+/** One scan over groups of Spark's own parquet scans, each group reading
+  * files of one own schema and sharing one reader: splits concatenate,
+  * rows come out as `schema`, column for column. With `bucketing` it is a
+  * BUCKETED scan for storage-partitioned joins: each inner scan is one
+  * bucket directory whose splits carry the bucket as their key, and the
+  * scan reports `KeyGroupedPartitioning(graft_bucket(n, key))` — with
+  * `spark.sql.sources.v2.bucketing.enabled=true` two tables bucketed
+  * alike join WITHOUT shuffling either side, also where a bucket spans
+  * several groups. It then reports no size, as before, so a co-located
+  * join is never swapped for a broadcast; else its groups' summed size. */
+private class GroupedScan(label: String, schema: StructType,
+                          groups: Seq[Seq[(Int, Scan)]],
+                          bucketing: Option[(String, Int)])
+  extends Scan with Batch with SupportsReportPartitioning
+  with SupportsReportStatistics {
+
+  private val scans = groups.filter(_.nonEmpty)
+
+  override def readSchema(): StructType = schema
+  override def description(): String = bucketing.fold(
+    scans.flatten.map(_._2.description()).mkString(" + ")) { case (keyCol, n) =>
+    s"$label bucketed scan (graft_bucket($n, $keyCol))" }
   override def toBatch: Batch = this
 
   private lazy val partitions: Array[InputPartition] =
-    dirs.flatMap { case (bucket, dir) =>
-      innerScan(Seq(dir)).toBatch.planInputPartitions()
-        .map(p => BucketInputPartition(bucket, p): InputPartition)
+    scans.zipWithIndex.flatMap { case (g, i) =>
+      g.flatMap { case (bucket, s) =>
+        s.toBatch.planInputPartitions().map(GroupedInputPartition(i, bucket, _))
+      }
     }.toArray
 
   override def planInputPartitions(): Array[InputPartition] = partitions
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // one shared factory (schema/conf identical across buckets), unwrapping
-    // the bucket tag before delegating to Spark's vectorized parquet reader
-    val inner = innerScan(dirs.map(_._2)).toBatch.createReaderFactory()
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        inner.createReader(p.asInstanceOf[BucketInputPartition].inner)
-      override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-        inner.createColumnarReader(p.asInstanceOf[BucketInputPartition].inner)
-      override def supportColumnarReads(p: InputPartition): Boolean =
-        inner.supportColumnarReads(p.asInstanceOf[BucketInputPartition].inner)
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GroupedReaderFactory(scans.map(_.head._2.toBatch.createReaderFactory()))
 
-  override def outputPartitioning(): Partitioning =
-    new KeyGroupedPartitioning(
-      Array(Expressions.bucket(buckets, keyCol)), partitions.length)
+  override def outputPartitioning(): Partitioning = bucketing.fold[Partitioning](
+    new UnknownPartitioning(partitions.length)) { case (keyCol, n) =>
+    new KeyGroupedPartitioning(Array(Expressions.bucket(n, keyCol)), partitions.length) }
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    private val sizes = if (bucketing.isDefined) Nil else scans.flatten.collect {
+      case (_, s: SupportsReportStatistics) => s.estimateStatistics().sizeInBytes() }
+    override def sizeInBytes(): OptionalLong =
+      if (sizes.isEmpty || !sizes.forall(_.isPresent)) OptionalLong.empty()
+      else OptionalLong.of(sizes.map(_.getAsLong).sum)
+    override def numRows(): OptionalLong = OptionalLong.empty()
+  }
+}
+
+private object GroupedScan {
+
+  /** The bucketed scan of `(read schema, (bucket, dir) list)` groups: one
+    * parquet scan per bucket dir, reading its group's schema. */
+  def bucketed(spark: SparkSession, label: String, schema: StructType,
+               groups: Seq[(StructType, Seq[(Int, String)])], keyCol: String,
+               n: Int, options: CaseInsensitiveStringMap): Scan =
+    new GroupedScan(label, schema, groups.map { case (read, dirs) =>
+      dirs.map { case (b, d) => b -> ParquetTable(s"${label}__bucket", spark,
+        options, Seq(d), Some(read), classOf[ParquetFileFormat])
+        .newScanBuilder(options).build() }
+    }, Some(keyCol -> n))
+}
+
+/** The bucket-partitioned tables' scan builder: filters prune whole bucket
+  * dirs by the level's hash and all stay residual; `groups` splits the
+  * kept `(bucket, dir)` list by the schema its files are read under. */
+private class BucketScanBuilder(spark: SparkSession, label: String,
+                                dirs: Seq[(Int, String)], level: BucketLevel,
+                                declared: StructType, options: CaseInsensitiveStringMap)(
+    groups: (Seq[(Int, String)], StructType) => Seq[(StructType, Seq[(Int, String)])])
+  extends ScanBuilder with SupportsPushDownFilters
+  with SupportsPushDownRequiredColumns {
+  private var kept = dirs
+  private var required = declared
+  override def pushFilters(fs: Array[Filter]): Array[Filter] = {
+    kept = kept.filter { case (b, _) => fs.forall(level.mayMatch(_, b.toString)) }
+    fs
+  }
+  override def pushedFilters(): Array[Filter] = Array.empty
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = StructType(requiredSchema.fields.map(f =>
+      declared.fields.find(_.name.equalsIgnoreCase(f.name)).getOrElse(f)))
+  override def build(): Scan = GroupedScan.bucketed(spark, label, required,
+    groups(kept, required), level.col, level.n, options)
 }

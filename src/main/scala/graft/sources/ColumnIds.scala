@@ -13,14 +13,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * id, so a metadata-only RENAME keeps matching old files, a DROP keeps
   * the field as a `__dropped_<id>` tombstone (its id is never reused) and
   * a re-ADD of a dropped name takes a fresh id: old bytes read as NULL
-  * under it, never resurrected. The flat snapshot store decides the
-  * matching itself ([[sources]]): its frames resolve by projection
-  * ([[resolve]]) and its SQL scans request each file column under its own
-  * name ([[readSchema]]), so no reader setting is involved. Spark's
-  * field-id reader ([[ReadConf]]) serves only the workspace tables and
-  * the partitioned snapshots, whose scans span files with different own
-  * names. How ids are assigned, carried onto writes, resolved
-  * and evolved by `ALTER TABLE` is decided here and nowhere else. */
+  * under it, never resurrected. The snapshot stores, flat and
+  * partitioned, decide the matching themselves ([[sources]]): frames
+  * resolve by projection ([[read]]) and SQL scans request each file
+  * column under its own name ([[readSchema]]), one scan per own schema.
+  * Spark's field-id reader ([[ReadConf]]) serves only the workspace
+  * tables, which record no own names per write. How ids are assigned,
+  * carried onto writes, resolved and evolved by `ALTER TABLE` is decided
+  * here and nowhere else. */
 private[graft] object ColumnIds {
 
   /** Field-metadata key of a column's parquet field id. */
@@ -34,8 +34,8 @@ private[graft] object ColumnIds {
     * that carry an id, so id-less schemas keep matching by name. */
   val ReadConf: (String, String) = "spark.sql.parquet.fieldId.read.enabled" -> "true"
 
-  /** A session reading by field id, for V1 reads whose frames run on that
-    * session (the partitioned maintenance rewrites). The key is a SQLConf
+  /** A session reading by field id, for the workspace tables' V1 reads,
+    * whose frames run on that session. The key is a SQLConf
     * that V1 `DataFrameReader` options never reach, so it is an isolated
     * clone; a plan spliced into another session's statement can lose it
     * — frames that travel use [[resolve]]. */
@@ -55,6 +55,11 @@ private[graft] object ColumnIds {
       case (t, src) =>
         src.fold(lit(null))(n => col(quoted(n))).cast(t.dataType).as(t.name, t.metadata)
     }: _*)
+
+  /** `paths` (files of own schema `own`) read by name, resolved by id. */
+  def read(spark: SparkSession, own: StructType, paths: Seq[String],
+           target: StructType): DataFrame =
+    resolve(spark.read.schema(own).parquet(paths: _*), target)
 
   /** The file column that serves each column of `target` in files whose
     * own schema is `own`: the one with the same field id (by name when

@@ -36,7 +36,7 @@ import graft.operators.Sinks
   *    without the extensions cannot serve it (guided error at load).
   *  - BUCKETED (a `_buckets` marker): one key-grouped partition per
   *    bucket, reporting `KeyGroupedPartitioning(bucket(n, key))` for
-  *    storage-partitioned joins ([[BucketedScan]]); read-only.
+  *    storage-partitioned joins ([[GroupedScan]]); read-only.
   *  - MANIFEST-BEARING (`_manifest/v=N`): the pushed predicates prune the
   *    version's FILE LIST through [[ManifestPrune.keptFiles]] before
   *    Spark's own parquet scan plans the survivors.
@@ -139,8 +139,8 @@ private[graft] class FlatSnapshotTable(
         val own = FooterSchema.of(spark, dirs.map(_._2)).getOrElse(
           throw new IllegalStateException(
             s"no parquet data file in any bucket dir of $tableName"))
-        () => new BucketedScan(spark, tableName, dirs, schema, keyCol, n,
-          read = Some(ColumnIds.readSchema(own, schema)))
+        () => GroupedScan.bucketed(spark, tableName, schema,
+          Seq(ColumnIds.readSchema(own, schema) -> dirs), keyCol, n, options)
       case None =>
         val prune: Seq[sources.Filter] => Seq[String] =
           if (ManifestPrune.exists(spark, tableDir, version))

@@ -178,6 +178,13 @@ object PartitionManifest {
     descend(root)
   }
 
+  /** What a scan of leaf dirs `leaves` of table `dir` reads under `pushed`:
+    * each leaf's [[prunedFiles]] when opted in and served, else the leaf. */
+  def prunedPaths(spark: SparkSession, dir: String, leaves: Seq[String],
+                  pushed: Seq[sources.Filter]): Seq[String] =
+    if (statsCols(spark, dir).isEmpty) leaves
+    else leaves.flatMap(l => prunedFiles(spark, new Path(l), pushed).getOrElse(Seq(l)))
+
   /** Prune one leaf's file list against its manifest. Returns the kept
     * ABSOLUTE file paths, or None when the leaf must serve unpruned (no
     * manifest, stale manifest — file set drifted, e.g. an INSERT INTO

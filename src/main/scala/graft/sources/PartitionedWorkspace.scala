@@ -750,25 +750,18 @@ private[sources] class PartitionedWorkspaceTable(
         opts.asCaseSensitiveMap())
       withBase.put("basePath", dir): Unit
       val baseOpts = new CaseInsensitiveStringMap(withBase)
-      val stats = PartitionManifest.statsCols(spark, dir)
       new org.apache.spark.sql.graftbridge.PrunedParquetScanBuilder(
         tableName, spark,
         PartitionedWorkspace.innerReadSchema(declaredFull, levels), baseOpts,
-        filters => {
-          val dirs = leafDirsWithValues().collect {
+        filters => PartitionManifest.prunedPaths(spark, dir,
+          leafDirsWithValues().collect {
             case (path, vals) if levels.zip(vals).forall { case (l, v) =>
                 filters.forall(l.mayMatch(_, v)) } =>
               path
-          }
-          if (stats.isEmpty) dirs
-          else dirs.flatMap { p =>
-            PartitionManifest.prunedFiles(spark, new Path(p), filters)
-              .getOrElse(Seq(p))
-          }
-        })
+          }, filters))
     }
     else levels.head match {
-      case BucketLevel(keyCol, n) =>
+      case bl: BucketLevel =>
         // bucket layout: a KEY-GROUPED reporting scan — one tagged split
         // group per bucket directory, reporting
         // KeyGroupedPartitioning(bucket(n, key)) so two same-bucketed
@@ -777,27 +770,8 @@ private[sources] class PartitionedWorkspaceTable(
         // the planner side). Pushed filters still prune whole bucket
         // directories through the hash (EqualTo/In on the key); they are
         // all kept residual, so correctness never rides the prune.
-        new ScanBuilder
-          with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-          with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-          private var kept: Seq[(Int, String)] = bucketLeafDirs()
-          private var required: StructType = declaredFull
-          override def pushFilters(fs: Array[sources.Filter]):
-              Array[sources.Filter] = {
-            kept = kept.filter { case (b, _) =>
-              fs.forall(levels.head.mayMatch(_, b.toString)) }
-            fs
-          }
-          override def pushedFilters(): Array[sources.Filter] = Array.empty
-          override def pruneColumns(requiredSchema: StructType): Unit =
-            // keep the DECLARED fields (with their ids/metadata) in the
-            // requested order — the projection is by name
-            required = StructType(requiredSchema.fields.map(f =>
-              declaredFull.fields.find(_.name.equalsIgnoreCase(f.name))
-                .getOrElse(f)))
-          override def build(): Scan = new BucketedScan(spark, tableName,
-            kept, required, keyCol, n)
-        }
+        new BucketScanBuilder(spark, tableName, bucketLeafDirs(), bl,
+          declaredFull, opts)((kept, required) => Seq(required -> kept))
       case hidden =>
         // hidden temporal level (days/hours/months): serve the LEAF
         // directories directly (no hive inference — the synthetic key is
@@ -810,18 +784,11 @@ private[sources] class PartitionedWorkspaceTable(
         // serves that directory unpruned.
         new org.apache.spark.sql.graftbridge.PrunedParquetScanBuilder(
           tableName, spark, declaredFull, opts,
-          filters => {
-            val dirs = leafDirsWithValues().collect {
+          filters => PartitionManifest.prunedPaths(spark, dir,
+            leafDirsWithValues().collect {
               case (path, Seq(v)) if filters.forall(hidden.mayMatch(_, v)) =>
                 path
-            }
-            if (PartitionManifest.statsCols(spark, dir).isEmpty)
-              dirs
-            else dirs.flatMap { p =>
-              PartitionManifest.prunedFiles(spark, new Path(p), filters)
-                .getOrElse(Seq(p))
-            }
-          })
+            }, filters))
     }
   }
 

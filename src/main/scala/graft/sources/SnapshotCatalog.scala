@@ -30,7 +30,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * contract), whose scans are Spark's own parquet scans with columns
   * resolved by field id inside the scan, so pushdown / pruning /
   * vectorization apply unchanged; a partitioned table's by
-  * [[PartitionedSnapshotTable]].
+  * [[PartitionedSnapshotTable]], one such scan per own schema.
   *
   * Every WRITE is a VERSION (r13): `CREATE TABLE`/CTAS publish v=1 through
   * the atomic protocol, `INSERT INTO` publishes a keyless thin APPEND,

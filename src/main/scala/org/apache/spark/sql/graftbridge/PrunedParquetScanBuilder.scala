@@ -27,7 +27,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * `read` is what the parquet reader is asked for: `declared`'s columns
   * in order, each under the name of the file column that serves it (the
-  * flat snapshot store's field-id resolution, `ColumnIds.readSchema`).
+  * snapshot stores' field-id resolution, `ColumnIds.readSchema`).
   * Pushed filters, the paths' `prune` and column pruning are renamed onto
   * it, and the built scan reports the result under the declared names
   * ([[RenamedScan]]). Without `read` nothing is renamed.
@@ -98,6 +98,20 @@ class PrunedParquetScanBuilder(
     if (served == scan.readSchema()) scan
     else RenamedScan(scan.asInstanceOf[FileScan], served)
   }
+}
+
+/** Several [[PrunedParquetScanBuilder]]s served as one scan: filters and
+  * column pruning reach every part, and `combine` joins their scans. */
+class PrunedParquetScanBuilders(parts: Seq[PrunedParquetScanBuilder],
+                                combine: Seq[Scan] => Scan)
+  extends ScanBuilder with SupportsPushDownCatalystFilters
+  with SupportsPushDownRequiredColumns {
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] =
+    parts.map(_.pushFilters(filters)).head
+  override def pushedFilters: Array[Predicate] = parts.head.pushedFilters
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    parts.foreach(_.pruneColumns(requiredSchema))
+  override def build(): Scan = combine(parts.map(_.build()))
 }
 
 /** A file scan reporting its columns under other names, column for

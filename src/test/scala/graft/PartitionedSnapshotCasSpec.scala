@@ -438,6 +438,115 @@ class PartitionedSnapshotCasSpec extends AnyFunSuite {
     assert(PartitionedSnapshot.read(spark, dir).count() == 40)
   }
 
+  /** RENAME body TO text, then ADD COLUMN body (`bodyType`), on a table
+    * partitioned by `spec` whose manifests cover `body` from before the
+    * ALTER; an INSERT after the ALTER makes the head span two shapes and a
+    * row DELETE rewrites one partition across both. The head (with and
+    * without filters), the pre-ALTER version, the API read and SQL
+    * `table_changes` must all serve the renamed bytes under `text` and
+    * NULL for the old rows' `body`. */
+  private def renameReAdd(spec: String, bodyType: String,
+                          lit100: String, lit101: String,
+                          body100: Any, body101: Any)(
+      more: (String, String) => Unit = (_, _) => ()): Unit = {
+    import spark.implicits._
+    val (cat, ws) = freshCatalog()
+    val dir = s"$ws/rr"
+    val df = (0L until 12L).map(i => (i, i % 5,
+        new java.sql.Timestamp(t0 + (i % 2) * 86400000L + i * 1000L), s"d$i"))
+      .toDF("id", "user_id", "ts", "body")
+    PartitionedSnapshot.writePartitioned(df, dir, spec): Unit
+    PartitionedSnapshot.enableManifests(spark, dir, Seq("body")): Unit
+    spark.sql(s"ALTER TABLE $cat.rr RENAME COLUMN body TO text")
+    spark.sql(s"ALTER TABLE $cat.rr ADD COLUMN body $bodyType")
+    spark.sql(s"INSERT INTO $cat.rr VALUES " +
+      s"(100, 0, TIMESTAMP '2024-07-01 05:00:00', 'n100', $lit100), " +
+      s"(101, 3, TIMESTAMP '2024-07-03 05:00:00', 'n101', $lit101)")
+    spark.sql(s"DELETE FROM $cat.rr WHERE id = 0")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "text", "body").orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.get(2))).toSeq
+    val head = (1L until 12L).map(i => (i, s"d$i", null: Any)) ++
+      Seq((100L, "n100", body100), (101L, "n101", body101))
+    assert(rows(spark.table(s"$cat.rr")) == head)
+    assert(rows(PartitionedSnapshot.read(spark, dir)) == head)
+    // `body` alone, and filters through the manifests and the scan
+    def bodies(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "body").orderBy("id").collect()
+        .map(r => (r.getLong(0), r.get(1))).toSeq
+    assert(bodies(spark.sql(s"SELECT id, body FROM $cat.rr")) == head.map(h => (h._1, h._3)))
+    assert(bodies(PartitionedSnapshot.read(spark, dir)) == head.map(h => (h._1, h._3)))
+    assert(spark.sql(s"SELECT id FROM $cat.rr WHERE body IS NULL").count() == 11)
+    assert(PartitionedSnapshot.read(spark, dir).where("body IS NULL").count() == 11)
+    assert(spark.sql(s"SELECT id FROM $cat.rr WHERE text = 'd5'").count() == 1)
+    val v1 = spark.sql(s"SELECT * FROM $cat.rr VERSION AS OF 1")
+    assert(v1.columns.toSeq == Seq("id", "user_id", "ts", "body"))
+    assert(v1.select("id", "body").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      (0L until 12L).map(i => (i, s"d$i")))
+    def changes(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "text", "body", "_change_type", "_version")
+        .orderBy("_version", "id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.get(2), r.getString(3),
+          r.getInt(4))).toSeq
+    val viaSql = changes(spark.sql(s"SELECT * FROM table_changes('$cat.rr', 2, 3)"))
+    assert(viaSql == Seq((100L, "n100", body100, "insert", 2),
+      (101L, "n101", body101, "insert", 2), (0L, "d0", null, "delete", 3)))
+    assert(viaSql == changes(PartitionedSnapshot.changesBetween(spark, dir, 1, 3)))
+    more(cat, dir)
+  }
+
+  test("RENAME then re-ADD of the old name under another type on a days " +
+       "table: head, pinned, API and table_changes resolve by field id") {
+    renameReAdd("days:ts", "INT", "7", "8", 7, 8)()
+  }
+
+  test("RENAME then re-ADD of the old name under the same type on a days " +
+       "table: the renamed bytes never serve under the re-added name") {
+    renameReAdd("days:ts", "STRING", "'x100'", "'x101'", "x100", "x101")()
+  }
+
+  /** The bucket table's self-join spans both shapes and plans no
+    * exchange; its rows are the API read's self-join. */
+  private def bucketSelfJoin(cat: String, dir: String): Unit = {
+    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(k => spark.conf.set(k,
+      if (k.endsWith("Threshold")) "-1" else "true"))
+    try {
+      assert(PartitionedSnapshot.resolvedDirLists(spark, dir, 3)
+        .exists(_._2.map(_.takeWhile(_ != '/')).distinct.length > 1))
+      def j = spark.sql(s"SELECT a.id, b.id, b.text, b.body FROM $cat.rr a " +
+        s"JOIN $cat.rr b ON a.user_id = b.user_id")
+      assert(!j.queryExecution.executedPlan.toString.contains("Exchange"),
+        j.queryExecution.executedPlan.toString.take(1500))
+      val api = PartitionedSnapshot.read(spark, dir)
+      def sorted(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+          Option(r.get(3)).map(_.toString))).toSeq.sorted
+      assert(sorted(j) == sorted(api.as("a").join(api.as("b"), "user_id")
+        .select("a.id", "b.id", "b.text", "b.body")))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("RENAME then re-ADD of the old name under another type on a bucket " +
+       "table: reads resolve by id and the two-shape self-join stays " +
+       "exchange-free") {
+    renameReAdd("bucket:4:user_id", "INT", "7", "8", 7, 8)(bucketSelfJoin)
+  }
+
+  test("RENAME then re-ADD of the old name under the same type on a bucket " +
+       "table: reads resolve by id and the two-shape self-join stays " +
+       "exchange-free") {
+    renameReAdd("bucket:4:user_id", "STRING", "'x100'", "'x101'",
+      "x100", "x101")(bucketSelfJoin)
+  }
+
   test("a table in the earlier partitioned format still serves: " +
        "_partschema.json is read as the registry until the next ALTER") {
     import spark.implicits._
